@@ -5,6 +5,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{Executors, ExecutorService, TimeUnit}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.pipeline.BatchedEmbedder.DeterministicBackend
 
@@ -49,7 +52,7 @@ final class Gateway(threads: Int, perRequestMs: Double, perTextMs: Double,
     peak.accumulateAndGet(now, math.max)
     try {
       val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-      val in = Gateway.parseInput(body)
+      val in = Harness.Json.readTree(body).get("input").elements().asScala.map(_.asText).toVector
       attempts.incrementAndGet()
       val (status, out) =
         if (Gateway.fails(epochAttempts.incrementAndGet(), failEvery)) {
@@ -99,36 +102,7 @@ object Gateway {
 
   /** `{"data": [...]}` listing the vectors in `order`, each with its index. */
   def response(vecs: Seq[Array[Double]], order: Array[Int]): String =
-    order.map { i =>
-      s"""{"object": "embedding", "index": $i, "embedding": [${vecs(i).mkString(", ")}]}"""
-    }.mkString("""{"object": "list", "data": [""", ", ", "]}")
-
-  /** The `input` string array of a request body. */
-  def parseInput(body: String): Vector[String] = {
-    val start = body.indexOf('[', body.indexOf("\"input\""))
-    val out = Vector.newBuilder[String]
-    var i = start + 1
-    val sb = new StringBuilder
-    var inStr = false
-    var done = false
-    while (!done && i < body.length) {
-      val c = body.charAt(i)
-      if (inStr) c match {
-        case '\\' =>
-          body.charAt(i + 1) match {
-            case 'u' => sb += Integer.parseInt(body.substring(i + 2, i + 6), 16).toChar; i += 4
-            case 'n' => sb += '\n'
-            case 't' => sb += '\t'
-            case 'r' => sb += '\r'
-            case e   => sb += e
-          }
-          i += 1
-        case '"' => out += sb.result(); sb.clear(); inStr = false
-        case _   => sb += c
-      } else if (c == '"') inStr = true
-      else if (c == ']') done = true
-      i += 1
-    }
-    out.result()
-  }
+    Harness.Json.writeValueAsString(ListMap("object" -> "list", "data" -> order.toSeq.map { i =>
+      ListMap("object" -> "embedding", "index" -> i, "embedding" -> vecs(i))
+    }))
 }

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,6 +51,10 @@ final class Outcome {
 }
 
 object Harness {
+
+  /** JSON in and out: the result and report lines, spans, pins.json and
+    * the stub gateway's request bodies. Scala maps keep their key order. */
+  val Json: ObjectMapper = new ObjectMapper().registerModule(DefaultScalaModule)
 
   private val jvmStart = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
 
@@ -101,14 +107,37 @@ object Harness {
       (fs.size, fs.map(Files.size).sum)
     }
 
-  /** Data file names per `load_dt=` partition dir, to see what a write touched. */
-  def partitionFiles(store: Path): Map[String, Set[String]] =
+  /** Data files (name -> bytes) per `load_dt=` partition dir, to see what a write touched. */
+  def partitionFiles(store: Path): Map[String, Map[String, Long]] =
     if (!Files.exists(store)) Map.empty
     else Files.list(store).iterator().asScala
       .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("load_dt="))
       .map(p => p.getFileName.toString -> Files.list(p).iterator().asScala
-        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet)
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(f => f.getFileName.toString -> Files.size(f)).toMap)
       .toMap
+
+  /** Raw bytes of a frame's rows: strings as UTF-8, numbers and dates at
+    * their binary width, arrays as their elements; nulls count nothing. */
+  def rowBytes(df: DataFrame): Long = {
+    import org.apache.spark.sql.types._
+    def width(t: DataType): Int = t match {
+      case ByteType | BooleanType             => 1
+      case ShortType                          => 2
+      case IntegerType | FloatType | DateType => 4
+      case _                                  => 8
+    }
+    val perRow = df.schema.fields.toSeq.map { f =>
+      val c = col(f.name)
+      val b = f.dataType match {
+        case StringType       => octet_length(c)
+        case ArrayType(et, _) => size(c) * width(et)
+        case t                => lit(width(t))
+      }
+      coalesce(b.cast("long"), lit(0L))
+    }.reduce(_ + _)
+    df.agg(coalesce(sum(perRow), lit(0L))).head().getLong(0)
+  }
 
   def deleteTree(p: Path): Unit = if (Files.exists(p)) {
     Files.walk(p).sorted(java.util.Comparator.reverseOrder()).forEach(x => Files.delete(x))

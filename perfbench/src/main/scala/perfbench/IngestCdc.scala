@@ -17,8 +17,8 @@ import graft.sources.VectorStore
   * A round embeds few chunks, so fixed per-job cost, the CDC diff,
   * partition-scoped rewrites and metadata reads dominate it. */
 object IngestCdc {
-  val CorpusFiles = 50
-  val CorpusWords = 25000
+  val CorpusFiles = 200
+  val CorpusWords = 40000
   /** `load_dt` cycles over this many dates, bounding the partition count. */
   val Window = 3
 
@@ -34,12 +34,13 @@ object IngestCdc {
 
     // set-up, three times: land the corpus and load it with a full refresh
     var base: Path = null
+    val fullS = mutable.ArrayBuffer.empty[Double]
     (0 until 3).foreach { k =>
       val dir = ctx.dir(s"cdc$k")
       out.setups += Harness.seconds {
         val landing = Harness.land(ctx.dir(s"cdc$k/landing"), ctx.seed, initial, pool)
-        IngestJob.fullRefresh(spark, Harness.listing(spark, landing),
-          dir.resolve("ledger").toString, dir.resolve("store").toString, loadDt(0))
+        fullS += Harness.seconds(IngestJob.fullRefresh(spark, Harness.listing(spark, landing),
+          dir.resolve("ledger").toString, dir.resolve("store").toString, loadDt(0)))._2
       }._2
       if (base != null) Harness.deleteTree(base)
       base = dir
@@ -51,7 +52,7 @@ object IngestCdc {
     if (ctx.traced) {
       // the full-refresh layers (set-up's work) and the production
       // embedding path, over the initial corpus
-      IngestFull.prefixes(ctx, out, landing)
+      IngestFull.prefixes(ctx, out, landing, Stats.median(fullS.toSeq))
       EmbedGateway.leg(ctx, out, EmbedGateway.chunkText(ctx, landing), 0, 2)
     }
     Harness.phase("setup")
@@ -75,14 +76,14 @@ object IngestCdc {
       val c = Corpus.change(ctx.seed, round, live, next)
       next += c.added.size
       (c.updated ++ c.added).foreach(e => Corpus.land(landing, ctx.seed, e, pool))
-      val before = if (span) Harness.partitionFiles(storeDir) else Map.empty[String, Set[String]]
+      val before = if (span) Harness.partitionFiles(storeDir) else Map.empty[String, Map[String, Long]]
       if (span) {
         val (n, s) = Harness.seconds(t.span("ledger.diff")(
           Ledger.newAndUpdated(Harness.listing(spark, landing), Ledger.read(spark, ledger)).count()))
         diffS += s
         changedRatio += n.toDouble / (live.size + c.added.size)
       }
-      val (report, si) = Harness.seconds(out.attempt("incremental")(sp("ingest.incremental")(
+      val (_, si) = Harness.seconds(out.attempt("incremental")(sp("ingest.incremental")(
         IngestJob.incremental(spark, sp("landing.list")(Harness.listing(spark, landing)),
           ledger, store, loadDt(round))))(r => r.filesProcessed == c.updated.size + c.added.size))
       c.deleted.foreach(e => Files.delete(landing.resolve(e.name)))
@@ -94,13 +95,13 @@ object IngestCdc {
         val after = Harness.partitionFiles(storeDir)
         val touched = after.keySet.union(before.keySet).filter(p => after.get(p) != before.get(p))
         partsRewritten += touched.size
-        val upserted = report.map(_.chunksUpserted).getOrElse(0L)
-        if (upserted > 0) {
-          val rewritten = VectorStore.read(spark, store)
-            .filter(col("load_dt").cast("string").isin(touched.toSeq.map(_.stripPrefix("load_dt=")): _*))
-            .count()
-          writeAmp += rewritten.toDouble / upserted
-        }
+        // bytes of the data files the round wrote, over the raw bytes of
+        // the rows it upserted (the changed files' chunks)
+        val written = after.toSeq.flatMap { case (p, fs) =>
+          fs.collect { case (f, b) if !before.get(p).exists(_.contains(f)) => b } }.sum
+        val incoming = Harness.rowBytes(VectorStore.read(spark, store)
+          .filter(col("name").isin((c.updated ++ c.added).map(_.name): _*)))
+        if (incoming > 0) writeAmp += written.toDouble / incoming
       } else if (i > 0) { incr += si; dels += sd }
     }
     // the first round warms the CDC path: counted and checked, not a sample
@@ -111,6 +112,7 @@ object IngestCdc {
     check(ctx, out, live, landing, store, ledger)
     val (files, bytes) = Harness.dataFiles(storeDir)
     val rows = VectorStore.read(spark, store).count()
+    out.report("full_refresh_s") = Stats.median(fullS.toSeq)
     out.report("cdc_round_p50_s") = Stats.median(plain)
     out.tail("cdc_round_tail_s", plain)
     out.report("incremental_p50_s") = Stats.median(incr.toSeq)

@@ -52,7 +52,7 @@ object Main {
     a.get("dump-oracle") match {
       case Some(path) =>
         val sql = QueryMix.Headline.map(n => n -> graft.SparkEntry.oracleSql(n))
-        Files.write(Paths.get(path), Json.render(sql.toMap).getBytes("UTF-8"))
+        Harness.Json.writeValue(Paths.get(path).toFile, sql.toMap)
       case None =>
         // exit explicitly: the local-mode Spark context runs inside this
         // JVM, so exiting ends it, and a failed run cannot hang on a live thread
@@ -107,9 +107,9 @@ object Main {
       if (traced) PerLayer.map { case (n, u) => n -> Map("value" -> out.layers.getOrElse(n, 0.0), "unit" -> u) }
       else Seq("setup_s" -> setup, "op_p50_s" -> op, "rss_peak_mb" -> rss).map { case (n, v) =>
         n -> Map("value" -> v, "unit" -> EndToEnd.toMap.apply(n)) }
-    println(Json.render(Map("report" ->
+    println(Harness.Json.writeValueAsString(Map("report" ->
       (scala.collection.immutable.ListMap("workload" -> workload, "seed" -> seed) ++ out.report))))
-    println(Json.render(scala.collection.immutable.ListMap(
+    println(Harness.Json.writeValueAsString(scala.collection.immutable.ListMap(
       "correct" -> out.failures.isEmpty, "attempted" -> out.attempted, "failed" -> failed.toLong,
       "metrics" -> scala.collection.immutable.ListMap(metrics: _*))))
   }

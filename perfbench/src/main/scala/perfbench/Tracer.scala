@@ -125,7 +125,7 @@ final class Tracer(spark: SparkSession, val enabled: Boolean, runId: String) {
   def writeJsonl(path: java.nio.file.Path): Unit = {
     val lines = finished.sortBy(_.id).map { s =>
       val c = inclusive(s)
-      Json.render(scala.collection.immutable.ListMap(
+      Harness.Json.writeValueAsString(scala.collection.immutable.ListMap(
         "run" -> s.runId, "id" -> s.id, "parent" -> s.parent, "name" -> s.name,
         "start_ns" -> s.startNs, "end_ns" -> s.endNs, "dur_s" -> s.seconds,
         "jobs" -> c.jobs, "stages" -> c.stages, "tasks" -> c.tasks,
