@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.functions.{Chunkers, Embedders, TextFunctions => TF}
 import graft.sources.{ParseOps, VectorStore}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -29,7 +29,7 @@ import org.apache.spark.sql.streaming.Trigger
   * Scale: parse→chunk→embed is narrow (projections + one generator —
   * the DocPipeline shape, plan-asserted shuffle-free); the CDC diff is
   * one join on `name`; the store upsert rewrites only the touched
-  * `load_dt=` partitions (VectorStore's dynamic-overwrite contract).
+  * `load_dt=` partitions, each once (VectorStore's partition swap).
   * Driver state is the RunReport counters, never data.
   *
   * Embedding: the deterministic offline embedder by default (SURVEY
@@ -90,55 +90,71 @@ object IngestJob {
     * replace the store content wholesale, overwrite the ledger with the
     * post-run listing (:60,69 — state reflects downloaded truth).
     *
-    * The chunk count in the report comes from an `observe()` metric
-    * collected DURING the store write — not from re-reading the store
+    * The report's counts come from `observe()` metrics collected DURING
+    * the store and ledger writes — not from re-reading the store
     * afterwards (a full second scan of what was just written; at
-    * 100 TB that doubles the job) and not from a separate `count()`
-    * action (which would re-run parse+chunk+embed). `CollectMetrics`
-    * rides the write action for free. */
+    * 100 TB that doubles the job) and not from separate `count()`
+    * actions (which would re-run parse+chunk+embed, or re-scan the
+    * listing). `CollectMetrics` rides the write action for free. */
   def fullRefresh(spark: SparkSession, files: DataFrame,
       ledgerPath: String, storePath: String, loadDt: String): RunReport = {
-    val obs = new org.apache.spark.sql.Observation()
-    val vectors = prepareVectorData(files, loadDt)
-      .observe(obs, count(lit(1)).as("chunks"))
-    VectorStore.replaceAll(spark, storePath, vectors)
-    Ledger.write(listingOf(files), ledgerPath)
-    val n = files.count()
-    RunReport(n, n, obs.get("chunks").asInstanceOf[Long])
+    val chunks = new Observation()
+    VectorStore.replaceAll(spark, storePath, counted(prepareVectorData(files, loadDt), chunks))
+    val n = writeLedger(files, ledgerPath)
+    RunReport(n, n, countOf(chunks))
   }
 
   /** Incremental refresh (data_ingestion.py:56-66): diff the landed
-    * files against the ledger (J1 — new OR strictly newer), drop the
-    * superseded chunks of UPDATED files by name (S12 semantics — an
-    * update may shrink a file's chunk count, so keyed upsert alone
-    * would leave orphans), upsert the fresh chunks, overwrite the
-    * ledger. Unchanged files are never parsed, chunked or embedded. */
+    * files against the ledger (J1 — new OR strictly newer), then ONE
+    * store upsert that writes the fresh chunks and drops every stored
+    * chunk of a changed file by name (S12 semantics — an update may
+    * shrink a file's chunk count, even to zero, so a keyed upsert alone
+    * would leave orphans). The superseded names come from the diff, not
+    * from the fresh chunks, so an update that yields no chunks still
+    * drops its old ones. Each touched `load_dt=` partition is rewritten
+    * once and swapped in with its old and new chunks together, so an
+    * updated file is never without chunks in between. The ledger is
+    * overwritten only after the store: a crash before that replays the
+    * same diff, and the replay's upsert (key- and name-idempotent)
+    * converges on the same store. Unchanged files are never parsed,
+    * chunked or embedded; the report's counts are observed on the two
+    * checkpoints and the ledger write, with no extra action. */
   def incremental(spark: SparkSession, files: DataFrame,
       ledgerPath: String, storePath: String, loadDt: String): RunReport = {
     // localCheckpoint cuts the plan's dependence on the ledger files
     // BEFORE the end-of-run ledger overwrite (Spark refuses to
     // overwrite a path a live plan still reads)
-    val changed = Ledger.newAndUpdated(files, Ledger.read(spark, ledgerPath))
+    val changedN = new Observation()
+    val changed = counted(Ledger.newAndUpdated(files, Ledger.read(spark, ledgerPath)), changedN)
       .localCheckpoint()
-    val updatedNames = changed.filter(col("change_type") === "updated").select("name")
-    // materialize the replacement vectors BEFORE deleting the chunks
-    // they supersede — a parse/embed failure must abort the run with
-    // the store intact, not leave updated files chunkless. (The
-    // checkpoint also lets upsert and the report count reuse the
-    // computed partitions instead of re-running parse+chunk+embed.)
-    val vectors = prepareVectorData(changed.drop("change_type"), loadDt).localCheckpoint()
-    VectorStore.deleteWhere(spark, storePath, updatedNames, "name")
-    VectorStore.upsert(spark, storePath, vectors)
-    val report = RunReport(files.count(), changed.count(), vectors.count())
-    Ledger.write(listingOf(files), ledgerPath)
-    report
+    // materialized once: the upsert reads the vectors twice (their
+    // partitions, then the rewrite), and parse+chunk+embed runs once
+    val chunks = new Observation()
+    val vectors = counted(prepareVectorData(changed.drop("change_type"), loadDt), chunks)
+      .localCheckpoint()
+    VectorStore.upsert(spark, storePath, vectors, superseded = Some(changed.select("name")))
+    val filesIn = writeLedger(files, ledgerPath)
+    RunReport(filesIn, countOf(changedN), countOf(chunks))
+  }
+
+  private def counted(df: DataFrame, obs: Observation): DataFrame =
+    df.observe(obs, count(lit(1)).as("n"))
+
+  private def countOf(obs: Observation): Long = obs.get("n").asInstanceOf[Long]
+
+  /** Overwrite the ledger with the listing of `files`; returns the file
+    * count, observed during the write. */
+  private def writeLedger(files: DataFrame, ledgerPath: String): Long = {
+    val n = new Observation()
+    Ledger.write(counted(listingOf(files), n), ledgerPath)
+    countOf(n)
   }
 
   /** STREAMING face of [[incremental]]: the reference's scheduled
     * re-ingest loop (run the script again tomorrow,
     * data_ingestion.py:56-66) becomes a stream over the landed-files
     * source where each micro-batch is one incremental run — the same
-    * CDC diff, superseded-chunk drop, keyed upsert and ledger
+    * CDC diff, upsert with superseded-chunk drop, and ledger
     * overwrite, so a crash replay re-lands on the identical store state
     * (the upsert is key-idempotent and the diff sees the already-
     * advanced ledger). AvailableNow drains the backlog and stops — the

@@ -859,11 +859,18 @@ object OfficeParsers {
   private def xmlEscape(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
+  /** Every fixture zip entry carries this time, not the wall clock, so
+    * the same text always gives the same bytes. Set as a DOS local time:
+    * no time zone enters it. */
+  private val FixtureEntryTime: java.time.LocalDateTime = java.time.LocalDateTime.of(1980, 1, 1, 0, 0)
+
   private def zipOf(entries: (String, String)*): Array[Byte] = {
     val buf = new ByteArrayOutputStream()
     val z = new ZipOutputStream(buf)
     entries.foreach { case (name, body) =>
-      z.putNextEntry(new ZipEntry(name))
+      val e = new ZipEntry(name)
+      e.setTimeLocal(FixtureEntryTime)
+      z.putNextEntry(e)
       z.write(body.getBytes(StandardCharsets.UTF_8))
       z.closeEntry()
     }

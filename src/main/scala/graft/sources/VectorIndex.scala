@@ -4,6 +4,7 @@ import graft.functions.Similarity
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** IVF vector index AT REST: the in-memory centroid-routed search of
   * SimilarityQueries (`q_knn_ivf*`, `q_knn_kmeans`) persisted as a
@@ -424,10 +425,18 @@ object VectorIndex {
     val cellSet = routed.map(_._2).distinct
     import spark.implicits._
     val qdf = routed.toDF("qid", CellCol, "qe")
-    val cand = spark.read.parquet(path)
+    val index = spark.read.parquet(path)
+    // a query never returns itself; `qid` is a bigint, so a non-integral
+    // id (the vector store's string `chunk_id`) compares as a string
+    // instead of failing its cast to bigint
+    val notSelf = index.schema(idCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => col(idCol) =!= col("qid")
+      case _ => col(idCol).cast("string") =!= col("qid").cast("string")
+    }
+    val cand = index
       .filter(col(CellCol).isin(cellSet: _*))
       .join(broadcast(qdf), Seq(CellCol))
-      .filter(col(idCol) =!= col("qid"))
+      .filter(notSelf)
       .withColumn("sim",
         Similarity.cosineIn(spark, col("qe"), asDouble(col(vecCol))))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col(idCol))

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -16,25 +17,38 @@ import org.apache.spark.sql.types.StructType
   *
   * Offline the store is parquet with the same observable semantics:
   *   - [[createIfAbsent]] = S11 idempotent DDL;
-  *   - [[upsert]] = S10: replace-by-`chunk_id`. When rows carry a
+  *   - [[upsert]] = S10: replace-by-`chunk_id`, optionally also dropping
+  *     every row of a superseded key set (IngestJob passes the names of
+  *     the changed files) in the same rewrite. When rows carry a
   *     `load_dt` column the store is laid out as `load_dt=...` hive
   *     partitions and an upsert rewrites ONLY the partitions that hold
-  *     replaced keys or receive new rows (dynamic partition overwrite —
-  *     O(touched partitions) write amplification, not O(store)); a
-  *     store without `load_dt` falls back to a full staged rewrite.
-  *   - [[deleteWhere]] = S12 anti-join rewrite, partition-scoped the
-  *     same way;
+  *     replaced or superseded keys or receive new rows — O(touched
+  *     partitions) write amplification, not O(store); a store without
+  *     `load_dt` falls back to a full staged rewrite.
+  *   - [[deleteWhere]] = S12 anti-join rewrite, through the same
+  *     partition-scoped rewrite;
   *   - [[foreachBatched]] = the executor-side buffered-flush writer
   *     shape for an external store (one client per PARTITION, flush per
   *     `batchSize` — never one call per row/chunk like the reference).
   *
-  * Crash safety: the dynamic-overwrite path goes through Spark's commit
-  * protocol (partitions swap at job commit — a failed job leaves every
-  * old partition intact). The full-rewrite path stages to `.staging`,
-  * then performs CHECKED renames via the Hadoop FileSystem API (works
-  * on HDFS/S3A, not just the driver-local disk): live → `.old`,
-  * staging → live, and only then drops `.old`; a failed second rename
-  * rolls the old store back, so no failure mode truncates the store.
+  * Crash safety: every rewrite stages its output to a `.staging`
+  * sibling first, so a failed staging write leaves the store as it
+  * was. It then swaps with CHECKED renames via the Hadoop FileSystem
+  * API (works on HDFS/S3A, not just the driver-local disk): the
+  * partition-scoped path moves each touched `load_dt=` dir live →
+  * `.old` and its staged replacement staging → live; the full-rewrite
+  * path does the same with the whole store dir. A failed rename rolls
+  * back what was already swapped. A partition-scoped rewrite that finds
+  * a `.old` left by a crashed one first restores every partition whose
+  * live dir is missing, so no failure mode truncates the store.
+  *
+  * An upsert with a superseded set takes a changed file from its old
+  * chunks to its new ones in one partition swap, not in a delete and a
+  * later upsert. Partitions that gain rows swap first, so there is no
+  * window in which an updated file is chunkless, except the instant
+  * between the two renames of a partition holding both its old and its
+  * new chunks. IngestJob writes its ledger only after the store, so a
+  * crash replays the same diff and converges on the same store.
   */
 object VectorStore {
 
@@ -86,33 +100,23 @@ object VectorStore {
     spark.read.parquet(path)
 
   /** S10: upsert keyed on `chunk_id` — existing rows with incoming keys
-    * are replaced, others kept. Partition-scoped when the store is
-    * `load_dt`-partitioned; a first upsert (or one against a legacy
-    * unpartitioned store) rewrites once and leaves the store
-    * partitioned for every later call. */
-  def upsert(spark: SparkSession, path: String, incoming: DataFrame): Unit = {
+    * are replaced, others kept. `superseded` is a one-column frame named
+    * after a store column: every store row whose value in that column
+    * appears in it is dropped in the same rewrite. IngestJob passes the
+    * names of the changed files, so an update that shrinks a file — even
+    * to zero chunks — leaves none of its old chunks behind.
+    * Partition-scoped when the store is `load_dt`-partitioned; a first
+    * upsert (nothing to replace) or one against a legacy unpartitioned
+    * store rewrites once and leaves the store partitioned for every
+    * later call. */
+  def upsert(spark: SparkSession, path: String, incoming: DataFrame,
+      superseded: Option[DataFrame] = None): Unit = {
     val partitionable = incoming.columns.contains(PartitionCol)
+    val drops = incoming.select(KeyCol) +: superseded.toSeq
     if (!exists(spark, path)) {
       write(incoming, path, partitionable)
     } else if (partitionable && isPartitionedOnDisk(spark, path)) {
-      val keys = incoming.select(KeyCol).distinct()
-      val store = read(spark, path)
-      // partitions that must change: those holding replaced keys (a
-      // column-pruned (key, load_dt) scan) plus those receiving rows
-      val oldParts = store.join(keys, Seq(KeyCol), "left_semi")
-        .select(partToken(col(PartitionCol))).distinct()
-        .collect().map(_.getString(0))
-      val newParts = incoming
-        .select(partToken(col(PartitionCol))).distinct()
-        .collect().map(_.getString(0))
-      val affected = (oldParts ++ newParts).distinct.toSeq
-      val keep = store
-        .filter(partToken(col(PartitionCol)).isin(affected: _*))
-        .join(keys, Seq(KeyCol), "left_anti")
-      val incomingAligned = incoming
-        .withColumn(PartitionCol, col(PartitionCol).cast(store.schema(PartitionCol).dataType))
-        .select(store.columns.map(col): _*)
-      rewriteAffected(spark, path, affected, keep.unionByName(incomingAligned))
+      rewritePartitions(spark, path, drops, Some(incoming))
     } else {
       // legacy/unpartitioned store: one full staged rewrite. When incoming
       // carries `load_dt` and the legacy rows don't, MIGRATE instead of
@@ -127,8 +131,7 @@ object VectorStore {
             store.withColumn(PartitionCol,
               lit(null).cast(incoming.schema(PartitionCol).dataType))
           else store
-        base.join(incoming.select(KeyCol).distinct(), Seq(KeyCol), "left_anti")
-          .unionByName(incoming.select(base.columns.map(col): _*))
+        without(base, drops).unionByName(incoming.select(base.columns.map(col): _*))
       }
     }
   }
@@ -145,21 +148,42 @@ object VectorStore {
   /** S12: delete rows whose key appears in `keys` (anti-join rewrite);
     * rewrites only the partitions that contain matching keys. */
   def deleteWhere(spark: SparkSession, path: String, keys: DataFrame, keyCol: String): Unit = {
-    val k = keys.select(col(keyCol)).distinct()
-    if (isPartitionedOnDisk(spark, path)) {
-      val store = read(spark, path)
-      val affected = store.join(k, Seq(keyCol), "left_semi")
-        .select(partToken(col(PartitionCol))).distinct()
-        .collect().map(_.getString(0)).toSeq
-      if (affected.nonEmpty) {
-        val out = store
-          .filter(partToken(col(PartitionCol)).isin(affected: _*))
-          .join(k, Seq(keyCol), "left_anti")
-        rewriteAffected(spark, path, affected, out)
-      }
-    } else {
-      swapRewrite(spark, path, wantPartition = false)(
-        _.join(k, Seq(keyCol), "left_anti"))
+    val k = Seq(keys.select(col(keyCol)))
+    if (isPartitionedOnDisk(spark, path)) rewritePartitions(spark, path, k, None)
+    else swapRewrite(spark, path, wantPartition = false)(without(_, k))
+  }
+
+  /** `store` minus every row matching one of `drops`: one-column key
+    * frames, each named after the store column it matches. */
+  private def without(store: DataFrame, drops: Seq[DataFrame]): DataFrame =
+    drops.foldLeft(store)((s, k) => s.join(k, k.columns.toSeq, "left_anti"))
+
+  /** The partition-scoped rewrite behind [[upsert]] and [[deleteWhere]]:
+    * the affected partitions are those holding a row of `drops` (a
+    * column-pruned semi-join scan) plus those receiving `incoming` rows,
+    * found in ONE collect. Their rows minus `drops`, plus `incoming`,
+    * replace them in one [[rewriteAffected]]; nothing affected is a
+    * no-op. */
+  private def rewritePartitions(spark: SparkSession, path: String,
+      drops: Seq[DataFrame], incoming: Option[DataFrame]): Unit = {
+    restoreSwapped(spark, path)
+    val store = read(spark, path)
+    val aligned = incoming.map(_
+      .withColumn(PartitionCol, col(PartitionCol).cast(store.schema(PartitionCol).dataType))
+      .select(store.columns.map(col): _*))
+    def parts(df: DataFrame, gains: Boolean) =
+      df.select(partToken(col(PartitionCol)), lit(gains))
+    import spark.implicits._
+    // deduplicated within each input partition: at most (input partitions
+    // × partition values) rows reach the driver, and no shuffle runs
+    val found = (drops.map(k => parts(store.join(k, k.columns.toSeq, "left_semi"), gains = false)) ++
+      aligned.map(parts(_, gains = true))).reduce(_ union _)
+      .as[(String, Boolean)].mapPartitions(_.toSet.iterator).collect()
+    // partitions that gain rows first: see the object doc
+    val affected = found.sortBy(!_._2).map(_._1).distinct.toSeq
+    if (affected.nonEmpty) {
+      val kept = without(store.filter(partToken(col(PartitionCol)).isin(affected: _*)), drops)
+      rewriteAffected(spark, path, affected, aligned.fold(kept)(kept.unionByName(_)))
     }
   }
 
@@ -218,13 +242,15 @@ object VectorStore {
     def wantFiles(bytes: Long) =
       math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     if (isPartitionedOnDisk(spark, path)) {
+      restoreSwapped(spark, path)
       val oversized = fs.listStatus(new Path(path)).toSeq
         .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$PartitionCol="))
         .flatMap { st =>
           val files = dataFiles(st.getPath)
           val want = wantFiles(files.map(_.getLen).sum)
           if (files.length > want)
-            Some(st.getPath.getName.stripPrefix(s"$PartitionCol=") -> want)
+            Some(ExternalCatalogUtils.unescapePathName(
+              st.getPath.getName.stripPrefix(s"$PartitionCol=")) -> want)
           else None
         }
       oversized.foreach { case (value, want) =>
@@ -246,39 +272,64 @@ object VectorStore {
     (if (partitioned) w.partitionBy(PartitionCol) else w).parquet(path)
   }
 
-  /** Rewrite exactly the `affected` partitions of the store to hold
-    * `out`'s rows. `out`'s plan reads the live store, and Spark refuses
-    * to overwrite a path its plan scans — so the new rows stage to a
-    * sibling dir first, then dynamic partition overwrite copies them in
-    * (only partitions present in the staging output swap; every other
-    * partition's files are untouched — asserted by PipelineSpec).
-    * Affected partitions with ZERO surviving rows never appear in the
-    * staging output, so dynamic overwrite would leave their stale files
-    * alive; they are dropped explicitly at the end. */
+  private def move(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"vector store swap: rename $from -> $to failed")
+
+  /** A partition swap that stopped after moving a live `load_dt=` dir to
+    * `.old`, but before moving its replacement in, leaves the only copy
+    * of those rows in `.old`: put back every dir whose live one is
+    * missing, then drop `.old`. Runs before a partition-scoped rewrite
+    * reads the store, and as the roll-back of a failed swap. */
+  private def restoreSwapped(spark: SparkSession, path: String): Unit = {
+    val fs = fileSystem(spark, path)
+    val old = new Path(path + ".old")
+    if (fs.exists(old)) {
+      fs.listStatus(old).foreach { st =>
+        val dir = new Path(path, st.getPath.getName)
+        if (!fs.exists(dir)) move(fs, st.getPath, dir)
+      }
+      fs.delete(old, true)
+    }
+  }
+
+  /** Rewrite exactly the `affected` partitions (in swap order) of the
+    * store to hold `out`'s rows, each in ONE swap: the rows it loses and
+    * the rows it gains change together. `out`'s plan reads the live
+    * store, and Spark refuses to overwrite a path its plan scans — so
+    * the new rows stage to a sibling dir first, and a failed staging
+    * write leaves every partition as it was. Each affected partition
+    * dir then swaps by checked renames: live → `.old`, staged → live;
+    * staging is never re-read or copied. Every other partition's files
+    * are untouched (asserted by PipelineSpec and IngestSpec). An
+    * affected partition with ZERO surviving rows has no staged dir, so
+    * it only moves out. A failed rename puts back every partition
+    * already swapped. */
   private def rewriteAffected(spark: SparkSession, path: String,
       affected: Seq[String], out: DataFrame): Unit = {
     val fs = fileSystem(spark, path)
-    val staging = new Path(path + ".staging")
+    val (live, staging, old) =
+      (new Path(path), new Path(path + ".staging"), new Path(path + ".old"))
     if (fs.exists(staging)) fs.delete(staging, true)
-    write(out, staging.toString, partitioned = true)
-    val present = fs.listStatus(staging).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$PartitionCol="))
-      .map(_.getPath.getName.stripPrefix(s"$PartitionCol="))
-      .toSet
-    if (present.nonEmpty)
-      spark.read.parquet(staging.toString)
-        // when staging holds ONLY null-partition rows, partition-type
-        // inference over {__HIVE_DEFAULT_PARTITION__} yields VOID and
-        // partitionBy refuses it — re-impose the source frame's type
-        .withColumn(PartitionCol,
-          col(PartitionCol).cast(out.schema(PartitionCol).dataType))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(PartitionCol)
-        .parquet(path)
-    affected.filterNot(present).foreach { v =>
-      fs.delete(new Path(path, s"$PartitionCol=$v"), true)
+    try write(out, staging.toString, partitioned = true)
+    catch { case e: Throwable => fs.delete(staging, true); throw e }
+    fs.mkdirs(old)
+    val swapped = scala.collection.mutable.ArrayBuffer.empty[Path]
+    try affected.foreach { v =>
+      val name = s"$PartitionCol=${ExternalCatalogUtils.escapePathName(v)}"
+      val (dir, staged) = (new Path(live, name), new Path(staging, name))
+      if (fs.exists(dir)) move(fs, dir, new Path(old, name))
+      swapped += dir
+      if (fs.exists(staged)) move(fs, staged, dir)
+    } catch { case e: Throwable =>
+      // a swapped dir that is live again holds staged rows: drop it, and
+      // restoreSwapped puts the old one back
+      swapped.foreach(dir => if (fs.exists(dir)) fs.delete(dir, true))
+      restoreSwapped(spark, path)
+      fs.delete(staging, true)
+      throw e
     }
+    fs.delete(old, true)
     fs.delete(staging, true)
   }
 
@@ -296,8 +347,7 @@ object VectorStore {
     val old = new Path(path + ".old")
     write(staged, tmp.toString, partitioned)
     if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(target, old))
-      throw new java.io.IOException(s"vector store swap: rename $target -> $old failed")
+    move(fs, target, old)
     if (!fs.rename(tmp, target)) {
       fs.rename(old, target) // roll the live store back before failing
       throw new java.io.IOException(

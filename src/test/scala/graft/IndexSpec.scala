@@ -79,6 +79,31 @@ class IndexSpec extends SparkSpec {
     assert(got == bruteTopK(5), "all-probes IVF must equal brute force exactly")
   }
 
+  test("a string-keyed index (the store's chunk_id shape) serves the exact top-k") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val sEmb = emb.select(concat(lit("v"), col("vec_id").cast("string")).as("vid"),
+      col("embedding"))
+    val p = Files.createTempDirectory("vindex_str").toFile.getAbsolutePath + "/index"
+    VectorIndex.build(sEmb, "vid", "embedding", Cells, iters = 2, path = p)
+    val got = VectorIndex.query(spark, p, "vid", "embedding", queries, probes = Cells, k = 5)
+      .select(col("qid"), col("vid"), col("rk"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    val qdf = queries.map { case (qid, qv) => (qid, qv.toSeq) }.toDF("qid", "qe")
+    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vid"))
+    val exact = sEmb.crossJoin(broadcast(qdf))
+      .withColumn("sim", Similarity.cosineIn(spark,
+        col("qe"), col("embedding").cast("array<double>")))
+      .withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= 5)
+      .collect().map(r => (r.getAs[Long]("qid"), r.getAs[String]("vid"), r.getAs[Long]("rk"))).toSet
+    assert(got.nonEmpty && got == exact)
+    // the bigint path keeps its plain id comparison
+    val plan = VectorIndex.query(spark, path, "vec_id", "embedding", queries.take(1),
+      probes = 1, k = 3).queryExecution.optimizedPlan.toString
+    assert(plan.contains("NOT (vec_id#") && !plan.contains("cast(qid"), plan)
+  }
+
   private lazy val pqPath = {
     val p = Files.createTempDirectory("vindexpq").toFile.getAbsolutePath + "/index"
     VectorIndex.buildIvfPq(emb, "vec_id", "embedding", Cells, kmIters = 2,

@@ -123,6 +123,108 @@ class IngestSpec extends SparkSpec {
     assert(graft.pipeline.Ledger.read(spark, ledger).count() == 4)
   }
 
+  private def leftovers(store: String): Seq[String] =
+    Seq(".staging", ".old").map(store + _).filter(new java.io.File(_).exists())
+
+  private def partFiles(store: String, dt: String): Set[(String, Long)] =
+    new java.io.File(store, s"load_dt=$dt").listFiles()
+      .filter(_.getName.startsWith("part-")).map(f => (f.getName, f.length)).toSet
+
+  test("an update that yields no chunks still drops every old chunk of that file") {
+    val dir = Files.createTempDirectory("ingest_empty").toFile.getAbsolutePath
+    val (ledger, store) = (s"$dir/ledger", s"$dir/store")
+    IngestJob.fullRefresh(spark, initial, ledger, store, "2023-01-01")
+    val aChunks = VectorStore.read(spark, store).filter(col("name") === "a.txt").count()
+    def updateC(content: org.apache.spark.sql.Column, at: Timestamp) =
+      initial.withColumn("last_modified",
+          when(col("name") === "c.txt", lit(at)).otherwise(col("last_modified")))
+        .withColumn("content", when(col("name") === "c.txt", content).otherwise(col("content")))
+    def cTexts() = VectorStore.read(spark, store).filter(col("name") === "c.txt")
+      .select("text").collect().map(_.getString(0)).toSeq
+
+    // empty text: the word chunker yields one empty chunk, and no old one survives
+    val r1 = IngestJob.incremental(spark, updateC(lit(Array.emptyByteArray), t1),
+      ledger, store, "2023-02-01")
+    assert(r1.filesProcessed == 1 && r1.chunksUpserted == 1)
+    assert(cTexts() == Seq(""))
+    // no content at all: zero new chunks, and the superseded set (taken
+    // from the diff, not from the new chunks) still drops the old one
+    val r2 = IngestJob.incremental(spark, updateC(lit(null).cast("binary"),
+      ts("2023-03-01 00:00:00")), ledger, store, "2023-03-01")
+    assert(r2.filesProcessed == 1 && r2.chunksUpserted == 0)
+    assert(cTexts().isEmpty)
+    assert(VectorStore.read(spark, store).filter(col("name") === "a.txt").count() == aChunks)
+  }
+
+  test("CDC calls swap only touched partitions and leave no staging or old sibling") {
+    val dir = Files.createTempDirectory("ingest_swap").toFile.getAbsolutePath
+    val (ledger, store) = (s"$dir/ledger", s"$dir/store")
+    IngestJob.fullRefresh(spark, initial, ledger, store, "2023-01-01")
+    val jan = partFiles(store, "2023-01-01")
+    def landed(d: (Timestamp, String)) = initial.unionByName(
+      filesDf(Seq(("d.txt", "http://x.io/d.txt", d._1, d._2.getBytes("UTF-8")))))
+    // d.txt new: only 02-01 is written
+    IngestJob.incremental(spark, landed(t1 -> "fresh file"), ledger, store, "2023-02-01")
+    assert(leftovers(store).isEmpty)
+    assert(partFiles(store, "2023-01-01") == jan, "untouched partition was rewritten")
+    // d.txt updated: only 02-01 (its old chunks) and 03-01 (its new ones) swap
+    IngestJob.incremental(spark, landed(ts("2023-03-01 00:00:00") -> "newer words"),
+      ledger, store, "2023-03-01")
+    assert(leftovers(store).isEmpty)
+    assert(partFiles(store, "2023-01-01") == jan, "untouched partition was rewritten")
+    assert(!new java.io.File(store, "load_dt=2023-02-01").exists(),
+      "a partition left with no rows is swapped out")
+    assert(VectorStore.read(spark, store).filter(col("name") === "d.txt")
+      .select(col("text")).collect().map(_.getString(0)).toSeq == Seq("newer words"))
+    import spark.implicits._
+    IngestJob.deleteFiles(spark, Seq("d.txt").toDF("name"), ledger, store)
+    assert(leftovers(store).isEmpty)
+    assert(partFiles(store, "2023-01-01") == jan, "untouched partition was rewritten")
+    val s = VectorStore.read(spark, store)
+    assert(s.filter(col("name") === "d.txt").count() == 0)
+    assert(s.select("name").distinct().count() == 3)
+  }
+
+  /** Spark jobs run by `f`, counted by job group. A job in a second
+    * group marks when the listener has seen them all: the bus delivers
+    * events in order. */
+  private def jobsOf(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(): Unit
+          case Some(g) if g == s"$group-end" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("job budget: an incremental refresh rewrites its partitions in one pass") {
+    val dir = Files.createTempDirectory("ingest_jobs").toFile.getAbsolutePath
+    val (ledger, store) = (s"$dir/ledger", s"$dir/store")
+    IngestJob.fullRefresh(spark, initial, ledger, store, "2023-01-01")
+    val changed = initial.withColumn("last_modified",
+        when(col("name") === "c.txt", lit(t1)).otherwise(col("last_modified")))
+      .withColumn("content",
+        when(col("name") === "c.txt", lit("short now".getBytes("UTF-8"))).otherwise(col("content")))
+    val n = jobsOf(IngestJob.incremental(spark, changed, ledger, store, "2023-02-01"))
+    assert(n <= 12, s"incremental ran $n Spark jobs")
+  }
+
   test("unsupported file types are filtered before parsing") {
     val files = filesDf(Seq(
       ("ok.txt", "u", t0, "plain text".getBytes("UTF-8")),

@@ -41,6 +41,27 @@ class ParseSpec extends SparkSpec {
     assert(OfficeParsers.docxText(OfficeParsers.makeDocx(text)) == text)
   }
 
+  test("fixture writers are deterministic: fixed zip entry times, equal bytes per call") {
+    val fixed = java.time.LocalDateTime.of(1980, 1, 1, 0, 0)
+    def entryTimes(bytes: Array[Byte]) = {
+      val z = new java.util.zip.ZipInputStream(new java.io.ByteArrayInputStream(bytes))
+      Iterator.continually(z.getNextEntry).takeWhile(_ != null).map(_.getTimeLocal).toList
+    }
+    val zips = Seq(
+      () => OfficeParsers.makeDocx("same text"),
+      () => OfficeParsers.makePptx("same text"),
+      () => OfficeParsers.makeXlsx(Seq(Seq("a", "b"), Seq("c", "d"))))
+    zips.foreach { make =>
+      val bytes = make()
+      val times = entryTimes(bytes)
+      assert(times.nonEmpty && times.forall(_ == fixed), s"wall-clock entry times: $times")
+      assert(bytes.sameElements(make()))
+    }
+    // the CFB writer leaves every directory timestamp zero
+    def msg() = OfficeParsers.makeMsg("subj", "body", Seq("a.txt" -> "x".getBytes(StandardCharsets.UTF_8)))
+    assert(msg().sameElements(msg()))
+  }
+
   test("pptx: slides order numerically (slide10 after slide2)") {
     def slide(t: String) =
       s"""<p:sld xmlns:a="http://x/a" xmlns:p="http://x/p">

@@ -109,6 +109,7 @@ class PipelineSpec extends SparkSpec {
     assert(s1.count() == 20)
     assert(s1.filter(col("payload") === "b").count() == 5)
     assert(files(jan) == janBefore, "untouched partition was rewritten")
+    assert(leftovers(path).isEmpty)
 
     // a key re-ingested under a new load_dt moves partitions, no duplicate
     VectorStore.upsert(spark, path, rows(Seq(1), "2023-03-01", "c"))
@@ -123,6 +124,63 @@ class PipelineSpec extends SparkSpec {
       (11 to 20).map(i => s"c$i").toDF("chunk_id"), "chunk_id")
     assert(VectorStore.read(spark, path).count() == 10)
     assert(!new java.io.File(path, "load_dt=2023-02-01").exists())
+    assert(leftovers(path).isEmpty)
+
+    // a superseded key set drops matching rows in the same rewrite
+    val janNow = files(jan)
+    VectorStore.upsert(spark, path, rows(Seq(30), "2023-03-01", "d"),
+      superseded = Some(Seq("c").toDF("payload")))
+    val s3 = VectorStore.read(spark, path)
+    assert(s3.select("chunk_id").collect().map(_.getString(0)).toSet ==
+      (2 to 10).map(i => s"c$i").toSet + "c30")
+    assert(files(jan) == janNow, "untouched partition was rewritten")
+    assert(leftovers(path).isEmpty)
+  }
+
+  private def leftovers(path: String): Seq[String] =
+    Seq(".staging", ".old").map(path + _).filter(new java.io.File(_).exists())
+
+  /** (partition dir, file name, size) of every data file in the store. */
+  private def storeFiles(path: String): Set[(String, String, Long)] =
+    new java.io.File(path).listFiles().filter(_.getName.startsWith("load_dt=")).toSet
+      .flatMap((p: java.io.File) => p.listFiles().filter(_.getName.startsWith("part-"))
+        .map(f => (p.getName, f.getName, f.length)))
+
+  test("vector store: a failed staging write leaves every partition as it was") {
+    val path = Files.createTempDirectory("vstore_fail").toFile.getAbsolutePath + "/store"
+    VectorStore.upsert(spark, path,
+      dtRows(1 to 10, "2023-01-01", "a").unionByName(dtRows(11 to 20, "2023-02-01", "a")))
+    val before = storeFiles(path)
+    val rowsBefore = VectorStore.read(spark, path).collect().map(_.toString).toSet
+    // the payload fails only when the staging write's tasks compute it
+    // (the repartition keeps the optimizer from folding it into a local relation)
+    val bad = dtRows(Seq(1, 11, 30), "2023-03-01", "x").repartition(2)
+      .withColumn("payload", raise_error(lit("staging write fails")).cast("string"))
+    def failing(f: => Unit) =
+      assert(intercept[Exception](f).getMessage.contains("staging write fails"))
+    failing(VectorStore.upsert(spark, path, bad))
+    failing(VectorStore.upsert(spark, path, bad,
+      superseded = Some(dtRows(Seq(2), "2023-01-01", "a").select("chunk_id"))))
+    assert(storeFiles(path) == before)
+    assert(VectorStore.read(spark, path).collect().map(_.toString).toSet == rowsBefore)
+    assert(leftovers(path).isEmpty)
+  }
+
+  test("vector store: a partition left in .old by an interrupted swap is restored first") {
+    val path = Files.createTempDirectory("vstore_crash").toFile.getAbsolutePath + "/store"
+    VectorStore.upsert(spark, path,
+      dtRows(1 to 10, "2023-01-01", "a").unionByName(dtRows(11 to 20, "2023-02-01", "a")))
+    // a swap that stopped between its two renames: Feb moved out, not back in
+    new java.io.File(path + ".old").mkdirs()
+    assert(new java.io.File(path, "load_dt=2023-02-01")
+      .renameTo(new java.io.File(path + ".old", "load_dt=2023-02-01")))
+    // the next upsert replaces a Feb key: it must see Feb, not duplicate c11
+    VectorStore.upsert(spark, path, dtRows(Seq(11), "2023-03-01", "b"))
+    val s = VectorStore.read(spark, path)
+    assert(s.count() == 20)
+    assert(s.filter(col("chunk_id") === "c11").select("payload")
+      .collect().map(_.getString(0)).toSeq == Seq("b"))
+    assert(leftovers(path).isEmpty)
   }
 
   test("vector store: legacy unpartitioned store migrates when incoming has load_dt") {
