@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.DataFrame
+
+import Json.mapper
 
 /** Benchmark main (driver contract): one JSON line on stdout.
   *
@@ -59,45 +63,35 @@ object Bench {
     * (tools/duckdb_baseline.jsonl, produced by tools/bench_duckdb.py
     * from the SAME oracle SQL the correctness gate runs) — so every
     * BENCH_r*.json carries the 2×-bar comparison inline instead of the
-    * baseline being re-measured ad hoc each round. Flat one-line JSON
-    * records written by our own tool → a field regex is a safe parse;
-    * absent file/sf degrades to an empty map, never a bench failure. */
+    * baseline being re-measured ad hoc each round. One JSON record per
+    * line; an absent file/sf degrades to an empty map, never a bench
+    * failure. */
   private def duckdbBaseline(sfName: String): Map[String, Double] = {
     val path = sys.env.getOrElse("SPARK_GRAFT_DUCKDB_BASELINE", "tools/duckdb_baseline.jsonl")
     val f = new java.io.File(path)
     if (!f.isFile) Map.empty
-    else {
-      val line = """"sf"\s*:\s*"([^"]+)".*?"query"\s*:\s*"([^"]+)".*?"duckdb_s"\s*:\s*([0-9.eE+-]+)""".r
+    else
       scala.util.Using(scala.io.Source.fromFile(f)) { src =>
-        src.getLines().flatMap(l => line.findFirstMatchIn(l)).collect {
-          case m if m.group(1) == sfName => m.group(2) -> m.group(3).toDouble
+        src.getLines().filter(_.trim.nonEmpty).map(l => mapper.readTree(l)).collect {
+          case n if n.path("sf").asText == sfName =>
+            n.path("query").asText -> n.path("duckdb_s").asDouble
         }.toMap
       }.getOrElse(Map.empty)
-    }
   }
+
+  /** `v` rounded to `k` decimals: JSON numbers keep the fixed precision
+    * the bench records have always carried. */
+  private def fixed(k: Int)(v: Double): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(v).setScale(k, java.math.RoundingMode.HALF_UP)
+
+  private def nums(xs: Seq[(String, Double)], k: Int): ListMap[String, java.math.BigDecimal] =
+    ListMap.from(xs.map { case (n, v) => n -> fixed(k)(v) })
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.envCores
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt.max(1)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // A/B instrumentation for isolating session-extension overhead:
-    // SPARK_GRAFT_NO_EXT=1 drops GraftExtensions entirely (queries fall
-    // back to their composed-Catalyst forms); SPARK_GRAFT_EXCLUDED_RULES
-    // excludes specific injected optimizer rules only.
-    if (!sys.env.get("SPARK_GRAFT_NO_EXT").contains("1"))
-      builder.config("spark.sql.extensions", "graft.GraftExtensions")
-    sys.env.get("SPARK_GRAFT_EXCLUDED_RULES")
-      .foreach(r => builder.config("spark.sql.optimizer.excludedRules", r))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus)
 
     val qs = headline.flatMap(n => SparkEntry.queries.get(n).map(n -> _))
 
@@ -131,19 +125,13 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val resultsFull = timeAll(sfDir, iters, errors)
     val results = resultsFull.map { case (k, (med, _)) => k -> med }
-    val minJson = resultsFull.map { case (k, (_, mn)) => "\"" + k + f"\":$mn%.3f" }
-      .mkString("{", ",", "}")
-    val qJson = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
+    val mins = resultsFull.map { case (k, (_, mn)) => k -> mn }
     val total = results.map(_._2).filter(_ >= 0).sum
     val base = duckdbBaseline(new java.io.File(sfDir).getName)
-    val duckJson = results.flatMap { case (k, _) => base.get(k).map(k -> _) }
-      .map { case (k, v) => "\"" + k + f"\":$v%.4f" }.mkString("{", ",", "}")
-    val ratioJson = results.flatMap { case (k, v) =>
+    val duck = results.flatMap { case (k, _) => base.get(k).map(k -> _) }
+    val ratio = results.flatMap { case (k, v) =>
       base.get(k).filter(b => b > 0 && v >= 0).map(b => k -> v / b)
-    }.map { case (k, r) => "\"" + k + f"\":$r%.2f" }.mkString("{", ",", "}")
+    }
     // ratio over the INTERSECTION only: a query missing from the
     // baseline file must drop out of both sides, or a partial baseline
     // silently skews the headline ratio
@@ -158,10 +146,11 @@ object Bench {
     // fixed per-job floor (growth ≪ data growth: scheduling/codegen
     // amortizes at scale) or real data-proportional work — the evidence
     // a 100× scale-up claim needs. Skippable: SPARK_GRAFT_NO_ANCHOR=1.
+    // Yields the (full, compact) anchor records.
     val anchorDir = sys.env.getOrElse("SPARK_GRAFT_ANCHOR_DIR", "benchdata/sf1")
-    val anchorJson: (String, String) =
+    val anchor: Option[(ListMap[String, Any], ListMap[String, Any])] =
       if (sys.env.get("SPARK_GRAFT_NO_ANCHOR").contains("1") ||
-          !new java.io.File(anchorDir).isDirectory) ("", "")
+          !new java.io.File(anchorDir).isDirectory) None
       else {
         val aErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
         // MORE iters than the main leg (default 5): the anchor has been
@@ -174,37 +163,30 @@ object Bench {
           .getOrElse(iters.max(5))
         val aFull = timeAll(anchorDir, aIters, aErrors)
         val aResults = aFull.map { case (k, (med, _)) => k -> med }
-        val aQ = aResults.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-          .mkString("{", ",", "}")
-        val aMinJson = aFull.map { case (k, (_, mn)) => "\"" + k + f"\":$mn%.3f" }
-          .mkString("{", ",", "}")
+        val aMins = aFull.map { case (k, (_, mn)) => k -> mn }
         val mainByName = results.toMap
-        val mainMin = resultsFull.map { case (k, (_, mn)) => k -> mn }.toMap
+        val mainMin = mins.toMap
         val growthPairs = aResults.flatMap { case (k, v) =>
           mainByName.get(k).filter(m => m > 0 && v >= 0).map(m => k -> v / m)
         }
-        val growth = growthPairs
-          .map { case (k, g) => "\"" + k + f"\":$g%.2f" }.mkString("{", ",", "}")
-        val growthMinPairs = aFull.flatMap { case (k, (_, mn)) =>
+        val growthMinPairs = aMins.flatMap { case (k, mn) =>
           mainMin.get(k).filter(m => m > 0 && mn >= 0).map(m => k -> mn / m)
         }
-        val growthMin = growthMinPairs
-          .map { case (k, g) => "\"" + k + f"\":$g%.2f" }.mkString("{", ",", "}")
         // self-check: a floor-classified query measuring >4× growth is
         // flagged — with its min-based growth alongside, the record
         // says ITSELF whether the sample was noise (min stays in band)
         // or a real regression (min moved too)
         val minByName = growthMinPairs.toMap
-        val outliers = growthPairs.collect {
+        val outliers = ListMap.from(growthPairs.collect {
           case (k, g) if floorClass(k) && g > 4.0 =>
-            "\"" + k + f"""\":{"growth":$g%.2f,"growth_min":${minByName.getOrElse(k, -1.0)}%.2f}"""
-        }.mkString("{", ",", "}")
+            k -> ListMap("growth" -> fixed(2)(g),
+              "growth_min" -> fixed(2)(minByName.getOrElse(k, -1.0)))
+        })
         val aBase = duckdbBaseline(new java.io.File(anchorDir).getName)
         val aDuck = aResults.flatMap { case (k, _) => aBase.get(k).map(k -> _) }
-          .map { case (k, v) => "\"" + k + f"\":$v%.4f" }.mkString("{", ",", "}")
         val aRatio = aResults.flatMap { case (k, v) =>
           aBase.get(k).filter(b => b > 0 && v >= 0).map(b => k -> v / b)
-        }.map { case (k, r) => "\"" + k + f"\":$r%.2f" }.mkString("{", ",", "}")
+        }
         val aPaired = aResults.filter { case (k, v) => v >= 0 && aBase.contains(k) }
         val aDuckTotal = aPaired.map { case (k, _) => aBase(k) }.sum
         val aRatioTotal =
@@ -215,15 +197,21 @@ object Bench {
         // converge on it). `ratio_total` stays MEDIAN-based — the r11
         // ADVICE close: the key kept its original cross-round semantics
         // so BENCH_r*.json records compare like-for-like under it.
-        val aMinByName = aFull.map { case (k, (_, mn)) => k -> mn }.toMap
-        val aPairedMin = aPaired.map { case (k, _) => k -> aMinByName(k) }
+        val aMinByName = aMins.toMap
         val aRatioTotalMin =
-          if (aDuckTotal > 0) aPairedMin.map(_._2).sum / aDuckTotal else -1.0
+          if (aDuckTotal > 0) aPaired.map { case (k, _) => aMinByName(k) }.sum / aDuckTotal
+          else -1.0
         val aTotal = aResults.map(_._2).filter(_ >= 0).sum
-        val aErr = aErrors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-          .mkString("{", ",", "}")
-        (f""","anchor":{"sf":"$anchorDir","iters":$aIters,"value":$aTotal%.3f,"queries":$aQ,"queries_min":$aMinJson,"growth":$growth,"growth_min":$growthMin,"floor_outliers":$outliers,"duckdb":$aDuck,"ratio":$aRatio,"duckdb_total":$aDuckTotal%.3f,"ratio_total":$aRatioTotal%.2f,"ratio_total_min":$aRatioTotalMin%.2f,"errors":$aErr}""",
-          f""","anchor":{"sf":"$anchorDir","iters":$aIters,"value":$aTotal%.3f,"floor_outliers":$outliers,"duckdb_total":$aDuckTotal%.3f,"ratio_total":$aRatioTotal%.2f,"ratio_total_min":$aRatioTotalMin%.2f,"errors":$aErr}""")
+        val head = ListMap[String, Any]("sf" -> anchorDir, "iters" -> aIters,
+          "value" -> fixed(3)(aTotal))
+        val tail = ListMap[String, Any]("floor_outliers" -> outliers,
+          "duckdb_total" -> fixed(3)(aDuckTotal), "ratio_total" -> fixed(2)(aRatioTotal),
+          "ratio_total_min" -> fixed(2)(aRatioTotalMin), "errors" -> aErrors)
+        val perQuery = ListMap[String, Any]("queries" -> nums(aResults, 3),
+          "queries_min" -> nums(aMins, 3), "growth" -> nums(growthPairs, 2),
+          "growth_min" -> nums(growthMinPairs, 2), "duckdb" -> nums(aDuck, 4),
+          "ratio" -> nums(aRatio, 2))
+        Some((head ++ perQuery ++ tail, head ++ tail))
       }
     // r16 (VERDICT r15 ask #2): r14's printed line was truncated by the
     // driver's stdout-tail window — the line had grown past the capture
@@ -234,18 +222,22 @@ object Bench {
     // of how many anchor queries ride along; the FULL payload — anchor
     // per-query medians/mins/growth and the per-query duckdb/ratio maps
     // — persists unchanged in bench_out.json.
-    val common =
-      f""""metric":"total","value":$total%.3f,"unit":"sec","queries":$qJson,"queries_min":$minJson,"duckdb_total":$duckTotal%.3f,"ratio_total":$ratioTotal%.2f,"errors":$errJson,"iters":$iters,"cpus":$cpus,"sf":"$sfDir""""
-    val fullLine =
-      s"""{$common,"duckdb":$duckJson,"ratio":$ratioJson${anchorJson._1}}"""
-    val compactLine = s"""{$common${anchorJson._2}}"""
+    val common = ListMap[String, Any]("metric" -> "total", "value" -> fixed(3)(total),
+      "unit" -> "sec", "queries" -> nums(results, 3), "queries_min" -> nums(mins, 3),
+      "duckdb_total" -> fixed(3)(duckTotal), "ratio_total" -> fixed(2)(ratioTotal),
+      "errors" -> errors, "iters" -> iters, "cpus" -> cpus, "sf" -> sfDir)
+    val fullLine = mapper.writeValueAsString(common ++ ListMap("duckdb" -> nums(duck, 4),
+      "ratio" -> nums(ratio, 2)) ++ anchor.map(a => "anchor" -> a._1))
+    val compactLine = mapper.writeValueAsString(common ++ anchor.map(a => "anchor" -> a._2))
     // self-contained record (r10 verdict ask): BENCH_rN.json keeps only
     // the tail of stdout, which truncated the main leg out of the number
     // of record — persist the full payload as a file AND print the
     // compact form as the single last line
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_out.json"), fullLine + "\n")
-    catch { case _: Throwable => () } // read-only cwd must not fail the bench
+    catch { case e: java.io.IOException => // read-only cwd must not fail the bench
+      System.err.println(s"[bench] bench_out.json not written, full payload lost: $e")
+    }
     println(compactLine)
     spark.stop()
   }

@@ -4,9 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Plan-capture main (optimization-round evidence): writes
   * `.explain("formatted")` output for the named queries (default: the
-  * bench headline set) to `<outDir>/<name>.txt`. Mirrors Bench's
-  * session config — including `SPARK_GRAFT_NO_EXT` and
-  * `SPARK_GRAFT_EXCLUDED_RULES` — so the captured plan is the plan
+  * bench headline set) to `<outDir>/<name>.txt`. Builds its session in
+  * [[GraftSession]], as Bench does, so the captured plan is the plan
   * the bench times. Pass the round's plans directory explicitly; the
   * default is a scratch dir so a bare run can never overwrite a
   * committed round's evidence.
@@ -20,21 +19,7 @@ object Explain {
     val names =
       if (args.length > 2) args(2).split(',').toSeq else Bench.headline
     val suffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    if (!sys.env.get("SPARK_GRAFT_NO_EXT").contains("1"))
-      builder.config("spark.sql.extensions", "graft.GraftExtensions")
-    sys.env.get("SPARK_GRAFT_EXCLUDED_RULES")
-      .foreach(r => builder.config("spark.sql.optimizer.excludedRules", r))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.envCores)
     new java.io.File(outDir).mkdirs()
     // evidence-only pseudo-query: the loop-exit pins hide the executed
     // training lineage behind `Scan ExistingRDD` in every SERVED plan,

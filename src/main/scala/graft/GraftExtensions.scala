@@ -6,23 +6,21 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType}
 
-/** Engine extension entry point — load with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")`.
+/** Engine extension entry point, loaded by every [[GraftSession]]
+  * (`spark.sql.extensions=graft.GraftExtensions`).
   *
   * Registers the library's native Catalyst expressions in the session
   * FunctionRegistry so they are callable from SQL and from
-  * `functions.call_function`:
+  * `functions.call_function`: `graft_cosine`, `graft_sqdist`,
+  * `graft_quantize`, `graft_argmin_cell`, `graft_embed`,
+  * `graft_chunk_words` and `graft_normalize`. Also injects the
+  * optimizer rules (the [[graft.plans.FuseCosine]] and
+  * [[graft.plans.FuseTextKernels]] rewrites, MV, file-skipping and DML
+  * rules) and the as-of join planner strategy.
   *
-  *   - `graft_cosine(array<double>, array<double>) -> double`
-  *     ([[graft.expressions.CosineSim]], fused + codegen'd).
-  *
-  * Also injects the [[graft.plans.FuseCosine]] optimizer rule, which
-  * rewrites the composed HOF cosine shape into the fused kernel when
-  * the rewrite is provably semantics-preserving.
-  *
-  * Queries fall back to the composed (bit-identical) Catalyst form when
-  * the extension is absent, so a session that doesn't load this class
-  * still computes correct results — just off the fast path.
+  * The extension is required: the `graft.functions` helpers call these
+  * kernels unconditionally, so a session built without it fails at
+  * analysis and names the missing `graft_*` routine.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -77,8 +75,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((
       FunctionIdentifier("graft_argmin_cell"),
       new ExpressionInfo(classOf[ArgminCell].getName, "graft_argmin_cell"),
-      // no input Cast: the packed-centroid struct shape is produced by
-      // the trainers themselves (array<long> + cid-sorted pack)
+      // no input Cast: ArgminCell.checkInputDataTypes rejects any shape
+      // but array<bigint> + the packed-centroid struct array
       (children: Seq[Expression]) => ArgminCell(children.head, children(1))))
     ext.injectFunction((
       FunctionIdentifier("graft_embed"),

@@ -25,16 +25,7 @@ object StepProbe {
   def main(args: Array[String]): Unit = {
     val which = args.headOption.getOrElse("index_compact")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.envCores)
     // absorb session warmup outside the steps (the first job in any
     // session pays ~5s of JVM/codegen startup that is not step cost)
     Tables(spark, sfDir, "documents").write.format("noop").mode("overwrite").save()

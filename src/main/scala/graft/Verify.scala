@@ -1,6 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import scala.collection.immutable.ListMap
+
+import Json.mapper
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,29 +14,8 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.envCores)
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -65,22 +48,21 @@ object Verify {
         if (d.exists()) rmr(d)
         d.mkdirs()
         Files.writeString(Paths.get(s"$outDir/$name/_ERROR.json"),
-          s"{${q("query")}: ${q(name)}, ${q("error")}: ${q(failed(name))}}")
+          mapper.writeValueAsString(ListMap("query" -> name, "error" -> failed(name))))
       }
     }
     // Aggregated failure ledger — written even when empty so its absence
     // is itself a signal (old Verify vs new), and counts so a shrunken
     // report can't masquerade as green.
     val total = SparkEntry.queries.count { case (n, _) => only.forall(_.contains(n)) }
-    val errJson = failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
-      s"""{"n_registered": $total, "n_ok": ${total - failed.size}, "n_failed": ${failed.size}, "errors": $errJson}""")
+      mapper.writeValueAsString(ListMap("n_registered" -> total,
+        "n_ok" -> (total - failed.size), "n_failed" -> failed.size, "errors" -> failed)))
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size}/$total queries FAILED: ${failed.keys.mkString(", ")}")
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      mapper.writeValueAsString(
+        SparkEntry.oracleSql.filter { case (k, _) => only.forall(_.contains(k)) }))
     spark.stop()
   }
 }

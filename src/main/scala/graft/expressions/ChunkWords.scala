@@ -9,9 +9,10 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Fused G2 chunker: fixed-size word chunks with overlap
   * (/root/reference/llmcore/cms/parsers.py:40-68 semantics), one pass.
   *
-  * The composed Catalyst form in [[graft.functions.Chunkers]] evaluates
-  * `transform(sequence(...), i -> array_join(slice(words, ...)))` — per
-  * chunk it materializes a slice copy and walks the lambda interpreter.
+  * The composed Catalyst form (the test oracle
+  * `Oracles.chunkFixedWords`) evaluates `transform(sequence(...),
+  * i -> array_join(slice(words, ...)))` — per chunk it materializes a
+  * slice copy and walks the lambda interpreter.
   * This kernel splits once and emits the chunk strings directly, with
   * EXACTLY the composed form's semantics (same `\s+`→" " collapse, same
   * single-space split keeping empty leading token, chunk i covering

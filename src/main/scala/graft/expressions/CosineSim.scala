@@ -26,8 +26,8 @@ import org.apache.spark.sql.types._
   * Null semantics: null array → null (BinaryExpression's null-safe
   * wrapper); MISMATCHED lengths → null, matching the composed
   * `zip_with` form (which pads the shorter array with null and folds
-  * null through the sum) so `Similarity.cosineIn` gives the same answer
-  * whether or not the extension is loaded; array ELEMENTS are assumed
+  * null through the sum) so `Similarity.cosineIn` and
+  * `Similarity.cosine` give the same answer; array ELEMENTS are assumed
   * non-null (embedding vectors — the input type accepts the default
   * containsNull=true parquet shape, where a null slot reads as 0.0).
   */

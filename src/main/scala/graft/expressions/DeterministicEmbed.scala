@@ -10,13 +10,14 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused deterministic hash-projection embedding (F12 offline face):
   * component j = int(hex4(md5(text ‖ ":" ‖ j))) / 32768 − 1, exactly the
-  * values of the composed Catalyst form in
-  * [[graft.functions.Embedders.deterministicEmbed]] and its DuckDB
-  * oracle — but computed by hashing the text ONCE and cloning the MD5
-  * state per component, instead of re-hashing the full chunk `dim`
-  * times (64 expression-tree evaluations of md5/substring/conv per row
-  * in the composed form). Bit-identical output (the md5 value does not
-  * depend on how its input was buffered); asserted in SimilaritySpec.
+  * values of the composed Catalyst form (the test oracle
+  * `Oracles.deterministicEmbed`) and its DuckDB mirror
+  * [[graft.functions.Embedders.deterministicEmbedSql]] — but computed
+  * by hashing the text ONCE and cloning the MD5 state per component,
+  * instead of re-hashing the full chunk `dim` times (64 expression-tree
+  * evaluations of md5/substring/conv per row in the composed form).
+  * Bit-identical output (the md5 value does not depend on how its
+  * input was buffered); asserted in SimilaritySpec.
   */
 case class DeterministicEmbed(child: Expression, dim: Int)
     extends UnaryExpression {

@@ -1,5 +1,7 @@
 package graft.expressions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{DataTypeMismatch, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -19,15 +21,14 @@ import org.apache.spark.sql.types._
 /** round(vᵢ·2²⁰) per element: `array<double>` → `array<long>` on the
   * exact integer grid every similarity trainer quantizes to.
   *
-  * Rounding: HALF_UP away from zero — floor(x+0.5) / ceil(x−0.5) — the
-  * same shortcut [[graft.operators.CentroidAggregator]] uses for the
-  * identical grid, value-equal to Catalyst's `ROUND(x)` for these
-  * magnitudes (|v·2²⁰| ≪ 2⁵²) and oracle-hash-verified across every
-  * consumer query at both driver scales.
+  * Rounding: HALF_UP away from zero, exactly as Catalyst's `ROUND(x)`
+  * (BigDecimal HALF_UP) and DuckDB's `round` do — see
+  * [[QuantizeGrid.roundHalfUp]]. [[graft.operators.CentroidAggregator]]
+  * rounds the identical grid through the same function.
   *
   * Null semantics: null array → null; a null ELEMENT stays a null
-  * element (what `transform(e, v -> cast(round(v·2²⁰) as long))`
-  * produces), so the composed fallback is value-identical. */
+  * element — value-identical to the composed
+  * `transform(e, v -> cast(round(v·2²⁰) as long))`. */
 case class QuantizeGrid(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(LongType,
@@ -53,10 +54,18 @@ case class QuantizeGrid(child: Expression) extends UnaryExpression {
 
 object QuantizeGrid {
 
-  @inline private def roundUnit(v: Double): Long = {
-    val x = v * 1048576.0d
-    if (x >= 0) math.floor(x + 0.5d).toLong else math.ceil(x - 0.5d).toLong
+  /** x rounded half away from zero. `floor(x + 0.5)` is not exact: the
+    * sum itself rounds, so 0.49999999999999994 and odd integers above
+    * 2⁵² come out one too high. The fractional part `a − floor(a)` is
+    * exact for every double, so the comparison against 0.5 is too. */
+  def roundHalfUp(x: Double): Long = {
+    val a = math.abs(x)
+    val f = math.floor(a)
+    val r = if (a - f >= 0.5d) f + 1.0d else f
+    (if (x < 0) -r else r).toLong
   }
+
+  @inline private def roundUnit(v: Double): Long = roundHalfUp(v * 1048576.0d)
 
   /** Shared by eval and the generated code. */
   def evalStatic(arr: ArrayData): ArrayData = {
@@ -99,6 +108,20 @@ case class ArgminCell(left: Expression, right: Expression)
 
   override def nullable: Boolean = true
 
+  /** Registered without an input Cast, so the shape is checked here: a
+    * wrong one fails at analysis instead of reading garbage. */
+  override def checkInputDataTypes(): TypeCheckResult = {
+    def mismatch(index: String, required: String, e: Expression) =
+      DataTypeMismatch("UNEXPECTED_INPUT_TYPE", Map(
+        "paramIndex" -> index, "requiredType" -> s"\"$required\"",
+        "inputSql" -> s"\"${e.sql}\"", "inputType" -> s"\"${e.dataType.sql}\""))
+    if (!ArgminCell.isVector(left.dataType))
+      mismatch("first", "ARRAY<BIGINT>", left)
+    else if (!ArgminCell.isCents(right.dataType))
+      mismatch("second", "ARRAY<STRUCT<cid: BIGINT, carr: ARRAY<BIGINT>>>", right)
+    else TypeCheckSuccess
+  }
+
   override def dataType: DataType = LongType
 
   override def prettyName: String = "graft_argmin_cell"
@@ -123,6 +146,21 @@ case class ArgminCell(left: Expression, right: Expression)
 }
 
 object ArgminCell {
+
+  /** The two input shapes, up to nullability: `array<bigint>` and
+    * `array<struct<cid: bigint, carr: array<bigint>>>`. */
+  private def isVector(t: DataType): Boolean = t match {
+    case ArrayType(LongType, _) => true
+    case _ => false
+  }
+
+  private def isCents(t: DataType): Boolean = t match {
+    case ArrayType(StructType(Array(
+        StructField("cid", LongType, _, _), StructField("carr", carr, _, _))), _) =>
+      isVector(carr)
+    case _ => false
+  }
+
   /** Shared by eval and the generated code: null (no centroids) or the
     * argmin cid. One compiled loop, no per-cell allocation. */
   def evalStatic(uq: ArrayData, cents: ArrayData): Any = {

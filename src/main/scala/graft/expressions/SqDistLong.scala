@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * Why a custom Expression (the [[CosineSim]] argument applied to the
   * Lloyd trainers): the composed form
   * (`aggregate(zip_with(a, b, (x,y) -> (x-y)*(x-y)), 0L, (acc,v) -> acc+v)`
-  * in [[graft.functions.Similarity.sqDist]]) allocates an intermediate
+  * — the test oracle `Oracles.sqDist`) allocates an intermediate
   * difference array per evaluation and walks it through interpreted
   * higher-order-function lambda dispatch — in the k-means assignment
   * hot loop that is O(N·cells) interpreted folds per iteration at

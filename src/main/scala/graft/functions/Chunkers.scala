@@ -10,10 +10,9 @@ import org.apache.spark.sql.functions.{size => asize, _}
   * parsers.py:40-68): words from whitespace-collapse + single-space split
   * (`word_splitter` parsers.py:29-37), chunk i covers
   * `words[max(i*size - int(size*fraction), 0) : i*size + size]` for
-  * i = 0, size, 2·size, … It is implemented as a pure Catalyst expression
-  * (split / sequence / transform / slice / array_join) — no UDF, stays
-  * inside whole-stage codegen, and has an exact DuckDB mirror for the
-  * oracle.
+  * i = 0, size, 2·size, … It is implemented as a fused Catalyst kernel
+  * — no UDF, stays inside whole-stage codegen — and has an exact DuckDB
+  * mirror for the oracle.
   *
   * G1 — recursive character splitting (parsers.py:161-166 via langchain's
   * public RecursiveCharacterTextSplitter semantics: try "\n\n", "\n",
@@ -32,31 +31,16 @@ object Chunkers {
   def wordsSql(e: String): String =
     s"regexp_split_to_array(regexp_replace($e, '\\s+', ' ', 'g'), ' ')"
 
-  /** G2 as an array Column: element i is the i-th overlapping chunk. */
-  def chunkFixedWords(c: Column, chunkSize: Int, overlapFraction: Double): Column = {
-    val ov = (chunkSize * overlapFraction).toInt
-    val w = words(c)
-    val nChunks = ceil(asize(w).cast("double") / chunkSize).cast("int")
-    transform(
-      sequence(lit(0), nChunks - 1),
-      i => {
-        val start = greatest(i * chunkSize - ov, lit(0))
-        array_join(slice(w, start + 1, i * chunkSize + chunkSize - start), " ")
-      })
-  }
-
-  /** Fast path: the fused [[graft.expressions.ChunkWords]] kernel when
-    * the session loaded [[graft.GraftExtensions]] (split once, emit
-    * chunks in one pass); bit-identical to [[chunkFixedWords]] either
-    * way — asserted in ChunkersSpec. */
+  /** G2 as an array Column, element i the i-th overlapping chunk: the
+    * fused [[graft.expressions.ChunkWords]] (`graft_chunk_words`, split
+    * once, emit chunks in one pass), identical to the composed
+    * split/sequence/slice form ChunkersSpec checks it against. */
   def chunkFixedWordsIn(spark: org.apache.spark.sql.SparkSession,
       c: Column, chunkSize: Int, overlapFraction: Double): Column =
-    if (spark.catalog.functionExists("graft_chunk_words"))
-      call_function("graft_chunk_words", c, lit(chunkSize),
-        lit((chunkSize * overlapFraction).toInt))
-    else chunkFixedWords(c, chunkSize, overlapFraction)
+    call_function("graft_chunk_words", c, lit(chunkSize),
+      lit((chunkSize * overlapFraction).toInt))
 
-  /** DuckDB mirror of [[chunkFixedWords]] (1-based inclusive-end slices). */
+  /** DuckDB mirror of [[chunkFixedWordsIn]] (1-based inclusive-end slices). */
   def chunkFixedWordsSql(e: String, chunkSize: Int, overlapFraction: Double): String = {
     val ov = (chunkSize * overlapFraction).toInt
     val w = wordsSql(e)

@@ -10,12 +10,12 @@ import org.apache.spark.sql.functions._
   * cmfunctions.py:62-71) — its #1 scale bug. This engine splits the
   * surface in two:
   *
-  *   - [[deterministicEmbed]]: an offline, reproducible hash-projection
+  *   - [[deterministicEmbedIn]]: an offline, reproducible hash-projection
   *     embedder used by every test/oracle path. Component j is derived
   *     from md5(text ‖ ':' ‖ j): the first 4 hex chars as an integer,
   *     mapped to [-1, 1). All values are dyadic rationals (k/32768 − 1),
   *     so sums/products/norms are EXACT in IEEE doubles and hash
-  *     identically in Spark and DuckDB. Pure Catalyst — no UDF.
+  *     identically in Spark and DuckDB. A fused Catalyst kernel — no UDF.
   *
   *   - [[graft.pipeline.BatchedEmbedder]]: the production-shaped
   *     mapPartitions operator that batches rows per partition before
@@ -27,19 +27,12 @@ object Embedders {
 
   val DefaultDim = 64 // matches embeddings.parquet
 
-  /** Un-normalized deterministic embedding, ArrayType(DoubleType). */
-  def deterministicEmbed(c: Column, dim: Int = DefaultDim): Column =
-    transform(sequence(lit(0), lit(dim - 1)), j =>
-      conv(substring(md5(concat(c, lit(":"), j.cast("string"))), 1, 4), 16, 10)
-        .cast("double") / 32768.0d - 1.0d)
-
-  /** Fast path: the fused [[graft.expressions.DeterministicEmbed]]
-    * (hash the text once, clone the MD5 state per component) when the
-    * session loaded [[graft.GraftExtensions]]; bit-identical to the
-    * composed form either way. */
+  /** Un-normalized deterministic embedding, ArrayType(DoubleType): the
+    * fused [[graft.expressions.DeterministicEmbed]] (`graft_embed`, hash
+    * the text once, clone the MD5 state per component), bit-identical
+    * to the composed md5/conv form SimilaritySpec checks it against. */
   def deterministicEmbedIn(spark: SparkSession, c: Column, dim: Int = DefaultDim): Column =
-    if (spark.catalog.functionExists("graft_embed")) call_function("graft_embed", c, lit(dim))
-    else deterministicEmbed(c, dim)
+    call_function("graft_embed", c, lit(dim))
 
   /** DuckDB mirror: hex nibbles parsed via ascii() arithmetic (DuckDB has
     * no conv(); subqueries are not allowed in lambdas, so the md5 is

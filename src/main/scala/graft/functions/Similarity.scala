@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Vector similarity primitives (SURVEY.md §2.4 J-sim, EXT similarity
-  * search). Pure Catalyst expressions over ArrayType columns.
+  * search) over ArrayType columns: composed Catalyst forms with their
+  * DuckDB mirrors, and the `*In` helpers that call the fused kernels.
   *
   * Determinism: dot products fold left-to-right (`aggregate` starts at
   * 0.0, so the grouping is ((p₁+p₂)+p₃)… — the same association DuckDB's
@@ -30,46 +31,33 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
 
-  /** Fast path: the fused codegen'd [[graft.expressions.CosineSim]]
-    * when the session loaded [[graft.GraftExtensions]]; otherwise the
-    * composed form above. Both use the same left-to-right accumulation,
-    * so results are bit-identical (asserted in SimilaritySpec) — a
-    * session without the extension is merely slower, never wrong. */
+  /** The fused codegen'd [[graft.expressions.CosineSim]] (`graft_cosine`,
+    * registered by [[graft.GraftExtensions]], which every
+    * [[graft.GraftSession]] loads). Same left-to-right accumulation as
+    * [[cosine]], so results are bit-identical (asserted in
+    * SimilaritySpec). */
   def cosineIn(spark: SparkSession, a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("graft_cosine")) call_function("graft_cosine", a, b)
-    else cosine(a, b)
+    call_function("graft_cosine", a, b)
 
   def cosineSql(a: String, b: String): String =
     s"(${dotSql(a, b)}) / ((${normSql(a)}) * (${normSql(b)}))"
 
   /** Σ(aᵢ−bᵢ)² over two `array<long>` columns — the Lloyd-assignment
-    * distance. Exact long arithmetic: any accumulation order is
-    * bit-identical, so composed and fused forms agree by exactness. */
-  def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, v) => acc + v)
-
-  /** Fast path: the fused codegen'd [[graft.expressions.SqDistLong]]
-    * when the session loaded [[graft.GraftExtensions]]; otherwise the
-    * composed form above — same contract as [[cosineIn]]. */
+    * distance: the fused codegen'd [[graft.expressions.SqDistLong]]
+    * (`graft_sqdist`). Exact long arithmetic, so any accumulation order
+    * is bit-identical to the composed `zip_with` fold SimilaritySpec
+    * checks it against. */
   def sqDistIn(spark: SparkSession, a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("graft_sqdist")) call_function("graft_sqdist", a, b)
-    else sqDist(a, b)
+    call_function("graft_sqdist", a, b)
 
   /** argmin-by-(distance, cid) over a packed centroid table
     * `array<struct<cid long, carr array<long>>>`: the winning cid
     * (null when the pack is empty) — min (d, cid) with the struct
     * field order as the lexicographic tie-break, exactly what the
     * Lloyd trainers' former ROW_NUMBER() OVER (ORDER BY d, cid)
-    * picked. Fused single-loop kernel
-    * ([[graft.expressions.ArgminCell]]) when the extension is loaded;
-    * composed HOF argmin otherwise — bit-identical either way. */
+    * picked. The fused single-loop [[graft.expressions.ArgminCell]]
+    * (`graft_argmin_cell`), bit-identical to the composed HOF argmin
+    * SimilaritySpec checks it against. */
   def argminCid(spark: SparkSession, uq: Column, cents: Column): Column =
-    if (spark.catalog.functionExists("graft_argmin_cell"))
-      call_function("graft_argmin_cell", uq, cents)
-    else
-      array_min(transform(cents, ct =>
-        struct(
-          sqDistIn(spark, uq, ct.getField("carr")).as("d"),
-          ct.getField("cid").as("cid")))).getField("cid")
+    call_function("graft_argmin_cell", uq, cents)
 }

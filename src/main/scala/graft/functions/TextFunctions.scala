@@ -36,26 +36,13 @@ object TextFunctions {
   def cleanTextSql(e: String): String =
     s"trim(regexp_replace(regexp_replace(regexp_replace($e, '[\\n\\r\\t]', ' ', 'g'), '[^\\x20-\\x7E]', '', 'g'), '\\s+', ' ', 'g'))"
 
-  /** Unicode normalization (UAX #15) — the fused codegen'd
-    * [[graft.expressions.NormalizeText]] when the session loaded
-    * [[graft.GraftExtensions]]; otherwise a UDF over the SAME static
-    * kernel, so results are bit-identical either way (a session
-    * without the extension is off codegen, never wrong). There is no
-    * composed-Catalyst fallback because Spark has no normalization
-    * built-in at all. */
+  /** Unicode normalization (UAX #15): the fused codegen'd
+    * [[graft.expressions.NormalizeText]] (`graft_normalize`). Spark has
+    * no normalization built-in, so there is no composed form. */
   def normalize(spark: SparkSession, c: Column, form: String): Column = {
     require(graft.expressions.NormalizeText.Forms.contains(form),
       s"unknown normalization form $form")
-    if (spark.catalog.functionExists("graft_normalize"))
-      call_function("graft_normalize", c, lit(form))
-    else {
-      val f = java.text.Normalizer.Form.valueOf(form)
-      udf((s: String) =>
-        if (s == null) null
-        else graft.expressions.NormalizeText.kernel(
-          org.apache.spark.unsafe.types.UTF8String.fromString(s), f).toString
-      ).apply(c)
-    }
+    call_function("graft_normalize", c, lit(form))
   }
 
   // ---- F1: filename extension -------------------------------------------

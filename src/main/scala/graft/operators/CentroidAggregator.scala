@@ -22,14 +22,14 @@ class CentroidAggregator(dim: Int)
 
   override def reduce(b: Buf, v: Seq[Double]): Buf = {
     var i = 0
-    while (i < dim) { b.sums(i) += roundHalfAwayFromZero(v(i) * 1048576.0d); i += 1 }
+    // SQL ROUND semantics, half away from zero (JVM math.round is
+    // floor(x+0.5), which differs for negative half-integers)
+    while (i < dim) {
+      b.sums(i) += graft.expressions.QuantizeGrid.roundHalfUp(v(i) * 1048576.0d)
+      i += 1
+    }
     Buf(b.sums, b.n + 1)
   }
-
-  /** SQL ROUND semantics: half away from zero. (JVM math.round is
-    * floor(x+0.5), which differs for negative half-integers.) */
-  private def roundHalfAwayFromZero(x: Double): Long =
-    if (x >= 0) math.floor(x + 0.5d).toLong else math.ceil(x - 0.5d).toLong
 
   override def merge(a: Buf, b: Buf): Buf = {
     var i = 0

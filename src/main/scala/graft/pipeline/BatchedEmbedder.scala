@@ -23,7 +23,7 @@ object BatchedEmbedder {
     def close(): Unit = ()
   }
 
-  /** JVM-side mirror of Embedders.deterministicEmbed: component j =
+  /** JVM-side mirror of Embedders.deterministicEmbedIn: component j =
     * int(hex4(md5(text ‖ ':' ‖ j))) / 32768 − 1 (dyadic-exact). */
   final class DeterministicBackend(dim: Int) extends EmbedBackend {
     override def embedBatch(texts: Seq[String]): Seq[Array[Double]] =

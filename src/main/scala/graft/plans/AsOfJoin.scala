@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, ClusteredDistribution, Distribution, IdentityBroadcastMode, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DoubleType, FloatType, LongType}
@@ -72,9 +71,9 @@ object AsOfDirection {
   * (key, time); the physical operator then streams BOTH sorted sides in
   * one merge pass holding exactly one candidate row — O(1) memory per
   * partition, no per-key right-side buffering, no window
-  * materialization. Contrast the composed fallback below: an
-  * inequality join that replays every qualifying right row per left
-  * row before a top-1 window discards all but one.
+  * materialization. Contrast the composed DataFrame form (the test
+  * oracle): an inequality join that replays every qualifying right row
+  * per left row before a top-1 window discards all but one.
   */
 final case class AsOfJoinPlan(
     left: LogicalPlan, right: LogicalPlan,
@@ -417,10 +416,10 @@ final case class BroadcastAsOfJoinExec(
   }
 }
 
-/** Public API over the native operator, with a composed fallback when
-  * the session runs without [[graft.GraftExtensions]] (SPARK_GRAFT_NO_EXT
-  * sessions still compute identical results, off the fast path — the
-  * same contract as every fused expression in the library).
+/** Public API over the native operator. It plans through
+  * [[AsOfJoinStrategy]], which [[graft.GraftExtensions]] injects into
+  * every [[graft.GraftSession]]; AsOfJoinSpec checks it against a
+  * composed inequality-join oracle.
   */
 object AsOfJoinOps {
 
@@ -484,68 +483,15 @@ object AsOfJoinOps {
     // fresh exprIds + distinct names: safe under self-as-of (same source
     // both sides), where raw child plans would share attribute ids
     val r = right.select(right.columns.map(c => col(c).as(c + suffix)): _*)
-    val nativePlanner =
-      spark.sessionState.planner.strategies.contains(AsOfJoinStrategy)
-    if (nativePlanner) {
-      val lPlan = left.queryExecution.analyzed
-      val rPlan = r.queryExecution.analyzed
-      def attrOf(p: LogicalPlan, n: String): Attribute =
-        p.output.find(_.name == n).getOrElse(
-          throw new IllegalArgumentException(s"as-of column not found: $n"))
-      GraftPlanApi.ofRows(spark, AsOfJoinPlan(lPlan, rPlan,
-        attrOf(lPlan, leftKey), attrOf(rPlan, rightKey + suffix),
-        attrOf(lPlan, leftTime), attrOf(rPlan, rightTime + suffix),
-        attrOf(rPlan, rightTie + suffix), direction, allowExact, toleranceUs,
-        broadcastRight))
-    } else composedAsOf(left, r, leftKey, rightKey + suffix,
-      leftTime, rightTime + suffix, rightTie + suffix,
-      direction, allowExact, toleranceUs)
-  }
-
-  /** The DataFrame-API fallback (also the test oracle for the native
-    * operator): inequality join replaying every qualifying right row,
-    * then a top-1 window per left row ordered by the direction's
-    * preference. Correct, but the candidate set grows with right-side
-    * density — the native merge pass exists to avoid exactly that
-    * replay. */
-  private[graft] def composedAsOf(left: DataFrame, r: DataFrame,
-      leftKey: String, rightKeyS: String,
-      leftTime: String, rightTimeS: String, rightTieS: String,
-      direction: AsOfDirection = AsOfDirection.Backward,
-      allowExact: Boolean = true,
-      toleranceUs: Option[Long] = None): DataFrame = {
-    val l2 = left.withColumn("__lid", monotonically_increasing_id())
-    val lt = col(leftTime); val rt = col(rightTimeS)
-    val timeCond = direction match {
-      case AsOfDirection.Backward => if (allowExact) rt <= lt else rt < lt
-      case AsOfDirection.Forward  => if (allowExact) rt >= lt else rt > lt
-      case AsOfDirection.Nearest  => lit(true) && rt.isNotNull && lt.isNotNull
-    }
-    val tolCond = toleranceUs.map { t =>
-      direction match {
-        case AsOfDirection.Backward => rt >= lt - t
-        case AsOfDirection.Forward  => rt <= lt + t
-        case AsOfDirection.Nearest  => abs(rt - lt) <= t
-      }
-    }.getOrElse(lit(true))
-    val cand = l2.join(r, col(leftKey) === col(rightKeyS) && timeCond && tolCond, "left")
-    val pref: Seq[org.apache.spark.sql.Column] = direction match {
-      case AsOfDirection.Backward =>
-        Seq(rt.desc_nulls_last, col(rightTieS).desc_nulls_last)
-      case AsOfDirection.Forward =>
-        Seq(rt.asc_nulls_last, col(rightTieS).desc_nulls_last)
-      case AsOfDirection.Nearest =>
-        // closest distance; distance ties prefer backward; equal-time
-        // ties take the greatest tie on the backward side but the
-        // SMALLEST on the forward side (the native cursor's look-ahead
-        // row) — mirrored here so the two faces stay bit-equal
-        Seq(abs(rt - lt).asc_nulls_last, (rt <= lt).desc_nulls_last,
-          when(rt <= lt, col(rightTieS)).desc_nulls_last,
-          when(rt > lt, col(rightTieS)).asc_nulls_last)
-    }
-    val w = Window.partitionBy(col("__lid")).orderBy(pref: _*)
-    cand.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "__lid")
+    val lPlan = left.queryExecution.analyzed
+    val rPlan = r.queryExecution.analyzed
+    def attrOf(p: LogicalPlan, n: String): Attribute =
+      p.output.find(_.name == n).getOrElse(
+        throw new IllegalArgumentException(s"as-of column not found: $n"))
+    GraftPlanApi.ofRows(spark, AsOfJoinPlan(lPlan, rPlan,
+      attrOf(lPlan, leftKey), attrOf(rPlan, rightKey + suffix),
+      attrOf(lPlan, leftTime), attrOf(rPlan, rightTime + suffix),
+      attrOf(rPlan, rightTie + suffix), direction, allowExact, toleranceUs,
+      broadcastRight))
   }
 }

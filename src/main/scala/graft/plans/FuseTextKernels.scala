@@ -12,9 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * rewrites the text-pipeline's composed regex shapes into the fused
   * kernels in [[graft.expressions.CleanText]]/[[graft.expressions.CountMatches]].
   * Same architecture as [[FuseCosine]]: the portable composed form stays
-  * the declared semantics (and the no-extension fallback), the rule
-  * swaps in the allocation-free kernel wherever the exact shape appears
-  * — including SQL the library didn't author.
+  * the declared semantics (and what runs with the rule excluded), the
+  * rule swaps in the allocation-free kernel wherever the exact shape
+  * appears — including SQL the library didn't author.
   *
   * Rewrites (each provably value-identical, pinned in TextKernelsSpec):
   *

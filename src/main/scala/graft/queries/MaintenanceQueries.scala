@@ -1064,9 +1064,7 @@ object MaintenanceQueries {
     * hit, miss, self-join and unregistration behavior). The output is
     * the aggregate itself (hash-checked — a stale or wrong
     * materialization breaks every row) plus the rewrite evidence bit
-    * read from the executed plan. Without the session extension there
-    * is no rewrite rule, so the evidence bit is vacuously true there
-    * (the result itself is identical either way).
+    * read from the executed plan.
     *
     * Scale: the dashboard-query pattern — repeated aggregates over a
     * 100 TB fact answered from an O(groups) materialization the
@@ -1090,8 +1088,7 @@ object MaintenanceQueries {
     val q = agg
     val fromMv =
       q.queryExecution.executedPlan.toString.contains(new java.io.File(dir).getName)
-    val extLoaded = s.catalog.functionExists("graft_cosine")
-    q.withColumn("read_from_mv", lit(fromMv || !extLoaded)).orderBy("user_id")
+    q.withColumn("read_from_mv", lit(fromMv)).orderBy("user_id")
   }
 
   /** MV FILTER SUBSUMPTION ([[graft.plans.MvRewrite]]'s second probe):
@@ -1135,8 +1132,7 @@ object MaintenanceQueries {
         max(units(col("value"), 2)).as("max_cents"))
     val fromMv =
       q.queryExecution.executedPlan.toString.contains(new java.io.File(dir).getName)
-    val extLoaded = s.catalog.functionExists("graft_cosine")
-    q.withColumn("read_from_mv", lit(fromMv || !extLoaded)).orderBy("user_id")
+    q.withColumn("read_from_mv", lit(fromMv)).orderBy("user_id")
   }
 
   /** MV PROJECTION SUBSUMPTION ([[graft.plans.MvRewrite]]'s third
@@ -1171,8 +1167,7 @@ object MaintenanceQueries {
       .agg(sum(units(col("value"), 2)).as("sum_cents"), count(lit(1)).as("n_events"))
     val fromMv =
       q.queryExecution.executedPlan.toString.contains(new java.io.File(dir).getName)
-    val extLoaded = s.catalog.functionExists("graft_cosine")
-    q.withColumn("read_from_mv", lit(fromMv || !extLoaded)).orderBy("event_type")
+    q.withColumn("read_from_mv", lit(fromMv)).orderBy("event_type")
   }
 
   /** Hidden `_metadata` FILE-introspection columns — the per-file
@@ -1320,10 +1315,9 @@ object MaintenanceQueries {
     val q = define(TimeTravel.read(s, base))
     val fromMv =
       q.queryExecution.executedPlan.toString.contains(new java.io.File(mv).getName)
-    val extLoaded = s.catalog.functionExists("graft_cosine")
     q.withColumn("refresh_mode", lit(res.mode))
       .withColumn("delta_only", lit(deltaOnly))
-      .withColumn("read_from_mv", lit(fromMv || !extLoaded))
+      .withColumn("read_from_mv", lit(fromMv))
       .orderBy("o_orderpriority")
   }
 
@@ -1428,8 +1422,7 @@ object MaintenanceQueries {
     * sidecars to scan only the overlapping files. `rule_pruned`
     * carries the plan evidence (the relation was substituted and reads
     * fewer files than the snapshot holds); the oracle recomputes the
-    * slice from the raw table. Falls back to plan-unchanged (still
-    * correct) without the extensions. */
+    * slice from the raw table. */
   val qTtPruneAuto: QueryDef = QueryDef.sql(
     "q_tt_prune_auto",
     """SELECT COUNT(*) AS n_orders,
@@ -1460,10 +1453,9 @@ object MaintenanceQueries {
           .asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
           .location.inputFiles.length
     }.sum
-    val extLoaded = s.catalog.functionExists("graft_cosine")
     naive.agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"))
       .withColumn("rule_pruned",
-        lit((prunedFiles > 0 && prunedFiles < 7) || !extLoaded))
+        lit(prunedFiles > 0 && prunedFiles < 7))
   }
 
   /** File skipping THROUGH a column mapping ([[graft.plans.StatsPrune]]
@@ -1514,10 +1506,9 @@ object MaintenanceQueries {
           .asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
           .location.inputFiles.length
     }.sum
-    val extLoaded = s.catalog.functionExists("graft_cosine")
     naive.agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"))
       .withColumn("mapped_pruned",
-        lit((prunedFiles > 0 && prunedFiles < 7) || !extLoaded))
+        lit(prunedFiles > 0 && prunedFiles < 7))
   }
 
   /** BLOOM point lookup through the versioned table
@@ -1564,9 +1555,8 @@ object MaintenanceQueries {
           .asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
           .location.inputFiles.length
     }.sum
-    val extLoaded = s.catalog.functionExists("graft_cosine")
     val evidence = st.filesRead < st.filesTotal &&
-      ((prunedFiles > 0 && prunedFiles < 3) || !extLoaded)
+      prunedFiles > 0 && prunedFiles < 3
     viaLib.select(col("c_custkey"), col("c_nationkey"), col("cents"))
       .withColumn("bloom_pruned", lit(evidence))
       .orderBy("c_custkey")
@@ -1631,10 +1621,9 @@ object MaintenanceQueries {
     val q = define(TimeTravel.read(s, base))
     val fromMv =
       q.queryExecution.executedPlan.toString.contains(new java.io.File(mv).getName)
-    val extLoaded = s.catalog.functionExists("graft_cosine")
     q.withColumn("refresh_mode", lit(res.mode))
       .withColumn("delta_only", lit(deltaOnly))
-      .withColumn("read_from_mv", lit(fromMv || !extLoaded))
+      .withColumn("read_from_mv", lit(fromMv))
       .orderBy("o_orderpriority")
   }
 
@@ -1697,8 +1686,7 @@ object MaintenanceQueries {
     val plan = q.queryExecution.executedPlan.toString
     val fromState = plan.contains("_state") &&
       !plan.contains(new java.io.File(base).getName)
-    val extLoaded = s.catalog.functionExists("graft_cosine")
-    q.withColumn("rolled_from_state", lit(fromState || !extLoaded))
+    q.withColumn("rolled_from_state", lit(fromState))
       .orderBy("o_orderpriority")
   }
 
@@ -1865,10 +1853,9 @@ object MaintenanceQueries {
           .asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
           .location.inputFiles.length
     }.sum
-    val extLoaded = s.catalog.functionExists("graft_cosine")
     naive.agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"))
       .withColumn("date_pruned",
-        lit((prunedFiles > 0 && prunedFiles < 7) || !extLoaded))
+        lit(prunedFiles > 0 && prunedFiles < 7))
   }
 
   /** MV ROLL-UP SUBSUMPTION ([[graft.plans.MvRewrite]] r8 tier): a
@@ -1906,8 +1893,7 @@ object MaintenanceQueries {
         min(units(col("value"), 2)).as("min_cents"))
     val fromMv =
       q.queryExecution.executedPlan.toString.contains(new java.io.File(dir).getName)
-    val extLoaded = s.catalog.functionExists("graft_cosine")
-    q.withColumn("rolled_up", lit(fromMv || !extLoaded)).orderBy("event_type")
+    q.withColumn("rolled_up", lit(fromMv)).orderBy("event_type")
   }
 
   /** Partition-scoped `INSERT INTO … REPLACE WHERE` over the versioned

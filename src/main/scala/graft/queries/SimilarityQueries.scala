@@ -321,19 +321,12 @@ object SimilarityQueries {
         x => x.getField("c")).as("carr"))
 
   /** Quantize an embedding to the 2²⁰ integer grid, packed:
-    * round(vᵢ·2²⁰) per element. Fused codegen'd kernel when the
-    * extension is loaded ([[graft.expressions.QuantizeGrid]] — the
-    * composed `transform` pays an interpreted lambda + BigDecimal
-    * `round` per element); bit-identical either way. */
+    * round(vᵢ·2²⁰) per element — the fused
+    * [[graft.expressions.QuantizeGrid]] (`graft_quantize`; composed, the
+    * `transform` pays an interpreted lambda + BigDecimal `round` per
+    * element), value-equal to Catalyst's `ROUND`. */
   private def quantizeIn(s: SparkSession, e: Column): Column =
-    if (s.catalog.functionExists("graft_quantize")) call_function("graft_quantize", e)
-    else transform(e, v => round(v * lit(1048576.0d)).cast("long"))
-
-  /** argmin over the packed centroid array — [[Similarity.argminCid]]
-    * (fused kernel or composed HOF, bit-identical); the pack always
-    * carries its id under the field name `cid`. */
-  private def argminCidIn(s: SparkSession, uq: Column, cents: Column): Column =
-    Similarity.argminCid(s, uq, cents)
+    call_function("graft_quantize", e)
 
   /** Spark face of the same trainer: (comp, assign, cent) after
     * `KmIters` Lloyd rounds on the 2²⁰ integer grid.
@@ -376,7 +369,7 @@ object SimilarityQueries {
       val packed = centArr
         .agg(sort_array(collect_list(struct(col("cid"), col("carr")))).as("cents"))
       val av = vecs.crossJoin(broadcast(packed))
-        .withColumn("cid", argminCidIn(s, col("uq"), col("cents")))
+        .withColumn("cid", Similarity.argminCid(s, col("uq"), col("cents")))
         // empty-centroid guard: argmin over an empty pack is null; the
         // legacy exploded join produced NO row there — drop, don't null
         .filter(col("cid").isNotNull)
@@ -605,7 +598,7 @@ object SimilarityQueries {
       val packed = scent.groupBy(col("sub"))
         .agg(sort_array(collect_list(struct(col("cid"), col("carr")))).as("cents"))
       val av = svecs.join(broadcast(packed), Seq("sub"))
-        .withColumn("cid", argminCidIn(s, col("suq"), col("cents")))
+        .withColumn("cid", Similarity.argminCid(s, col("suq"), col("cents")))
         .filter(col("cid").isNotNull) // empty-codebook guard, see kmeansTrain
         .select(col("vec_id"), col("sub"), col("suq"), col("posBase"), col("cid"))
       val centLong = av
@@ -857,7 +850,7 @@ object SimilarityQueries {
           .agg(sort_array(collect_list(
             struct(col("pcid").as("cid"), col("carr")))).as("cents"))
         val av = rsvecs.join(broadcast(packed), Seq("sub"))
-          .withColumn("pcid", argminCidIn(s, col("rarr"), col("cents")))
+          .withColumn("pcid", Similarity.argminCid(s, col("rarr"), col("cents")))
           .filter(col("pcid").isNotNull) // empty-codebook guard, see kmeansTrain
           .select(col("vec_id"), col("sub"), col("rarr"), col("posBase"), col("pcid"))
         val centLong = av

@@ -255,8 +255,8 @@ object VectorIndex {
     // r16: one-exchange-per-iteration array-form Lloyd (the
     // SimilarityQueries trainer treatment applied at rest): residual
     // subvectors stay PACKED; assignment is a narrow per-row argmin
-    // against the per-sub packed codebook ([[Similarity.argminCid]] —
-    // fused kernel or composed HOF, bit-identical), and the centroid
+    // against the per-sub packed codebook ([[Similarity.argminCid]],
+    // the fused kernel), and the centroid
     // update is the single surviving exchange, keyed (cid, pos) with
     // map-side partial aggregation. The former shape exploded to
     // N·dim·pqK join rows and shuffled on the id for the argmin window

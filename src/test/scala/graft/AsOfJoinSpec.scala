@@ -30,7 +30,7 @@ class AsOfJoinSpec extends SparkSpec {
   test("native as-of matches the composed inequality-join oracle on real data") {
     val left = events("purchase")
     val right = events("signup")
-    val composed = AsOfJoinOps.composedAsOf(left,
+    val composed = Oracles.composedAsOf(left,
       right.select(right.columns.map(c => col(c).as(c + "_r")): _*),
       "user_id", "user_id_r", "t_us", "t_us_r", "event_id_r")
     for (bcast <- BothPaths) {
@@ -120,7 +120,7 @@ class AsOfJoinSpec extends SparkSpec {
   test("tolerance nulls matches staler than the bound (native ≡ composed)") {
     val left = Seq((1L, "k", 100L), (2L, "k", 1000L)).toDF("lid", "k", "t")
     val right = Seq((10L, "k", 90L, 1.0)).toDF("rid", "k", "t", "v")
-    val composed = AsOfJoinOps.composedAsOf(left,
+    val composed = Oracles.composedAsOf(left,
       right.select(right.columns.map(c => col(c).as(c + "_r")): _*),
       "k", "k_r", "t", "t_r", "rid_r", toleranceUs = Some(50L))
     for (bcast <- BothPaths) {
@@ -212,7 +212,7 @@ class AsOfJoinSpec extends SparkSpec {
     for (dir <- Seq(AsOfDirection.Backward, AsOfDirection.Forward, AsOfDirection.Nearest);
          exact <- Seq(true, false) if exact || dir != AsOfDirection.Nearest;
          tol <- Seq(None, Some(7L))) {
-      val composed = AsOfJoinOps.composedAsOf(left,
+      val composed = Oracles.composedAsOf(left,
         right.select(right.columns.map(c => col(c).as(c + "_r")): _*),
         "k", "k_r", "t", "t_r", "id_r", dir, exact, tol)
       val expected = sortedRows(composed)

@@ -8,7 +8,7 @@ class ChunkersSpec extends SparkSpec {
   private def chunksOf(text: String, size: Int, frac: Double): Seq[String] = {
     import spark.implicits._
     Seq(text).toDF("t")
-      .select(Chunkers.chunkFixedWords(col("t"), size, frac).as("c"))
+      .select(Chunkers.chunkFixedWordsIn(spark, col("t"), size, frac).as("c"))
       .head().getSeq[String](0)
   }
 
@@ -62,8 +62,8 @@ class ChunkersSpec extends SparkSpec {
     val df = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "t")
     for (size <- Seq(3, 5, 20); frac <- Seq(0.0, 0.2, 0.5)) {
       val both = df.select(col("id"),
-          Chunkers.chunkFixedWords(col("t"), size, frac).as("composed"),
-          functions.Chunkers.chunkFixedWordsIn(spark, col("t"), size, frac).as("fused"))
+          Oracles.chunkFixedWords(col("t"), size, frac).as("composed"),
+          Chunkers.chunkFixedWordsIn(spark, col("t"), size, frac).as("fused"))
         .collect()
       both.foreach { r =>
         assert(r.getSeq[String](1) == r.getSeq[String](2),

@@ -14,7 +14,7 @@ class PipelineSpec extends SparkSpec {
   test("BatchedEmbedder (mapPartitions) ≡ Catalyst deterministic embedder") {
     val sample = docs.limit(20).select(col("doc_id"), col("text"))
     val viaExpr = sample
-      .select(col("doc_id"), Embedders.deterministicEmbed(col("text"), 8).as("embedding"))
+      .select(col("doc_id"), Oracles.deterministicEmbed(col("text"), 8).as("embedding"))
     val viaBatch = BatchedEmbedder.embed(
       sample, "text", batchSize = 7,
       () => new BatchedEmbedder.DeterministicBackend(8))

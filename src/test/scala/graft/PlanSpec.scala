@@ -137,6 +137,17 @@ class PlanSpec extends SparkSpec {
       "map-side partial top-k expected before the window exchange")
   }
 
+  test("the GraftSession plans the fused kernels in the headline queries") {
+    // prettyName of each kernel: DeterministicEmbed, ChunkWords, CosineSim
+    for ((query, kernel) <- Seq(
+        "q_pipeline_embed" -> "graft_embed(",
+        "q_doc_chunks" -> "graft_chunk_words(",
+        "q_knn_bruteforce" -> "graft_cosine(")) {
+      val p = phys(SparkEntry.queries(query)(spark, sf))
+      assert(p.contains(kernel), s"$query must plan $kernel:\n$p")
+    }
+  }
+
   test("bucketed tables co-locate the equi-join: no shuffle exchange") {
     val wh = java.nio.file.Files.createTempDirectory("bucketed").toFile.getAbsolutePath
     spark.sql("DROP TABLE IF EXISTS li_bucketed")

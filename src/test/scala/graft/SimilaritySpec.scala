@@ -111,7 +111,7 @@ class SimilaritySpec extends SparkSpec {
       "unicode: héllo wörld ünïcode", (1 to 100).map(i => s"w$i").mkString(" "))
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
     val both = df.select(col("id"),
-        graft.functions.Embedders.deterministicEmbed(col("t"), 16).as("composed"),
+        Oracles.deterministicEmbed(col("t"), 16).as("composed"),
         call_function("graft_embed", col("t"), lit(16)).as("fused"))
       .collect()
     both.foreach { r =>
@@ -129,10 +129,90 @@ class SimilaritySpec extends SparkSpec {
     assert(nulls.isNullAt(0))
   }
 
-  test("cosineIn falls back to the composed form without the extension") {
-    // a bare session name check: cosineIn consults the catalog, so on
-    // this (extension-loaded) session it must pick the fused function
+  test("cosineIn calls the fused graft_cosine kernel") {
     val fast = Similarity.cosineIn(spark, col("a"), col("b"))
     assert(fast.toString.contains("graft_cosine"))
+  }
+
+  /** Doubles x for which `floor(x + 0.5)` is not HALF_UP: the sum
+    * rounds up (0.49999999999999994, odd integers above 2⁵²), plus
+    * plain half-integers and their negatives. */
+  private val RoundingEdges: Seq[Double] = {
+    val pos = Seq(0.49999999999999994, 0.5, 1.5, 2.5, 2.4999999999999996,
+      4503599627370497.0, 4503599627370499.0, 9007199254740991.0, 1234567.5)
+    pos ++ pos.map(-_)
+  }
+
+  test("fused QuantizeGrid ≡ composed ROUND, including HALF_UP boundary values") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    // v·2²⁰ = x exactly: the grid scale is a power of two
+    val edges = RoundingEdges.map(x => Option(x / 1048576.0d))
+    val rows: Seq[(Int, Option[Seq[Option[Double]]])] =
+      Seq((0, Some(edges)), (1, Some(Seq(Some(0.25), None, Some(-0.75)))), (2, None)) ++
+        (3 until 100).map(i => (i, Some(Seq.fill(16)(Option(rnd.nextDouble() * 2 - 1)))))
+    val both = rows.toDF("id", "e").repartition(2) // keep codegen live
+      .select(col("id"), Oracles.quantize(col("e")).as("composed"),
+        call_function("graft_quantize", col("e")).as("fused"))
+      .collect()
+    assert(both.length == rows.size)
+    both.foreach { r =>
+      assert(r.get(1) == r.get(2), s"row ${r.getInt(0)}")
+    }
+    val edgeRow = both.find(_.getInt(0) == 0).get.getSeq[Long](2)
+    assert(edgeRow.take(2) == Seq(0L, 1L), "0.49999999999999994 rounds to 0, 0.5 to 1")
+    assert(edgeRow(5) == 4503599627370497L, "odd integers above 2^52 stay put")
+  }
+
+  test("fused SqDistLong and ArgminCell ≡ their composed forms (seeded sweep)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(29)
+    def vec(n: Int): Seq[Long] = Seq.fill(n)(rnd.nextInt(1 << 21).toLong - (1 << 20))
+    val rows = (0 until 200).map { i =>
+      val uq = vec(4)
+      // cid-sorted packs of 0..5 centroids; duplicate centroids force
+      // distance ties, a short carr takes the null-distance branch
+      val k = rnd.nextInt(6)
+      val cents = (0 until k).map { j =>
+        val carr = rnd.nextInt(8) match {
+          case 0 => vec(3)
+          case 1 => uq
+          case _ => vec(4)
+        }
+        (j * 3L + rnd.nextInt(3), carr)
+      }
+      val dup = if (k > 0 && rnd.nextBoolean()) Seq((100L, cents.head._2)) else Nil
+      (i, uq, vec(if (i % 17 == 0) 3 else 4), cents ++ dup)
+    }
+    val df = rows.toDF("id", "uq", "other", "raw").repartition(2)
+      .withColumn("cents", transform(col("raw"), c =>
+        struct(c.getField("_1").as("cid"), c.getField("_2").as("carr"))))
+    val both = df.select(col("id"),
+        Oracles.sqDist(col("uq"), col("other")).as("d_composed"),
+        Similarity.sqDistIn(spark, col("uq"), col("other")).as("d_fused"),
+        Oracles.argminCid(col("uq"), col("cents")).as("a_composed"),
+        Similarity.argminCid(spark, col("uq"), col("cents")).as("a_fused"))
+      .collect()
+    assert(both.length == rows.size)
+    both.foreach { r =>
+      assert(r.get(1) == r.get(2), s"sqdist row ${r.getInt(0)}")
+      assert(r.get(3) == r.get(4), s"argmin row ${r.getInt(0)}")
+    }
+    assert(both.exists(_.isNullAt(2)), "the sweep must cover the mismatched-length null")
+    assert(both.exists(_.isNullAt(4)), "the sweep must cover the empty pack")
+  }
+
+  test("graft_argmin_cell rejects a wrong input shape at analysis") {
+    val ok = spark.sql("SELECT graft_argmin_cell(array(1L, 2L), " +
+      "array(named_struct('cid', 7L, 'carr', array(1L, 2L)))) AS c").head().getLong(0)
+    assert(ok == 7L)
+    for (call <- Seq(
+        "graft_argmin_cell(array(1.0D, 2.0D), array(named_struct('cid', 7L, 'carr', array(1L, 2L))))",
+        "graft_argmin_cell(array(1L, 2L), array(named_struct('cid', 7L, 'carr', array(1.0D, 2.0D))))",
+        "graft_argmin_cell(array(1L, 2L), array(named_struct('carr', array(1L, 2L), 'cid', 7L)))",
+        "graft_argmin_cell(array(1L, 2L), array(1L, 2L))")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $call"))
+      assert(e.getCondition.startsWith("DATATYPE_MISMATCH"), s"$call: ${e.getMessage}")
+    }
   }
 }

@@ -1,0 +1,38 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Guards the one-path design of `src/main`: every session comes from
+  * [[GraftSession]], which loads [[GraftExtensions]], so no helper
+  * probes the catalog or the planner to choose between a kernel and a
+  * composed fallback. */
+class SourceGuardSpec extends AnyFunSuite {
+
+  private def mainSources: Seq[(String, String)] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root missing")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map((p: Path) => root.relativize(p).toString -> Files.readString(p))
+    finally walk.close()
+  }
+
+  test("src/main has no kernel probe and one SparkSession builder, in GraftSession") {
+    val sources = mainSources
+    val probes = for {
+      (path, text) <- sources
+      needle <- Seq("functionExists", "extLoaded", "strategies.contains")
+      if text.contains(needle)
+    } yield s"$path: $needle"
+    assert(probes.isEmpty, probes.mkString("kernel-path probes in src/main:\n", "\n", ""))
+    val builders = sources.flatMap { case (path, text) =>
+      Seq.fill("SparkSession.builder()".r.findAllIn(text).size)(path)
+    }
+    assert(builders == Seq("graft/GraftSession.scala"),
+      s"SparkSession.builder() must appear once, in GraftSession: $builders")
+  }
+}
