@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.JoinAdvisor
@@ -73,10 +75,13 @@ object AdvisorBench {
     val tAdv2Off = time(3)(noop(agg2(JoinAdvisor(fact, dim, "k", choice2))))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 
-    println(
-      f"""{"leg1":{"join":"orders x customer sf0.1","plain_smj_s":$tPlain1%.3f,"advised_s":$tAdv1%.3f,"choice":"${choice1.tag}"},""" +
-      f""""leg2":{"join":"hot-key fact x dim","plain_aqe_s":$tPlain2%.3f,"advised_s":$tAdv2%.3f,""" +
-      f""""plain_noaqe_s":$tPlain2Off%.3f,"advised_noaqe_s":$tAdv2Off%.3f,"choice":"${choice2.tag}"}}""")
+    val s3 = Bench.fixed(3) _
+    println(Json.mapper.writeValueAsString(ListMap(
+      "leg1" -> ListMap("join" -> "orders x customer sf0.1", "plain_smj_s" -> s3(tPlain1),
+        "advised_s" -> s3(tAdv1), "choice" -> choice1.tag),
+      "leg2" -> ListMap("join" -> "hot-key fact x dim", "plain_aqe_s" -> s3(tPlain2),
+        "advised_s" -> s3(tAdv2), "plain_noaqe_s" -> s3(tPlain2Off),
+        "advised_noaqe_s" -> s3(tAdv2Off), "choice" -> choice2.tag))))
     spark.stop()
   }
 }

@@ -81,7 +81,7 @@ object Bench {
 
   /** `v` rounded to `k` decimals: JSON numbers keep the fixed precision
     * the bench records have always carried. */
-  private def fixed(k: Int)(v: Double): java.math.BigDecimal =
+  private[graft] def fixed(k: Int)(v: Double): java.math.BigDecimal =
     java.math.BigDecimal.valueOf(v).setScale(k, java.math.RoundingMode.HALF_UP)
 
   private def nums(xs: Seq[(String, Double)], k: Int): ListMap[String, java.math.BigDecimal] =

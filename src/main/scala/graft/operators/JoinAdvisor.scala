@@ -1,7 +1,9 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
+import graft.Json
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -88,29 +90,24 @@ object JoinAdvisor {
   def save(spark: SparkSession, path: String, st: KeyStats): Unit = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val tops = st.topKeys.map { case (k, n) =>
-      s"""{"k":"${k.replace("\\", "\\\\").replace("\"", "\\\"")}","n":$n}"""
-    }.mkString("[", ",", "]")
-    val body =
-      s"""{"rows":${st.rows},"distinct_est":${st.distinctEst},"row_bytes":${st.rowBytes},"top_keys":$tops}"""
+    val body = Json.mapper.writeValueAsBytes(ListMap(
+      "rows" -> st.rows, "distinct_est" -> st.distinctEst, "row_bytes" -> st.rowBytes,
+      "top_keys" -> st.topKeys.map { case (k, n) => ListMap("k" -> k, "n" -> n) }))
     val out = fs.create(p, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    try out.write(body) finally out.close()
   }
 
   def load(spark: SparkSession, path: String): KeyStats = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val in = fs.open(p)
-    val text =
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
+    val root = try Json.mapper.readTree(in) finally in.close()
     def long(field: String): Long =
-      (field + """"\s*:\s*(-?\d+)""").r.findFirstMatchIn(text).map(_.group(1).toLong)
+      Some(root.path(field)).filter(_.canConvertToLong).map(_.asLong)
         .getOrElse(throw new IllegalArgumentException(s"no $field in stats at $path"))
-    val tops = """\{"k":"((?:[^"\\]|\\.)*)","n":(\d+)\}""".r.findAllMatchIn(text)
-      .map(m => m.group(1).replace("\\\"", "\"").replace("\\\\", "\\") -> m.group(2).toLong)
-      .toSeq
-    KeyStats(long("\"rows"), long("\"distinct_est"), tops, long("\"row_bytes"))
+    val tops = Option(root.get("top_keys")).toSeq.flatMap(_.elements().asScala)
+      .map(t => t.get("k").asText -> t.get("n").asLong)
+    KeyStats(long("rows"), long("distinct_est"), tops, long("row_bytes"))
   }
 
   /** ANALYZE-and-store beside the table: the sidecar lives under

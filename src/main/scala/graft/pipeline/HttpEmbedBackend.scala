@@ -2,6 +2,11 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets
 
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
+import graft.Json
+
 /** Production HTTP embedding backend completing F12 (SURVEY §2.3):
   * the transport-facing half of the reference's `get_embedding`
   * (/root/reference/llmcore/cms/cmfunctions.py:489-519 — POST
@@ -23,10 +28,6 @@ import java.nio.charset.StandardCharsets
   *     contract is unit-testable with zero network (and the default
   *     [[HttpEmbedBackend.javaHttpTransport]] is plain `java.net.http`,
   *     one pooled client per JVM).
-  *
-  * JSON in/out is the fixed embeddings-API shape; the tiny hand-rolled
-  * writer/reader below avoids dragging a JSON library into the task
-  * closure for a two-key payload.
   */
 object HttpEmbedBackend {
 
@@ -51,65 +52,34 @@ object HttpEmbedBackend {
     }
   }
 
-  private[pipeline] def jsonEscape(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"'           => sb.append("\\\"")
-      case '\\'          => sb.append("\\\\")
-      case c if c < ' '  => sb.append(f"\\u${c.toInt}%04x")
-      case c             => sb.append(c)
-    }
-    sb.toString
-  }
-
-  /** `{"input": ["...", ...], "user": null}` — the reference's body
+  /** `{"input":["...",...],"user":null}` — the reference's body
     * (cmfunctions.py:503) with the array-input batch form; newlines are
     * replaced with spaces exactly as the reference does (:502). */
   private[pipeline] def requestBody(texts: Seq[String]): String =
-    texts.map(t => "\"" + jsonEscape(t.replace("\n", " ")) + "\"")
-      .mkString("{\"input\": [", ", ", "], \"user\": null}")
+    Json.mapper.writeValueAsString(
+      ListMap("input" -> texts.map(_.replace("\n", " ")), "user" -> null))
 
-  /** Extract every `"embedding": [...]` numeric array and return them
-    * in INPUT order: each `data[]` entry's `"index"` field is parsed
-    * and the vectors are reordered by it, because a gateway is free to
-    * return entries out of order and a count check alone would silently
+  /** The `data[].embedding` vectors in INPUT order: each entry's
+    * `index` field reorders them, because a gateway is free to return
+    * entries out of order and a count check alone would silently
     * assign vectors to the wrong texts. Entries with no index field
-    * (non-OpenAI-shaped gateways) fall back to document order; a
-    * partial or non-permutation index set is a hard IOException. The
-    * enclosing object of each embedding is found by brace scan — the
-    * numeric array itself contains no braces, so the nearest '{'
-    * before the key and '}' after the array bound the entry. */
+    * (non-OpenAI-shaped gateways) keep document order; a partial or
+    * non-permutation index set, or a body that is not that shape, is a
+    * hard IOException. */
   private[pipeline] def parseEmbeddings(body: String): Seq[Array[Double]] = {
-    val entries = Seq.newBuilder[(Option[Int], Array[Double])]
-    var i = body.indexOf("\"embedding\"")
-    while (i >= 0) {
-      val open = body.indexOf('[', i)
-      val close = body.indexOf(']', open)
-      if (open < 0 || close < 0)
-        throw new java.io.IOException("malformed embeddings response")
-      val slice = body.substring(open + 1, close).trim
-      val vec =
-        if (slice.isEmpty) Array.empty[Double]
-        else slice.split(",").map(_.trim.toDouble)
-      val objStart = math.max(body.lastIndexOf('{', i), 0)
-      val objEnd = body.indexOf('}', close) match {
-        case -1 => body.length
-        case e  => e
+    def malformed(why: String) = new java.io.IOException(s"malformed embeddings response: $why")
+    val data = Json.mapper.readTree(body).path("data")
+    if (!data.isArray) throw malformed("no data array")
+    val all = data.elements().asScala.toSeq.map { e =>
+      val vec = e.path("embedding")
+      if (!vec.isArray || !vec.elements().asScala.forall(_.isNumber))
+        throw malformed("an entry without a numeric embedding array")
+      val idx = Option(e.get("index")).map { i =>
+        if (!i.isIntegralNumber || !i.canConvertToInt) throw malformed("unreadable index")
+        i.asInt
       }
-      val idx = {
-        val k = body.indexOf("\"index\"", objStart)
-        if (k >= 0 && k < objEnd) {
-          val colon = body.indexOf(':', k)
-          val digits = body.substring(colon + 1, objEnd).trim.takeWhile(_.isDigit)
-          if (colon < 0 || digits.isEmpty)
-            throw new java.io.IOException("malformed embeddings response: unreadable index")
-          Some(digits.toInt)
-        } else None
-      }
-      entries += ((idx, vec))
-      i = body.indexOf("\"embedding\"", close)
+      (idx, vec.elements().asScala.map(_.asDouble).toArray)
     }
-    val all = entries.result()
     val idxs = all.flatMap(_._1)
     if (idxs.isEmpty) all.map(_._2)
     else if (idxs.length == all.length && idxs.sorted == (0 until all.length))

@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, Expression, NamedExpression}
@@ -10,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
+import graft.Json
 import graft.sources.TimeTravel
 
 /** INCREMENTAL MATERIALIZED-VIEW MAINTENANCE over the versioned table
@@ -438,8 +437,7 @@ object MvMaintenance {
   private def writeStateFile(fs: org.apache.hadoop.fs.FileSystem, p: Path,
       v: Long): Unit = {
     val out = fs.create(p, true)
-    try out.write(s"""{"reflected_version":$v}"""
-      .getBytes(StandardCharsets.UTF_8))
+    try out.write(Json.mapper.writeValueAsBytes(Map("reflected_version" -> v)))
     finally out.close()
   }
 
@@ -448,11 +446,9 @@ object MvMaintenance {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(p), s"no MV state sidecar at $p — register first")
     val in = fs.open(p)
-    val text =
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
-    """"reflected_version"\s*:\s*(\d+)""".r.findFirstMatchIn(text)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalStateException(s"unreadable MV state at $p: $text"))
+    val state = try Json.mapper.readTree(in) finally in.close()
+    Option(state).flatMap(n => Option(n.get("reflected_version")))
+      .filter(_.canConvertToLong).map(_.asLong)
+      .getOrElse(throw new IllegalStateException(s"unreadable MV state at $p: $state"))
   }
 }

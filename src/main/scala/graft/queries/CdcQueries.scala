@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.pipeline.Ledger
-import graft.{QueryDef, Tables}
+import graft.{Json, QueryDef, Tables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -321,12 +321,12 @@ object CdcQueries {
       dst.getParentFile.mkdirs()
       java.nio.file.Files.copy(part.toPath, dst.toPath)
     }
-    val esc = StructType(Seq(StructField("id", LongType), StructField("v", LongType),
-      StructField("band", StringType))).json
-      .replace("\\", "\\\\").replace("\"", "\\\"")
+    val schemaString = Json.mapper.writeValueAsString(StructType(Seq(
+      StructField("id", LongType), StructField("v", LongType),
+      StructField("band", StringType))).json)
     val meta =
       s"""{"metaData":{"id":"fixture","format":{"provider":"parquet","options":{}},""" +
-        s""""schemaString":"$esc","partitionColumns":["band"],"configuration":{}}}"""
+        s""""schemaString":$schemaString,"partitionColumns":["band"],"configuration":{}}}"""
     def add(b: Int) =
       s"""{"add":{"path":"band=b$b/f$b.parquet","partitionValues":{"band":"b$b"},""" +
         s""""size":${flen(dir, s"band=b$b/f$b.parquet")},"modificationTime":$b,"dataChange":true}}"""
@@ -543,13 +543,13 @@ object CdcQueries {
     // protocol-format DV file: delete every position ≡ 3 (mod 7)
     val uuid = java.util.UUID.fromString("00000000-0000-4000-8000-0000000000dd")
     val dv = graft.sources.DeltaDv.writeDvFile(s, dir, uuid, 3L.until(n, 7L))
-    val esc = StructType(Seq(StructField("id", LongType), StructField("cents", LongType)))
-      .json.replace("\\", "\\\\").replace("\"", "\\\"")
+    val schemaString = Json.mapper.writeValueAsString(
+      StructType(Seq(StructField("id", LongType), StructField("cents", LongType))).json)
     new java.io.File(s"$dir/_delta_log").mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(f"$dir/_delta_log/${0L}%020d.json"),
       Seq("""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"]}}""",
-        s"""{"metaData":{"id":"dvfix","format":{"provider":"parquet","options":{}},"schemaString":"$esc","partitionColumns":[],"configuration":{}}}""",
+        s"""{"metaData":{"id":"dvfix","format":{"provider":"parquet","options":{}},"schemaString":$schemaString,"partitionColumns":[],"configuration":{}}}""",
         s"""{"add":{"path":"f0.parquet","partitionValues":{},"size":${flen(dir, "f0.parquet")},"modificationTime":1,"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":"${dv.pathOrInlineDv}","offset":${dv.offset.get},"sizeInBytes":${dv.sizeInBytes},"cardinality":${dv.cardinality}}}}""")
         .mkString("", "\n", "\n"))
     graft.sources.DeltaRead.read(s, dir)
@@ -604,14 +604,13 @@ object CdcQueries {
     def fmeta(phys: String, id: Int) = new MetadataBuilder()
       .putString("delta.columnMapping.physicalName", phys)
       .putLong("delta.columnMapping.id", id.toLong).build()
-    val esc = StructType(Seq(
+    val schemaString = Json.mapper.writeValueAsString(StructType(Seq(
       StructField("id", LongType, nullable = true, fmeta("col-1", 1)),
       StructField("cents", LongType, nullable = true, fmeta("col-2", 2)),
-      StructField("band", StringType, nullable = true, fmeta("col-3", 3)))).json
-      .replace("\\", "\\\\").replace("\"", "\\\"")
+      StructField("band", StringType, nullable = true, fmeta("col-3", 3)))).json)
     val meta =
       s"""{"metaData":{"id":"cmfix","format":{"provider":"parquet","options":{}},""" +
-        s""""schemaString":"$esc","partitionColumns":["band"],""" +
+        s""""schemaString":$schemaString,"partitionColumns":["band"],""" +
         """"configuration":{"delta.columnMapping.mode":"name","delta.columnMapping.maxColumnId":"3"}}}"""
     def add(b: Int) =
       s"""{"add":{"path":"f$b.parquet","partitionValues":{"col-3":"b$b"},""" +
@@ -752,13 +751,13 @@ object CdcQueries {
     stage(o.filter(col("id") % 10 =!= 5)
       .withColumn("cents", when(col("id") % 10 === 0, col("cents") + 1).otherwise(col("cents"))),
       "f1.parquet")
-    val esc = StructType(Seq(StructField("id", LongType), StructField("cents", LongType)))
-      .json.replace("\\", "\\\\").replace("\"", "\\\"")
+    val schemaString = Json.mapper.writeValueAsString(
+      StructType(Seq(StructField("id", LongType), StructField("cents", LongType))).json)
     new java.io.File(s"$dir/_delta_log").mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(f"$dir/_delta_log/${0L}%020d.json"),
       Seq("""{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}""",
-        s"""{"metaData":{"id":"cdffix","format":{"provider":"parquet","options":{}},"schemaString":"$esc","partitionColumns":[],"configuration":{}}}""",
+        s"""{"metaData":{"id":"cdffix","format":{"provider":"parquet","options":{}},"schemaString":$schemaString,"partitionColumns":[],"configuration":{}}}""",
         s"""{"add":{"path":"f0.parquet","partitionValues":{},"size":${flen(dir, "f0.parquet")},"modificationTime":1,"dataChange":true}}""")
         .mkString("", "\n", "\n"))
     java.nio.file.Files.writeString(
@@ -981,14 +980,13 @@ object CdcQueries {
     def fmeta(id: Long, phys: String) = new MetadataBuilder()
       .putLong("delta.columnMapping.id", id)
       .putString("delta.columnMapping.physicalName", phys).build()
-    val esc = StructType(Seq(
+    val schemaString = Json.mapper.writeValueAsString(StructType(Seq(
       StructField("id", LongType, nullable = true, fmeta(1, "col-1")),
       StructField("cents", LongType, nullable = true, fmeta(2, "col-2")),
-      StructField("band", StringType, nullable = true, fmeta(3, "col-3")))).json
-      .replace("\\", "\\\\").replace("\"", "\\\"")
+      StructField("band", StringType, nullable = true, fmeta(3, "col-3")))).json)
     val meta =
       s"""{"metaData":{"id":"idmfix","format":{"provider":"parquet","options":{}},""" +
-        s""""schemaString":"$esc","partitionColumns":["band"],""" +
+        s""""schemaString":$schemaString,"partitionColumns":["band"],""" +
         """"configuration":{"delta.columnMapping.mode":"id","delta.columnMapping.maxColumnId":"3"}}}"""
     def add(b: Int) =
       s"""{"add":{"path":"f$b.parquet","partitionValues":{"col-3":"b$b"},""" +
@@ -1426,15 +1424,14 @@ object CdcQueries {
       .filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.copy(part.toPath,
       new java.io.File(s"$dir/f0.parquet").toPath): Unit
-    val esc = StructType(Seq(
+    val schemaString = Json.mapper.writeValueAsString(StructType(Seq(
       StructField("k", LongType), StructField("cents", LongType),
-      StructField("band", StringType))).json
-      .replace("\\", "\\\\").replace("\"", "\\\"")
+      StructField("band", StringType))).json)
     new java.io.File(s"$dir/_delta_log").mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(f"$dir/_delta_log/${0L}%020d.json"),
       Seq("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
-        s"""{"metaData":{"id":"foreignfix","format":{"provider":"parquet","options":{}},"schemaString":"$esc","partitionColumns":["band"],"configuration":{}}}""",
+        s"""{"metaData":{"id":"foreignfix","format":{"provider":"parquet","options":{}},"schemaString":$schemaString,"partitionColumns":["band"],"configuration":{}}}""",
         s"""{"add":{"path":"f0.parquet","partitionValues":{"band":"b0"},"size":${flen(dir, "f0.parquet")},"modificationTime":1,"dataChange":true}}""")
         .mkString("", "\n", "\n"))
     // three foreign appends, one band each — each its own OCC commit
@@ -1504,15 +1501,14 @@ object CdcQueries {
       .filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.copy(part.toPath,
       new java.io.File(s"$dir/f0.parquet").toPath): Unit
-    val esc = StructType(Seq(
+    val schemaString = Json.mapper.writeValueAsString(StructType(Seq(
       StructField("k", LongType), StructField("cents", LongType),
-      StructField("band", StringType))).json
-      .replace("\\", "\\\\").replace("\"", "\\\"")
+      StructField("band", StringType))).json)
     new java.io.File(s"$dir/_delta_log").mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(f"$dir/_delta_log/${0L}%020d.json"),
       Seq("""{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}""",
-        s"""{"metaData":{"id":"foreigndel","format":{"provider":"parquet","options":{}},"schemaString":"$esc","partitionColumns":["band"],"configuration":{"delta.enableChangeDataFeed":"true"}}}""",
+        s"""{"metaData":{"id":"foreigndel","format":{"provider":"parquet","options":{}},"schemaString":$schemaString,"partitionColumns":["band"],"configuration":{"delta.enableChangeDataFeed":"true"}}}""",
         s"""{"add":{"path":"f0.parquet","partitionValues":{"band":"b0"},"size":${flen(dir, "f0.parquet")},"modificationTime":1,"dataChange":true}}""")
         .mkString("", "\n", "\n"))
     (1 to 3).foreach { b =>
@@ -1580,15 +1576,14 @@ object CdcQueries {
       .filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.copy(part.toPath,
       new java.io.File(s"$dir/f0.parquet").toPath): Unit
-    val esc = StructType(Seq(
+    val schemaString = Json.mapper.writeValueAsString(StructType(Seq(
       StructField("k", LongType), StructField("cents", LongType),
-      StructField("band", StringType))).json
-      .replace("\\", "\\\\").replace("\"", "\\\"")
+      StructField("band", StringType))).json)
     new java.io.File(s"$dir/_delta_log").mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(f"$dir/_delta_log/${0L}%020d.json"),
       Seq("""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""",
-        s"""{"metaData":{"id":"foreignmor","format":{"provider":"parquet","options":{}},"schemaString":"$esc","partitionColumns":["band"],"configuration":{}}}""",
+        s"""{"metaData":{"id":"foreignmor","format":{"provider":"parquet","options":{}},"schemaString":$schemaString,"partitionColumns":["band"],"configuration":{}}}""",
         s"""{"add":{"path":"f0.parquet","partitionValues":{"band":"b0"},"size":${flen(dir, "f0.parquet")},"modificationTime":1,"dataChange":true}}""")
         .mkString("", "\n", "\n"))
     (1 to 3).foreach { b =>
@@ -1659,15 +1654,14 @@ object CdcQueries {
       .filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.copy(part.toPath,
       new java.io.File(s"$dir/f0.parquet").toPath): Unit
-    val esc = StructType(Seq(
+    val schemaString = Json.mapper.writeValueAsString(StructType(Seq(
       StructField("k", LongType), StructField("cents", LongType),
-      StructField("band", StringType))).json
-      .replace("\\", "\\\\").replace("\"", "\\\"")
+      StructField("band", StringType))).json)
     new java.io.File(s"$dir/_delta_log").mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(f"$dir/_delta_log/${0L}%020d.json"),
       Seq("""{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}""",
-        s"""{"metaData":{"id":"foreignupd","format":{"provider":"parquet","options":{}},"schemaString":"$esc","partitionColumns":["band"],"configuration":{"delta.enableChangeDataFeed":"true"}}}""",
+        s"""{"metaData":{"id":"foreignupd","format":{"provider":"parquet","options":{}},"schemaString":$schemaString,"partitionColumns":["band"],"configuration":{"delta.enableChangeDataFeed":"true"}}}""",
         s"""{"add":{"path":"f0.parquet","partitionValues":{"band":"b0"},"size":${flen(dir, "f0.parquet")},"modificationTime":1,"dataChange":true}}""")
         .mkString("", "\n", "\n"))
     (1 to 3).foreach { b =>
@@ -1823,14 +1817,13 @@ object CdcQueries {
     val ddir = s"$dir/delta"; new java.io.File(ddir).mkdirs()
     java.nio.file.Files.copy(part.toPath,
       new java.io.File(s"$ddir/f0.parquet").toPath): Unit
-    val esc = StructType(Seq(
-      StructField("k", LongType), StructField("var", VariantType))).json
-      .replace("\\", "\\\\").replace("\"", "\\\"")
+    val schemaString = Json.mapper.writeValueAsString(StructType(Seq(
+      StructField("k", LongType), StructField("var", VariantType))).json)
     new java.io.File(s"$ddir/_delta_log").mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(f"$ddir/_delta_log/${0L}%020d.json"),
       Seq("""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["variantType"],"writerFeatures":["variantType"]}}""",
-        s"""{"metaData":{"id":"varq","format":{"provider":"parquet","options":{}},"schemaString":"$esc","partitionColumns":[],"configuration":{}}}""",
+        s"""{"metaData":{"id":"varq","format":{"provider":"parquet","options":{}},"schemaString":$schemaString,"partitionColumns":[],"configuration":{}}}""",
         s"""{"add":{"path":"f0.parquet","partitionValues":{},"size":${flen(ddir, "f0.parquet")},"modificationTime":1,"dataChange":true}}""")
         .mkString("", "\n", "\n"))
     val idir = s"$dir/iceberg"
@@ -1899,15 +1892,14 @@ object CdcQueries {
     val inner = StructType(Seq(
       StructField("id", LongType, nullable = true, pn("p-i")),
       StructField("cents", LongType, nullable = true, pn("p-c"))))
-    val esc = StructType(Seq(
+    val schemaString = Json.mapper.writeValueAsString(StructType(Seq(
       StructField("band", StringType, nullable = true, pn("col-0")),
-      StructField("s", inner, nullable = true, pn("col-s")))).json
-      .replace("\\", "\\\\").replace("\"", "\\\"")
+      StructField("s", inner, nullable = true, pn("col-s")))).json)
     new java.io.File(s"$dir/_delta_log").mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(f"$dir/_delta_log/${0L}%020d.json"),
       Seq("""{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
-        s"""{"metaData":{"id":"ncmfix","format":{"provider":"parquet","options":{}},"schemaString":"$esc","partitionColumns":[],"configuration":{"delta.columnMapping.mode":"name","delta.columnMapping.maxColumnId":"4"}}}""",
+        s"""{"metaData":{"id":"ncmfix","format":{"provider":"parquet","options":{}},"schemaString":$schemaString,"partitionColumns":[],"configuration":{"delta.columnMapping.mode":"name","delta.columnMapping.maxColumnId":"4"}}}""",
         s"""{"add":{"path":"f0.parquet","partitionValues":{},"size":${flen(dir, "f0.parquet")},"modificationTime":1,"dataChange":true}}""")
         .mkString("", "\n", "\n"))
     graft.sources.DeltaRead.read(s, dir)
@@ -1965,15 +1957,14 @@ object CdcQueries {
     val inner = StructType(Seq(
       StructField("id", LongType, nullable = true, cm(3)),
       StructField("cents", LongType, nullable = true, cm(4))))
-    val esc = StructType(Seq(
+    val schemaString = Json.mapper.writeValueAsString(StructType(Seq(
       StructField("band", StringType, nullable = true, cm(1)),
-      StructField("s", inner, nullable = true, cm(2)))).json
-      .replace("\\", "\\\\").replace("\"", "\\\"")
+      StructField("s", inner, nullable = true, cm(2)))).json)
     new java.io.File(s"$dir/_delta_log").mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(f"$dir/_delta_log/${0L}%020d.json"),
       Seq("""{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
-        s"""{"metaData":{"id":"idnfix","format":{"provider":"parquet","options":{}},"schemaString":"$esc","partitionColumns":[],"configuration":{"delta.columnMapping.mode":"id","delta.columnMapping.maxColumnId":"4"}}}""",
+        s"""{"metaData":{"id":"idnfix","format":{"provider":"parquet","options":{}},"schemaString":$schemaString,"partitionColumns":[],"configuration":{"delta.columnMapping.mode":"id","delta.columnMapping.maxColumnId":"4"}}}""",
         s"""{"add":{"path":"f0.parquet","partitionValues":{},"size":${flen(dir, "f0.parquet")},"modificationTime":1,"dataChange":true}}""")
         .mkString("", "\n", "\n"))
     graft.sources.DeltaRead.read(s, dir)
@@ -2035,15 +2026,14 @@ object CdcQueries {
     def fmeta(id: Long, phys: String) = new MetadataBuilder()
       .putLong("delta.columnMapping.id", id)
       .putString("delta.columnMapping.physicalName", phys).build()
-    val esc = StructType(Seq(
+    val schemaString = Json.mapper.writeValueAsString(StructType(Seq(
       StructField("id", LongType, nullable = true, fmeta(1, "col-1")),
-      StructField("cents", LongType, nullable = true, fmeta(2, "col-2")))).json
-      .replace("\\", "\\\\").replace("\"", "\\\"")
+      StructField("cents", LongType, nullable = true, fmeta(2, "col-2")))).json)
     new java.io.File(s"$dir/_delta_log").mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(f"$dir/_delta_log/${0L}%020d.json"),
       Seq("""{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
-        s"""{"metaData":{"id":"cdfidm","format":{"provider":"parquet","options":{}},"schemaString":"$esc","partitionColumns":[],"configuration":{"delta.columnMapping.mode":"id","delta.columnMapping.maxColumnId":"2"}}}""",
+        s"""{"metaData":{"id":"cdfidm","format":{"provider":"parquet","options":{}},"schemaString":$schemaString,"partitionColumns":[],"configuration":{"delta.columnMapping.mode":"id","delta.columnMapping.maxColumnId":"2"}}}""",
         s"""{"add":{"path":"f0.parquet","partitionValues":{},"size":${flen(dir, "f0.parquet")},"modificationTime":1,"dataChange":true}}""")
         .mkString("", "\n", "\n"))
     java.nio.file.Files.writeString(

@@ -2,6 +2,9 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
+import scala.collection.immutable.ListMap
+
+import graft.Json
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -69,12 +72,6 @@ object DeltaExport {
     }
   }
 
-  /** Protocol action sized to what the published table actually needs:
-    * plain version 1 readers unless a capability is in play —
-    * `deletionVectors` for merge-on-read adds, `timestampNtz` for an
-    * NTZ column anywhere in the schema, column MAPPING for renamed-era
-    * snapshots (alone it fits the legacy reader-2/writer-5 gate; with
-    * any table feature it rides the feature list). */
   /** Widenings an exported table's PLAIN parquet readers promote
     * natively (the Spark vectorized reader's integer upcasts and
     * float→double). int→double / bigint→double are lossless in
@@ -86,43 +83,106 @@ object DeltaExport {
     ("smallint", "int"), ("smallint", "bigint"),
     ("int", "bigint"), ("float", "double"))
 
+  // ------------------------------------------------- log actions
+
+  /** One `_delta_log` line, `{"<kind>":{…}}`: built as maps in the
+    * protocol's field order and encoded by [[graft.Json]] in
+    * [[writeCommit]]. */
+  private type Action = ListMap[String, ListMap[String, Any]]
+
+  private def action(kind: String, fields: (String, Any)*): Action =
+    ListMap(kind -> ListMap(fields: _*))
+
+  /** Protocol action sized to what the published table actually needs:
+    * plain version 1 readers unless a capability is in play —
+    * `deletionVectors` for merge-on-read adds, `timestampNtz` for an
+    * NTZ column anywhere in the schema, column MAPPING for renamed-era
+    * snapshots (alone it fits the legacy reader-2/writer-5 gate; with
+    * any table feature it rides the feature list). */
   private def protocolAction(dv: Boolean, ntz: Boolean,
-      cm: Boolean = false, widening: Boolean = false): String =
+      cm: Boolean = false, widening: Boolean = false): Action =
     if (!dv && !ntz && !cm && !widening)
-      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
+      action("protocol", "minReaderVersion" -> 1, "minWriterVersion" -> 2)
     else if (cm && !dv && !ntz && !widening)
-      """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}"""
+      action("protocol", "minReaderVersion" -> 2, "minWriterVersion" -> 5)
     else {
-      val feats = ((if (dv) Seq("deletionVectors") else Nil) ++
+      val feats = (if (dv) Seq("deletionVectors") else Nil) ++
         (if (ntz) Seq("timestampNtz") else Nil) ++
         (if (cm) Seq("columnMapping") else Nil) ++
-        (if (widening) Seq("typeWidening") else Nil))
-        .map("\"" + _ + "\"").mkString(",")
-      s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-        s""""readerFeatures":[$feats],"writerFeatures":[$feats]}}"""
+        (if (widening) Seq("typeWidening") else Nil)
+      action("protocol", "minReaderVersion" -> 3, "minWriterVersion" -> 7,
+        "readerFeatures" -> feats, "writerFeatures" -> feats)
     }
 
-  /** Write the protocol-format DV file for (file key, graft version)
-    * and return its descriptor JSON fragment. */
-  private def dvJson(spark: SparkSession, targetPath: String, tagV: Long,
-      key: String, positions: Seq[Long]): String = {
-    val uuid = java.util.UUID.nameUUIDFromBytes(
-      s"graft-export-dv:$key:$tagV".getBytes(StandardCharsets.UTF_8))
-    val d = DeltaDv.writeDvFile(spark, targetPath, uuid, positions)
-    s""""deletionVector":{"storageType":"${d.storageType}","pathOrInlineDv":"${d.pathOrInlineDv}",""" +
-      s""""offset":${d.offset.get},"sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
+  /** The export's `metaData`: unpartitioned parquet under `schemaString`. */
+  private def metaDataAction(schemaString: String,
+      configuration: ListMap[String, String]): Action =
+    action("metaData", "id" -> "graft-export",
+      "format" -> ListMap("provider" -> "parquet", "options" -> ListMap.empty),
+      "schemaString" -> schemaString, "partitionColumns" -> Seq.empty,
+      "configuration" -> configuration)
+
+  /** `partitionValues` in key order; a null value stays JSON null. */
+  private def partitionValues(pv: Map[String, String]): ListMap[String, String] =
+    ListMap(pv.toSeq.sortBy(_._1): _*)
+
+  /** An `add`: `stats` rides as a JSON-encoded STRING per the protocol;
+    * `dv` is the file's deletion-vector descriptor. */
+  private def addAction(path: String, pv: Map[String, String], size: Long,
+      modificationTime: Long, stats: Option[String],
+      dv: Option[DeltaDv.Descriptor] = None): Action =
+    action("add", Seq("path" -> encodePath(path), "partitionValues" -> partitionValues(pv),
+      "size" -> size, "modificationTime" -> modificationTime, "dataChange" -> true) ++
+      stats.map("stats" -> _) ++ dv.map("deletionVector" -> dvFields(_)): _*)
+
+  /** `add.deletionVector`: the descriptor's fields, `offset` when set. */
+  private def dvFields(d: DeltaDv.Descriptor): ListMap[String, Any] =
+    ListMap[String, Any]("storageType" -> d.storageType, "pathOrInlineDv" -> d.pathOrInlineDv) ++
+      d.offset.map("offset" -> _) ++
+      ListMap("sizeInBytes" -> d.sizeInBytes, "cardinality" -> d.cardinality)
+
+  /** The `add` of a data file on disk, `logPath` as the log records it:
+    * size, modification time and stats come from the file itself. */
+  private def addOfFile(conf: org.apache.hadoop.conf.Configuration, file: String,
+      logPath: String, pv: Map[String, String] = Map.empty,
+      dv: Option[DeltaDv.Descriptor] = None): Action = {
+    val p = new Path(file)
+    val st = p.getFileSystem(conf).getFileStatus(p)
+    addAction(logPath, pv, st.getLen, st.getModificationTime,
+      deltaStatsJson(conf, file), dv)
   }
 
-  /** An `add` carrying a deletion vector with `positions`. */
+  /** A `remove`; foreign-table removes also carry the file's partition
+    * values and size. */
+  private def removeAction(path: String, deletionTimestamp: Long,
+      pv: Option[Map[String, String]] = None, size: Option[Long] = None): Action =
+    action("remove", Seq("path" -> encodePath(path),
+      "deletionTimestamp" -> deletionTimestamp, "dataChange" -> true) ++
+      pv.map(v => "partitionValues" -> partitionValues(v)) ++
+      size.map("size" -> _): _*)
+
+  /** A `cdc` action: path, partition values, size and `dataChange:false`
+    * only — modification time and stats are add-action fields. */
+  private def cdcAction(path: String, pv: Map[String, String], size: Long): Action =
+    action("cdc", "path" -> encodePath(path), "partitionValues" -> partitionValues(pv),
+      "size" -> size, "dataChange" -> false)
+
+  /** The protocol's idempotent-writer marker (SetTransaction): rides in
+    * every exported commit AND survives into checkpoints, so the graft
+    * watermark outlives vacuumed commit JSONs. */
+  private def txnAction(graftVersion: Long): Action =
+    action("txn", "appId" -> "graft-export", "version" -> graftVersion, "lastUpdated" -> 0)
+
+  /** An `add` of a graft data file carrying a deletion vector with
+    * `positions`, whose protocol-format DV file is written for (file
+    * key, graft version). */
   private def addWithDv(spark: SparkSession,
       conf: org.apache.hadoop.conf.Configuration, targetPath: String,
-      tagV: Long, addPath: String, positions: Seq[Long]): String = {
-    val p = new Path(addPath)
-    val st = p.getFileSystem(conf).getFileStatus(p)
-    s"""{"add":{"path":"${encodePath(addPath)}","partitionValues":{},""" +
-      s""""size":${st.getLen},"modificationTime":${st.getModificationTime},""" +
-      s""""dataChange":true${statsFragment(conf, addPath)},""" +
-      s"""${dvJson(spark, targetPath, tagV, normKey(addPath), positions)}}}"""
+      tagV: Long, addPath: String, positions: Seq[Long]): Action = {
+    val uuid = java.util.UUID.nameUUIDFromBytes(
+      s"graft-export-dv:${normKey(addPath)}:$tagV".getBytes(StandardCharsets.UTF_8))
+    addOfFile(conf, addPath, addPath,
+      dv = Some(DeltaDv.writeDvFile(spark, targetPath, uuid, positions)))
   }
 
   /** Scheme-normalized path key: graft DV sidecars record
@@ -164,12 +224,6 @@ object DeltaExport {
     try {
       val footer = rdr.getFooter
       val msg = footer.getFileMetaData.getSchema
-      def esc(s: String) = s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => "\\u%04x".format(c.toInt)
-        case c => c.toString
-      }
       val cols = msg.getFields.asScala.filter(_.isPrimitive).flatMap { fld =>
         val name = fld.getName
         val chunks = footer.getBlocks.asScala
@@ -185,10 +239,10 @@ object DeltaExport {
           import org.apache.parquet.schema.LogicalTypeAnnotation
           val prim = fld.asPrimitiveType().getPrimitiveTypeName
           val logical = fld.asPrimitiveType().getLogicalTypeAnnotation
-          def jsonOf(v: Any): Option[String] = (prim, logical) match {
+          def jsonOf(v: Any): Option[Any] = (prim, logical) match {
             case (INT32, _: LogicalTypeAnnotation.DateLogicalTypeAnnotation) =>
-              Some("\"" + java.time.LocalDate
-                .ofEpochDay(v.asInstanceOf[Number].longValue()) + "\"")
+              Some(java.time.LocalDate
+                .ofEpochDay(v.asInstanceOf[Number].longValue()).toString)
             case (INT64, ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation) =>
               // Delta stats carry timestamps as ISO-8601 strings, not
               // raw micros: instant form (Z) for adjusted columns,
@@ -204,18 +258,17 @@ object DeltaExport {
               micros.map { us =>
                 val inst = java.time.Instant.EPOCH
                   .plus(us, java.time.temporal.ChronoUnit.MICROS)
-                if (ts.isAdjustedToUTC) "\"" + inst + "\""
-                else "\"" + java.time.LocalDateTime
-                  .ofInstant(inst, java.time.ZoneOffset.UTC) + "\""
+                if (ts.isAdjustedToUTC) inst.toString
+                else java.time.LocalDateTime
+                  .ofInstant(inst, java.time.ZoneOffset.UTC).toString
               }
-            case (INT32 | INT64, _) => Some(String.valueOf(v))
+            case (INT32 | INT64, _) => Some(v)
             case (DOUBLE | FLOAT, _) =>
               val d = v.asInstanceOf[Number].doubleValue()
-              if (d.isNaN || d.isInfinite) None else Some(String.valueOf(v))
-            case (BOOLEAN, _) => Some(String.valueOf(v))
+              if (d.isNaN || d.isInfinite) None else Some(v)
+            case (BOOLEAN, _) => Some(v)
             case (BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
-              Some("\"" + esc(v.asInstanceOf[org.apache.parquet.io.api.Binary]
-                .toStringUsingUTF8) + "\"")
+              Some(v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
             case _ => None
           }
           val mm =
@@ -227,43 +280,16 @@ object DeltaExport {
           Some((name, mm, nullCount))
         }
       }
-      val minJ = cols.collect { case (n, Some((lo, _)), _) => s""""${esc(n)}":$lo""" }
-      val maxJ = cols.collect { case (n, Some((_, hi)), _) => s""""${esc(n)}":$hi""" }
-      val nullJ = cols.map { case (n, _, nc) => s""""${esc(n)}":$nc""" }
-      Some(s"""{"numRecords":${rdr.getRecordCount}""" +
-        s""","minValues":{${minJ.mkString(",")}}""" +
-        s""","maxValues":{${maxJ.mkString(",")}}""" +
-        s""","nullCount":{${nullJ.mkString(",")}}}""")
+      Some(Json.mapper.writeValueAsString(ListMap(
+        "numRecords" -> rdr.getRecordCount,
+        "minValues" -> ListMap(cols.collect { case (n, Some((lo, _)), _) => n -> lo }.toSeq: _*),
+        "maxValues" -> ListMap(cols.collect { case (n, Some((_, hi)), _) => n -> hi }.toSeq: _*),
+        "nullCount" -> ListMap(cols.map { case (n, _, nc) => n -> nc }.toSeq: _*))))
     } catch { case _: Exception => None } finally rdr.close()
   }
 
-  /** `stats` fragment for embedding in an `add` action (the stats JSON
-    * rides as a JSON-encoded STRING per the protocol). */
-  private def statsFragment(conf: org.apache.hadoop.conf.Configuration,
-      f: String): String =
-    deltaStatsJson(conf, f).map { s =>
-      s""","stats":"${s.replace("\\", "\\\\").replace("\"", "\\\"")}""""
-    }.getOrElse("")
-
-  private def addAction(conf: org.apache.hadoop.conf.Configuration, f: String): String = {
-    val p = new Path(f)
-    val st = p.getFileSystem(conf).getFileStatus(p)
-    s"""{"add":{"path":"${encodePath(f)}","partitionValues":{},"size":${st.getLen},""" +
-      s""""modificationTime":${st.getModificationTime},"dataChange":true""" +
-      s"""${statsFragment(conf, f)}}}"""
-  }
-
-  private def commitInfo(graftVersion: Long): String =
-    s"""{"commitInfo":{"operation":"graft-export","graftSourceVersion":$graftVersion}}"""
-
-  /** The protocol's idempotent-writer marker (SetTransaction): rides in
-    * every exported commit AND survives into checkpoints, so the graft
-    * watermark outlives vacuumed commit JSONs. */
-  private def txnAction(graftVersion: Long): String =
-    s"""{"txn":{"appId":"graft-export","version":$graftVersion,"lastUpdated":0}}"""
-
   private def writeCommit(spark: SparkSession, targetPath: String,
-      deltaV: Long, actions: Seq[String]): Unit = {
+      deltaV: Long, actions: Seq[Action]): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val logDir = new Path(s"$targetPath/_delta_log")
     val fs = logDir.getFileSystem(conf)
@@ -273,7 +299,8 @@ object DeltaExport {
       s"$targetPath already carries Delta commit $deltaV; " +
         (if (deltaV == 0) "export to a fresh path" else "concurrent export — retry"))
     val out = fs.create(target, false)
-    try out.write(actions.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    try out.write(actions.map(Json.mapper.writeValueAsString).mkString("", "\n", "\n")
+      .getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
 
@@ -302,7 +329,7 @@ object DeltaExport {
     // last asymmetry. A physical type that is NOT a lossless widening
     // of the declared one keeps the named decline.
     val (logicalSchema, cmConfig, widened) = colsOpt match {
-      case None => (scan.schema, "", false)
+      case None => (scan.schema, ListMap.empty[String, String], false)
       case Some(mapping) =>
         // logical → the narrower physical era types observed on disk
         val typeChanges = scala.collection.mutable.Map.empty[String, Set[DataType]]
@@ -344,14 +371,12 @@ object DeltaExport {
           StructField(c.logical, declared, nullable = true, mb.build())
         }
         (StructType(fields.toArray),
-          s""""delta.columnMapping.mode":"name"""" +
-            s""","delta.columnMapping.maxColumnId":"${mapping.size}"""",
+          ListMap("delta.columnMapping.mode" -> "name",
+            "delta.columnMapping.maxColumnId" -> mapping.size.toString),
           typeChanges.nonEmpty)
     }
-    val schemaJson = logicalSchema.json
     val files = scan.inputFiles.sorted
     val conf = spark.sessionState.newHadoopConf()
-    val esc = schemaJson.replace("\\", "\\\\").replace("\"", "\\\"")
     val dvs = dvPositionsAt(spark, sourcePath, v)
     val fileKeys = files.map(normKey).toSet
     dvs.keys.find(!fileKeys(_)).foreach { k =>
@@ -359,20 +384,17 @@ object DeltaExport {
         s"tombstones at v$v reference $k, which the snapshot's listing " +
           "does not contain — corrupt deletion-vector state")
     }
-    val actions = Seq.newBuilder[String]
-    actions += commitInfo(v)
+    val actions = Seq.newBuilder[Action]
+    actions += action("commitInfo", "operation" -> "graft-export", "graftSourceVersion" -> v)
     actions += txnAction(v)
     actions += protocolAction(dv = dvs.nonEmpty, ntz = hasNtz(logicalSchema),
       cm = colsOpt.nonEmpty, widening = widened)
-    actions +=
-      (s"""{"metaData":{"id":"graft-export","format":""" +
-        s"""{"provider":"parquet","options":{}},"schemaString":"$esc",""" +
-        s""""partitionColumns":[],"configuration":{$cmConfig}}}""")
+    actions += metaDataAction(logicalSchema.json, cmConfig)
     files.foreach { f =>
       dvs.get(normKey(f)) match {
         case Some(positions) =>
           actions += addWithDv(spark, conf, targetPath, v, f, positions)
-        case None => actions += addAction(conf, f)
+        case None => actions += addOfFile(conf, f, f)
       }
     }
     writeCommit(spark, targetPath, 0L, actions.result())
@@ -388,7 +410,6 @@ object DeltaExport {
     val fs = logDir.getFileSystem(conf)
     if (!fs.exists(logDir)) throw new IllegalArgumentException(
       s"no _delta_log at $targetPath; run DeltaExport.snapshot first")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val versions = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
       .filter(n => n.endsWith(".json") && n.stripSuffix(".json").forall(_.isDigit))
       .map(_.stripSuffix(".json").toLong).sorted
@@ -400,7 +421,7 @@ object DeltaExport {
         out.toString("UTF-8")
       } finally in.close()
       body.split('\n').map(_.trim).filter(_.nonEmpty).flatMap { line =>
-        val node = mapper.readTree(line)
+        val node = Json.mapper.readTree(line)
         Option(node.get("commitInfo")).flatMap(ci =>
           Option(ci.get("graftSourceVersion")).map(_.asLong())) orElse
           Option(node.get("txn")).filter(t =>
@@ -419,7 +440,7 @@ object DeltaExport {
           org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
           out.toString("UTF-8")
         } finally in.close()
-        val cpV = mapper.readTree(body).get("version").asLong()
+        val cpV = Json.mapper.readTree(body).get("version").asLong()
         val cpFile = new Path(logDir, f"$cpV%020d.checkpoint.parquet")
         if (!fs.exists(cpFile)) Seq.empty
         else {
@@ -499,8 +520,8 @@ object DeltaExport {
           "rewrite commit — corrupt deletion-vector state")
     }
     val changed = dv1.filter { case (f, ps) => dv0.getOrElse(f, Seq.empty) != ps }
-    val actions = Seq.newBuilder[String]
-    actions += commitInfo(g1)
+    val actions = Seq.newBuilder[Action]
+    actions += action("commitInfo", "operation" -> "graft-export", "graftSourceVersion" -> g1)
     actions += txnAction(g1)
     // first DVs on this log: upgrade the protocol, PRESERVING an
     // already-declared timestampNtz feature (protocol actions replace,
@@ -515,7 +536,7 @@ object DeltaExport {
       changed.get(normKey(f)) match {
         case Some(positions) =>
           actions += addWithDv(spark, conf, targetPath, g1, f, positions)
-        case None => actions += addAction(conf, f)
+        case None => actions += addOfFile(conf, f, f)
       }
       published += 1
     }
@@ -532,8 +553,7 @@ object DeltaExport {
               s"$targetPath never added — re-export a fresh snapshot"))
         val p = new Path(addPath)
         val st = p.getFileSystem(conf).getFileStatus(p)
-        actions += (s"""{"remove":{"path":"${encodePath(addPath)}",""" +
-          s""""deletionTimestamp":${st.getModificationTime},"dataChange":true}}""")
+        actions += removeAction(addPath, st.getModificationTime)
         actions += addWithDv(spark, conf, targetPath, g1, addPath, positions)
         published += 1
       }
@@ -644,8 +664,8 @@ object DeltaExport {
     fs.delete(stage, true)
     val lc = new Path(logDir, "_last_checkpoint")
     val out = fs.create(lc, true)
-    try out.write(s"""{"version":$deltaV,"size":${rows.size}}"""
-      .getBytes(StandardCharsets.UTF_8))
+    try out.write(Json.mapper.writeValueAsBytes(
+      ListMap("version" -> deltaV, "size" -> rows.size)))
     finally out.close()
   }
 
@@ -911,20 +931,11 @@ object DeltaExport {
     val conf = spark.sessionState.newHadoopConf()
     val fsys = new Path(targetPath).getFileSystem(conf)
     def publish(staged: Path, destName: String,
-        pv: Map[String, String]): String = {
+        pv: Map[String, String]): Action = {
       val dest = new Path(targetPath, destName)
       if (!fsys.rename(staged, dest)) throw new java.io.IOException(
         s"staging publish failed for $dest")
-      val stt = fsys.getFileStatus(dest)
-      val pvJson = pv.toSeq.sortBy(_._1).map { case (k, v) =>
-        val kq = "\"" + k.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-        val vq = if (v == null) "null"
-          else "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-        s"$kq:$vq"
-      }.mkString(",")
-      s"""{"add":{"path":"${encodePath(destName)}","partitionValues":{$pvJson},""" +
-        s""""size":${stt.getLen},"modificationTime":${stt.getModificationTime},""" +
-        s""""dataChange":true${statsFragment(conf, dest.toString)}}}"""
+      addOfFile(conf, dest.toString, destName, pv)
     }
     // Persist when a pass beyond the write itself reads the frame
     // (the partition-tuple collect). Without it a nondeterministic
@@ -958,7 +969,7 @@ object DeltaExport {
           s"appendForeign frame carries nulls in NOT NULL column(s) of " +
             s"$targetPath: ${violated.mkString(", ")}")
       }
-    val adds = Seq.newBuilder[String]
+    val adds = Seq.newBuilder[Action]
     try {
       if (parts.isEmpty) {
         src.select(dataSel: _*).write.mode("overwrite").parquet(staging)
@@ -1043,8 +1054,8 @@ object DeltaExport {
         validatedThrough = v - 1
       }
       val actions =
-        Seq("""{"commitInfo":{"operation":"WRITE","engineInfo":"graft-appendForeign"}}""") ++
-          data
+        action("commitInfo", "operation" -> "WRITE",
+          "engineInfo" -> "graft-appendForeign") +: data
       try { writeCommit(spark, targetPath, v, actions); return v }
       catch {
         case e: Throwable
@@ -1092,15 +1103,6 @@ object DeltaExport {
         s"delta table at $tablePath is append-only (delta.appendOnly=true); " +
           "row deletion is forbidden by the table's own contract")
   }
-
-  /** `partitionValues` JSON fragment of an add/remove/cdc action. */
-  private def pvJsonOf(pv: Map[String, String]): String =
-    pv.toSeq.sortBy(_._1).map { case (k, v) =>
-      val kq = "\"" + k.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      val vq = if (v == null) "null"
-        else "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      s"$kq:$vq"
-    }.mkString(",")
 
   /** UPDATE rows matching `predicate` in ANY Delta table — the
     * copy-on-write sibling of [[deleteForeign]]: every file holding a
@@ -1245,19 +1247,13 @@ object DeltaExport {
     val conf = spark.sessionState.newHadoopConf()
     val fsys = new Path(targetPath).getFileSystem(conf)
     def publish(staged: Path, destName: String, pv: Map[String, String],
-        action: String, dataChange: Boolean): String = {
+        cdc: Boolean): Action = {
       val dest = new Path(targetPath, destName)
       Option(dest.getParent).foreach(fsys.mkdirs(_): Unit)
       if (!fsys.rename(staged, dest)) throw new java.io.IOException(
         s"staging publish failed for $dest")
-      val stt = fsys.getFileStatus(dest)
-      s"""{"$action":{"path":"${encodePath(destName)}",""" +
-        s""""partitionValues":{${pvJsonOf(pv)}},"size":${stt.getLen},""" +
-        (if (action == "add")
-          s""""modificationTime":${stt.getModificationTime},"""
-        else "") +
-        s""""dataChange":$dataChange""" +
-        (if (action == "add") statsFragment(conf, dest.toString) else "") + "}}"
+      if (cdc) cdcAction(destName, pv, fsys.getFileStatus(dest).getLen)
+      else addOfFile(conf, dest.toString, destName, pv)
     }
     def gpFrames(adds: Seq[DeltaRead.AddFile])
         : (Seq[(Map[String, String], Int)], org.apache.spark.sql.DataFrame) = {
@@ -1274,8 +1270,8 @@ object DeltaExport {
     }
     val notNullData = schema.fields.filter(!_.nullable).map(_.name).toSeq
       .filterNot(parts.contains).map(n => physOf(n) -> n)
-    val adds = Seq.newBuilder[String]
-    val cdcs = Seq.newBuilder[String]
+    val adds = Seq.newBuilder[Action]
+    val cdcs = Seq.newBuilder[Action]
     try {
       // the rewrite: every affected file's rows, matched ones updated
       val (tuples, gpMap) = gpFrames(affected)
@@ -1311,8 +1307,7 @@ object DeltaExport {
           fsys.listStatus(dir).toSeq
             .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
             .sortBy(_.getPath.getName).zipWithIndex.foreach { case (s, k) =>
-              adds += publish(s.getPath, s"part-$uuid-u$i-$k.parquet", pv,
-                "add", dataChange = true)
+              adds += publish(s.getPath, s"part-$uuid-u$i-$k.parquet", pv, cdc = false)
             }
       }
       if (cdfOn) {
@@ -1339,19 +1334,14 @@ object DeltaExport {
               .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
               .sortBy(_.getPath.getName).zipWithIndex.foreach { case (s, k) =>
                 cdcs += publish(s.getPath,
-                  s"_change_data/cdc-$uuid-u$i-$k.parquet", pv,
-                  "cdc", dataChange = false)
+                  s"_change_data/cdc-$uuid-u$i-$k.parquet", pv, cdc = true)
               }
         }
       }
     } finally fsys.delete(new Path(staging), true): Unit
     val now = System.currentTimeMillis()
-    val removes = affected.map { a =>
-      s"""{"remove":{"path":"${encodePath(a.path)}",""" +
-        s""""deletionTimestamp":$now,"dataChange":true,""" +
-        s""""partitionValues":{${pvJsonOf(a.partitionValues)}}""" +
-        a.size.map(sz => s""","size":$sz""").getOrElse("") + "}}"
-    }
+    val removes = affected.map(a =>
+      removeAction(a.path, now, Some(a.partitionValues), a.size))
     beforeCommit()
     var attempt = 0
     var lastErr: Throwable = null
@@ -1379,7 +1369,8 @@ object DeltaExport {
         validatedThrough = v - 1
       }
       val actions =
-        Seq("""{"commitInfo":{"operation":"UPDATE","engineInfo":"graft-updateForeign"}}""") ++
+        Seq(action("commitInfo", "operation" -> "UPDATE",
+          "engineInfo" -> "graft-updateForeign")) ++
           removes ++ adds.result() ++ cdcs.result()
       try { writeCommit(spark, targetPath, v, actions); return v }
       catch {
@@ -1478,20 +1469,10 @@ object DeltaExport {
           val stt = p.getFileSystem(conf).getFileStatus(p)
           (stt.getLen, stt.getModificationTime)
       }
-      val statsJson = a.stats.map(s =>
-        s""","stats":"${s.replace("\\", "\\\\").replace("\"", "\\\"")}"""")
-        .getOrElse("")
-      s"""{"add":{"path":"${encodePath(a.path)}",""" +
-        s""""partitionValues":{${pvJsonOf(a.partitionValues)}},""" +
-        s""""size":$len,"modificationTime":$mt,"dataChange":true$statsJson,""" +
-        s""""deletionVector":{"storageType":"${desc.storageType}",""" +
-        s""""pathOrInlineDv":"${desc.pathOrInlineDv}",""" +
-        desc.offset.map(o => s""""offset":$o,""").getOrElse("") +
-        s""""sizeInBytes":${desc.sizeInBytes},""" +
-        s""""cardinality":${desc.cardinality}}}}"""
+      addAction(a.path, a.partitionValues, len, mt, a.stats, Some(desc))
     }
     // CDF: the deleted rows themselves, staged exactly as the CoW path
-    val cdcs = Seq.newBuilder[String]
+    val cdcs = Seq.newBuilder[Action]
     if (cdfOn) {
       val staging = s"$targetPath/_graft_staging_$uuid"
       val dataSel = schema.fields.toSeq.filterNot(f => parts.contains(f.name))
@@ -1505,15 +1486,12 @@ object DeltaExport {
             .as(physOf(f.name), mb.build())
         }
       def publish(staged: Path, destName: String,
-          pv: Map[String, String]): String = {
+          pv: Map[String, String]): Action = {
         val dest = new Path(targetPath, destName)
         Option(dest.getParent).foreach(fsys.mkdirs(_): Unit)
         if (!fsys.rename(staged, dest)) throw new java.io.IOException(
           s"staging publish failed for $dest")
-        val stt = fsys.getFileStatus(dest)
-        s"""{"cdc":{"path":"${encodePath(destName)}",""" +
-          s""""partitionValues":{${pvJsonOf(pv)}},"size":${stt.getLen},""" +
-          s""""dataChange":false}}"""
+        cdcAction(destName, pv, fsys.getFileStatus(dest).getLen)
       }
       try {
         val tuples = affected.groupBy(_.partitionValues).toSeq
@@ -1545,12 +1523,8 @@ object DeltaExport {
       } finally fsys.delete(new Path(staging), true): Unit
     }
     val now = System.currentTimeMillis()
-    val removes = affected.map { a =>
-      s"""{"remove":{"path":"${encodePath(a.path)}",""" +
-        s""""deletionTimestamp":$now,"dataChange":true,""" +
-        s""""partitionValues":{${pvJsonOf(a.partitionValues)}}""" +
-        a.size.map(sz => s""","size":$sz""").getOrElse("") + "}}"
-    }
+    val removes = affected.map(a =>
+      removeAction(a.path, now, Some(a.partitionValues), a.size))
     var attempt = 0
     var lastErr: Throwable = null
     var validatedThrough = currentV
@@ -1577,7 +1551,8 @@ object DeltaExport {
         validatedThrough = v - 1
       }
       val actions =
-        Seq("""{"commitInfo":{"operation":"DELETE","engineInfo":"graft-deleteForeignMoR"}}""") ++
+        Seq(action("commitInfo", "operation" -> "DELETE",
+          "engineInfo" -> "graft-deleteForeignMoR")) ++
           removes ++ dvAdds ++ cdcs.result()
       try { writeCommit(spark, targetPath, v, actions); return v }
       catch {
@@ -1707,21 +1682,13 @@ object DeltaExport {
     val conf = spark.sessionState.newHadoopConf()
     val fsys = new Path(targetPath).getFileSystem(conf)
     def publish(staged: Path, destName: String, pv: Map[String, String],
-        action: String, dataChange: Boolean): String = {
+        cdc: Boolean): Action = {
       val dest = new Path(targetPath, destName)
       Option(dest.getParent).foreach(fsys.mkdirs(_): Unit)
       if (!fsys.rename(staged, dest)) throw new java.io.IOException(
         s"staging publish failed for $dest")
-      val stt = fsys.getFileStatus(dest)
-      // cdc actions carry path/partitionValues/size/dataChange only —
-      // modificationTime and stats are add-action fields
-      s"""{"$action":{"path":"${encodePath(destName)}",""" +
-        s""""partitionValues":{${pvJsonOf(pv)}},"size":${stt.getLen},""" +
-        (if (action == "add")
-          s""""modificationTime":${stt.getModificationTime},"""
-        else "") +
-        s""""dataChange":$dataChange""" +
-        (if (action == "add") statsFragment(conf, dest.toString) else "") + "}}"
+      if (cdc) cdcAction(destName, pv, fsys.getFileStatus(dest).getLen)
+      else addOfFile(conf, dest.toString, destName, pv)
     }
     // the gp index: one broadcast (file key → group) map; groups are
     // the distinct partition TUPLES of the files being rewritten, so
@@ -1739,8 +1706,8 @@ object DeltaExport {
         StructField("__gp", IntegerType, nullable = false))))
       (tuples, df)
     }
-    val adds = Seq.newBuilder[String]
-    val cdcs = Seq.newBuilder[String]
+    val adds = Seq.newBuilder[Action]
+    val cdcs = Seq.newBuilder[Action]
     try {
       if (partials.nonEmpty) {
         // pass 2 — survivors of the partial files only, one job
@@ -1758,8 +1725,7 @@ object DeltaExport {
             fsys.listStatus(dir).toSeq
               .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
               .sortBy(_.getPath.getName).zipWithIndex.foreach { case (s, k) =>
-                adds += publish(s.getPath, s"part-$uuid-d$i-$k.parquet", pv,
-                  "add", dataChange = true)
+                adds += publish(s.getPath, s"part-$uuid-d$i-$k.parquet", pv, cdc = false)
               }
         }
       }
@@ -1780,19 +1746,14 @@ object DeltaExport {
               .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
               .sortBy(_.getPath.getName).zipWithIndex.foreach { case (s, k) =>
                 cdcs += publish(s.getPath,
-                  s"_change_data/cdc-$uuid-$i-$k.parquet", pv,
-                  "cdc", dataChange = false)
+                  s"_change_data/cdc-$uuid-$i-$k.parquet", pv, cdc = true)
               }
         }
       }
     } finally fsys.delete(new Path(staging), true): Unit
     val now = System.currentTimeMillis()
-    val removes = affected.map { a =>
-      s"""{"remove":{"path":"${encodePath(a.path)}",""" +
-        s""""deletionTimestamp":$now,"dataChange":true,""" +
-        s""""partitionValues":{${pvJsonOf(a.partitionValues)}}""" +
-        a.size.map(sz => s""","size":$sz""").getOrElse("") + "}}"
-    }
+    val removes = affected.map(a =>
+      removeAction(a.path, now, Some(a.partitionValues), a.size))
     beforeCommit()
     // OCC commit: rewritten files are final; only the JSON number
     // races. A delete conflicts with ANY intervening commit that
@@ -1826,7 +1787,8 @@ object DeltaExport {
         validatedThrough = v - 1
       }
       val actions =
-        Seq("""{"commitInfo":{"operation":"DELETE","engineInfo":"graft-deleteForeign"}}""") ++
+        Seq(action("commitInfo", "operation" -> "DELETE",
+          "engineInfo" -> "graft-deleteForeign")) ++
           removes ++ adds.result() ++ cdcs.result()
       try { writeCommit(spark, targetPath, v, actions); return v }
       catch {

@@ -1,6 +1,7 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
+import graft.Json
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
@@ -48,7 +49,6 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
   */
 object DeltaRead {
 
-  private val mapper = new ObjectMapper()
 
   /** Reader-version-3 features this replay honors; anything else on
     * the table's protocol declines by name. `timestampNtz` (r14) is a
@@ -321,7 +321,7 @@ object DeltaRead {
           val rdr = new java.io.BufferedReader(
             new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
           Option(rdr.readLine()).flatMap { line =>
-            val node = mapper.readTree(line)
+            val node = Json.mapper.readTree(line)
             Option(node.get("commitInfo"))
               .flatMap(ci => Option(ci.get("inCommitTimestamp")))
               .filterNot(_.isNull).map(_.asLong())
@@ -422,7 +422,7 @@ object DeltaRead {
     }
     commits.foreach { v =>
       st = commitBody(spark, logDir, v).foldLeft(st)((s, line) =>
-        applyAction(s, mapper.readTree(line)))
+        applyAction(s, Json.mapper.readTree(line)))
     }
     st
   }
@@ -466,7 +466,7 @@ object DeltaRead {
     val logDir = s"$tablePath/_delta_log"
     ((sinceV + 1) to toV).flatMap { v =>
       commitBody(spark, logDir, v).flatMap { line =>
-        val node = mapper.readTree(line)
+        val node = Json.mapper.readTree(line)
         if (node.has("remove")) throw new IllegalStateException(
           s"delta table at $tablePath removed files in commit v$v; the " +
             "append-only stream cannot represent deletions — resync from a snapshot")
@@ -493,7 +493,7 @@ object DeltaRead {
   private[sources] def addCountIn(spark: SparkSession, tablePath: String,
       v: Long): Int =
     commitBody(spark, s"$tablePath/_delta_log", v)
-      .count(line => mapper.readTree(line).has("add"))
+      .count(line => Json.mapper.readTree(line).has("add"))
 
   /** The CHANGE batches of commits in (sinceV, toV], per commit — the
     * change-data-feed face ([[DeltaSource]]'s readChangeFeed mode):
@@ -512,7 +512,7 @@ object DeltaRead {
       var adds = Vector.empty[AddFile]
       var removed = false
       commitBody(spark, logDir, v).foreach { line =>
-        val node = mapper.readTree(line)
+        val node = Json.mapper.readTree(line)
         if (node.has("metaData")) throw new IllegalStateException(
           s"delta table at $tablePath changed its metaData in commit v$v; the " +
             "change stream's schema is pinned at creation — resync from a snapshot")
@@ -991,7 +991,7 @@ object DeltaRead {
         org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
         out.toString("UTF-8")
       } finally in.close()
-      Some(mapper.readTree(body).get("version").asLong())
+      Some(Json.mapper.readTree(body).get("version").asLong())
     }
   }
 
@@ -1055,7 +1055,7 @@ object DeltaRead {
         var paths = Vector.empty[String]
         var cv: Option[Long] = None
         textLines(spark, new Path(logDir, name)).foreach { line =>
-          val node = mapper.readTree(line)
+          val node = Json.mapper.readTree(line)
           if (node.has("sidecar"))
             paths :+= node.get("sidecar").get("path").asText()
           else if (node.has("checkpointMetadata"))

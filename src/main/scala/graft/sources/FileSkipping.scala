@@ -1,6 +1,7 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
+import graft.Json
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.types._
@@ -32,14 +33,13 @@ private[sources] object FileSkipping {
   final case class ColBounds(min: Option[Any], max: Option[Any],
       nullCount: Option[Long] = None, numRecords: Option[Long] = None)
 
-  private val mapper = new ObjectMapper()
 
   /** Delta `add.stats` JSON → per-column bounds, keyed by the file
     * schema's (physical) field names. Columns whose type this reader
     * does not convert simply get no bounds (kept). */
   def fromDeltaStats(statsJson: String, schema: StructType): Map[String, ColBounds] = {
     val root =
-      try mapper.readTree(statsJson)
+      try Json.mapper.readTree(statsJson)
       catch { case _: Exception => return Map.empty } // malformed stats: no pruning
     if (root == null || !root.isObject) return Map.empty
     val numRecords = Option(root.get("numRecords")).filter(_.isNumber).map(_.asLong())

@@ -1,6 +1,9 @@
 package graft.sources
 
+import scala.collection.immutable.ListMap
+
 import com.fasterxml.jackson.databind.JsonNode
+import graft.Json
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
@@ -232,29 +235,26 @@ object IcebergExport {
     def srcName: String = srcNameOpt.getOrElse(name)
   }
 
-  /** The schema's JSON serialization — written identically into the
-    * metadata JSON and into every manifest's Avro key-value metadata
+  /** The schema's JSON tree — written identically into the metadata
+    * JSON and, encoded, into every manifest's Avro key-value metadata
     * (the spec requires each manifest to carry the schema it was
     * written under). */
-  private def schemaJson(fields: Seq[(Int, String, Boolean, String)],
-      schemaId: Int = 0): String = {
-    val fjson = fields.map { case (id, n, req, t) =>
-      s"""{"id":$id,"name":"$n","required":$req,"type":"$t"}"""
-    }.mkString(",")
-    s"""{"type":"struct","schema-id":$schemaId,"fields":[$fjson]}"""
-  }
+  private def schemaTree(fields: Seq[(Int, String, Boolean, String)],
+      schemaId: Int = 0): ListMap[String, Any] =
+    ListMap("type" -> "struct", "schema-id" -> schemaId,
+      "fields" -> fields.map { case (id, n, req, t) =>
+        ListMap("id" -> id, "name" -> n, "required" -> req, "type" -> t)
+      })
 
-  /** The spec's name-mapping property value, JSON-escaped for embedding:
-    * graft-written parquet carries no Iceberg field ids, and
-    * `schema.name-mapping.default` is the spec's sanctioned bridge —
+  /** The spec's name-mapping property value, a JSON document carried
+    * as a string: graft-written parquet carries no Iceberg field ids,
+    * and `schema.name-mapping.default` is the spec's sanctioned bridge —
     * engines resolve id-less files by these (field-id → names) rules
     * instead of refusing the scan. */
-  private def nameMappingJson(fields: Seq[(Int, String, Boolean, String)]): String = {
-    val rules = fields.map { case (id, n, _, _) =>
-      s"""{"field-id":$id,"names":["$n"]}"""
-    }.mkString("[", ",", "]")
-    rules.replace("\"", "\\\"")
-  }
+  private def nameMappingJson(fields: Seq[(Int, String, Boolean, String)]): String =
+    Json.mapper.writeValueAsString(fields.map { case (id, n, _, _) =>
+      ListMap("field-id" -> id, "names" -> Seq(n))
+    })
 
   /** Deterministic REAL table UUID (RFC-4122 name-based): stable across
     * metadata versions of the same export target, so engines that key
@@ -425,13 +425,11 @@ object IcebergExport {
       existingRows: Long = 0L, minSeq: Option[Long] = None)
 
   /** The spec fields of a partition spec (identity / day transforms),
-    * as the JSON both the table metadata and each manifest's
+    * the tree both the table metadata and, encoded, each manifest's
     * key-value metadata carry. */
-  private def partSpecFieldsJson(partCols: Seq[PartCol]): String =
-    partCols.map(pc =>
-      s"""{"name":"${pc.name}","transform":"${pc.transform}",""" +
-        s""""source-id":${pc.srcId},"field-id":${pc.fieldId}}""")
-      .mkString("[", ",", "]")
+  private def partSpecFields(partCols: Seq[PartCol]): Seq[ListMap[String, Any]] =
+    partCols.map(pc => ListMap("name" -> pc.name, "transform" -> pc.transform,
+      "source-id" -> pc.srcId, "field-id" -> pc.fieldId))
 
   /** Write one ADDED-entries manifest (data, position-delete, or v3
     * deletion-vector files, per `content`/`NewFile.dv`), under the
@@ -455,9 +453,9 @@ object IcebergExport {
     w.setMeta("content", if (content == 0) "data" else "deletes")
     // key-value metadata the spec REQUIRES of every manifest (r11
     // ADVICE close — external engines reject manifests without them)
-    w.setMeta("schema", schemaJson(fields, schemaId))
+    w.setMeta("schema", Json.mapper.writeValueAsString(schemaTree(fields, schemaId)))
     w.setMeta("schema-id", schemaId.toString)
-    w.setMeta("partition-spec", partSpecFieldsJson(partCols))
+    w.setMeta("partition-spec", Json.mapper.writeValueAsString(partSpecFields(partCols)))
     w.setMeta("partition-spec-id", specId.toString)
     w.create(entrySchema, f)
     var nextRow = firstRowBase.getOrElse(0L)
@@ -592,53 +590,53 @@ object IcebergExport {
     } finally rdr.close()
   }
 
-  /** One snapshot's JSON fragment. `firstRowId` is the v3 row-lineage
-    * base this snapshot assigned ids from. */
+  /** One snapshot of the metadata JSON. `firstRowId` is the v3
+    * row-lineage base this snapshot assigned ids from. */
   private final case class Snap(id: Long, seqNum: Long, tsMs: Long,
       manifestList: String, operation: String,
       firstRowId: Option[Long] = None) {
-    def json: String =
-      s"""{"snapshot-id":$id,"sequence-number":$seqNum,"timestamp-ms":$tsMs,""" +
-        s""""manifest-list":"$manifestList","summary":{"operation":"$operation"},""" +
-        firstRowId.map(r => s""""first-row-id":$r,""").getOrElse("") +
-        """"schema-id":0}"""
+    def tree: ListMap[String, Any] =
+      ListMap[String, Any]("snapshot-id" -> id, "sequence-number" -> seqNum,
+        "timestamp-ms" -> tsMs, "manifest-list" -> manifestList,
+        "summary" -> ListMap("operation" -> operation)) ++
+        firstRowId.map("first-row-id" -> _) + ("schema-id" -> 0)
   }
 
+  /** Publish a graft export's metadata v`metaV`: the whole document is
+    * one tree, written by [[publishMeta]] like every foreign
+    * write-back. */
   private def writeMetadata(dir: String, metaV: Int, sourceVersion: Long,
       fields: Seq[(Int, String, Boolean, String)], snaps: Seq[Snap],
       currentId: Long, partCols: Seq[PartCol] = Nil,
       formatVersion: Int = 2, nextRowId: Option[Long] = None): Unit = {
-    val tsMs = System.currentTimeMillis()
-    val slog = snaps.map(s => s"""{"timestamp-ms":${s.tsMs},"snapshot-id":${s.id}}""")
-      .mkString(",")
     // a partitioned publish carries TWO specs: the identity spec (0,
     // the default) and the empty spec (1) its GLOBAL position-delete
     // manifests reference
     val specs =
-      if (partCols.isEmpty) """[{"spec-id":0,"fields":[]}]"""
-      else s"""[{"spec-id":0,"fields":${partSpecFieldsJson(partCols)}},""" +
-        """{"spec-id":1,"fields":[]}]"""
+      if (partCols.isEmpty) Seq(ListMap("spec-id" -> 0, "fields" -> Seq.empty))
+      else Seq(ListMap("spec-id" -> 0, "fields" -> partSpecFields(partCols)),
+        ListMap("spec-id" -> 1, "fields" -> Seq.empty))
     val lastPartId = if (partCols.isEmpty) 999 else partCols.map(_.fieldId).max
-    val body =
-      s"""{"format-version":$formatVersion,"table-uuid":"${tableUuid(dir)}","location":"$dir",
-         |${nextRowId.map(n => s""""next-row-id":$n,""").getOrElse("")}
-         |"last-sequence-number":${snaps.map(_.seqNum).max},
-         |"last-updated-ms":$tsMs,"last-column-id":${fields.map(_._1).max},
-         |"current-schema-id":0,
-         |"schemas":[${schemaJson(fields)}],
-         |"default-spec-id":0,"partition-specs":$specs,
-         |"last-partition-id":$lastPartId,
-         |"default-sort-order-id":0,"sort-orders":[{"order-id":0,"fields":[]}],
-         |"properties":{"graft.source-version":"$sourceVersion",
-         |"schema.name-mapping.default":"${nameMappingJson(fields)}"},
-         |"current-snapshot-id":$currentId,
-         |"refs":{"main":{"snapshot-id":$currentId,"type":"branch"}},
-         |"snapshots":[${snaps.map(_.json).mkString(",")}],
-         |"snapshot-log":[$slog],"metadata-log":[]}""".stripMargin
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/metadata/v$metaV.metadata.json"), body)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/metadata/version-hint.text"), metaV.toString)
+    val root = ListMap[String, Any]("format-version" -> formatVersion,
+      "table-uuid" -> tableUuid(dir).toString, "location" -> dir) ++
+      nextRowId.map("next-row-id" -> _) ++ ListMap(
+      "last-sequence-number" -> snaps.map(_.seqNum).max,
+      "last-updated-ms" -> System.currentTimeMillis(),
+      "last-column-id" -> fields.map(_._1).max,
+      "current-schema-id" -> 0,
+      "schemas" -> Seq(schemaTree(fields)),
+      "default-spec-id" -> 0, "partition-specs" -> specs,
+      "last-partition-id" -> lastPartId,
+      "default-sort-order-id" -> 0,
+      "sort-orders" -> Seq(ListMap("order-id" -> 0, "fields" -> Seq.empty)),
+      "properties" -> ListMap("graft.source-version" -> sourceVersion.toString,
+        "schema.name-mapping.default" -> nameMappingJson(fields)),
+      "current-snapshot-id" -> currentId,
+      "refs" -> ListMap("main" -> ListMap("snapshot-id" -> currentId, "type" -> "branch")),
+      "snapshots" -> snaps.map(_.tree),
+      "snapshot-log" -> snaps.map(s => ListMap("timestamp-ms" -> s.tsMs, "snapshot-id" -> s.id)),
+      "metadata-log" -> Seq.empty)
+    publishMeta(dir, Json.mapper.valueToTree[JsonNode](root), metaV)
   }
 
   private def requireUnmapped(spark: SparkSession, sourcePath: String, v: Long): Unit =
@@ -765,9 +763,9 @@ object IcebergExport {
     val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](entrySchema))
     w.setMeta("format-version", "3")
     w.setMeta("content", "deletes")
-    w.setMeta("schema", schemaJson(fields))
+    w.setMeta("schema", Json.mapper.writeValueAsString(schemaTree(fields)))
     w.setMeta("schema-id", "0")
-    w.setMeta("partition-spec", partSpecFieldsJson(Nil))
+    w.setMeta("partition-spec", "[]")
     w.setMeta("partition-spec-id", specId.toString)
     w.create(entrySchema, f)
     var rows = 0L
@@ -980,8 +978,6 @@ object IcebergExport {
 
   // ------------------------------------------- foreign write-back (r15)
 
-  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
   /** Fields of the table's CURRENT schema with their REAL ids — the
     * foreign-table counterpart of [[fieldsOf]]: graft exports assign
     * ids positionally, but an externally-created table's ids are
@@ -1043,7 +1039,7 @@ object IcebergExport {
     val text = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$targetPath/metadata/${best._2}")),
       java.nio.charset.StandardCharsets.UTF_8)
-    (best._1.toInt, jsonMapper.readTree(text))
+    (best._1.toInt, Json.mapper.readTree(text))
   }
 
   /** Publish metadata v`metaV` of a FOREIGN table by deep-copying the
@@ -1115,19 +1111,20 @@ object IcebergExport {
         sp.putArray("fields"): Unit
       }
     }
-    publishForeignMeta(targetPath, root, metaV)
+    publishMeta(targetPath, root, metaV)
   }
 
-  /** Write metadata v`metaV` under CREATE_NEW (the put-if-absent OCC)
+  /** Write metadata v`metaV` under CREATE_NEW (the put-if-absent OCC) —
+    * the one metadata writer, for exports and foreign write-backs alike —
     * and leave the advisory hint MONOTONIC: a slower concurrent winner
     * naively stamping its own (lower) number would point readers at a
     * stale version, so every writer converges the hint on the dir's
     * numeric max — the final global write can never leave it below. */
-  private def publishForeignMeta(targetPath: String,
+  private def publishMeta(targetPath: String,
       root: JsonNode, metaV: Int): Unit = {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$targetPath/metadata/v$metaV.metadata.json"),
-      jsonMapper.writeValueAsBytes(root),
+      Json.mapper.writeValueAsBytes(root),
       java.nio.file.StandardOpenOption.CREATE_NEW)
     val hintP = java.nio.file.Paths.get(s"$targetPath/metadata/version-hint.text")
     var settled = false
@@ -1180,7 +1177,7 @@ object IcebergExport {
       node.put("snapshot-id", sid)
       node.put("type", refType): Unit
       root.put("last-updated-ms", System.currentTimeMillis())
-      try { publishForeignMeta(targetPath, root, baseV + 1); return sid }
+      try { publishMeta(targetPath, root, baseV + 1); return sid }
       catch {
         case e: java.nio.file.FileAlreadyExistsException =>
           lastErr = e; attempt += 1
@@ -1209,7 +1206,7 @@ object IcebergExport {
           s"no ref '$name' at $targetPath"))
       refs.remove(name): Unit
       root.put("last-updated-ms", System.currentTimeMillis())
-      try { publishForeignMeta(targetPath, root, baseV + 1); return }
+      try { publishMeta(targetPath, root, baseV + 1); return }
       catch {
         case e: java.nio.file.FileAlreadyExistsException =>
           lastErr = e; attempt += 1
@@ -1601,18 +1598,7 @@ object IcebergExport {
       java.nio.file.Paths.get(s"$targetPath/metadata/version-hint.text"))).trim.toInt
     val fv = Option(meta.get("format-version")).map(_.asInt()).getOrElse(2)
     val v3 = fv == 3
-    val priorSnaps = {
-      val arr = meta.get("snapshots")
-      (0 until arr.size()).map { i =>
-        val s = arr.get(i)
-        Snap(s.get("snapshot-id").asLong(), s.get("sequence-number").asLong(),
-          Option(s.get("timestamp-ms")).map(_.asLong()).getOrElse(0L),
-          s.get("manifest-list").asText(),
-          Option(s.get("summary")).flatMap(x => Option(x.get("operation")))
-            .map(_.asText()).getOrElse("append"),
-          firstRowId = Option(s.get("first-row-id")).map(_.asLong()))
-      }
-    }
+    val priorSnaps = snapsOfMeta(meta)
     val rowBase = Option(meta.get("next-row-id")).map(_.asLong())
     if (v3 && rowBase.isEmpty) throw new IllegalStateException(
       s"format-version-3 table at $targetPath carries no next-row-id — " +

@@ -1,6 +1,7 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
+import graft.Json
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.mapred.FsInput
@@ -41,7 +42,6 @@ import org.apache.spark.sql.types._
   */
 object IcebergRead {
 
-  private val mapper = new ObjectMapper()
 
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
@@ -101,7 +101,7 @@ object IcebergRead {
         }
         new Path(metaDir, numbered.max._2)
       }
-    mapper.readTree(readText(spark, metaFile))
+    Json.mapper.readTree(readText(spark, metaFile))
   }
 
   /** Iceberg primitive type name → Spark type (the interchange set;

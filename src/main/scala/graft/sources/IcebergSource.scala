@@ -1,6 +1,6 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import graft.Json
 import org.apache.spark.sql.{DataFrame, GraftPlanApi, SparkSession, SQLContext}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.SerializedOffset
@@ -106,7 +106,7 @@ private[sources] final case class IcebergOffset(sid: Long, pos: Long,
     manifests: Seq[String],
     seqs: Seq[Option[Long]] = Seq.empty) extends Offset {
   override def json: String = {
-    val m = IcebergOffset.mapper.createObjectNode()
+    val m = Json.mapper.createObjectNode()
     m.put("sid", sid)
     m.put("pos", pos)
     val arr = m.putArray("manifests")
@@ -118,12 +118,11 @@ private[sources] final case class IcebergOffset(sid: Long, pos: Long,
         case None => sa.addNull(): Unit
       }
     }
-    m.toString
+    Json.mapper.writeValueAsString(m)
   }
 }
 
 private[sources] object IcebergOffset {
-  private[sources] val mapper = new ObjectMapper()
   def parse(j: String, where: String): IcebergOffset = {
     val t = j.trim
     if (t.nonEmpty && (t.head.isDigit || t.head == '-'))
@@ -131,7 +130,7 @@ private[sources] object IcebergOffset {
         s"checkpointed offset '$t' for $where is positional (a pre-r11 " +
           "checkpoint); positions shift under snapshot expiry — restart the " +
           "stream from a fresh checkpoint")
-    val node = mapper.readTree(t)
+    val node = Json.mapper.readTree(t)
     val ms = Option(node.get("manifests")).map(a =>
       (0 until a.size()).map(a.get(_).asText())).getOrElse(Seq.empty)
     // pre-r14 checkpoints carry no seqs — reconstruction then treats

@@ -1,6 +1,6 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import graft.Json
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -28,7 +28,6 @@ import org.apache.spark.sql.types._
   */
 object DeltaMaintenance {
 
-  private val mapper = new ObjectMapper()
 
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
@@ -51,7 +50,7 @@ object DeltaMaintenance {
   private def checkpointVersion(spark: SparkSession, logDir: Path): Option[Long] = {
     val lc = new Path(logDir, "_last_checkpoint")
     if (!fs(spark, logDir.toString).exists(lc)) None
-    else Some(mapper.readTree(readText(spark, lc)).get("version").asLong())
+    else Some(Json.mapper.readTree(readText(spark, lc)).get("version").asLong())
   }
 
   /** `DESCRIBE HISTORY` over a `_delta_log`: one row per commit JSON
@@ -72,7 +71,7 @@ object DeltaMaintenance {
       var schemaChange = false
       var protoChange = false
       lines.foreach { line =>
-        val node = mapper.readTree(line)
+        val node = Json.mapper.readTree(line)
         if (node.has("add")) {
           adds += 1
           if (node.get("add").hasNonNull("deletionVector")) dvAdds += 1
@@ -169,7 +168,7 @@ object DeltaMaintenance {
     commitVersions(spark, logDir).foreach { v =>
       readText(spark, new Path(logDir, f"$v%020d.json"))
         .split('\n').toSeq.map(_.trim).filter(_.nonEmpty).foreach { line =>
-          val node = mapper.readTree(line)
+          val node = Json.mapper.readTree(line)
           if (node.has("add") && node.get("add").hasNonNull("deletionVector")) {
             val d = node.get("add").get("deletionVector")
             note(DeltaDv.Descriptor(
@@ -203,7 +202,6 @@ object DeltaMaintenance {
 /** See [[DeltaMaintenance]]'s module doc — this is the Iceberg half. */
 object IcebergMaintenance {
 
-  private val mapper = new ObjectMapper()
 
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
@@ -371,7 +369,7 @@ object IcebergMaintenance {
     // the version hint), then sweep the now-unreferenced files
     val metaDir = s"$tablePath/metadata"
     val hintV = readHint(spark, metaDir)
-    val root = mapper.readTree(mapper.writeValueAsString(meta))
+    val root = meta.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     val newSnaps = root.putArray("snapshots")
     retained.foreach(s => newSnaps.add(s))
@@ -401,7 +399,7 @@ object IcebergMaintenance {
     if (java.nio.file.Files.exists(newMeta)) throw new IllegalStateException(
       s"$newMeta already exists — concurrent metadata writer; retry")
     java.nio.file.Files.writeString(newMeta,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
+      Json.mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(localMeta, "version-hint.text"),
       String.valueOf(hintV + 1))

@@ -4,7 +4,9 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.CRC32
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import scala.collection.immutable.ListMap
+
+import graft.Json
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -38,7 +40,6 @@ import org.apache.spark.sql.SparkSession
 object Puffin {
 
   private val Magic = Array[Byte](0x50, 0x46, 0x41, 0x31) // "PFA1"
-  private val mapper = new ObjectMapper()
 
   /** One footer blob descriptor (the spec's BlobMetadata). */
   final case class BlobMeta(blobType: String, snapshotId: Long,
@@ -208,7 +209,7 @@ object Puffin {
         bytes, payloadStart, payloadStart + size)
       else lz4FrameDecompress(java.util.Arrays.copyOfRange(
         bytes, payloadStart, payloadStart + size))
-    val json = mapper.readTree(new String(payload, UTF_8))
+    val json = Json.mapper.readTree(new String(payload, UTF_8))
     val blobsNode = json.get("blobs")
     val blobs = (0 until (if (blobsNode == null) 0 else blobsNode.size())).map { i =>
       val b = blobsNode.get(i)
@@ -261,17 +262,13 @@ object Puffin {
       out.write(frame.array())
       DvRef(dataFile, offset, frame.capacity().toLong, positions.distinct.size.toLong)
     }
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val blobsJson = refs.map { r =>
-      s"""{"type":"deletion-vector-v1","fields":[],""" +
-        s""""snapshot-id":$snapshotId,"sequence-number":$sequenceNumber,""" +
-        s""""offset":${r.offset},"length":${r.length},""" +
-        s""""properties":{"referenced-data-file":"${esc(r.referencedDataFile)}",""" +
-        s""""cardinality":"${r.cardinality}"}}"""
-    }.mkString(",")
-    val payload =
-      s"""{"blobs":[$blobsJson],"properties":{"created-by":"graft"}}"""
-        .getBytes(UTF_8)
+    val payload = Json.mapper.writeValueAsBytes(ListMap(
+      "blobs" -> refs.map(r => ListMap("type" -> "deletion-vector-v1", "fields" -> Seq.empty,
+        "snapshot-id" -> snapshotId, "sequence-number" -> sequenceNumber,
+        "offset" -> r.offset, "length" -> r.length,
+        "properties" -> ListMap("referenced-data-file" -> r.referencedDataFile,
+          "cardinality" -> r.cardinality.toString))),
+      "properties" -> ListMap("created-by" -> "graft")))
     out.write(Magic)
     out.write(payload)
     out.write(ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)

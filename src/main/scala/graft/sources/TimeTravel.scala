@@ -1,7 +1,12 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
+import scala.annotation.meta.field
+import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.annotation.JsonInclude
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.JsonNode
+import graft.Json
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -86,48 +91,7 @@ object TimeTravel {
     * idempotent streaming appends: a replayed micro-batch finds its own
     * tag and skips). */
   def tags(spark: SparkSession, path: String): Set[String] =
-    versions(spark, path).flatMap { v =>
-      """"tag"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(rawManifest(spark, path, v))
-        .map(_.group(1))
-    }.toSet
-
-  private def rawManifest(spark: SparkSession, path: String, version: Long): String = {
-    val f = fs(spark, path)
-    val in = f.open(new Path(manifestDir(path), s"${vname(version)}.json"))
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-  }
-
-  /** The data directories visible at `version`. */
-  private[sources] def listing(spark: SparkSession, path: String, version: Long): Seq[String] = {
-    val raw = rawManifest(spark, path, version)
-    // manifest body: {"version":N,"dirs":["data/v00001",...]} — dirs are
-    // relative, comma-split on a writer-controlled format (no user text).
-    // A manifest that doesn't parse must FAIL the read, not silently
-    // resolve to an empty table (every commit lists ≥1 directory).
-    """"dirs"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(raw) match {
-      case Some(m) if m.group(1).trim.nonEmpty =>
-        m.group(1).split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      case _ => throw new java.io.IOException(
-        s"corrupt manifest ${vname(version)}.json: no dirs listing in: ${raw.take(200)}")
-    }
-  }
-
-  /** Deletion-vector directories visible at `version` — merge-on-read
-    * tombstones layered over the (immutable) data listing. Absent field
-    * = no DVs; old manifests parse unchanged. */
-  private[sources] def dvListing(spark: SparkSession, path: String, version: Long): Seq[String] =
-    """"dvs"\s*:\s*\[([^\]]*)\]""".r
-      .findFirstMatchIn(rawManifest(spark, path, version)) match {
-      case Some(m) if m.group(1).trim.nonEmpty =>
-        m.group(1).split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      case _ => Seq.empty
-    }
-
-  // ------------------------------------------ column mapping (schema v2)
+    versions(spark, path).flatMap(manifest(spark, path, _).tag).toSet
 
   /** One logical column of a MAPPED table: `logical` is the name the
     * user sees NOW, `physical` the immutable name data files carry
@@ -137,32 +101,61 @@ object TimeTravel {
     * the manifest model. */
   final case class ColMap(logical: String, physical: String, typeDdl: String)
 
-  /** Manifest encoding of one [[ColMap]]: `logical|physical|typeDdl`
-    * with any comma in the DDL (decimal(p,s)) swapped to ';' so the
-    * flat manifest list parse stays one comma-split. */
-  private def encodeCol(c: ColMap): String =
-    s"${c.logical}|${c.physical}|${c.typeDdl.replace(",", ";")}"
+  /** One version's manifest, `_versions/v<NNNNN>.json`: the data
+    * directories the snapshot sees, its deletion-vector directories
+    * (merge-on-read tombstones layered over the immutable data), its
+    * column mapping (empty for tables that never evolved past
+    * add-column) and the commit tag. Encoded and parsed by
+    * [[graft.Json]]; an absent tag and empty lists stay out of the
+    * file. */
+  private[sources] final case class Manifest(version: Long,
+      @(JsonInclude @field)(JsonInclude.Include.NON_ABSENT) tag: Option[String],
+      @(JsonInclude @field)(JsonInclude.Include.NON_EMPTY) dvs: Seq[String],
+      @(JsonInclude @field)(JsonInclude.Include.NON_EMPTY) cols: Seq[ColMap],
+      dirs: Seq[String])
 
-  private def decodeCol(s: String): ColMap = s.split('|') match {
-    case Array(l, p, t) => ColMap(l, p, t.replace(";", ","))
-    case _ => throw new java.io.IOException(s"corrupt cols entry: $s")
+  /** Parse `version`'s manifest — one read per lookup. A manifest that
+    * doesn't parse, or lists no data directory, must FAIL the read,
+    * not silently resolve to an empty table (every commit lists ≥1
+    * directory). */
+  private[sources] def manifest(spark: SparkSession, path: String, version: Long): Manifest = {
+    val name = s"${vname(version)}.json"
+    def corrupt(why: String, cause: Throwable = null) =
+      new java.io.IOException(s"corrupt manifest $name: $why", cause)
+    val in = fs(spark, path).open(new Path(manifestDir(path), name))
+    val root = try Json.mapper.readTree(in) catch {
+      case e: JsonProcessingException => throw corrupt(e.getOriginalMessage, e)
+    } finally in.close()
+    def list(field: String): Seq[JsonNode] = root.path(field).elements().asScala.toSeq
+    def text(n: JsonNode, field: String): Option[String] =
+      Some(n.path(field)).filter(_.isTextual).map(_.asText)
+    def colText(c: JsonNode, field: String): String =
+      text(c, field).getOrElse(throw corrupt(s"cols entry without $field: $c"))
+    val dirs = list("dirs").map(_.asText)
+    if (dirs.isEmpty) throw corrupt(s"no dirs listing in: ${root.toString.take(200)}")
+    Manifest(root.path("version").asLong(version), text(root, "tag"),
+      list("dvs").map(_.asText),
+      list("cols").map(c =>
+        ColMap(colText(c, "logical"), colText(c, "physical"), colText(c, "typeDdl"))),
+      dirs)
   }
+
+  /** The data directories visible at `version`. */
+  private[sources] def listing(spark: SparkSession, path: String, version: Long): Seq[String] =
+    manifest(spark, path, version).dirs
+
+  /** Deletion-vector directories visible at `version` (empty = none). */
+  private[sources] def dvListing(spark: SparkSession, path: String, version: Long): Seq[String] =
+    manifest(spark, path, version).dvs
+
+  // ------------------------------------------ column mapping (schema v2)
 
   /** The column mapping visible at `version` — None for tables that
     * never evolved past add-column (the fast single-scan paths stay
     * untouched for them). */
   private[sources] def colsListing(spark: SparkSession, path: String,
       version: Long): Option[Seq[ColMap]] =
-    """"cols"\s*:\s*\[([^\]]*)\]""".r
-      .findFirstMatchIn(rawManifest(spark, path, version)) match {
-      case Some(m) if m.group(1).trim.nonEmpty =>
-        Some(m.group(1).split(",").toSeq
-          .map(_.trim.stripPrefix("\"").stripSuffix("\"")).map(decodeCol))
-      case _ => None
-    }
-
-  private def encodedColsAt(spark: SparkSession, path: String, v: Option[Long]): Seq[String] =
-    v.flatMap(colsListing(spark, path, _)).map(_.map(encodeCol)).getOrElse(Seq.empty)
+    Some(manifest(spark, path, version).cols).filter(_.nonEmpty)
 
   /** Project a LOGICAL-schema DataFrame into physical file shape for a
     * write under `cols` (rename-era appends keep writing the immutable
@@ -221,10 +214,8 @@ object TimeTravel {
     val v = cur + 1
     require(next.map(_.logical).distinct.size == next.size,
       "column mapping must keep logical names unique")
-    next.foreach(c => require(!c.logical.contains("|") && !c.physical.contains("|"),
-      s"column names must not contain '|': ${c.logical}"))
-    publish(spark, path, v, listing(spark, path, cur),
-      dvs = dvListing(spark, path, cur), cols = next.map(encodeCol))
+    val m = manifest(spark, path, cur)
+    publish(spark, path, v, m.dirs, dvs = m.dvs, cols = next)
     v
   }
 
@@ -286,21 +277,13 @@ object TimeTravel {
     * (a race the public API can't interleave) is testable directly. */
   private[graft] def publish(spark: SparkSession, path: String, v: Long, dirs: Seq[String],
       tag: Option[String] = None, dvs: Seq[String] = Seq.empty,
-      cols: Seq[String] = Seq.empty): Unit = {
+      cols: Seq[ColMap] = Seq.empty): Unit = {
     val f = fs(spark, path)
     f.mkdirs(manifestDir(path))
-    val tagField = tag.map(t => s""","tag":"$t"""").getOrElse("")
-    val dvField =
-      if (dvs.isEmpty) ""
-      else dvs.map("\"" + _ + "\"").mkString(""","dvs":[""", ",", "]")
-    val colField =
-      if (cols.isEmpty) ""
-      else cols.map("\"" + _ + "\"").mkString(""","cols":[""", ",", "]")
-    val body = dirs.map("\"" + _ + "\"").mkString(
-      s"""{"version":$v$tagField$dvField$colField,"dirs":[""", ",", "]}")
+    val body = Json.mapper.writeValueAsBytes(Manifest(v, tag, dvs, cols, dirs))
     val staging = new Path(manifestDir(path), s".${vname(v)}.json.staging")
     val out = f.create(staging, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    try out.write(body) finally out.close()
     val target = new Path(manifestDir(path), s"${vname(v)}.json")
     // OPTIMISTIC CONCURRENCY: two writers that both read "latest = N"
     // will both try to publish N+1 — the loser must FAIL (and retry on
@@ -347,12 +330,11 @@ object TimeTravel {
     prev match {
       case None => Append
       case Some(p) =>
-        val before = listing(spark, path, p)
-        val after = listing(spark, path, v).toSet
-        if (before.exists(!after.contains(_))) Rewrite
-        else if (dvListing(spark, path, v) != dvListing(spark, path, p)) RowLevel
-        else if (colsListing(spark, path, v) != colsListing(spark, path, p))
-          SchemaChange
+        val before = manifest(spark, path, p)
+        val after = manifest(spark, path, v)
+        if (before.dirs.exists(!after.dirs.contains(_))) Rewrite
+        else if (after.dvs != before.dvs) RowLevel
+        else if (after.cols != before.cols) SchemaChange
         else Append
     }
   }
@@ -447,13 +429,12 @@ object TimeTravel {
     val spark = df.sparkSession
     val cur = latest(spark, path)
     val v = cur.getOrElse(0L) + 1
-    val prev = cur.map(listing(spark, path, _)).getOrElse(Seq.empty)
+    val prev = cur.map(manifest(spark, path, _))
     // existing tombstones carry forward: they key on (file, pos) of the
-    // immutable old directories, which an append never touches
-    val prevDvs = cur.map(dvListing(spark, path, _)).getOrElse(Seq.empty)
-    // a mapped table's appends arrive in LOGICAL shape and write the
+    // immutable old directories, which an append never touches.
+    // A mapped table's appends arrive in LOGICAL shape and write the
     // immutable physical names; the mapping itself carries forward
-    val mapping = cur.flatMap(colsListing(spark, path, _))
+    val mapping = prev.map(_.cols).filter(_.nonEmpty)
     val dir = writeData(mapping.map(toPhysical(df, _)).getOrElse(df), path, v)
     // sidecars key on the PHYSICAL names the files carry: a caller's
     // logical statsCols translate through the era's map (the probe side
@@ -463,8 +444,8 @@ object TimeTravel {
       mapping.flatMap(_.find(_.logical == c)).map(_.physical).getOrElse(c)
     if (statsCols.nonEmpty || bloomCols.nonEmpty)
       writeStatsFor(spark, path, dir, statsCols.map(phys), bloomCols.map(phys))
-    publish(spark, path, v, prev :+ dir, tag, prevDvs,
-      cols = encodedColsAt(spark, path, cur))
+    publish(spark, path, v, prev.map(_.dirs).getOrElse(Seq.empty) :+ dir, tag,
+      prev.map(_.dvs).getOrElse(Seq.empty), mapping.getOrElse(Seq.empty))
     v
   }
 
@@ -495,7 +476,7 @@ object TimeTravel {
       mapping.flatMap(_.find(_.logical == c)).map(_.physical).getOrElse(c)
     if (statsCols.nonEmpty || bloomCols.nonEmpty)
       writeStatsFor(spark, path, dir, statsCols.map(phys), bloomCols.map(phys))
-    publish(spark, path, v, Seq(dir), cols = encodedColsAt(spark, path, cur))
+    publish(spark, path, v, Seq(dir), cols = mapping.getOrElse(Seq.empty))
     v
   }
 
@@ -538,9 +519,8 @@ object TimeTravel {
     * back across a rename/drop/widen undoes the schema change too. */
   def rollback(spark: SparkSession, path: String, toVersion: Long): Long = {
     val v = latest(spark, path).getOrElse(0L) + 1
-    publish(spark, path, v, listing(spark, path, toVersion),
-      dvs = dvListing(spark, path, toVersion),
-      cols = encodedColsAt(spark, path, Some(toVersion)))
+    val m = manifest(spark, path, toVersion)
+    publish(spark, path, v, m.dirs, dvs = m.dvs, cols = m.cols)
     v
   }
 
@@ -554,9 +534,8 @@ object TimeTravel {
     import org.apache.spark.sql.functions.col
     val v = version.orElse(latest(spark, path)).getOrElse(
       throw new IllegalArgumentException(s"no versions at $path"))
-    val dirs = listing(spark, path, v)
-    val dvs = dvListing(spark, path, v)
-    val mapping = colsListing(spark, path, v)
+    val m = manifest(spark, path, v)
+    val (dirs, dvs, mapping) = (m.dirs, m.dvs, Some(m.cols).filter(_.nonEmpty))
     if (dirs.isEmpty) spark.emptyDataFrame
     else mapping match {
       case Some(cols) =>
@@ -609,16 +588,13 @@ object TimeTravel {
   /** (file, pos)-annotated LOGICAL scan of a snapshot's data dirs —
     * the row-level ops' shared substrate; mapped tables project per
     * directory, plain ones keep the single mixed scan. */
-  private def scanWithPos(spark: SparkSession, path: String, v: Long,
-      dirs: Seq[String]): DataFrame = {
+  private def scanWithPos(spark: SparkSession, path: String, m: Manifest): DataFrame = {
     import org.apache.spark.sql.functions.col
-    colsListing(spark, path, v) match {
-      case Some(cols) => mappedScan(spark, path, dirs, cols, withPos = true)
-      case None => spark.read.parquet(dirs.map(d => s"$path/$d"): _*)
-        .select(col("*"),
-          col("_metadata.file_path").as(DvCols.head),
-          col("_metadata.row_index").as(DvCols.last))
-    }
+    if (m.cols.nonEmpty) mappedScan(spark, path, m.dirs, m.cols, withPos = true)
+    else spark.read.parquet(m.dirs.map(d => s"$path/$d"): _*)
+      .select(col("*"),
+        col("_metadata.file_path").as(DvCols.head),
+        col("_metadata.row_index").as(DvCols.last))
   }
 
   /** Loud resolution gate for row-level predicates/assignments: every
@@ -655,18 +631,17 @@ object TimeTravel {
     val cur = latest(spark, path).getOrElse(
       throw new IllegalArgumentException(s"nothing to delete at $path"))
     requireRefsResolvable(spark, path, cur, "DELETE predicate", Seq(condition))
-    val dirs = listing(spark, path, cur)
-    val prevDvs = dvListing(spark, path, cur)
+    val m = manifest(spark, path, cur)
+    val prevDvs = m.dvs
     val v = cur + 1
-    val data = scanWithPos(spark, path, cur, dirs)
+    val data = scanWithPos(spark, path, m)
     val live =
       if (prevDvs.isEmpty) data
       else data.join(
         spark.read.parquet(prevDvs.map(d => s"$path/$d"): _*), DvCols, "left_anti")
     live.filter(condition).select(DvCols.head, DvCols.tail: _*)
       .write.mode("overwrite").parquet(s"$path/${dvDir(v)}")
-    publish(spark, path, v, dirs, dvs = prevDvs :+ dvDir(v),
-      cols = encodedColsAt(spark, path, Some(cur)))
+    publish(spark, path, v, m.dirs, dvs = prevDvs :+ dvDir(v), cols = m.cols)
     v
   }
 
@@ -692,11 +667,11 @@ object TimeTravel {
       throw new IllegalArgumentException(s"nothing to update at $path"))
     requireRefsResolvable(spark, path, cur, "UPDATE predicate/assignment",
       condition +: sets.map(_._2))
-    val dirs = listing(spark, path, cur)
-    val prevDvs = dvListing(spark, path, cur)
-    val mapping = colsListing(spark, path, cur)
+    val m = manifest(spark, path, cur)
+    val prevDvs = m.dvs
+    val mapping = Some(m.cols).filter(_.nonEmpty)
     val v = cur + 1
-    val data = scanWithPos(spark, path, cur, dirs)
+    val data = scanWithPos(spark, path, m)
     val live =
       if (prevDvs.isEmpty) data
       else data.join(
@@ -722,8 +697,8 @@ object TimeTravel {
         .write.mode("overwrite").parquet(s"$path/${dvDir(v)}"),
       () => mapping.map(toPhysical(updated, _)).getOrElse(updated)
         .write.mode("overwrite").parquet(s"$path/${dataDir(path, v)}")))
-    publish(spark, path, v, dirs :+ dataDir(path, v), dvs = prevDvs :+ dvDir(v),
-      cols = encodedColsAt(spark, path, Some(cur)))
+    publish(spark, path, v, m.dirs :+ dataDir(path, v), dvs = prevDvs :+ dvDir(v),
+      cols = m.cols)
     v
   }
 
@@ -750,11 +725,11 @@ object TimeTravel {
     if (offenders > 0) throw new IllegalArgumentException(
       "replaceWhere: replacement rows must satisfy the replace condition " +
         "(a row outside the predicate would escape the declared scope)")
-    val dirs = listing(spark, path, cur)
-    val prevDvs = dvListing(spark, path, cur)
-    val mapping = colsListing(spark, path, cur)
+    val m = manifest(spark, path, cur)
+    val prevDvs = m.dvs
+    val mapping = Some(m.cols).filter(_.nonEmpty)
     val v = cur + 1
-    val data = scanWithPos(spark, path, cur, dirs)
+    val data = scanWithPos(spark, path, m)
     val live =
       if (prevDvs.isEmpty) data
       else data.join(
@@ -767,8 +742,8 @@ object TimeTravel {
         .write.mode("overwrite").parquet(s"$path/${dvDir(v)}"),
       () => mapping.map(toPhysical(df, _)).getOrElse(df)
         .write.mode("overwrite").parquet(s"$path/${dataDir(path, v)}")))
-    publish(spark, path, v, dirs :+ dataDir(path, v), dvs = prevDvs :+ dvDir(v),
-      cols = encodedColsAt(spark, path, Some(cur)))
+    publish(spark, path, v, m.dirs :+ dataDir(path, v), dvs = prevDvs :+ dvDir(v),
+      cols = m.cols)
     v
   }
 
@@ -781,11 +756,8 @@ object TimeTravel {
   def history(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val rows = versions(spark, path).map { v =>
-      val dirs = listing(spark, path, v)
-      val added = dirs.count(_ == dataDir(path, v))
-      val tag = """"tag"\s*:\s*"([^"]*)"""".r
-        .findFirstMatchIn(rawManifest(spark, path, v)).map(_.group(1))
-      (v, tag, dirs.size, added, dvListing(spark, path, v).size)
+      val m = manifest(spark, path, v)
+      (v, m.tag, m.dirs.size, m.dirs.count(_ == dataDir(path, v)), m.dvs.size)
     }
     rows.toDF("version", "tag", "n_dirs", "n_added", "n_dvs")
   }

@@ -450,8 +450,9 @@ class PipelineSpec extends SparkSpec {
     assert(calls.size == 1, "one POST per batch, not per text")
     val (url, headers, body) = calls.head
     assert(url.endsWith("/embeddings") && headers("Ocp-Apim-Subscription-Key") == "k")
-    assert(body == """{"input": ["a b", "c"], "user": null}""",
-      "texts must arrive in order with newlines stripped")
+    assert(Json.mapper.readTree(body) ==
+      Json.mapper.readTree("""{"input": ["a b", "c"], "user": null}"""),
+      s"texts must arrive in order with newlines stripped and a null user: $body")
     assert(out.map(_.toSeq) == Seq(Seq(1.0, 2.0), Seq(3.0, 4.0)))
     assert(be.embedBatch(Nil).isEmpty && calls.size == 1, "empty batch makes no call")
   }
@@ -484,6 +485,12 @@ class PipelineSpec extends SparkSpec {
       """{"data": [{"embedding": [3.0], "index": 1}, {"embedding": [1.0], "index": 0}]}"""
     val be2 = new HttpEmbedBackend("https://example.com/e", Map.empty, (_, _, _) => (200, trailing))
     assert(be2.embedBatch(Seq("a", "b")).map(_.toSeq) == Seq(Seq(1.0), Seq(3.0)))
+    // an OpenAI-shaped entry may list "object":"embedding" after its array
+    val objectLast =
+      """{"data": [{"embedding": [3.0], "object": "embedding", "index": 1}, """ +
+        """{"embedding": [1.0], "object": "embedding", "index": 0}]}"""
+    val be5 = new HttpEmbedBackend("https://example.com/e", Map.empty, (_, _, _) => (200, objectLast))
+    assert(be5.embedBatch(Seq("a", "b")).map(_.toSeq) == Seq(Seq(1.0), Seq(3.0)))
     // no index fields at all (non-OpenAI gateway) → document order
     val plain = """{"data": [{"embedding": [1.0]}, {"embedding": [2.0]}]}"""
     val be3 = new HttpEmbedBackend("https://example.com/e", Map.empty, (_, _, _) => (200, plain))
@@ -552,10 +559,12 @@ class PipelineSpec extends SparkSpec {
     // a corrupted manifest must FAIL the read loudly, never resolve to
     // an empty table (the silent-shrink failure mode round 6 taught us)
     val mf = new java.io.File(s"$dir/_versions/v00005.json")
-    Files.write(mf.toPath, "{\"version\":5,\"garbage\":true}".getBytes)
-    new java.io.File(s"$dir/_versions/.v00005.json.crc").delete() // stale checksum
-    val ex = intercept[java.io.IOException](TimeTravel.read(spark, dir, Some(v5)).count())
-    assert(ex.getMessage.contains("corrupt manifest"))
+    Seq("{\"version\":5,\"garbage\":true}", "{\"version\":5,\"dirs\":[", "").foreach { body =>
+      Files.write(mf.toPath, body.getBytes)
+      new java.io.File(s"$dir/_versions/.v00005.json.crc").delete() // stale checksum
+      val ex = intercept[java.io.IOException](TimeTravel.read(spark, dir, Some(v5)).count())
+      assert(ex.getMessage.contains("corrupt manifest"), ex.getMessage)
+    }
   }
 
   test("purge destroys rows from EVERY version — no time-traveled copy survives") {
@@ -1197,6 +1206,34 @@ class PipelineSpec extends SparkSpec {
       (3L, None, 2, 0, 1),             // MoR delete: no new data dir, one DV
       (4L, None, 2, 0, 0)),            // rollback to v2: dirs re-listed, no DVs
       s"got $h")
+  }
+
+  test("manifests keep tags and renamed columns holding JSON metacharacters exact") {
+    import graft.sources.TimeTravel
+    import spark.implicits._
+    val dir = Files.createTempDirectory("ttjson").toFile.getAbsolutePath + "/t"
+    TimeTravel.commitOverwrite(Seq((1L, "2024-01-01")).toDF("id", "dd"), dir)
+    val tag = "tag\"with\\quote"
+    val batch = Seq((2L, "2024-01-02")).toDF("id", "dd")
+    val v2 = TimeTravel.appendOnce(batch, dir, tag)
+    assert(TimeTravel.appendOnce(batch, dir, tag) == v2, "a replayed tag must not commit")
+    assert(TimeTravel.versions(spark, dir) == Seq(1L, 2L))
+    assert(TimeTravel.tags(spark, dir) == Set(tag))
+    val h = TimeTravel.history(spark, dir).filter(col("version") === v2).head
+    assert(h.getString(1) == tag)
+    val renamed = "day,key|x"
+    val v3 = TimeTravel.renameColumn(spark, dir, "dd", renamed)
+    val back = TimeTravel.read(spark, dir, Some(v3))
+    assert(back.columns.toSeq == Seq("id", renamed))
+    assert(back.orderBy("id").select(renamed).as[String].collect().toSeq ==
+      Seq("2024-01-01", "2024-01-02"))
+    assert(TimeTravel.read(spark, dir, Some(v2)).columns.toSeq == Seq("id", "dd"),
+      "the pre-rename snapshot keeps its own names")
+    // cols is a list of objects; an absent tag and no DVs stay out of the file
+    val m = Json.mapper.readTree(new java.io.File(s"$dir/_versions/v00003.json"))
+    assert(m.get("cols").get(1).get("logical").asText == renamed)
+    assert(m.get("cols").get(1).get("physical").asText == "dd")
+    assert(!m.has("tag") && !m.has("dvs"), s"got $m")
   }
 
   test("OPTIMIZE ZORDER: identical row set, files carve disjoint z-ranges") {

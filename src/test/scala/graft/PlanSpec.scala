@@ -896,6 +896,10 @@ class PlanSpec extends SparkSpec {
     val p = java.nio.file.Files.createTempDirectory("advisor").toString + "/stats.json"
     JoinAdvisor.save(spark, p, st)
     assert(JoinAdvisor.load(spark, p) == st)
+    // a key holding JSON metacharacters round-trips exactly
+    val odd = st.copy(topKeys = ("say \"hi\"\\ there\nnext\u0001" -> 7L) +: st.topKeys)
+    JoinAdvisor.save(spark, p, odd)
+    assert(JoinAdvisor.load(spark, p) == odd)
   }
 
   test("advisor auto-apply: same join, different sidecar stats, different pinned plans") {

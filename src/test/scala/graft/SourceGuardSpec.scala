@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Guards the one-path design of `src/main`: every session comes from
   * [[GraftSession]], which loads [[GraftExtensions]], so no helper
   * probes the catalog or the planner to choose between a kernel and a
-  * composed fallback. */
+  * composed fallback; and every JSON document goes through the one
+  * mapper in [[Json]], so no file builds its own or escapes by hand. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(String, String)] = {
@@ -34,5 +35,29 @@ class SourceGuardSpec extends AnyFunSuite {
     }
     assert(builders == Seq("graft/GraftSession.scala"),
       s"SparkSession.builder() must appear once, in GraftSession: $builders")
+  }
+
+  test("src/main constructs an ObjectMapper only in Json and neither escapes nor scans JSON by hand") {
+    val sources = mainSources
+    val mappers = sources.flatMap { case (path, text) =>
+      Seq.fill("""new\s+(com\.fasterxml\.jackson\.databind\.)?ObjectMapper\b""".r
+        .findAllIn(text).size)(path)
+    }
+    assert(mappers == Seq("graft/Json.scala"),
+      s"an ObjectMapper must be constructed once, in Json: $mappers")
+    // PipelineConfig renders TOML, whose basic strings escape the same way
+    val escaper = """replace("\"", "\\\"")"""
+    val escapers = sources.collect {
+      case (path, text) if text.contains(escaper) && path != "graft/config/PipelineConfig.scala" =>
+        path
+    }
+    assert(escapers.isEmpty, s"hand-written JSON escapers in src/main: $escapers")
+    // a `"key"\s*:\s*` regex or an indexOf of a quoted key reads JSON as text
+    val readers = for {
+      (path, text) <- sources
+      needle <- Seq("""\s*:\s*""", """indexOf("\"""")
+      if text.contains(needle)
+    } yield s"$path: $needle"
+    assert(readers.isEmpty, readers.mkString("text-scanning JSON readers in src/main:\n", "\n", ""))
   }
 }

@@ -2720,6 +2720,40 @@ class SourcesSpec extends SparkSpec {
       s"next-row-id must cover all 50 published rows")
   }
 
+  test("iceberg export: a column name holding JSON metacharacters round-trips") {
+    import graft.sources.{IcebergExport, IcebergRead, Puffin, TimeTravel}
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val src = Files.createTempDirectory("iexpname_src").toFile.getAbsolutePath + "/t"
+    val tgt = Files.createTempDirectory("iexpname_tgt").toFile.getAbsolutePath + "/i"
+    val odd = "a\"b\\c"
+    TimeTravel.commitOverwrite((1L to 20L).map(i => (i, i * 2)).toDF("k", odd), src)
+    TimeTravel.deleteMoR(spark, src, col("k") % 5 === 0)
+    assert(IcebergExport.snapshot(spark, src, tgt, formatVersion = 3) > 0)
+    val metas = new java.io.File(s"$tgt/metadata").listFiles().toSeq
+      .filter(_.getName.endsWith(".metadata.json"))
+    assert(metas.nonEmpty)
+    metas.foreach { f =>
+      val meta = Json.mapper.readTree(f)
+      val names = meta.get("schemas").get(0).get("fields").elements().asScala
+        .map(_.get("name").asText).toSeq
+      assert(names == Seq("k", odd), s"$f: $names")
+      val mapping = Json.mapper.readTree(meta.get("properties")
+        .get("schema.name-mapping.default").asText)
+      assert(mapping.get(1).get("names").get(0).asText == odd)
+    }
+    val puffins = new java.io.File(s"$tgt/deletes").listFiles().toSeq
+      .filter(_.getName.endsWith(".puffin"))
+    assert(puffins.size == 1, s"one puffin sidecar expected, got $puffins")
+    val (blobs, props) = Puffin.footer(spark, puffins.head.getAbsolutePath)
+    assert(blobs.map(_.properties("cardinality").toLong).sum == 4L &&
+      props("created-by") == "graft")
+    val back = IcebergRead.read(spark, tgt)
+    assert(back.columns.toSeq == Seq("k", odd))
+    assert(back.orderBy("k").as[(Long, Long)].collect().toSeq ==
+      (1L to 20L).filter(_ % 5 != 0).map(i => (i, i * 2)))
+  }
+
   test("iceberg read: manifest bounds skip files on pushed data filters") {
     import graft.sources.IcebergRead
     import graft.sources.IcebergRead.EntryInfo
