@@ -34,6 +34,7 @@ object StepProbe {
       case "delta_vacuum" => deltaVacuum(spark, sfDir)
       case "mv_incremental" => mvIncremental(spark, sfDir)
       case "tt_stream_cdf" => ttStreamCdf(spark, sfDir)
+      case "tt_prune_auto" => ttPruneAuto(spark, sfDir)
       case "build_ivfpq" => buildIvfPq(spark, sfDir)
       case "trigram" => trigram(spark, sfDir)
       case "floor" => floor(spark, sfDir)
@@ -141,6 +142,47 @@ object StepProbe {
     time("read_sink")(s.read.parquet(sink)
       .groupBy(col("_change_type")).agg(count(lit(1)))
       .write.format("noop").mode("overwrite").save())
+  }
+
+  /** Mirrors q_tt_prune_auto's step sequence — commit seven stats-
+    * carrying versions, load the `graft-table` snapshot, plan the
+    * filter (StatsPrune), execute — and prints the Spark jobs each step
+    * ran beside its seconds. Two passes on fresh tables: the first
+    * pays the JVM's first parquet writes, the second is warm. */
+  private def ttPruneAuto(s: SparkSession, d: String): Unit = {
+    import graft.sources.TimeTravel
+    import org.apache.spark.sql.functions.expr
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(): Unit
+      }
+    }
+    def step[A](name: String)(f: => A): A = {
+      jobs.set(0)
+      val r = time(name)(f)
+      Thread.sleep(300) // let the listener bus drain
+      println(s"[step] ${name}_jobs,${jobs.get}")
+      r
+    }
+    val o = Tables(s, d, "orders").select(
+      expr("datediff(cast(o_orderdate as date), date'1970-01-01')").cast("long").as("dd"),
+      graft.Exact.units(col("o_totalprice"), 2).as("cents"))
+    def day(y: Int) = java.time.LocalDate.of(y, 1, 1).toEpochDay
+    s.sparkContext.addSparkListener(listener)
+    for (pass <- 1 to 2) {
+      println(s"[step] pass,$pass")
+      val Seq(dir) = fresh(s, s"ttpa$pass")
+      step("commit")(TimeTravel.commitSeries((1992 to 1998).map { y =>
+        o.filter(col("dd") >= day(y) && col("dd") < day(y + 1)).coalesce(1)
+      }, dir, statsCols = Seq("dd")))
+      val snap = step("load")(s.read.format("graft-table").load(dir))
+      val q = snap.filter(col("dd") >= day(1996) && col("dd") < day(1997))
+      step("plan")(q.queryExecution.optimizedPlan)
+      step("execute")(q.agg(count(lit(1)), sum(col("cents")))
+        .write.format("noop").mode("overwrite").save())
+    }
+    s.sparkContext.removeSparkListener(listener)
   }
 
   /** Times the at-rest IVF×PQ build (IndexSpec's parameters) — the r15

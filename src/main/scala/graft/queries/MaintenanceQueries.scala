@@ -22,6 +22,18 @@ object MaintenanceQueries {
 
   import Exact._
 
+  /** A fresh directory for one execution of a fixture: unique to the
+    * call, so two executions running at once in one JVM never share
+    * files, and deleted when the JVM's FileSystem closes. */
+  private def fixtureDir(s: SparkSession, prefix: String): String = {
+    val p = new org.apache.hadoop.fs.Path(
+      s"${System.getProperty("java.io.tmpdir")}/${prefix}_${java.util.UUID.randomUUID}")
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    fs.mkdirs(p)
+    fs.deleteOnExit(p)
+    p.toString
+  }
+
   private def ev(s: SparkSession, d: String) = Tables(s, d, "events")
   private def li(s: SparkSession, d: String) = Tables(s, d, "lineitem")
 
@@ -401,13 +413,7 @@ object MaintenanceQueries {
       |)
       |ORDER BY version""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_tt_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    // a repeat call in the same process must rebuild versions 1..4, not
-    // continue someone else's history
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val dir = fixtureDir(s, "graft_tt")
     val base = Tables(s, d, "orders")
       .select(col("o_orderdate"), units(col("o_totalprice"), 2).as("cents"))
     val cut = lit("1997-01-01 00:00:00").cast("timestamp")
@@ -1240,11 +1246,7 @@ object MaintenanceQueries {
       |)
       |ORDER BY version""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ttdv_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val dir = fixtureDir(s, "graft_ttdv")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c, dir)               // v1
@@ -1344,11 +1346,7 @@ object MaintenanceQueries {
       |  true AS agg_pushed
       |FROM orders""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ttap_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val dir = fixtureDir(s, "graft_ttap")
     val o = Tables(s, d, "orders")
       .select(col("o_orderkey"), units(col("o_totalprice"), 2).as("cents"))
     TimeTravel.commitOverwrite(o.filter(col("o_orderkey") % 2 === 0), dir)
@@ -1395,19 +1393,15 @@ object MaintenanceQueries {
       |FROM orders
       |WHERE o_orderdate >= DATE '1995-01-01' AND o_orderdate < DATE '1996-01-01'""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ttpr_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val dir = fixtureDir(s, "graft_ttpr")
     val o = Tables(s, d, "orders").select(
       expr("datediff(cast(o_orderdate as date), date'1970-01-01')").cast("long").as("dd"),
       units(col("o_totalprice"), 2).as("cents"))
     def day(y: Int) = java.time.LocalDate.of(y, 1, 1).toEpochDay
     // staged in parallel, published in order — identical 7-commit table,
-    // ~2·7 sequential jobs become 7 concurrent pairs (TimeTravel.commitSeries)
+    // the 7 data writes overlap as concurrent jobs (TimeTravel.commitSeries)
     TimeTravel.commitSeries((1992 to 1998).map { y =>
-      o.filter(col("dd") >= day(y) && col("dd") < day(y + 1)).repartition(1)
+      o.filter(col("dd") >= day(y) && col("dd") < day(y + 1)).coalesce(1)
     }, dir, statsCols = Seq("dd"))
     val (pruned, st) = TimeTravel.readPruned(s, dir, "dd", day(1995), day(1996) - 1)
     pruned.agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"))
@@ -1431,19 +1425,15 @@ object MaintenanceQueries {
       |FROM orders
       |WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1997-01-01'""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ttpa_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val dir = fixtureDir(s, "graft_ttpa")
     val o = Tables(s, d, "orders").select(
       expr("datediff(cast(o_orderdate as date), date'1970-01-01')").cast("long").as("dd"),
       units(col("o_totalprice"), 2).as("cents"))
     def day(y: Int) = java.time.LocalDate.of(y, 1, 1).toEpochDay
     // staged in parallel, published in order — identical 7-commit table,
-    // ~2·7 sequential jobs become 7 concurrent pairs (TimeTravel.commitSeries)
+    // the 7 data writes overlap as concurrent jobs (TimeTravel.commitSeries)
     TimeTravel.commitSeries((1992 to 1998).map { y =>
-      o.filter(col("dd") >= day(y) && col("dd") < day(y + 1)).repartition(1)
+      o.filter(col("dd") >= day(y) && col("dd") < day(y + 1)).coalesce(1)
     }, dir, statsCols = Seq("dd"))
     val naive = s.read.format("graft-table").load(dir)
       .filter(col("dd") >= day(1996) && col("dd") < day(1997))
@@ -1477,11 +1467,7 @@ object MaintenanceQueries {
       |FROM orders
       |WHERE o_orderdate >= DATE '1997-01-01' AND o_orderdate < DATE '1998-01-01'""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ttpm_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val dir = fixtureDir(s, "graft_ttpm")
     val o = Tables(s, d, "orders").select(
       expr("datediff(cast(o_orderdate as date), date'1970-01-01')").cast("long").as("dd"),
       units(col("o_totalprice"), 2).as("cents"))
@@ -1490,12 +1476,12 @@ object MaintenanceQueries {
     // (TimeTravel.commitSeries) — the post-rename appends below stay
     // sequential, they depend on the rename's column mapping
     TimeTravel.commitSeries((1995 to 1998).map { y =>
-      o.filter(col("dd") >= day(y) && col("dd") < day(y + 1)).repartition(1)
+      o.filter(col("dd") >= day(y) && col("dd") < day(y + 1)).coalesce(1)
     }, dir, statsCols = Seq("dd"))
     TimeTravel.renameColumn(s, dir, "dd", "day_key")
     (1999 to 2001).foreach { y =>
       val b = o.filter(col("dd") >= day(y) && col("dd") < day(y + 1))
-        .withColumnRenamed("dd", "day_key").repartition(1)
+        .withColumnRenamed("dd", "day_key").coalesce(1)
       TimeTravel.commitAppend(b, dir, statsCols = Seq("day_key"))
     }
     val naive = s.read.format("graft-table").load(dir)
@@ -1535,17 +1521,13 @@ object MaintenanceQueries {
       |WHERE c_custkey = 421
       |ORDER BY c_custkey""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ttbl_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val dir = fixtureDir(s, "graft_ttbl")
     val c = Tables(s, d, "customer").select(col("c_custkey"), col("c_nationkey"),
       units(col("c_acctbal"), 2).as("cents"))
     // three commits split on a NON-key attribute: custkeys scatter
     // across all three files; fresh table → stage them in parallel
     TimeTravel.commitSeries((0 to 2).map { r =>
-      c.filter(col("cents") % 3 === r).repartition(1)
+      c.filter(col("cents") % 3 === r).coalesce(1)
     }, dir, bloomCols = Seq("c_custkey"))
     val (viaLib, st) = TimeTravel.readPoint(s, dir, "c_custkey", 421L)
     val naive = s.read.format("graft-table").load(dir).filter(col("c_custkey") === 421L)
@@ -1725,11 +1707,7 @@ object MaintenanceQueries {
       |  true AS via_sql
       |FROM merged""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ttms_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val dir = fixtureDir(s, "graft_ttms")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c, dir) // v1
@@ -1784,11 +1762,7 @@ object MaintenanceQueries {
       |  true AS via_sql
       |FROM live""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ttds_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val dir = fixtureDir(s, "graft_ttds")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), units(col("c_acctbal"), 2).as("cents"))
     // v1 holds most rows; the k % 9 = 0 slice arrives via SQL INSERT
@@ -1830,20 +1804,16 @@ object MaintenanceQueries {
       |WHERE CAST(o_orderdate AS DATE) >= DATE '1997-01-01'
       |  AND CAST(o_orderdate AS DATE) < DATE '1998-01-01'""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ttpd_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val dir = fixtureDir(s, "graft_ttpd")
     val o = Tables(s, d, "orders").select(
       expr("cast(o_orderdate as date)").as("od"),
       units(col("o_totalprice"), 2).as("cents"))
     // staged in parallel, published in order — identical 7-commit table,
-    // ~2·7 sequential jobs become 7 concurrent pairs (TimeTravel.commitSeries)
+    // the 7 data writes overlap as concurrent jobs (TimeTravel.commitSeries)
     TimeTravel.commitSeries((1995 to 2001).map { y =>
       o.filter(
         col("od") >= lit(s"$y-01-01").cast("date") &&
-          col("od") < lit(s"${y + 1}-01-01").cast("date")).repartition(1)
+          col("od") < lit(s"${y + 1}-01-01").cast("date")).coalesce(1)
     }, dir, statsCols = Seq("od"))
     val naive = s.read.format("graft-table").load(dir)
       .filter(expr("od >= DATE'1997-01-01' AND od < DATE'1998-01-01'"))
@@ -1927,11 +1897,7 @@ object MaintenanceQueries {
       |  true AS via_sql
       |FROM live""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ttrw_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val dir = fixtureDir(s, "graft_ttrw")
     val c = Tables(s, d, "customer").select(col("c_custkey").as("k"),
       (col("c_custkey") % 4).as("band"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c, dir) // v1
@@ -1981,15 +1947,10 @@ object MaintenanceQueries {
       |FROM c""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
     import graft.streaming.TableStreams
-    val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ttss_${tag}_p${ProcessHandle.current().pid()}"
-    val sink = base + "_sink"
-    val cp = base + "_cp"
-    Seq(base, sink, cp).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val root = fixtureDir(s, "graft_ttss")
+    val base = s"$root/table"
+    val sink = s"$root/sink"
+    val cp = s"$root/cp"
     val c = Tables(s, d, "customer").select(col("c_custkey").as("k"),
       (col("c_custkey") % 3).as("band"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c.filter(col("band") === 0), base) // v1
@@ -2034,11 +1995,7 @@ object MaintenanceQueries {
       |  true AS mapped
       |FROM c""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ttse2_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val dir = fixtureDir(s, "graft_ttse2")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(
@@ -2092,14 +2049,9 @@ object MaintenanceQueries {
       |  true AS via_stream
       |FROM feed GROUP BY ct ORDER BY ct""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ttcdf_${tag}_p${ProcessHandle.current().pid()}"
-    val sink = base + "_sink"; val cp = base + "_cp"
-    Seq(base, sink, cp).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val root = fixtureDir(s, "graft_ttcdf")
+    val base = s"$root/table"
+    val sink = s"$root/sink"; val cp = s"$root/cp"
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c, base) // v1

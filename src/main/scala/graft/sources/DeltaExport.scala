@@ -219,21 +219,12 @@ object DeltaExport {
   private def deltaStatsJson(conf: org.apache.hadoop.conf.Configuration,
       f: String): Option[String] = {
     import scala.jdk.CollectionConverters._
-    val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), conf))
+    val footer = FooterStats.footer(conf, new Path(f))
     try {
-      val footer = rdr.getFooter
       val msg = footer.getFileMetaData.getSchema
       val cols = msg.getFields.asScala.filter(_.isPrimitive).flatMap { fld =>
         val name = fld.getName
-        val chunks = footer.getBlocks.asScala
-          .flatMap(_.getColumns.asScala.filter(_.getPath.toDotString == name))
-        val statsL = chunks.map(_.getStatistics)
-        if (statsL.isEmpty || statsL.exists(s => s == null || s.isEmpty)) None
-        else {
-          val merged = statsL.reduceLeft { (a, b) =>
-            val m = a.copy(); m.mergeStatistics(b); m
-          }
+        FooterStats.merged(footer, name).map { merged =>
           val nullCount = merged.getNumNulls
           import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
           import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -277,15 +268,15 @@ object DeltaExport {
               lo <- jsonOf(merged.genericGetMin)
               hi <- jsonOf(merged.genericGetMax)
             } yield (lo, hi)
-          Some((name, mm, nullCount))
+          (name, mm, nullCount)
         }
       }
       Some(Json.mapper.writeValueAsString(ListMap(
-        "numRecords" -> rdr.getRecordCount,
+        "numRecords" -> FooterStats.rows(footer),
         "minValues" -> ListMap(cols.collect { case (n, Some((lo, _)), _) => n -> lo }.toSeq: _*),
         "maxValues" -> ListMap(cols.collect { case (n, Some((_, hi)), _) => n -> hi }.toSeq: _*),
         "nullCount" -> ListMap(cols.map { case (n, _, nc) => n -> nc }.toSeq: _*))))
-    } catch { case _: Exception => None } finally rdr.close()
+    } catch { case _: Exception => None }
   }
 
   private def writeCommit(spark: SparkSession, targetPath: String,

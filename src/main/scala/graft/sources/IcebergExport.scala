@@ -263,12 +263,6 @@ object IcebergExport {
     java.util.UUID.nameUUIDFromBytes(
       s"graft-iceberg-export:$dir".getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
-  /** Parquet footer row count + file length — O(footer) driver reads.
-    * With `partCols`, also derives each file's IDENTITY partition tuple
-    * from the footer's column statistics: every partition column must
-    * be PARTITION-PURE in every file (min == max across all row
-    * groups, no nulls) or the export declines loudly — a file spanning
-    * two partition values cannot be represented by an identity spec. */
   /** Iceberg single-value serialization of one parquet-statistics value
     * for the given iceberg type: little-endian numerics, UTF-8 strings
     * — the bytes `lower_bounds`/`upper_bounds` carry. None for types
@@ -295,6 +289,12 @@ object IcebergExport {
     } catch { case _: Exception => None }
   }
 
+  /** Parquet footer row count + file length — O(footer) driver reads.
+    * With `partCols`, also derives each file's IDENTITY partition tuple
+    * from the footer's column statistics: every partition column must
+    * be PARTITION-PURE in every file (min == max across all row
+    * groups, no nulls) or the export declines loudly — a file spanning
+    * two partition values cannot be represented by an identity spec. */
   private def describeFiles(spark: SparkSession, files: Seq[String],
       partCols: Seq[PartCol] = Nil,
       statFields: Seq[(Int, String, Boolean, String)] = Nil,
@@ -304,25 +304,16 @@ object IcebergExport {
     files.map { f =>
       val p = new Path(f)
       val fs = p.getFileSystem(conf)
-      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      val (n, values, lo, hi, nulls) = try {
-        val footer = rdr.getFooter
+      val footer = FooterStats.footer(conf, p)
+      val (n, values, lo, hi, nulls) = {
         // per-column bounds for the schema's interchange columns, from
-        // the same footer already open for the row count: row-group
-        // statistics merge through parquet's own comparators; columns
-        // without usable statistics are omitted (bounds are optional)
+        // the same footer read for the row count; columns without
+        // usable statistics are omitted (bounds are optional)
         val loB = Map.newBuilder[Int, Array[Byte]]
         val hiB = Map.newBuilder[Int, Array[Byte]]
         val nullB = Map.newBuilder[Int, Long]
         statFields.foreach { case (id, name, _, itype) =>
-          val chunks = footer.getBlocks.asScala.flatMap(_.getColumns.asScala
-            .filter(_.getPath.toDotString == name))
-          val statsL = chunks.map(_.getStatistics)
-          if (statsL.nonEmpty && !statsL.exists(s => s == null || s.isEmpty)) {
-            val merged = statsL.reduceLeft { (a, b) =>
-              val m = a.copy(); m.mergeStatistics(b); m
-            }
+          FooterStats.merged(footer, name).foreach { merged =>
             nullB += id -> merged.getNumNulls
             if (merged.hasNonNullValue) for {
               loBytes <- singleValueBytes(itype, merged.genericGetMin)
@@ -404,8 +395,8 @@ object IcebergExport {
           distinct.head
           }
         }
-        (rdr.getRecordCount, vals, loB.result(), hiB.result(), nullB.result())
-      } finally rdr.close()
+        (FooterStats.rows(footer), vals, loB.result(), hiB.result(), nullB.result())
+      }
       NewFile(f, n, fs.getFileStatus(p).getLen, values,
         lowerBounds = lo, upperBounds = hi, nullCounts = nulls)
     }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import scala.annotation.meta.field
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.annotation.JsonInclude
@@ -8,7 +9,9 @@ import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.JsonNode
 import graft.Json
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 
 /** Versioned table with snapshot isolation, time travel and rollback —
   * the Delta/Iceberg commit protocol reduced to its load-bearing core:
@@ -27,7 +30,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - readers resolve a version (or latest) to its listing and read
   *     exactly those directories — old snapshots stay readable until
   *     explicitly vacuumed, which is what makes reproducible training
-  *     runs possible ("train on the corpus exactly as of version 12").
+  *     runs possible ("train on the corpus exactly as of version 12");
+  *   - a commit may opt its directory into FILE-SKIPPING stats: one
+  *     JSON document, `stats/v<NNNNN>/stats.json`, written through
+  *     [[graft.Json]] and staged-then-renamed before the manifest is
+  *     published. It lists the range-tracked columns with their types,
+  *     the bloom columns, and per non-empty data file its
+  *     `input_file_name`, row count, min/max and bloom words. Row counts
+  *     and min/max come from the new files' parquet footers, read on the
+  *     driver, for byte/short/int/long, date and INT64-micros timestamp
+  *     columns (a date or timestamp under Spark's LEGACY calendar
+  *     rebase, an INT96 timestamp, or a row group without statistics
+  *     takes a data pass instead, as do bloom columns). Columns of other
+  *     types are not tracked. Planning a pruned read parses the
+  *     documents on the driver: no Spark job.
   *
   * Scale posture: commit cost is O(new data) + one manifest rename —
   * append NEVER rewrites history (contrast the full-table overwrite a
@@ -409,21 +425,37 @@ object TimeTravel {
       deleteMoR(spark, path, condition)
     }
 
-  private def writeData(df: DataFrame, path: String, v: Long): String = {
+  /** Write version `v`'s data directory, and its stats sidecar when
+    * `statsCols` or `bloomCols` ask for one; returns the directory.
+    * A LOGICAL-shape `df` of a mapped table writes the physical names,
+    * and the sidecar keys on them too: a caller's logical columns
+    * translate through the era's map (the probe side translates back
+    * — [[planProbes]]), so skipping keeps working across renames. */
+  private def writeWithStats(df: DataFrame, path: String, v: Long,
+      mapping: Option[Seq[ColMap]], statsCols: Seq[String],
+      bloomCols: Seq[String]): String = {
     val dir = dataDir(path, v)
+    val written = mapping.map(toPhysical(df, _)).getOrElse(df)
     // overwrite: a crash between data write and manifest publish leaves
     // an orphan (invisible) dir that the retried commit must reclaim
-    df.write.mode("overwrite").parquet(s"$path/$dir")
+    written.write.mode("overwrite").parquet(s"$path/$dir")
+    def phys(c: String): String =
+      mapping.flatMap(_.find(_.logical == c)).map(_.physical).getOrElse(c)
+    if (statsCols.nonEmpty || bloomCols.nonEmpty)
+      writeStatsFor(df.sparkSession, path, dir, written.schema,
+        statsCols.map(phys), bloomCols.map(phys))
     dir
   }
 
   /** Append commit: new rows become visible alongside every directory
     * the previous version saw. Returns the new version number.
     * `statsCols` opts the new directory into per-file min/max/count
-    * sidecars ([[readPruned]] file skipping) — collected from just the
-    * freshly written files (commit stays O(new data)), published
-    * BEFORE the manifest so a snapshot never sees a half-built
-    * sidecar. */
+    * sidecars ([[readPruned]] file skipping), `bloomCols` into per-file
+    * Bloom filters — read from the new files' parquet footers on the
+    * driver (the commit's only Spark job stays its data write; bloom
+    * columns, and columns some footer cannot bound, cost one more pass
+    * over the new files), published BEFORE the manifest so a snapshot
+    * never sees a half-built sidecar. */
   def commitAppend(df: DataFrame, path: String, tag: Option[String] = None,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
@@ -435,15 +467,7 @@ object TimeTravel {
     // A mapped table's appends arrive in LOGICAL shape and write the
     // immutable physical names; the mapping itself carries forward
     val mapping = prev.map(_.cols).filter(_.nonEmpty)
-    val dir = writeData(mapping.map(toPhysical(df, _)).getOrElse(df), path, v)
-    // sidecars key on the PHYSICAL names the files carry: a caller's
-    // logical statsCols translate through the era's map (the probe side
-    // translates back — [[planProbes]]), so skipping keeps working
-    // across renames
-    def phys(c: String): String =
-      mapping.flatMap(_.find(_.logical == c)).map(_.physical).getOrElse(c)
-    if (statsCols.nonEmpty || bloomCols.nonEmpty)
-      writeStatsFor(spark, path, dir, statsCols.map(phys), bloomCols.map(phys))
+    val dir = writeWithStats(df, path, v, mapping, statsCols, bloomCols)
     publish(spark, path, v, prev.map(_.dirs).getOrElse(Seq.empty) :+ dir, tag,
       prev.map(_.dvs).getOrElse(Seq.empty), mapping.getOrElse(Seq.empty))
     v
@@ -471,11 +495,7 @@ object TimeTravel {
     val cur = latest(spark, path)
     val v = cur.getOrElse(0L) + 1
     val mapping = cur.flatMap(colsListing(spark, path, _))
-    val dir = writeData(mapping.map(toPhysical(df, _)).getOrElse(df), path, v)
-    def phys(c: String): String =
-      mapping.flatMap(_.find(_.logical == c)).map(_.physical).getOrElse(c)
-    if (statsCols.nonEmpty || bloomCols.nonEmpty)
-      writeStatsFor(spark, path, dir, statsCols.map(phys), bloomCols.map(phys))
+    val dir = writeWithStats(df, path, v, mapping, statsCols, bloomCols)
     publish(spark, path, v, Seq(dir), cols = mapping.getOrElse(Seq.empty))
     v
   }
@@ -484,15 +504,14 @@ object TimeTravel {
     * pass. Byte-identical outcome to `commitOverwrite(batches.head)`
     * followed by `commitAppend(batches(i))` in order — same
     * `data/vNNNNN` directories, same stats sidecars, same cumulative
-    * manifest listings — but the 2·N sequential Spark jobs (write +
-    * stats per commit) run as N concurrent pairs, and the N manifests
-    * publish afterwards in order (driver-side microseconds each).
-    * Overlapping independent jobs is optimization guide §2.6; the
-    * per-commit jobs are independent ONLY because the version slots
-    * are pre-assigned 1..N, which is sound solely on an empty table —
-    * hence the fresh-table guard (concurrent writers would race the
-    * pre-assigned names, so this is a bulk-build tool, not a
-    * multi-writer commit path; those stay on [[commitAppendRetrying]]).
+    * manifest listings — but the N data writes overlap as concurrent
+    * jobs ([[ParallelJobs]]), and the N manifests publish afterwards in
+    * order (driver-side microseconds each). The per-commit writes are
+    * independent ONLY because the version slots are pre-assigned 1..N,
+    * which is sound solely on an empty table — hence the fresh-table
+    * guard (concurrent writers would race the pre-assigned names, so
+    * this is a bulk-build tool, not a multi-writer commit path; those
+    * stay on [[commitAppendRetrying]]).
     */
   def commitSeries(batches: Seq[DataFrame], path: String,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Seq[Long] = {
@@ -502,12 +521,7 @@ object TimeTravel {
       s"commitSeries pre-assigns versions 1..N and requires a fresh table at $path")
     val vs = (1L to batches.size.toLong).toSeq
     val dirs = ParallelJobs.awaitAll(vs.zip(batches).map { case (v, b) =>
-      () => {
-        val dir = writeData(b, path, v)
-        if (statsCols.nonEmpty || bloomCols.nonEmpty)
-          writeStatsFor(spark, path, dir, statsCols, bloomCols)
-        dir
-      }
+      () => writeWithStats(b, path, v, None, statsCols, bloomCols)
     })
     vs.foreach(v => publish(spark, path, v, dirs.take(v.toInt)))
     vs
@@ -1018,31 +1032,192 @@ object TimeTravel {
   // ------------------------------------------------------- file skipping
 
   /** Stats sidecar for a data directory: `stats/v<NNNNN>/` mirrors
-    * `data/v<NNNNN>/` and is immutable with it. */
+    * `data/v<NNNNN>/` and is immutable with it. It holds one document,
+    * [[StatsDocName]]. */
   private def statsDirOf(dataDirRel: String): String =
     "stats/" + dataDirRel.stripPrefix("data/")
 
-  /** One row per file of `dataDirRel` with min_/max_ per tracked
-    * column, a per-file Bloom filter per `bloomCols` entry (the Delta
-    * bloom-column-index shape: equality probes on columns the layout
-    * was NOT clustered by, where min/max spans everything), plus the
-    * row count — the add-file stats sidecar. One pass over just the
-    * directory's files, map-side combined. */
+  private val StatsDocName = "stats.json"
+
+  private def statsDocOf(path: String, dataDirRel: String): Path =
+    new Path(s"$path/${statsDirOf(dataDirRel)}/$StatsDocName")
+
+  /** One data file's entry in a stats document: the file as
+    * `input_file_name` spells it, its row count, the per-column min and
+    * max in the internal integral form ([[statLong]]'s unit), and the
+    * bloom words per bloom column. A column whose values in the file
+    * are all null has no min/max; a file with no rows has no entry. */
+  private[graft] final case class FileStats(file: String, nRows: Long,
+      min: Map[String, Long], max: Map[String, Long], bloom: Map[String, Seq[Long]])
+
+  /** A data directory's stats document: the range-tracked columns with
+    * their types (`catalogString`), the bloom columns, and one
+    * [[FileStats]] per non-empty data file. */
+  private[graft] final case class DirStats(columns: Map[String, String],
+      blooms: Seq[String], files: Seq[FileStats])
+
+  /** The column types whose min/max sidecars track: those with an
+    * internal integral form, the unit [[graft.plans.StatsPrune]] and
+    * [[readPruned]] compare in. A stats column of another type is not
+    * tracked, and probes on it read every file. */
+  private def rangeTracked(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType |
+         TimestampType | TimestampNTZType => true
+    case _ => false
+  }
+
+  /** `c`'s [min, max] in one file from its footer alone: Some(None) when
+    * every value is null, None when the footer cannot say (the column is
+    * absent or not a signed integer, date or INT64-micros timestamp; a
+    * date or timestamp written under Spark's LEGACY calendar rebase;
+    * a row group without statistics). */
+  private def footerBounds(footer: ParquetMetadata, c: String,
+      dt: DataType): Option[Option[(Long, Long)]] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, IntLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+    val meta = footer.getFileMetaData
+    val legacy = meta.getKeyValueMetaData.containsKey("org.apache.spark.legacyDateTime")
+    val field = meta.getSchema.getFields.asScala.find(_.getName == c)
+    val readable = field.exists(_.isPrimitive) && {
+      val t = field.get.asPrimitiveType
+      val signedInt = t.getLogicalTypeAnnotation match {
+        case null => true
+        case i: IntLogicalTypeAnnotation => i.isSigned
+        case _ => false
+      }
+      (dt, t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+        case (ByteType | ShortType | IntegerType, INT32, _) => signedInt
+        case (LongType, INT64, _) => signedInt
+        case (DateType, INT32, _: DateLogicalTypeAnnotation) => !legacy
+        case (TimestampType | TimestampNTZType, INT64, ts: TimestampLogicalTypeAnnotation) =>
+          !legacy && ts.getUnit == TimeUnit.MICROS
+        case _ => false
+      }
+    }
+    if (!readable) None
+    else FooterStats.merged(footer, c).map(s =>
+      if (!s.hasNonNullValue) None
+      else Some((s.genericGetMin.asInstanceOf[Number].longValue,
+        s.genericGetMax.asInstanceOf[Number].longValue)))
+  }
+
+  /** The data files of a directory, as Spark's file listing keeps them. */
+  private def dataFiles(f: FileSystem, dir: Path): Seq[Path] =
+    f.listStatus(dir).toSeq.map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .sortBy(_.getName)
+
+  /** The stats of the data files in `dir`, written under `schema`. Row
+    * counts and the min/max of footer-readable columns ([[footerBounds]])
+    * come from the footers, read on the driver. One data pass, under
+    * the known schema with one row per file collected, runs only for
+    * bloom columns and for range columns some footer cannot bound. */
+  private def statsOf(spark: SparkSession, dir: Path, schema: StructType,
+      statsCols: Seq[String], bloomCols: Seq[String]): DirStats = {
+    import org.apache.spark.sql.functions.{col, input_file_name, max, md5, min, udaf}
+    val conf = spark.sessionState.newHadoopConf()
+    val footers = dataFiles(dir.getFileSystem(conf), dir)
+      .map(p => p.toUri.toString -> FooterStats.footer(conf, p))
+      .filter { case (_, ft) => FooterStats.rows(ft) > 0 }
+    val tracked = statsCols.map(c => c -> schema(c).dataType)
+      .filter { case (_, dt) => rangeTracked(dt) }
+    val scannedCols = tracked.collect {
+      case (c, dt) if footers.exists { case (_, ft) => footerBounds(ft, c, dt).isEmpty } => c
+    }
+    val scanned: Map[String, org.apache.spark.sql.Row] =
+      if (footers.isEmpty || (scannedCols.isEmpty && bloomCols.isEmpty)) Map.empty
+      else {
+        val bloomAgg = udaf(new graft.operators.BloomOps.BloomAggregator(
+          ZoneMaps.BloomBits, ZoneMaps.BloomHashes))
+        val aggs = scannedCols.flatMap(c =>
+          Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) ++
+          bloomCols.map(c => bloomAgg(md5(col(c).cast("string"))).as(s"bloom_$c"))
+        spark.read.schema(StructType((scannedCols ++ bloomCols).distinct.map(schema(_))))
+          .parquet(dir.toString)
+          .groupBy(input_file_name().as("file"))
+          .agg(aggs.head, aggs.tail: _*)
+          .collect().map(r => r.getString(0) -> r).toMap
+      }
+    val files = footers.map { case (file, ft) =>
+      lazy val row = scanned.getOrElse(file, throw new IllegalStateException(
+        s"the stats pass over $dir saw no rows of $file"))
+      val bounds = tracked.flatMap { case (c, dt) =>
+        val b =
+          if (scannedCols.contains(c))
+            Option(row.getAs[Any](s"min_$c")).map(mn =>
+              (statLong(mn), statLong(row.getAs[Any](s"max_$c"))))
+          else footerBounds(ft, c, dt).flatten
+        b.map(c -> _)
+      }
+      FileStats(file, FooterStats.rows(ft),
+        ListMap(bounds.map { case (c, (mn, _)) => c -> mn }: _*),
+        ListMap(bounds.map { case (c, (_, mx)) => c -> mx }: _*),
+        ListMap(bloomCols.flatMap(c =>
+          Option(row.getAs[scala.collection.Seq[Long]](s"bloom_$c")).map(c -> _.toSeq)): _*))
+    }
+    DirStats(ListMap(tracked.map { case (c, dt) => c -> dt.catalogString }: _*),
+      bloomCols, files)
+  }
+
+  /** Write `dataDirRel`'s stats document ([[statsOf]]): staged under a
+    * dot name and renamed into place, so a reader sees the whole
+    * document or none. Runs before the version's manifest is
+    * published; a retried commit of the same unpublished version
+    * replaces its own orphan. */
   private def writeStatsFor(spark: SparkSession, path: String,
-      dataDirRel: String, statsCols: Seq[String],
-      bloomCols: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, md5, min, udaf}
-    val written = spark.read.parquet(s"$path/$dataDirRel")
-    val bloomAgg = udaf(new graft.operators.BloomOps.BloomAggregator(
-      ZoneMaps.BloomBits, ZoneMaps.BloomHashes))
-    val aggs = statsCols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) ++
-      bloomCols.map(c => bloomAgg(md5(col(c).cast("string"))).as(s"bloom_$c")) :+
-      count(lit(1)).as("n_rows")
-    written.groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/${statsDirOf(dataDirRel)}")
+      dataDirRel: String, schema: StructType, statsCols: Seq[String],
+      bloomCols: Seq[String]): Unit = {
+    val stats = statsOf(spark, new Path(s"$path/$dataDirRel"), schema, statsCols, bloomCols)
+    val body = Json.mapper.writeValueAsBytes(ListMap(
+      "columns" -> stats.columns,
+      "blooms" -> stats.blooms,
+      "files" -> stats.files.map(s => ListMap("file" -> s.file, "n_rows" -> s.nRows,
+        "min" -> s.min, "max" -> s.max, "bloom" -> s.bloom))))
+    val f = fs(spark, path)
+    val target = statsDocOf(path, dataDirRel)
+    val staging = new Path(target.getParent, s".$StatsDocName.staging")
+    val out = f.create(staging, true)
+    try out.write(body) finally out.close()
+    f.delete(target, false)
+    if (!f.rename(staging, target))
+      throw new java.io.IOException(s"stats publish failed for $target")
+  }
+
+  /** Parse the stats document of `dataDirRel`; None when the directory
+    * has none (it is uncovered). A document that does not parse, or
+    * whose fields have the wrong shape, fails with an IOException naming
+    * the file: skipping on a half-read sidecar could drop rows. */
+  private[graft] def readStats(spark: SparkSession, path: String,
+      dataDirRel: String): Option[DirStats] = {
+    val file = statsDocOf(path, dataDirRel)
+    def corrupt(why: String, cause: Throwable = null) =
+      new java.io.IOException(s"corrupt stats sidecar $file: $why", cause)
+    val in = try fs(spark, path).open(file)
+      catch { case _: java.io.FileNotFoundException => return None }
+    val root = try Json.mapper.readTree(in) catch {
+      case e: JsonProcessingException => throw corrupt(e.getOriginalMessage, e)
+    } finally in.close()
+    if (root == null || !root.isObject) throw corrupt("not a JSON object")
+    def field(n: JsonNode, name: String): JsonNode = {
+      val v = n.get(name)
+      if (v == null) throw corrupt(s"missing $name in ${n.toString.take(200)}")
+      v
+    }
+    def long(n: JsonNode): Long =
+      if (n.isIntegralNumber && n.canConvertToLong) n.asLong
+      else throw corrupt(s"not an integer: ${n.toString.take(50)}")
+    def text(n: JsonNode): String =
+      if (n.isTextual) n.asText else throw corrupt(s"not a string: ${n.toString.take(50)}")
+    def obj[A](n: JsonNode, value: JsonNode => A): Map[String, A] =
+      if (!n.isObject) throw corrupt(s"not an object: ${n.toString.take(50)}")
+      else ListMap(n.properties.asScala.toSeq.map(e => e.getKey -> value(e.getValue)): _*)
+    def arr[A](n: JsonNode, value: JsonNode => A): Seq[A] =
+      if (!n.isArray) throw corrupt(s"not an array: ${n.toString.take(50)}")
+      else n.elements.asScala.map(value).toSeq
+    Some(DirStats(obj(field(root, "columns"), text), arr(field(root, "blooms"), text),
+      arr(field(root, "files"), e => FileStats(text(field(e, "file")),
+        long(field(e, "n_rows")), obj(field(e, "min"), long), obj(field(e, "max"), long),
+        obj(field(e, "bloom"), arr(_, long))))))
   }
 
   /** Backfill stats sidecars for every data directory of `version`
@@ -1056,8 +1231,9 @@ object TimeTravel {
       throw new IllegalArgumentException(s"no versions at $path"))
     val f = fs(spark, path)
     val missing = listing(spark, path, v)
-      .filterNot(d => f.exists(new Path(s"$path/${statsDirOf(d)}")))
-    missing.foreach(d => writeStatsFor(spark, path, d, statsCols, bloomCols))
+      .filterNot(d => f.exists(statsDocOf(path, d)))
+    missing.foreach(d => writeStatsFor(spark, path, d,
+      spark.read.parquet(s"$path/$d").schema, statsCols, bloomCols))
     // backfill changes an EXISTING version's sidecar coverage, which
     // the manifest-mtime cache key cannot see — drop the path's entries
     if (missing.nonEmpty)
@@ -1133,19 +1309,17 @@ object TimeTravel {
     prunedRead(spark, path, v, toRead, col(bloomCol) === key, st)
   }
 
-  /** The snapshot's sidecar union, COLLECTED and CACHED on the driver
-    * keyed by (path, version) — a version's listing and its sidecars
-    * are immutable, so one mergeSchema read + collect serves every
-    * later probe of the snapshot with ZERO Spark jobs. This is what
-    * keeps [[graft.plans.StatsPrune]]'s planning in the same cost
-    * class as a table format's manifest pruning instead of paying
-    * job-launch latency per query. Dirs tracking different column
-    * sets surface the others' stats as null under the merged schema;
-    * the null guard in the probes keeps those files. */
-  private final case class SidecarManifest(
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.Row],
-      uncoveredFiles: Seq[String])
+  /** The snapshot's stats documents, PARSED and CACHED on the driver
+    * keyed by (path, version, manifest mtime) — a version's listing and
+    * its sidecars are immutable, so planning any probe of the snapshot
+    * runs ZERO Spark jobs: the documents are read on the driver, and
+    * the files of an uncovered directory are listed through the Hadoop
+    * FS. This keeps [[graft.plans.StatsPrune]]'s planning in the same
+    * cost class as a table format's manifest pruning. `columns` and
+    * `blooms` are the union over the covered directories; a file whose
+    * directory does not track a probe's column is kept by that probe. */
+  private final case class SidecarManifest(columns: Map[String, DataType],
+      blooms: Set[String], files: Seq[FileStats], uncoveredFiles: Seq[String])
 
   private val manifestCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), SidecarManifest]()
@@ -1156,27 +1330,18 @@ object TimeTravel {
     // the manifest file's mtime rides in the key: a table DELETED and
     // REBUILT at the same path reaches the same version numbers with
     // different content — its fresh manifest must not hit a stale entry
-    val mtime = fs(spark, path)
-      .getFileStatus(new Path(manifestDir(path), s"${vname(v)}.json"))
+    val f = fs(spark, path)
+    val mtime = f.getFileStatus(new Path(manifestDir(path), s"${vname(v)}.json"))
       .getModificationTime
     manifestCache.computeIfAbsent((path, v, mtime), _ => {
-      val f = fs(spark, path)
-      val (covered, uncovered) = listing(spark, path, v)
-        .partition(d => f.exists(new Path(s"$path/${statsDirOf(d)}")))
-      val (schema, rows) =
-        if (covered.isEmpty)
-          (new org.apache.spark.sql.types.StructType(),
-            Seq.empty[org.apache.spark.sql.Row])
-        else {
-          val m = spark.read.option("mergeSchema", "true")
-            .parquet(covered.map(d => s"$path/${statsDirOf(d)}"): _*)
-          (m.schema, m.collect().toSeq)
-        }
-      val uFiles =
-        if (uncovered.isEmpty) Seq.empty[String]
-        else spark.read.parquet(uncovered.map(d => s"$path/$d"): _*)
-          .inputFiles.toSeq
-      SidecarManifest(schema, rows, uFiles)
+      val docs = listing(spark, path, v).map(d => d -> readStats(spark, path, d))
+      val covered = docs.flatMap(_._2)
+      SidecarManifest(
+        covered.flatMap(_.columns).map { case (c, t) => c -> DataType.fromDDL(t) }.toMap,
+        covered.flatMap(_.blooms).toSet,
+        covered.flatMap(_.files),
+        docs.collect { case (d, None) => dataFiles(f, new Path(s"$path/$d")) }
+          .flatten.map(_.toUri.toString))
     })
   }
 
@@ -1199,18 +1364,11 @@ object TimeTravel {
       v: Long): (Seq[String], ZoneMaps.PruneStats) =
     planProbes(spark, path, v, Nil, Seq((bloomCol, Seq(key))))
 
-  /** Conjunctive multi-probe planning — the substrate of
-    * [[graft.plans.StatsPrune]]: a file is read only if EVERY range
-    * probe's [min, max] overlaps and EVERY point probe's bloom admits
-    * (each probe keeping files whose sidecar doesn't track its column
-    * — intersection can only shrink what one probe admits, so a 2-D
-    * `WHERE x < a AND y < b` over a Z-ordered layout prunes on BOTH
-    * dimensions). */
-  /** A sidecar min/max cell as its INTERNAL integral form — the same
-    * unit [[graft.plans.StatsPrune]]'s literal bounds arrive in:
-    * numbers as-is, DATE as epoch days, TIMESTAMP as UTC micros
-    * (collected Rows surface those columns as external Java types,
-    * either legacy java.sql or java.time under the java8API flag). */
+  /** A min/max value as its INTERNAL integral form — the same unit
+    * [[graft.plans.StatsPrune]]'s literal bounds arrive in: numbers
+    * as-is, DATE as epoch days, TIMESTAMP as UTC micros (collected
+    * Rows surface those columns as external Java types, either legacy
+    * java.sql or java.time under the java8API flag). */
   private def statLong(v: Any): Long = v match {
     case n: Number                  => n.longValue
     case d: java.sql.Date           =>
@@ -1223,10 +1381,18 @@ object TimeTravel {
     case l: java.time.LocalDateTime =>
       org.apache.spark.sql.catalyst.util.DateTimeUtils.localDateTimeToMicros(l)
     case other => throw new IllegalStateException(
-      s"stats sidecar cell of unsupported type ${other.getClass.getName}")
+      s"stats value of unsupported type ${other.getClass.getName}")
   }
 
-  /** Point probes carry a KEY SET: one key = equality, several = an
+  /** Conjunctive multi-probe planning — the substrate of
+    * [[graft.plans.StatsPrune]]: a file is read only if EVERY range
+    * probe's [min, max] overlaps and EVERY point probe's bloom admits
+    * (each probe keeping files whose sidecar doesn't track its column
+    * — intersection can only shrink what one probe admits, so a 2-D
+    * `WHERE x < a AND y < b` over a Z-ordered layout prunes on BOTH
+    * dimensions).
+    *
+    * Point probes carry a KEY SET: one key = equality, several = an
     * IN-list, where the file is kept when ANY listed key is admitted
     * (IN is a disjunction — any-of is the sound direction). Probe
     * columns arrive as LOGICAL names and re-key through the version's
@@ -1245,61 +1411,40 @@ object TimeTravel {
         c => m.getOrElse(c, s"__graft_unmapped_$c") // not in schema: match nothing
       case None => identity
     }
-    val probes: Seq[(Seq[String], org.apache.spark.sql.Row => Boolean)] =
+    val probes: Seq[FileStats => Boolean] =
       ranges.map { case (c0, lo, hi) =>
         val c = toPhys(c0)
-        val (mnC, mxC) = (s"min_$c", s"max_$c")
-        (Seq(mnC, mxC), { (r: org.apache.spark.sql.Row) =>
-          val mn = statLong(r.get(mi.schema.fieldIndex(mnC)))
-          val mx = statLong(r.get(mi.schema.fieldIndex(mxC)))
-          mn <= hi && mx >= lo
-        })
+        (s: FileStats) => (for (mn <- s.min.get(c); mx <- s.max.get(c))
+          yield mn <= hi && mx >= lo).getOrElse(true)
       } ++ points.map { case (c0, keys) =>
-        val bC = s"bloom_${toPhys(c0)}"
-        (Seq(bC), { (r: org.apache.spark.sql.Row) =>
-          val bits = r.getSeq[Long](mi.schema.fieldIndex(bC))
-          keys.exists(k => graft.operators.BloomOps.admits(
-            bits, k.toString, ZoneMaps.BloomBits, ZoneMaps.BloomHashes))
-        })
+        val c = toPhys(c0)
+        (s: FileStats) => s.bloom.get(c).forall(bits => keys.exists(k =>
+          graft.operators.BloomOps.admits(
+            bits, k.toString, ZoneMaps.BloomBits, ZoneMaps.BloomHashes)))
       }
-    val fileIdx = mi.schema.fieldNames.indexOf("file")
-    def admittedBy(r: org.apache.spark.sql.Row,
-        cols: Seq[String], keep: org.apache.spark.sql.Row => Boolean): Boolean =
-      !cols.forall(mi.schema.fieldNames.contains) ||
-        cols.exists(c => r.isNullAt(mi.schema.fieldIndex(c))) || keep(r)
-    val selected =
-      if (mi.rows.isEmpty) Seq.empty[String]
-      else mi.rows.filter(r => probes.forall { case (cols, keep) =>
-        admittedBy(r, cols, keep)
-      }).map(_.getString(fileIdx))
+    val selected = mi.files.filter(s => probes.forall(_(s))).map(_.file)
     ((selected ++ mi.uncoveredFiles).sorted,
-      ZoneMaps.PruneStats(mi.rows.size.toLong + mi.uncoveredFiles.size,
+      ZoneMaps.PruneStats(mi.files.size.toLong + mi.uncoveredFiles.size,
         selected.size.toLong + mi.uncoveredFiles.size))
   }
 
   /** The stats-covered columns of `version`'s sidecars (LOGICAL name →
-    * sidecar type under the merged schema), empty when no directory has
-    * a sidecar — [[StatsPrune]]'s eligibility probe. MAPPED snapshots
-    * (r11) translate each sidecar's PHYSICAL column back through the
-    * era's map: a renamed column's range predicate keeps pruning, a
-    * dropped column's sidecar (physical name absent from the map)
-    * surfaces to nobody, and a logical name colliding with another
-    * column's physical name can't mis-match — translation is by map
-    * entry, never string equality (the hazard that used to force mapped
-    * tables to opt out wholesale). */
+    * type), empty when no directory has a sidecar — [[StatsPrune]]'s
+    * eligibility probe. MAPPED snapshots (r11) translate each sidecar's
+    * PHYSICAL column back through the era's map: a renamed column's
+    * range predicate keeps pruning, a dropped column's sidecar
+    * (physical name absent from the map) surfaces to nobody, and a
+    * logical name colliding with another column's physical name can't
+    * mis-match — translation is by map entry, never string equality
+    * (the hazard that used to force mapped tables to opt out
+    * wholesale). */
   private[graft] def statsColumns(spark: SparkSession, path: String,
-      v: Long): Map[String, org.apache.spark.sql.types.DataType] = {
-    val byPhys: Option[Map[String, String]] = colsListing(spark, path, v)
-      .map(_.map(c => c.physical -> c.logical).toMap)
-    sidecarManifest(spark, path, v).schema.fields.toSeq.flatMap {
-      case sf if sf.name.startsWith("min_") =>
-        val p = sf.name.stripPrefix("min_")
-        byPhys match {
-          case None => Some(p -> sf.dataType)
-          case Some(m) => m.get(p).map(_ -> sf.dataType)
-        }
-      case _ => None
-    }.toMap
+      v: Long): Map[String, DataType] = {
+    val cols = sidecarManifest(spark, path, v).columns
+    colsListing(spark, path, v) match {
+      case None => cols
+      case Some(m) => m.flatMap(c => cols.get(c.physical).map(c.logical -> _)).toMap
+    }
   }
 
   /** The bloom-covered columns of `version`'s sidecars as LOGICAL
@@ -1309,17 +1454,11 @@ object TimeTravel {
     * [[statsColumns]]. */
   private[graft] def bloomColumns(spark: SparkSession, path: String,
       v: Long): Set[String] = {
-    val byPhys: Option[Map[String, String]] = colsListing(spark, path, v)
-      .map(_.map(c => c.physical -> c.logical).toMap)
-    sidecarManifest(spark, path, v).schema.fieldNames.toSeq.flatMap {
-      case n if n.startsWith("bloom_") =>
-        val p = n.stripPrefix("bloom_")
-        byPhys match {
-          case None => Some(p)
-          case Some(m) => m.get(p)
-        }
-      case _ => None
-    }.toSet
+    val blooms = sidecarManifest(spark, path, v).blooms
+    colsListing(spark, path, v) match {
+      case None => blooms
+      case Some(m) => m.filter(c => blooms(c.physical)).map(_.logical).toSet
+    }
   }
 
   /** Scan a pruned FILE subset under the snapshot's LOGICAL schema —

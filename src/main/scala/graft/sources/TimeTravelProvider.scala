@@ -44,9 +44,11 @@ class TimeTravelProvider extends TableProvider with DataSourceRegister
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     TimeTravelTable(options).schema()
 
+  // the schema inferSchema just returned: the delegate takes it instead
+  // of inferring it a second time
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    TimeTravelTable(new CaseInsensitiveStringMap(properties))
+    TimeTravelTable(new CaseInsensitiveStringMap(properties), Some(schema))
 
   override def supportsExternalMetadata(): Boolean = false
 
@@ -74,16 +76,25 @@ class TimeTravelProvider extends TableProvider with DataSourceRegister
 }
 
 object TimeTravelTable {
-  def apply(options: CaseInsensitiveStringMap): TimeTravelTable = {
+  def apply(options: CaseInsensitiveStringMap): TimeTravelTable = apply(options, None)
+
+  /** `knownSchema`: the snapshot's schema when the caller already
+    * resolved it, so the parquet delegate does not infer it again. */
+  private[sources] def apply(options: CaseInsensitiveStringMap,
+      knownSchema: Option[StructType]): TimeTravelTable = {
     val path = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("graft-table requires a 'path' option"))
     val version = Option(options.get("version")).map(_.toLong)
-    new TimeTravelTable(path, version, options)
+    new TimeTravelTable(path, version, options, knownSchema)
   }
 }
 
-final class TimeTravelTable(path: String, versionOpt: Option[Long],
-    options: CaseInsensitiveStringMap) extends Table with SupportsRead {
+final class TimeTravelTable private[sources] (path: String, versionOpt: Option[Long],
+    options: CaseInsensitiveStringMap, knownSchema: Option[StructType])
+    extends Table with SupportsRead {
+
+  def this(path: String, versionOpt: Option[Long], options: CaseInsensitiveStringMap) =
+    this(path, versionOpt, options, None)
 
   private def spark: SparkSession = SparkSession.active
 
@@ -117,7 +128,7 @@ final class TimeTravelTable(path: String, versionOpt: Option[Long],
   // PHYSICAL names (and can fail outright on widened heterogeneous
   // directory types); their logical schema comes from the library read
   private lazy val delegate: ParquetTable =
-    ParquetTable(name(), spark, options, dirs, None, classOf[ParquetFileFormat])
+    ParquetTable(name(), spark, options, dirs, knownSchema, classOf[ParquetFileFormat])
 
   override def name(): String = s"graft_table($path@v$snapshotVersion)"
 

@@ -112,10 +112,13 @@ object VectorIndex {
       .write.mode(SaveMode.Overwrite).parquet(path + "/_centroids")
   }
 
+  /** The K centroids in `cid` order: K rows, collected and sorted on
+    * the driver. */
   def loadCentroids(spark: SparkSession, path: String): Array[Array[Long]] =
-    spark.read.parquet(path + "/_centroids").orderBy("cid")
-      .select(col("c_units")).collect()
-      .map(_.getSeq[Long](0).toArray)
+    spark.read.parquet(path + "/_centroids")
+      .select(col("cid"), col("c_units")).collect()
+      .sortBy(_.getInt(0))
+      .map(_.getSeq[Long](1).toArray)
 
   /** INCREMENTAL append: route new vectors with the index's EXISTING
     * centroids (no retrain — cells stay stable between rebuilds, the

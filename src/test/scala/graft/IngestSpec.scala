@@ -185,34 +185,6 @@ class IngestSpec extends SparkSpec {
     assert(s.select("name").distinct().count() == 3)
   }
 
-  /** Spark jobs run by `f`, counted by job group. A job in a second
-    * group marks when the listener has seen them all: the bus delivers
-    * events in order. */
-  private def jobsOf(f: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-of-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet(): Unit
-          case Some(g) if g == s"$group-end" => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("job budget: an incremental refresh rewrites its partitions in one pass") {
     val dir = Files.createTempDirectory("ingest_jobs").toFile.getAbsolutePath
     val (ledger, store) = (s"$dir/ledger", s"$dir/store")

@@ -574,4 +574,138 @@ class LayoutSpec extends SparkSpec {
     assert(psP.filesRead == 1 && psP.filesTotal == 4, s"got $psP")
     assert(ptP.collect().toSeq == ptS.collect().toSeq)
   }
+
+  /** Run `body` with session settings applied, then restore them. */
+  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The footer metadata of every data file of a table version. */
+  private def footers(dir: String, v: Long) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sessionState.newHadoopConf()
+    new java.io.File(f"$dir/data/v$v%05d").listFiles()
+      .filter(_.getName.endsWith(".parquet")).toSeq.map { f =>
+        val rdr = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
+        try rdr.getFooter finally rdr.close()
+      }
+  }
+
+  test("stats sidecars from parquet footers ≡ the per-file aggregation oracle") {
+    import graft.sources.TimeTravel
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("ttfooter").toFile.getAbsolutePath + "/t"
+    /** Commit `df` with stats on `statsCols` (bloom on `bloomCols`) and
+      * compare its stats document with the aggregation oracle. */
+    def commitAndCompare(df: org.apache.spark.sql.DataFrame, statsCols: Seq[String],
+        bloomCols: Seq[String] = Nil): (Long, TimeTravel.DirStats) = {
+      val v = TimeTravel.commitAppend(df, dir, statsCols = statsCols, bloomCols = bloomCols)
+      val rel = f"data/v$v%05d"
+      val doc = TimeTravel.readStats(spark, dir, rel)
+        .getOrElse(fail(s"no stats document for $rel"))
+      assert(doc.columns.keys.toSeq == statsCols && doc.blooms == bloomCols)
+      val want = Oracles.fileStats(spark, s"$dir/$rel", statsCols, bloomCols)
+      assert(doc.files.sortBy(_.file) == want,
+        s"v$v: footer stats\n${doc.files}\n!= oracle\n$want")
+      (v, doc)
+    }
+
+    // integral and DATE columns with nulls, an all-null column, three
+    // files, and a bloom column riding the data pass
+    val mixed = spark.range(0, 3000).select(
+      when(col("id") % 7 =!= 0, (col("id") % 200 - 100).cast("tinyint")).as("b"),
+      when(col("id") % 5 =!= 0, (col("id") * 11 - 16000).cast("smallint")).as("s"),
+      when(col("id") % 3 =!= 0, (col("id") * 1001 - 1500000).cast("int")).as("i"),
+      when(col("id") % 4 =!= 0, col("id") * 1000003L - 1000000000L).as("l"),
+      when(col("id") % 6 =!= 0, date_add(lit("1969-06-01").cast("date"),
+        col("id").cast("int"))).as("d"),
+      lit(null).cast("bigint").as("z"),
+      col("id").as("k"))
+      .repartitionByRange(3, col("k"))
+    val (_, mixedDoc) = commitAndCompare(mixed, Seq("b", "s", "i", "l", "d", "z"), Seq("k"))
+    assert(mixedDoc.files.size == 3 && mixedDoc.files.forall(f => !f.min.contains("z")))
+    assert(mixedDoc.columns == Map("b" -> "tinyint", "s" -> "smallint", "i" -> "int",
+      "l" -> "bigint", "d" -> "date", "z" -> "bigint"))
+
+    // an empty commit: the document lists its columns and no file
+    val (_, emptyDoc) = commitAndCompare(mixed.filter(lit(false)), Seq("l", "d"))
+    assert(emptyDoc.files.isEmpty && emptyDoc.columns.keySet == Set("l", "d"))
+
+    // one file of many row groups: the bounds merge over all of them
+    val (vRg, _) = withConf("parquet.block.size" -> "4096") {
+      commitAndCompare(spark.range(0, 40000)
+        .select((col("id") * 37 % 100003).as("l"), col("id").cast("int").as("i"))
+        .coalesce(1), Seq("l", "i"))
+    }
+    assert(footers(dir, vRg).map(_.getBlocks.size).sum > 1, "expected several row groups")
+
+    // TIMESTAMP: INT96 (Spark's default) takes the data pass;
+    // INT64-micros, adjusted or not, comes from the footer
+    def times = spark.range(0, 500).select(
+      when(col("id") % 9 =!= 0, timestamp_micros(col("id") * 86400000017L - 10000000000000L))
+        .as("t"),
+      timestamp_micros(col("id") * 3600000000L).cast("timestamp_ntz").as("n"))
+      .repartition(2)
+    withConf("spark.sql.parquet.outputTimestampType" -> "INT96") {
+      commitAndCompare(times.select("t"), Seq("t"))
+    }
+    val (vMicros, _) = withConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      commitAndCompare(times, Seq("t", "n"))
+    }
+    assert(footers(dir, vMicros).forall { ft =>
+      val schema = ft.getFileMetaData.getSchema
+      schema.getType(schema.getFieldIndex("t")).asPrimitiveType.getPrimitiveTypeName.name == "INT64"
+    })
+
+    // dates and micros timestamps written under Spark's LEGACY calendar
+    // rebase: the footer holds Julian values, the document must not
+    val (vLegacy, _) = withConf(
+        "spark.sql.parquet.datetimeRebaseModeInWrite" -> "LEGACY",
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      commitAndCompare(spark.range(0, 400).select(
+        date_add(lit("1000-01-01").cast("date"), (col("id") * 3).cast("int")).as("d"),
+        timestamp_micros(col("id") * 86400000000L - 30000000000000000L).as("t"))
+        .coalesce(1), Seq("d", "t"))
+    }
+    assert(footers(dir, vLegacy).forall(_.getFileMetaData.getKeyValueMetaData.asScala
+      .contains("org.apache.spark.legacyDateTime")), "expected the LEGACY marker")
+  }
+
+  test("a torn or unparsable stats sidecar fails with an IOException naming the file") {
+    import graft.sources.TimeTravel
+    val dir = java.nio.file.Files.createTempDirectory("tttorn").toFile.getAbsolutePath + "/t"
+    TimeTravel.commitOverwrite(spark.range(0, 100).toDF("k").coalesce(1), dir,
+      statsCols = Seq("k"))
+    val doc = new java.io.File(s"$dir/stats/v00001/stats.json").toPath
+    val good = java.nio.file.Files.readString(doc)
+    val bad = Seq(good.take(good.length / 2), "not json", "", "[]",
+      """{"columns":{"k":"bigint"},"blooms":[],"files":[{"file":"f","n_rows":"many",""" +
+        """"min":{},"max":{},"bloom":{}}]}""")
+    bad.foreach { body =>
+      java.nio.file.Files.writeString(doc, body)
+      // the checksummed local FS would otherwise reject the edit first
+      new java.io.File(s"$dir/stats/v00001/.stats.json.crc").delete()
+      val e = intercept[java.io.IOException](TimeTravel.readPruned(spark, dir, "k", 0, 10))
+      assert(e.getMessage.contains(s"$dir/stats/v00001/stats.json"),
+        s"the error must name the sidecar: ${e.getMessage}")
+    }
+  }
+
+  test("two q_tt_prune_auto executions at once both return the oracle result") {
+    val q = SparkEntry.queries("q_tt_prune_auto")
+    // the oracle SQL reads `orders`: a session of its own keeps the view private
+    val oracleSession = spark.newSession()
+    Tables(oracleSession, sf, "orders").createOrReplaceTempView("orders")
+    val want = oracleSession.sql(SparkEntry.oracleSql("q_tt_prune_auto")).collect().toSeq
+    val got = graft.sources.ParallelJobs.awaitAll(Seq.fill(2)(() => q(spark, sf).collect().toSeq))
+    assert(want.nonEmpty && want.head.getBoolean(2))
+    got.foreach(rows => assert(rows == want, s"$rows != oracle $want"))
+  }
 }

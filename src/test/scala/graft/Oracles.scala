@@ -2,7 +2,8 @@ package graft
 
 import graft.functions.Chunkers.words
 import graft.plans.AsOfDirection
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.sources.TimeTravel
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{size => asize, _}
 
@@ -101,5 +102,38 @@ object Oracles {
     cand.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", "__lid")
+  }
+
+  /** Per-file stats of the parquet files under `dir` by one
+    * aggregation grouped on `input_file_name` — how the TimeTravel
+    * stats sidecars were built before they came from parquet footers:
+    * row count, min/max of `statsCols` in the internal integral form
+    * (epoch days, UTC micros), bloom words of `bloomCols`. A file with
+    * no rows has no entry; an all-null column has no min/max. */
+  def fileStats(spark: SparkSession, dir: String, statsCols: Seq[String],
+      bloomCols: Seq[String] = Nil): Seq[TimeTravel.FileStats] = {
+    import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
+    val df = spark.read.parquet(dir)
+    def integral(c: Column, name: String): Column = df.schema(name).dataType match {
+      case DateType => unix_date(c).cast("long")
+      case TimestampType => unix_micros(c)
+      case TimestampNTZType => unix_micros(c.cast("timestamp"))
+      case _ => c.cast("long")
+    }
+    val bloomAgg = udaf(new graft.operators.BloomOps.BloomAggregator(
+      graft.sources.ZoneMaps.BloomBits, graft.sources.ZoneMaps.BloomHashes))
+    val aggs = statsCols.flatMap(c => Seq(integral(min(col(c)), c).as(s"min_$c"),
+      integral(max(col(c)), c).as(s"max_$c"))) ++
+      bloomCols.map(c => bloomAgg(md5(col(c).cast("string"))).as(s"bloom_$c")) :+
+      count(lit(1)).as("n_rows")
+    df.groupBy(input_file_name().as("file")).agg(aggs.head, aggs.tail: _*)
+      .collect().toSeq.map { r =>
+        def bound(side: String): Map[String, Long] = statsCols
+          .filterNot(c => r.isNullAt(r.fieldIndex(s"${side}_$c")))
+          .map(c => c -> r.getAs[Long](s"${side}_$c")).toMap
+        TimeTravel.FileStats(r.getAs[String]("file"), r.getAs[Long]("n_rows"),
+          bound("min"), bound("max"),
+          bloomCols.map(c => c -> r.getSeq[Long](r.fieldIndex(s"bloom_$c")).toSeq).toMap)
+      }.sortBy(_.file)
   }
 }

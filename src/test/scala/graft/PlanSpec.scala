@@ -954,4 +954,45 @@ class PlanSpec extends SparkSpec {
       spark.conf.set("spark.graft.advisor.auto", "false")
     }
   }
+
+  test("job pins: a stats commit runs as many jobs as a plain one") {
+    import graft.sources.TimeTravel
+    val base = java.nio.file.Files.createTempDirectory("ttjobs").toFile.getAbsolutePath
+    val rows = spark.range(0, 5000).select(col("id").as("k"), (col("id") % 7).as("v"))
+      .coalesce(1)
+    val plain = jobsOf { TimeTravel.commitOverwrite(rows, s"$base/plain"); () }
+    val stats = jobsOf {
+      TimeTravel.commitOverwrite(rows, s"$base/stats", statsCols = Seq("k", "v")); ()
+    }
+    assert(stats == plain, s"stats commit ran $stats jobs, a plain one $plain")
+  }
+
+  test("job pins: StatsPrune plans a fresh snapshot with no Spark job") {
+    import graft.sources.TimeTravel
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val dir = java.nio.file.Files.createTempDirectory("ttplan").toFile.getAbsolutePath + "/t"
+    TimeTravel.commitSeries((0 until 4).map(i =>
+      spark.range(i * 1000L, (i + 1) * 1000L).toDF("k").coalesce(1)), dir,
+      statsCols = Seq("k"))
+    // a directory without stats is listed, never scanned, by planning
+    TimeTravel.commitAppend(spark.range(4000L, 5000L).toDF("k").coalesce(1), dir)
+    val q = spark.read.format("graft-table").load(dir)
+      .filter(col("k") >= 1100 && col("k") <= 1200)
+    var plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = null
+    val jobs = jobsOf { plan = q.queryExecution.optimizedPlan }
+    assert(jobs == 0, s"planning the pruned read ran $jobs Spark jobs")
+    val files = plan.collect {
+      case lr: LogicalRelation =>
+        lr.relation.asInstanceOf[HadoopFsRelation].location.inputFiles.length
+    }.sum
+    assert(files == 2, s"StatsPrune must keep the overlapping and the uncovered file:\n$plan")
+  }
+
+  test("job pins: q_tt_prune_auto runs at most 10 Spark jobs") {
+    val run = SparkEntry.queries("q_tt_prune_auto")
+    def exec(): Unit = run(spark, sf).write.format("noop").mode("overwrite").save()
+    exec() // the first execution resolves the orders table's schema once per JVM
+    val n = jobsOf(exec())
+    assert(n <= 10, s"q_tt_prune_auto ran $n Spark jobs")
+  }
 }
