@@ -1,9 +1,10 @@
 package graft
 
-import graft.expressions.{ArgminCell, ChunkWords, CosineSim, DeterministicEmbed, NormalizeText, QuantizeGrid, SqDistLong}
+import graft.expressions.{ArgminCell, ChunkWords, CosineSim, DeterministicEmbed, L2Normalize, NormalizeText, QuantizeGrid, SqDistLong}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType}
 
 /** Engine extension entry point, loaded by every [[GraftSession]]
@@ -13,8 +14,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType}
   * FunctionRegistry so they are callable from SQL and from
   * `functions.call_function`: `graft_cosine`, `graft_sqdist`,
   * `graft_quantize`, `graft_argmin_cell`, `graft_embed`,
-  * `graft_chunk_words` and `graft_normalize`. Also injects the
-  * optimizer rules (the [[graft.plans.FuseCosine]] and
+  * `graft_l2_normalize`, `graft_chunk_words` and `graft_normalize`.
+  * Also injects the optimizer rules (the [[graft.plans.FuseCosine]] and
   * [[graft.plans.FuseTextKernels]] rewrites, MV, file-skipping and DML
   * rules) and the as-of join planner strategy.
   *
@@ -88,6 +89,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           Cast(children.head, StringType),
           children(1).eval().asInstanceOf[Number].intValue())
       }))
+    ext.injectFunction((
+      FunctionIdentifier("graft_l2_normalize"),
+      new ExpressionInfo(classOf[L2Normalize].getName, "graft_l2_normalize"),
+      // the composed form's divide-by-zero mode, fixed at analysis like Divide's
+      (children: Seq[Expression]) => L2Normalize(
+        Cast(children.head, ArrayType(DoubleType)), SQLConf.get.ansiEnabled)))
     ext.injectFunction((
       FunctionIdentifier("graft_chunk_words"),
       new ExpressionInfo(classOf[ChunkWords].getName, "graft_chunk_words"),

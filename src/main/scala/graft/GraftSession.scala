@@ -20,11 +20,18 @@ object GraftSession {
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** Generated classes the JVM-wide codegen cache holds. One pass of
+    * the ten headline queries plus two kNN calls compiles ~180 distinct
+    * classes; at Spark's default of 100 every warm pass recompiled
+    * nearly all of them. */
+  private val CodegenCacheEntries = 2000
+
   /** `local[cores]` with one shuffle partition per core. */
   def apply(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toLong)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)

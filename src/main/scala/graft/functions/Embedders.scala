@@ -46,11 +46,14 @@ object Embedders {
     s"list_transform(range(0, $dim), j -> CAST($hex4 AS DOUBLE) / 32768.0 - 1.0)"
   }
 
-  /** L2-normalize a double array (norm computed by an in-order fold). */
-  def l2Normalize(v: Column): Column = {
-    val norm = sqrt(aggregate(v, lit(0.0d), (acc, x) => acc + x * x))
-    transform(v, x => x / norm)
-  }
+  /** L2-normalize a double array: the fused
+    * [[graft.expressions.L2Normalize]] (`graft_l2_normalize`), which
+    * evaluates `v` once, so `l2Normalize(graft_embed(text))` embeds each
+    * chunk once. Bit-identical to the composed in-order fold
+    * `transform(v, x -> x / sqrt(aggregate(v, 0.0, (acc, y) -> acc + y*y)))`
+    * that SimilaritySpec checks it against, which re-evaluated `v` for
+    * every element. */
+  def l2Normalize(v: Column): Column = call_function("graft_l2_normalize", v)
 
   def l2NormSql(e: String): String =
     s"sqrt(list_reduce(list_transform($e, x -> x * x), (a, b) -> a + b))"

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * :331-408) as ONE declarative plan:
   *
   *   read → clean(F5) → posexplode(chunk G2) → n_tokens(F6) →
-  *   chunk_id(F7, deterministic) → embed(F12, deterministic) → sink
+  *   chunk_id(F7, deterministic) → embed(F12, deterministic, once per
+  *   chunk) → sink
   *
   * No shuffle anywhere — the whole chain is narrow (projections +
   * generator), so it scales linearly with input splits; at 100 TB each
@@ -40,8 +41,9 @@ object DocPipeline {
         TextFunctions.chunkId(col("doc_id").cast("string"), col("chunk_index")))
   }
 
-  /** chunk rows + L2-normalized deterministic embedding (fused fast
-    * path when the session carries GraftExtensions). */
+  /** chunk rows + L2-normalized deterministic embedding: `graft_embed`
+    * runs once per chunk, inside the fused `graft_l2_normalize`
+    * (plan-asserted in PlanSpec). */
   def vectors(docs: DataFrame, dim: Int = Embedders.DefaultDim): DataFrame =
     chunks(docs).withColumn("embedding",
       Embedders.l2Normalize(

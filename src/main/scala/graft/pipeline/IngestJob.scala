@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.functions.{Chunkers, Embedders, TextFunctions => TF}
 import graft.sources.{ParseOps, VectorStore}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanApi, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -33,7 +33,9 @@ import org.apache.spark.sql.streaming.Trigger
   * Driver state is the RunReport counters, never data.
   *
   * Embedding: the deterministic offline embedder by default (SURVEY
-  * §7.4); production swaps [[BatchedEmbedder]] over an
+  * §7.4), one `graft_embed` per chunk normalized by the fused
+  * `graft_l2_normalize` — the offline face of the reference's one
+  * gateway call per chunk; production swaps [[BatchedEmbedder]] over an
   * [[HttpEmbedBackend]] via `embed` — same schema either way.
   */
 object IngestJob {
@@ -121,20 +123,29 @@ object IngestJob {
     * checkpoints and the ledger write, with no extra action. */
   def incremental(spark: SparkSession, files: DataFrame,
       ledgerPath: String, storePath: String, loadDt: String): RunReport = {
-    // localCheckpoint cuts the plan's dependence on the ledger files
-    // BEFORE the end-of-run ledger overwrite (Spark refuses to
-    // overwrite a path a live plan still reads)
-    val changedN = new Observation()
-    val changed = counted(Ledger.newAndUpdated(files, Ledger.read(spark, ledgerPath)), changedN)
-      .localCheckpoint()
+    // the pin cuts the plan's dependence on the ledger files BEFORE the
+    // end-of-run ledger overwrite (Spark refuses to overwrite a path a
+    // live plan still reads)
+    val (changed, changedN) = pinned(Ledger.newAndUpdated(files, Ledger.read(spark, ledgerPath)))
     // materialized once: the upsert reads the vectors twice (their
     // partitions, then the rewrite), and parse+chunk+embed runs once
-    val chunks = new Observation()
-    val vectors = counted(prepareVectorData(changed.drop("change_type"), loadDt), chunks)
-      .localCheckpoint()
+    val (vectors, chunksN) = pinned(prepareVectorData(changed.drop("change_type"), loadDt))
     VectorStore.upsert(spark, storePath, vectors, superseded = Some(changed.select("name")))
     val filesIn = writeLedger(files, ledgerPath)
-    RunReport(filesIn, countOf(changedN), countOf(chunks))
+    RunReport(filesIn, changedN, chunksN)
+  }
+
+  /** `df` materialized once (`localCheckpoint`), with its row count,
+    * observed during that one job. The pin's planner statistics carry
+    * the count: the checkpoint would otherwise keep the estimate of the
+    * plan it cut (for the ledger diff, the product of the left-outer
+    * join's inputs), and the store upsert would shuffle the whole store
+    * to join it instead of broadcasting the few changed keys. */
+  private def pinned(df: DataFrame): (DataFrame, Long) = {
+    val obs = new Observation()
+    val pin = counted(df, obs).localCheckpoint()
+    val n = countOf(obs)
+    (GraftPlanApi.withRowCount(pin, n), n)
   }
 
   private def counted(df: DataFrame, obs: Observation): DataFrame =

@@ -1075,9 +1075,7 @@ object TimeTravel {
       dt: DataType): Option[Option[(Long, Long)]] = {
     import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, IntLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
-    val meta = footer.getFileMetaData
-    val legacy = meta.getKeyValueMetaData.containsKey("org.apache.spark.legacyDateTime")
-    val field = meta.getSchema.getFields.asScala.find(_.getName == c)
+    val field = footer.getFileMetaData.getSchema.getFields.asScala.find(_.getName == c)
     val readable = field.exists(_.isPrimitive) && {
       val t = field.get.asPrimitiveType
       val signedInt = t.getLogicalTypeAnnotation match {
@@ -1088,9 +1086,9 @@ object TimeTravel {
       (dt, t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
         case (ByteType | ShortType | IntegerType, INT32, _) => signedInt
         case (LongType, INT64, _) => signedInt
-        case (DateType, INT32, _: DateLogicalTypeAnnotation) => !legacy
+        case (DateType, INT32, _: DateLogicalTypeAnnotation) => true
         case (TimestampType | TimestampNTZType, INT64, ts: TimestampLogicalTypeAnnotation) =>
-          !legacy && ts.getUnit == TimeUnit.MICROS
+          ts.getUnit == TimeUnit.MICROS
         case _ => false
       }
     }

@@ -2,15 +2,39 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge to the one `private[sql]` constructor the library's native
-  * operator API needs: building a DataFrame from a custom LogicalPlan
-  * (the extension-point Spark itself uses for every DataFrame API
-  * method). Kept to this single call — everything else in the library
-  * goes through public API.
+/** Bridge to the `private[sql]` members the library's native operator
+  * API needs, starting with building a DataFrame from a custom
+  * LogicalPlan (the extension-point Spark itself uses for every
+  * DataFrame API method). Everything else in the library goes through
+  * public API.
   */
 object GraftPlanApi {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A checkpointed DataFrame (`localCheckpoint` / `checkpoint`) whose
+    * planner statistics say it holds `rows` rows. A checkpoint keeps
+    * the size estimate of the plan it cut, which after a join can be
+    * orders of magnitude above what it materialized; the join planner
+    * then shuffles the other side instead of broadcasting this one. The
+    * size is `rows` times the schema's estimated row width. */
+  def withRowCount(df: DataFrame, rows: Long): DataFrame = df.queryExecution.logical match {
+    case r: execution.LogicalRDD =>
+      val stats = catalyst.plans.logical.Statistics(
+        sizeInBytes = catalyst.plans.logical.statsEstimation.EstimationUtils
+          .getSizePerRow(r.output) * rows,
+        rowCount = Some(BigInt(rows)))
+      ofRows(df.sparkSession, execution.LogicalRDD(r.output, r.rdd,
+        r.outputPartitioning, r.outputOrdering, r.isStreaming, r.stream)(
+        df.sparkSession.asInstanceOf[classic.SparkSession], Some(stats), Some(r.constraints)))
+    case other => throw new IllegalArgumentException(
+      s"withRowCount needs a checkpointed DataFrame, got ${other.nodeName}")
+  }
+
+  /** Spark's own DIVIDE_BY_ZERO error (ANSI mode), for fused kernels
+    * that replace a composed division. */
+  def divideByZeroError(): ArithmeticException =
+    errors.QueryExecutionErrors.divideByZeroError(null)
 
   /** Wrap a Catalyst expression as a user-facing Column — the inverse
     * bridge, needed by the SQL DML translation

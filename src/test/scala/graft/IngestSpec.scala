@@ -197,6 +197,40 @@ class IngestSpec extends SparkSpec {
     assert(n <= 12, s"incremental ran $n Spark jobs")
   }
 
+  test("a CDC upsert broadcasts the changed keys: its staged write shuffles no store rows") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("ingest_bcast").toFile.getAbsolutePath
+    val (ledger, store) = (s"$dir/ledger", s"$dir/store")
+    // enough files that the ledger diff's join estimate (the product of
+    // its inputs) passes the broadcast threshold, as it does at scale
+    val landed = initial.unionByName(filesDf((0 until 150).map(i =>
+      (s"f$i.txt", s"http://x.io/f$i.txt", t0, s"file $i words".getBytes("UTF-8")))))
+    IngestJob.fullRefresh(spark, landed, ledger, store, "2023-01-01")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val changed = landed.withColumn("last_modified",
+        when(col("name") === "c.txt", lit(t1)).otherwise(col("last_modified")))
+      IngestJob.incremental(spark, changed, ledger, store, "2023-02-01")
+      // the listener bus delivers in order: the marker comes last
+      spark.range(1).toDF("ingest_bcast_marker").collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!plans.toArray.exists(_.toString.contains("ingest_bcast_marker")) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val staged = plans.toArray.map(_.toString).filter(_.contains("store.staging"))
+    assert(staged.length == 1, plans)
+    assert(staged.head.contains("BroadcastHashJoin") &&
+      !staged.head.contains("Exchange hashpartitioning"),
+      s"the staged write must broadcast the changed keys:\n${staged.head}")
+  }
+
   test("unsupported file types are filtered before parsing") {
     val files = filesDf(Seq(
       ("ok.txt", "u", t0, "plain text".getBytes("UTF-8")),

@@ -575,16 +575,6 @@ class LayoutSpec extends SparkSpec {
     assert(ptP.collect().toSeq == ptS.collect().toSeq)
   }
 
-  /** Run `body` with session settings applied, then restore them. */
-  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** The footer metadata of every data file of a table version. */
   private def footers(dir: String, v: Long) = {
     import org.apache.parquet.hadoop.ParquetFileReader

@@ -43,6 +43,14 @@ object Oracles {
       conv(substring(md5(concat(c, lit(":"), j.cast("string"))), 1, 4), 16, 10)
         .cast("double") / 32768.0d - 1.0d)
 
+  /** L2 normalization (`graft_l2_normalize`): an in-order `acc + x*x`
+    * fold from 0.0, `sqrt`, then `x / norm` per element. The lambda
+    * body names `v`, so `v` is evaluated once per element plus once. */
+  def l2Normalize(v: Column): Column = {
+    val norm = sqrt(aggregate(v, lit(0.0d), (acc, x) => acc + x * x))
+    transform(v, x => x / norm)
+  }
+
   /** G2 fixed-size word chunks with overlap (`graft_chunk_words`):
     * element i is the i-th overlapping chunk. */
   def chunkFixedWords(c: Column, chunkSize: Int, overlapFraction: Double): Column = {

@@ -83,6 +83,52 @@ class PlanSpec extends SparkSpec {
       "chunk+enrich must stay shuffle-free end to end")
   }
 
+  /** `graft_*` kernel calls inside a lambda body that reference none of
+    * that lambda's variables. Spark evaluates a lambda body per element
+    * and does not hoist invariant subexpressions, so each such call
+    * re-runs for every element. */
+  private def invariantKernelsInLambdas(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, NamedLambdaVariable}
+    df.queryExecution.optimizedPlan.flatMap(_.expressions).flatMap(_.collect {
+      case l: LambdaFunction =>
+        val vars = l.arguments.flatMap(_.collect { case v: NamedLambdaVariable => v.exprId }).toSet
+        l.function.collect {
+          case k if k.prettyName.startsWith("graft_") && !k.exists {
+            case v: NamedLambdaVariable => vars(v.exprId)
+            case _ => false
+          } => k.sql
+        }
+    }.flatten)
+  }
+
+  private def kernelCalls(df: DataFrame, kernel: String): Int =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions)
+      .map(_.collect { case e if e.prettyName == kernel => e }.size).sum
+
+  test("ingest and doc pipelines embed each chunk once") {
+    import spark.implicits._
+    val files = Seq(("a.txt", "u", java.sql.Timestamp.valueOf("2023-01-01 00:00:00"),
+        ("alpha beta " * 30).getBytes("UTF-8")))
+      .toDF("name", "url", "last_modified", "content")
+    val plans = Seq(
+      "prepareVectorData" -> graft.pipeline.IngestJob.prepareVectorData(files, "2023-01-01"),
+      "DocPipeline.vectors" -> DocPipeline.vectors(Tables(spark, sf, "documents")))
+    for ((name, df) <- plans) {
+      assert(kernelCalls(df, "graft_embed") == 1,
+        s"$name: one graft_embed per chunk:\n${df.queryExecution.optimizedPlan}")
+      assert(invariantKernelsInLambdas(df).isEmpty,
+        s"$name: ${invariantKernelsInLambdas(df)}")
+    }
+    for (q <- Seq("q_pipeline_embed", "q_doc_chunks")) {
+      val df = SparkEntry.queries(q)(spark, sf)
+      assert(invariantKernelsInLambdas(df).isEmpty, s"$q: ${invariantKernelsInLambdas(df)}")
+    }
+    // the check sees the composed normalization re-embed per element
+    val composed = Tables(spark, sf, "documents").select(Oracles.l2Normalize(
+      graft.functions.Embedders.deterministicEmbedIn(spark, col("text"))))
+    assert(invariantKernelsInLambdas(composed).exists(_.startsWith("graft_embed(")))
+  }
+
   test("decode kernels and attachment explode run narrow: one output-sort exchange at most") {
     // encode → decode → featurize (image, audio) and the MSG
     // walk-explode-reparse are all per-row work; at 100 TB the only
@@ -146,6 +192,19 @@ class PlanSpec extends SparkSpec {
       val p = phys(SparkEntry.queries(query)(spark, sf))
       assert(p.contains(kernel), s"$query must plan $kernel:\n$p")
     }
+  }
+
+  test("a warm pass of the headline queries compiles no new classes") {
+    // GraftSession sizes the JVM-wide codegen cache to hold a pass's
+    // working set; at Spark's default of 100 entries it did not
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def pass(): Unit = Bench.headline.foreach(q =>
+      SparkEntry.queries(q)(spark, sf).write.mode("overwrite").format("noop").save())
+    pass()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    pass()
+    val again = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    assert(again == 0, s"the second pass compiled $again classes")
   }
 
   test("bucketed tables co-locate the equi-join: no shuffle exchange") {

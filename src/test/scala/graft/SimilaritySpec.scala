@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.Similarity
+import graft.functions.{Embedders, Similarity}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -127,6 +127,72 @@ class SimilaritySpec extends SparkSpec {
     val nulls = Seq((1L, null: String)).toDF("id", "t")
       .select(call_function("graft_embed", col("t"), lit(8)).as("e")).head()
     assert(nulls.isNullAt(0))
+  }
+
+  /** Each row's array as raw bits, nulls kept: None for a null array,
+    * None in a slot for a null element. */
+  private def bitsOf(r: org.apache.spark.sql.Row, i: Int): Option[Seq[Option[Long]]] =
+    if (r.isNullAt(i)) None
+    else Some(r.getSeq[java.lang.Double](i).map(d =>
+      Option(d).map(x => java.lang.Double.doubleToRawLongBits(x))))
+
+  /** `v` normalized by the fused kernel and by the composed oracle, per
+    * row, over `df` and over a repartitioned copy: local rows fold at
+    * planning by interpreted eval, the copy runs generated code in tasks. */
+  private def l2Pairs(df: org.apache.spark.sql.DataFrame) =
+    Seq(df, df.repartition(2)).flatMap(_.select(col("id"),
+        Embedders.l2Normalize(col("v")).as("fused"),
+        Oracles.l2Normalize(col("v")).as("composed"))
+      .collect().map(r => (r.getLong(0), bitsOf(r, 1), bitsOf(r, 2))))
+
+  test("fused L2Normalize is bit-identical to the composed normalization") {
+    // real chunk embeddings, at the stored dim and a short one
+    val chunks = graft.pipeline.DocPipeline.chunks(Tables(spark, sf, "documents"))
+      .select(monotonically_increasing_id().as("id"), col("chunk"))
+    for (dim <- Seq(64, 8)) {
+      val pairs = l2Pairs(chunks.select(col("id"),
+        Embedders.deterministicEmbedIn(spark, col("chunk"), dim).as("v")))
+      assert(pairs.size > 100)
+      pairs.foreach { case (id, fused, composed) =>
+        assert(fused.exists(_.size == dim) && fused == composed, s"dim $dim row $id")
+      }
+    }
+    // edge shapes: empty, null, a null element (the composed norm is null,
+    // so every element is), NaN, and no zero norm
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("v", ArrayType(DoubleType, containsNull = true))))
+    def arrays(vs: Seq[java.lang.Double]*) = {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(vs.zipWithIndex.map { case (v, i) => Row(i.toLong, v) }.asJava, schema)
+    }
+    val edges = l2Pairs(arrays(Seq(), null, Seq(1.0, null, 2.0),
+      Seq(3.0, -4.0), Seq(Double.NaN, 1.0), Seq(-0.0, 5.0)))
+    edges.foreach { case (id, fused, composed) => assert(fused == composed, s"edge row $id") }
+    assert(edges.collect { case (1L, f, _) => f }.forall(_.isEmpty), "null array -> null")
+    assert(edges.collect { case (0L, f, _) => f }.forall(_.contains(Nil)), "empty -> empty")
+    assert(edges.collect { case (2L, f, _) => f }.forall(_.contains(Seq(None, None, None))),
+      "a null element nulls every element")
+    // a zero norm (zeros, or squares that underflow to 0.0) divides by
+    // zero: DIVIDE_BY_ZERO under ANSI in both forms, all nulls otherwise
+    val zeros = arrays(Seq(0.0, 0.0), Seq(-0.0), Seq(1e-200, -1e-200))
+    withConf("spark.sql.ansi.enabled" -> "false") {
+      val pairs = l2Pairs(zeros)
+      pairs.foreach { case (id, fused, composed) =>
+        assert(fused == composed && fused.exists(_.forall(_.isEmpty)), s"zero row $id")
+      }
+    }
+    withConf("spark.sql.ansi.enabled" -> "true") {
+      def divideByZero(form: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+        Seq(zeros, zeros.repartition(2)).foreach { df =>
+          val e = intercept[Exception](df.select(form(col("v"))).collect())
+          assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(t => String.valueOf(t.getMessage).contains("DIVIDE_BY_ZERO")), e)
+        }
+      divideByZero(Embedders.l2Normalize)
+      divideByZero(Oracles.l2Normalize)
+    }
   }
 
   test("cosineIn calls the fused graft_cosine kernel") {
