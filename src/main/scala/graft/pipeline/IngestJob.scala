@@ -28,9 +28,10 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * Scale: parse→chunk→embed is narrow (projections + one generator —
   * the DocPipeline shape, plan-asserted shuffle-free); the CDC diff is
-  * one join on `name`; the store upsert rewrites only the touched
-  * `load_dt=` partitions, each once (VectorStore's partition swap).
-  * Driver state is the RunReport counters, never data.
+  * one join on `name`; the store upsert is one keyed TimeTravel commit
+  * that tombstones the superseded chunks and adds the fresh ones, so it
+  * writes O(changed chunks) and rewrites no stored row. Driver state is
+  * the RunReport counters, never data.
   *
   * Embedding: the deterministic offline embedder by default (SURVEY
   * §7.4), one `graft_embed` per chunk normalized by the fused
@@ -113,9 +114,10 @@ object IngestJob {
     * shrink a file's chunk count, even to zero, so a keyed upsert alone
     * would leave orphans). The superseded names come from the diff, not
     * from the fresh chunks, so an update that yields no chunks still
-    * drops its old ones. Each touched `load_dt=` partition is rewritten
-    * once and swapped in with its old and new chunks together, so an
-    * updated file is never without chunks in between. The ledger is
+    * drops its old ones. The old chunks' tombstones and the new chunks
+    * publish in one manifest rename, so a reader never sees an updated
+    * file without chunks, or with both. A run that finds nothing changed
+    * leaves the store as it is. The ledger is
     * overwritten only after the store: a crash before that replays the
     * same diff, and the replay's upsert (key- and name-idempotent)
     * converges on the same store. Unchanged files are never parsed,
@@ -127,10 +129,12 @@ object IngestJob {
     // end-of-run ledger overwrite (Spark refuses to overwrite a path a
     // live plan still reads)
     val (changed, changedN) = pinned(Ledger.newAndUpdated(files, Ledger.read(spark, ledgerPath)))
-    // materialized once: the upsert reads the vectors twice (their
-    // partitions, then the rewrite), and parse+chunk+embed runs once
+    // materialized once: the upsert reads the vectors twice (their keys
+    // for the tombstones, then the new data dir), and parse+chunk+embed
+    // runs once
     val (vectors, chunksN) = pinned(prepareVectorData(changed.drop("change_type"), loadDt))
-    VectorStore.upsert(spark, storePath, vectors, superseded = Some(changed.select("name")))
+    if (changedN > 0)
+      VectorStore.upsert(spark, storePath, vectors, superseded = Some(changed.select("name")))
     val filesIn = writeLedger(files, ledgerPath)
     RunReport(filesIn, changedN, chunksN)
   }

@@ -4,17 +4,17 @@ import graft.sources.{TimeTravel, TimeTravelTable}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** Deletion-vector application for the DSv2 time-travel scan (§4
-  * optimizer-rule tier): a `graft-table` relation whose pinned snapshot
-  * carries merge-on-read tombstones is rewritten into the SAME plan
-  * [[TimeTravel.read]] builds — parquet scan of the snapshot's data
-  * dirs extended with (`_metadata.file_path`, `row_index`), LEFT ANTI
-  * join against the O(deleted-rows) tombstone parquet, positional
-  * columns dropped. `SELECT … FROM t VERSION AS OF n` therefore works
+  * optimizer-rule tier): a `graft-table` or `graft-store` relation
+  * whose pinned snapshot carries merge-on-read tombstones is rewritten
+  * into the SAME plan [[TimeTravel.read]] builds — parquet scan of the
+  * snapshot's data dirs extended with (`_metadata.file_path`,
+  * `row_index`), LEFT ANTI join against the O(deleted-rows) tombstone
+  * parquet, positional columns dropped. `SELECT … FROM t VERSION AS OF n` therefore works
   * on MoR-deleted snapshots with zero user action, exactly like the
   * library read path.
   *
@@ -37,13 +37,19 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   */
 object DvApply extends Rule[LogicalPlan] {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+    // a DELETE's target names the table it changes, not rows it reads
+    case d: DeleteFromTable => d
+    case _ => splice(plan)
+  }
+
+  private def splice(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     // COLUMN-MAPPED snapshots splice through the same mechanic (r10):
     // the library read resolves physical→logical per directory, so a
     // renamed/widened table is SELECTable — and each VERSION AS OF
     // serves its own era's names, because the spliced read is pinned
     // to the relation's snapshot
-    case r @ DataSourceV2Relation(t: TimeTravelTable, _, _, _, _, _)
+    case r @ DataSourceV2Relation(TimeTravelTable.Of(t), _, _, _, _, _)
         if t.pendingDvs || t.mapped =>
       val merged = TimeTravel
         .read(SparkSession.active, t.tablePath, Some(t.snapshotVersion))

@@ -50,7 +50,7 @@ import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, Sh
 object StatsPrune extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case f @ Filter(cond, r @ DataSourceV2Relation(t: TimeTravelTable, _, _, _, _, _))
+    case f @ Filter(cond, r @ DataSourceV2Relation(TimeTravelTable.Of(t), _, _, _, _, _))
         if !t.pendingDvs =>
       try rewrite(f, cond, r, t) catch {
         // a malformed sidecar must degrade to the unpruned scan, never

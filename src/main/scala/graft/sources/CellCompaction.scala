@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.col
   * the FILE COUNT — not the byte count — becomes the probe scheduler's
   * bottleneck (every probe lists its cells; a thousand appends = a
   * thousand files per cell). This is the index-side sibling of
-  * [[VectorStore.compact]] / [[TimeTravel.optimize]]: pure layout
+  * [[TimeTravel.optimize]] (which [[VectorStore.compact]] runs): pure layout
   * maintenance, row set unchanged, probe ≡ pre-compaction probe
   * (asserted in IndexSpec).
   *
@@ -34,7 +34,8 @@ import org.apache.spark.sql.functions.col
   * publish is two renames (park live, move staged in), and a probe
   * listing the cell in the instant between them would see it missing
   * and silently return a partial result. Quiesce readers for the
-  * compaction window, exactly as for [[VectorStore.compact]].
+  * compaction window — unlike [[VectorStore.compact]], whose one
+  * manifest rename keeps readers on a whole snapshot.
   */
 object CellCompaction {
 

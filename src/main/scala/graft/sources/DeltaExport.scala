@@ -200,8 +200,7 @@ object DeltaExport {
       v: Long): Map[String, Seq[Long]] = {
     val dvs = TimeTravel.dvListing(spark, sourcePath, v)
     if (dvs.isEmpty) Map.empty
-    else spark.read.parquet(dvs.map(d => s"$sourcePath/$d"): _*)
-      .select(TimeTravel.DvCols.head, TimeTravel.DvCols.last)
+    else TimeTravel.readDvs(spark, sourcePath, dvs)
       .distinct().collect()
       .map(r => normKey(r.getString(0)) -> r.getLong(1))
       .groupBy(_._1).map { case (f, ps) => f -> ps.map(_._2).toSeq.sorted }

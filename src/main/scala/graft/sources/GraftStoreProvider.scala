@@ -25,22 +25,23 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * }}}
   *
   * Semantics are [[VectorStore]]'s, unchanged behind the V2 surface:
-  * append IS upsert (replace-by-`chunk_id`, partition-scoped rewrite
-  * when the store is `load_dt`-partitioned, crash-safe staged swap
-  * otherwise — the reference's Weaviate batch upsert contract,
+  * append IS upsert (replace-by-`chunk_id` as one keyed TimeTravel
+  * commit — the reference's Weaviate batch upsert contract,
   * cmfunctions.py:177-223), and DELETE maps key predicates onto the
-  * partition-scoped anti-join rewrite (:226-261).
+  * same commit with no data dir (:226-261).
   *
   * Scale/plumbing choices:
-  *   - READ delegates to Spark's own [[ParquetTable]], so scans get the
-  *     native vectorized reader, filter pushdown, column pruning and
-  *     `load_dt` partition pruning — nothing re-implemented, nothing
-  *     lost vs reading the path directly.
+  *   - READ is the latest snapshot's [[TimeTravelTable]]: a parquet scan
+  *     of its data dirs with the native vectorized reader, filter
+  *     pushdown and column pruning; pending deletion vectors splice in
+  *     through [[graft.plans.DvApply]] and `load_dt` predicates skip
+  *     files through [[graft.plans.StatsPrune]], exactly as for
+  *     `graft-table`. A store still in the unversioned layout scans its
+  *     path as plain parquet until its first write adopts it.
   *   - WRITE uses the [[V1Write]] bridge: the committed V2 write API
-  *     hands the incoming rows to [[VectorStore.upsert]], which already
-  *     implements the partition-scoped dynamic-overwrite commit. A
-  *     bespoke BatchWrite would re-implement parquet commit machinery
-  *     for zero semantic gain.
+  *     hands the incoming rows to [[VectorStore.upsert]], which commits
+  *     through TimeTravel. A bespoke BatchWrite would re-implement
+  *     parquet commit machinery for zero semantic gain.
   *   - DELETE accepts only conjunctions of `chunk_id` IN/= predicates
   *     (`canDeleteWhere`); anything else falls back to Spark's error,
   *     never a silent full-table rewrite.
@@ -70,23 +71,31 @@ final class GraftStoreTable(path: String, options: CaseInsensitiveStringMap)
 
   private def spark: SparkSession = SparkSession.active
 
-  /** Fresh delegate per use: re-lists the path, so a scan planned after
-    * an upsert sees the swapped partitions (no stale file index). */
-  private def delegate: ParquetTable =
-    ParquetTable(name(), spark, options, Seq(path), None, classOf[ParquetFileFormat])
+  /** The latest snapshot, resolved when the table is built (each query
+    * builds its own); None while the store is unversioned. */
+  private[graft] val snapshot: Option[TimeTravelTable] =
+    if (TimeTravel.versions(spark, path).isEmpty) None
+    else Some(new TimeTravelTable(path, None, options))
+
+  /** The parquet scan of the snapshot's data dirs, or of an unversioned
+    * path. [[graft.plans.DvApply]] splices every read of a snapshot with
+    * tombstones, so this scan is reached unspliced only as a DELETE's
+    * target, whose rows are never read. */
+  private def files: ParquetTable = snapshot.fold(
+    ParquetTable(name(), spark, options, Seq(path), None, classOf[ParquetFileFormat]))(_.delegate)
 
   override def name(): String = s"graft_store($path)"
 
-  override def schema(): StructType = delegate.schema
+  override def schema(): StructType = files.schema
 
-  override def partitioning(): Array[Transform] = delegate.partitioning()
+  override def partitioning(): Array[Transform] = files.partitioning()
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
 
   override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder =
-    delegate.newScanBuilder(caseInsensitiveOptions)
+    files.newScanBuilder(caseInsensitiveOptions)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate {

@@ -659,9 +659,9 @@ object IcebergExport {
     if (byKey.size != dataPaths.size) throw new IllegalStateException(
       s"two manifest data paths normalize to one key at $targetPath — " +
         "cannot rewrite delete file_paths unambiguously")
-    val raw = spark.read.parquet(dvDirs.map(d => s"$sourcePath/$d"): _*)
+    val raw = TimeTravel.readDvs(spark, sourcePath, dvDirs)
       .select(col(TimeTravel.DvCols.head).as("file_path"),
-        col(TimeTravel.DvCols.last).cast("long").as("pos"))
+        col(TimeTravel.DvCols.last).as("pos"))
       .distinct().collect()
     val pairRows = raw.map { r =>
       val manifestForm = byKey.getOrElse(normKey(r.getString(0)),
@@ -712,10 +712,9 @@ object IcebergExport {
     if (byKey.size != dataPaths.size) throw new IllegalStateException(
       s"two manifest data paths normalize to one key at $targetPath — " +
         "cannot address deletion vectors unambiguously")
-    def pairsOf(dirs: Seq[String]) = spark.read
-      .parquet(dirs.map(d => s"$sourcePath/$d"): _*)
+    def pairsOf(dirs: Seq[String]) = TimeTravel.readDvs(spark, sourcePath, dirs)
       .select(col(TimeTravel.DvCols.head).as("file_path"),
-        col(TimeTravel.DvCols.last).cast("long").as("pos"))
+        col(TimeTravel.DvCols.last).as("pos"))
       .distinct().collect()
       .map(r => (normKey(r.getString(0)), r.getLong(1)))
     val affected: Set[String] = pairsOf(newDvDirs).map(_._1).toSet

@@ -22,12 +22,13 @@ import scala.concurrent.duration.{Duration, FiniteDuration}
   * one shared deadline across all thunks (not per-thunk, so n slow
   * jobs can't stack n timeouts), generous by default (1 h — local
   * fixture jobs run in seconds; a cluster run tunes
-  * `SPARK_GRAFT_PARALLEL_TIMEOUT_SEC` to its own job envelope). On
-  * timeout the pool's threads are interrupted (best effort — a Spark
-  * action responds to interrupt by cancelling its job) and the
-  * exception names the deadline, so the only broken piece of the
-  * all-siblings-finished contract is the one the caller is being told
-  * about loudly.
+  * `SPARK_GRAFT_PARALLEL_TIMEOUT_SEC` to its own job envelope). Every
+  * thunk's Spark jobs carry one job tag per call; on timeout the call
+  * cancels every job with that tag, interrupts the pool's threads and
+  * throws an exception naming the deadline — so no straggler keeps
+  * writing a staging dir that the caller's retry rewrites. The pool's
+  * threads are daemons: a thunk that ignores the interrupt cannot keep
+  * the JVM alive.
   */
 private[graft] object ParallelJobs {
 
@@ -51,15 +52,24 @@ private[graft] object ParallelJobs {
   def awaitAll[A](thunks: Seq[() => A],
       timeout: Duration = defaultTimeout): Seq[A] = {
     require(thunks.nonEmpty, "awaitAll needs at least one job")
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val tag = s"graft-parallel-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(thunks.size, maxConcurrency))
+      math.min(thunks.size, maxConcurrency), { (r: Runnable) =>
+        val t = new Thread(r, tag)
+        t.setDaemon(true)
+        t
+      })
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
       // Future(Try(...)) never fails, so every Await below runs to
       // completion within the shared deadline — the first failure is
       // rethrown only once all siblings have finished
-      val futures = thunks.map(t => scala.concurrent.Future(scala.util.Try(t())))
+      val futures = thunks.map(t => scala.concurrent.Future(scala.util.Try {
+        sc.addJobTag(tag)
+        try t() finally sc.removeJobTag(tag)
+      }))
       val deadline = timeout match {
         case f: FiniteDuration => Some(f.fromNow)
         case _                 => None
@@ -71,7 +81,8 @@ private[graft] object ParallelJobs {
         try scala.concurrent.Await.result(f, remaining)
         catch {
           case _: java.util.concurrent.TimeoutException =>
-            pool.shutdownNow() // interrupt stragglers (best effort)
+            sc.cancelJobsWithTag(tag)
+            pool.shutdownNow()
             throw new java.util.concurrent.TimeoutException(
               s"parallel job ${i + 1}/${thunks.size} still running after " +
                 s"$timeout (SPARK_GRAFT_PARALLEL_TIMEOUT_SEC) — failing the " +

@@ -25,8 +25,8 @@ import org.apache.spark.sql.types._
   *     is never rewritten);
   *   - a manifest is published by atomic rename from a staging name, so
   *     readers either see a complete snapshot or the previous one —
-  *     never a half-written table (the same checked-rename discipline
-  *     as [[VectorStore]]'s partition swap);
+  *     never a half-written table. Every writer goes through this one
+  *     publish, [[VectorStore]] included;
   *   - readers resolve a version (or latest) to its listing and read
   *     exactly those directories — old snapshots stay readable until
   *     explicitly vacuumed, which is what makes reproducible training
@@ -63,6 +63,9 @@ object TimeTravel {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
+  /** The dirs a table keeps under its path. */
+  private[sources] val LayoutDirs = Set("_versions", "data", "dv", "stats")
+
   private def vname(v: Long) = f"v$v%05d"
   private def manifestDir(path: String) = new Path(s"$path/_versions")
   private def dataDir(path: String, v: Long) = s"data/${vname(v)}"
@@ -72,6 +75,40 @@ object TimeTravel {
     * `_metadata.row_index` is stable per physical parquet file, which
     * is exactly why table formats key deletion vectors on it. */
   private[sources] val DvCols = Seq("_dv_fp", "_dv_ri")
+
+  private val DvSchema = StructType(Seq(
+    StructField(DvCols.head, StringType), StructField(DvCols.last, LongType)))
+
+  /** The tombstones of the DV dirs `dvs` (relative to `path`), read with
+    * their fixed schema: no schema-inference job. */
+  private[sources] def readDvs(spark: SparkSession, path: String,
+      dvs: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema).parquet(dvs.map(d => s"$path/$d"): _*)
+
+  /** The (file, pos) columns of a file scan, named [[DvCols]]. */
+  private def positions: Seq[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.col
+    Seq(col("_metadata.file_path").as(DvCols.head),
+      col("_metadata.row_index").as(DvCols.last))
+  }
+
+  /** The rows of `positioned` (a scan carrying [[DvCols]]) that no
+    * tombstone of `dvs` names; the positions stay. The DV side is
+    * O(deleted rows), so AQE broadcasts it when small. */
+  private def minusDvs(spark: SparkSession, path: String, positioned: DataFrame,
+      dvs: Seq[String]): DataFrame =
+    if (dvs.isEmpty) positioned
+    else positioned.join(readDvs(spark, path, dvs), DvCols, "left_anti")
+
+  /** Merge-on-read: the rows of the plain file scan `data` that no
+    * tombstone of `dvs` names. */
+  private[sources] def applyDvs(spark: SparkSession, path: String, data: DataFrame,
+      dvs: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    if (dvs.isEmpty) data
+    else minusDvs(spark, path, data.select(col("*") +: positions: _*), dvs)
+      .drop(DvCols: _*)
+  }
 
   /** Versions in commit order (empty for a fresh path). */
   def versions(spark: SparkSession, path: String): Seq[Long] = {
@@ -86,6 +123,13 @@ object TimeTravel {
 
   private def latest(spark: SparkSession, path: String): Option[Long] =
     versions(spark, path).lastOption
+
+  /** `version`, else the latest one; `missing` names the failure when
+    * the table has none. */
+  private def resolve(spark: SparkSession, path: String, version: Option[Long] = None,
+      missing: String = "no versions"): Long =
+    version.orElse(latest(spark, path)).getOrElse(
+      throw new IllegalArgumentException(s"$missing at $path"))
 
   /** The newest version committed AT OR BEFORE `tsMillis` — the
     * `TIMESTAMP AS OF` resolution rule, read from the manifests' own
@@ -192,23 +236,21 @@ object TimeTravel {
   /** Per-directory mapped scan (physical → logical, cast to declared
     * type, absent physical columns null) with optional (file, pos)
     * metadata columns — the read substrate every mapped-table path
-    * shares. One plan branch per directory: a widened table's dirs
-    * legitimately disagree on parquet types, which a single mixed scan
-    * cannot host; directory count is bounded by commits and folds back
-    * to 1 at the next OPTIMIZE. */
-  private def mappedScan(spark: SparkSession, path: String, dirs: Seq[String],
+    * shares. `groups` holds one directory's paths (the dir itself, or
+    * some of its files) per group. One plan branch per directory: a
+    * widened table's dirs legitimately disagree on parquet types, which
+    * a single mixed scan cannot host; directory count is bounded by
+    * commits and folds back to 1 at the next OPTIMIZE. */
+  private def mappedScan(spark: SparkSession, groups: Seq[Seq[String]],
       cols: Seq[ColMap], withPos: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val frames = dirs.map { d =>
-      val raw = spark.read.parquet(s"$path/$d")
+    val frames = groups.map { g =>
+      val raw = spark.read.parquet(g: _*)
       val have = raw.columns.toSet
       val projected = cols.map { c =>
         (if (have(c.physical)) col(c.physical).cast(c.typeDdl)
          else lit(null).cast(c.typeDdl)).as(c.logical)
-      } ++ (if (withPos)
-        Seq(col("_metadata.file_path").as(DvCols.head),
-          col("_metadata.row_index").as(DvCols.last))
-      else Seq.empty)
+      } ++ (if (withPos) positions else Seq.empty)
       raw.select(projected: _*)
     }
     frames.reduce(_.unionByName(_))
@@ -225,8 +267,7 @@ object TimeTravel {
 
   private def publishColsChange(spark: SparkSession, path: String,
       next: Seq[ColMap]): Long = {
-    val cur = latest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $path"))
+    val cur = resolve(spark, path)
     val v = cur + 1
     require(next.map(_.logical).distinct.size == next.size,
       "column mapping must keep logical names unique")
@@ -241,8 +282,7 @@ object TimeTravel {
     * with ITS OWN mapping — pre-rename snapshots still serve the old
     * name. */
   def renameColumn(spark: SparkSession, path: String, from: String, to: String): Long = {
-    val cur = latest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $path"))
+    val cur = resolve(spark, path)
     val cols = currentOrIdentityCols(spark, path, cur)
     require(cols.exists(_.logical == from), s"no column $from to rename")
     require(!cols.exists(_.logical == to), s"column $to already exists")
@@ -254,8 +294,7 @@ object TimeTravel {
     * the bytes stay in the immutable files (still served to pre-drop
     * snapshots) until OPTIMIZE rewrites and VACUUM reclaims. */
   def dropColumn(spark: SparkSession, path: String, name: String): Long = {
-    val cur = latest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $path"))
+    val cur = resolve(spark, path)
     val cols = currentOrIdentityCols(spark, path, cur)
     require(cols.exists(_.logical == name), s"no column $name to drop")
     require(cols.size > 1, "cannot drop the last column")
@@ -276,8 +315,7 @@ object TimeTravel {
     * — anything else must be an explicit rewrite. */
   def widenColumn(spark: SparkSession, path: String, name: String,
       toDdl: String): Long = {
-    val cur = latest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $path"))
+    val cur = resolve(spark, path)
     val cols = currentOrIdentityCols(spark, path, cur)
     val c = cols.find(_.logical == name).getOrElse(
       throw new IllegalArgumentException(s"no column $name to widen"))
@@ -545,48 +583,33 @@ object TimeTravel {
     * own original schema). */
   def read(spark: SparkSession, path: String, version: Option[Long] = None,
       mergeSchema: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val v = version.orElse(latest(spark, path)).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $path"))
+    val v = resolve(spark, path, version)
     val m = manifest(spark, path, v)
-    val (dirs, dvs, mapping) = (m.dirs, m.dvs, Some(m.cols).filter(_.nonEmpty))
-    if (dirs.isEmpty) spark.emptyDataFrame
-    else mapping match {
-      case Some(cols) =>
-        // column-mapped snapshot: per-dir physical→logical projection
-        // (each version resolves through ITS OWN map — time travel
-        // across a rename serves each era's names)
-        val data = mappedScan(spark, path, dirs, cols, withPos = dvs.nonEmpty)
-        if (dvs.isEmpty) data
-        else data.join(spark.read.parquet(dvs.map(d => s"$path/$d"): _*),
-          DvCols, "left_anti").drop(DvCols: _*)
-      case None =>
-        val data = spark.read.option("mergeSchema", mergeSchema.toString)
-          .parquet(dirs.map(d => s"$path/$d"): _*)
-        if (dvs.isEmpty) data
-        else {
-          // merge-on-read: subtract the tombstoned (file, pos) pairs. The
-          // DV side is O(deleted rows) and AQE broadcasts it when small —
-          // the read-amplification a MoR table pays until OPTIMIZE folds
-          // the DVs back into data files.
-          val withPos = data.select(col("*"),
-            col("_metadata.file_path").as(DvCols.head),
-            col("_metadata.row_index").as(DvCols.last))
-          val dv = spark.read.parquet(dvs.map(d => s"$path/$d"): _*)
-          withPos.join(dv, DvCols, "left_anti").drop(DvCols: _*)
-        }
+    // merge-on-read: the tombstoned (file, pos) pairs are subtracted —
+    // the read-amplification a MoR table pays until OPTIMIZE folds the
+    // DVs back into data files
+    if (m.dvs.isEmpty) scan(spark, path, m, withPos = false, mergeSchema)
+    else minusDvs(spark, path, scan(spark, path, m, withPos = true, mergeSchema), m.dvs)
+      .drop(DvCols: _*)
+  }
+
+  /** The LOGICAL scan of a snapshot's data dirs, optionally with each
+    * row's (file, pos) position: column-mapped snapshots project
+    * physical→logical per directory (each version resolves through ITS
+    * OWN map — time travel across a rename serves each era's names),
+    * plain ones keep one mixed scan. `mergeSchema` unions the plain
+    * dirs' schemas. */
+  private def scan(spark: SparkSession, path: String, m: Manifest,
+      withPos: Boolean, mergeSchema: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    if (m.cols.nonEmpty) mappedScan(spark, m.dirs.map(d => Seq(s"$path/$d")), m.cols, withPos)
+    else {
+      val data = spark.read.option("mergeSchema", mergeSchema.toString)
+        .parquet(m.dirs.map(d => s"$path/$d"): _*)
+      if (withPos) data.select(col("*") +: positions: _*) else data
     }
   }
 
-  /** Merge-on-read DELETE: tombstone the live rows matching `condition`
-    * by (file, row-position) in a NEW deletion-vector directory — the
-    * data files are never rewritten. Cost is one scan emitting only the
-    * matched positions (O(matches) output); the pre-delete snapshot
-    * stays time-travelable, and [[optimize]] later folds the DVs into a
-    * compacted rewrite. Rows already tombstoned are skipped, so deletes
-    * compose without double-counting. This is the cheap-delete half of
-    * the copy-on-write/merge-on-read trade: [[merge]]/[[purge]] rewrite
-    * (CoW), deleteMoR defers the rewrite to maintenance time. */
   /** Loud decline for faces that plan a single mixed physical scan and
     * so cannot host a column mapping (file skipping, the DSv2/SQL
     * relation): silently scanning physical names would serve wrong or
@@ -598,18 +621,6 @@ object TimeTravel {
       throw new UnsupportedOperationException(
         s"$what does not support column-mapped tables (rename/drop/widen " +
           s"history at $path); read via TimeTravel.read")
-
-  /** (file, pos)-annotated LOGICAL scan of a snapshot's data dirs —
-    * the row-level ops' shared substrate; mapped tables project per
-    * directory, plain ones keep the single mixed scan. */
-  private def scanWithPos(spark: SparkSession, path: String, m: Manifest): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    if (m.cols.nonEmpty) mappedScan(spark, path, m.dirs, m.cols, withPos = true)
-    else spark.read.parquet(m.dirs.map(d => s"$path/$d"): _*)
-      .select(col("*"),
-        col("_metadata.file_path").as(DvCols.head),
-        col("_metadata.row_index").as(DvCols.last))
-  }
 
   /** Loud resolution gate for row-level predicates/assignments: every
     * column an expression NAMES must exist in the snapshot's LOGICAL
@@ -640,34 +651,80 @@ object TimeTravel {
     }
   }
 
-  def deleteMoR(spark: SparkSession, path: String,
-      condition: org.apache.spark.sql.Column): Long = {
-    val cur = latest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"nothing to delete at $path"))
-    requireRefsResolvable(spark, path, cur, "DELETE predicate", Seq(condition))
+  /** What one row-level commit changes: the live rows it tombstones
+    * (carrying their [[DvCols]] positions), the rows of its one new data
+    * directory (LOGICAL shape), and the data directories it drops
+    * whole. */
+  private[sources] final case class RowChange(tombstones: Option[DataFrame],
+      data: Option[DataFrame] = None, dropDirs: Seq[String] = Nil)
+
+  /** The scaffold every row-level commit shares ([[deleteMoR]],
+    * [[updateMoR]], [[replaceWhere]], [[commitKeyed]] and the vector
+    * store's retention): resolve the latest manifest; hand `change` that
+    * manifest and the live rows of any of its data directories, each
+    * row with its (file, pos) position and the prior tombstones
+    * subtracted; write the tombstones and the new rows it returns as
+    * concurrent jobs into the next version's unpublished `dv/` and
+    * `data/` directories (the new data carries `statsCols` sidecars);
+    * then publish both, minus the dropped directories, in ONE manifest
+    * rename — a reader sees the whole change or none of it, and the
+    * previous snapshot stays time-travelable. `change` returning None
+    * commits nothing and returns the current version.
+    *
+    * A crash before the publish leaves only unpublished directories,
+    * which no reader lists and the retried commit of the same version
+    * overwrites. A concurrent writer that publishes that version first
+    * makes this one fail with [[CommitConflictException]]. */
+  private[sources] def rowLevelCommit(spark: SparkSession, path: String, what: String,
+      statsCols: Seq[String] = Nil)(
+      change: (Manifest, Seq[String] => DataFrame) => Option[RowChange]): Long = {
+    val cur = resolve(spark, path, missing = s"nothing to $what")
     val m = manifest(spark, path, cur)
-    val prevDvs = m.dvs
     val v = cur + 1
-    val data = scanWithPos(spark, path, m)
-    val live =
-      if (prevDvs.isEmpty) data
-      else data.join(
-        spark.read.parquet(prevDvs.map(d => s"$path/$d"): _*), DvCols, "left_anti")
-    live.filter(condition).select(DvCols.head, DvCols.tail: _*)
-      .write.mode("overwrite").parquet(s"$path/${dvDir(v)}")
-    publish(spark, path, v, m.dirs, dvs = prevDvs :+ dvDir(v), cols = m.cols)
-    v
+    val live = (dirs: Seq[String]) =>
+      minusDvs(spark, path, scan(spark, path, m.copy(dirs = dirs), withPos = true), m.dvs)
+    change(m, live) match {
+      case None => cur
+      case Some(c) =>
+        val mapping = Some(m.cols).filter(_.nonEmpty)
+        val writes: Seq[() => Unit] =
+          c.tombstones.toSeq.map(t => () =>
+            t.select(DvCols.head, DvCols.tail: _*)
+              .write.mode("overwrite").parquet(s"$path/${dvDir(v)}")) ++
+          c.data.toSeq.map(d => () => {
+            writeWithStats(d, path, v, mapping, statsCols, Nil); ()
+          })
+        if (writes.nonEmpty) ParallelJobs.awaitAll(writes)
+        publish(spark, path, v,
+          m.dirs.filterNot(c.dropDirs.toSet) ++ c.data.map(_ => dataDir(path, v)),
+          dvs = m.dvs ++ c.tombstones.map(_ => dvDir(v)), cols = m.cols)
+        v
+    }
   }
+
+  /** Merge-on-read DELETE: tombstone the live rows matching `condition`
+    * by (file, row-position) in a NEW deletion-vector directory — the
+    * data files are never rewritten. Cost is one scan emitting only the
+    * matched positions (O(matches) output); the pre-delete snapshot
+    * stays time-travelable, and [[optimize]] later folds the DVs into a
+    * compacted rewrite. Rows already tombstoned are skipped, so deletes
+    * compose without double-counting. This is the cheap-delete half of
+    * the copy-on-write/merge-on-read trade: [[merge]]/[[purge]] rewrite
+    * (CoW), deleteMoR defers the rewrite to maintenance time. */
+  def deleteMoR(spark: SparkSession, path: String,
+      condition: org.apache.spark.sql.Column): Long =
+    rowLevelCommit(spark, path, "delete") { (m, live) =>
+      requireRefsResolvable(spark, path, m.version, "DELETE predicate", Seq(condition))
+      Some(RowChange(Some(live(m.dirs).filter(condition))))
+    }
 
   /** Merge-on-read UPDATE: tombstone the live rows matching `condition`
     * and append their updated copies — `sets` maps column name → new
     * value expression (unmentioned columns carry over; values are cast
     * back to the column's declared type so the table schema never
-    * drifts). Both the deletion-vector directory and the new data
-    * directory publish in ONE manifest rename, so a reader sees either
-    * the whole update or none of it, and the pre-update snapshot stays
-    * time-travelable. Returns the new version (the current one when
-    * nothing matched — a no-op update does not commit).
+    * drifts). Both publish in one commit ([[rowLevelCommit]]). Returns
+    * the new version (the current one when nothing matched — a no-op
+    * update does not commit).
     *
     * Scale: cost is one scan + O(matched) tombstones + O(matched) new
     * rows — the 100 TB story for the typical low-selectivity UPDATE;
@@ -675,46 +732,24 @@ object TimeTravel {
     * later folds the DVs, same as [[deleteMoR]]). */
   def updateMoR(spark: SparkSession, path: String,
       condition: org.apache.spark.sql.Column,
-      sets: Seq[(String, org.apache.spark.sql.Column)]): Long = {
-    import org.apache.spark.sql.functions.col
-    val cur = latest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"nothing to update at $path"))
-    requireRefsResolvable(spark, path, cur, "UPDATE predicate/assignment",
-      condition +: sets.map(_._2))
-    val m = manifest(spark, path, cur)
-    val prevDvs = m.dvs
-    val mapping = Some(m.cols).filter(_.nonEmpty)
-    val v = cur + 1
-    val data = scanWithPos(spark, path, m)
-    val live =
-      if (prevDvs.isEmpty) data
-      else data.join(
-        spark.read.parquet(prevDvs.map(d => s"$path/$d"): _*), DvCols, "left_anti")
-    val origCols = data.columns.filterNot(DvCols.contains).toSeq
-    val setMap = sets.toMap
-    val unknown = setMap.keySet.diff(origCols.toSet)
-    require(unknown.isEmpty, s"UPDATE sets unknown column(s): ${unknown.mkString(", ")}")
-    // checkpoint pins the matched set: tombstones and updated copies
-    // must come from the SAME row set even under a flaky predicate
-    val hit = live.filter(condition).localCheckpoint()
-    if (hit.isEmpty) return cur
-    val updated = hit.select(origCols.map { c =>
-      setMap.get(c).map(_.cast(data.schema(c).dataType).as(c)).getOrElse(col(c))
-    }: _*)
-    // r16 (guide §2.6): tombstones and updated copies consume the SAME
-    // pinned hit set and land in DISJOINT unpublished directories — run
-    // the two writes as concurrent jobs (the small DV write back-fills
-    // the data write's task tail); the single manifest rename below
-    // still publishes both atomically
-    ParallelJobs.awaitAll[Unit](Seq(
-      () => hit.select(DvCols.head, DvCols.tail: _*)
-        .write.mode("overwrite").parquet(s"$path/${dvDir(v)}"),
-      () => mapping.map(toPhysical(updated, _)).getOrElse(updated)
-        .write.mode("overwrite").parquet(s"$path/${dataDir(path, v)}")))
-    publish(spark, path, v, m.dirs :+ dataDir(path, v), dvs = prevDvs :+ dvDir(v),
-      cols = m.cols)
-    v
-  }
+      sets: Seq[(String, org.apache.spark.sql.Column)]): Long =
+    rowLevelCommit(spark, path, "update") { (m, live) =>
+      import org.apache.spark.sql.functions.col
+      requireRefsResolvable(spark, path, m.version, "UPDATE predicate/assignment",
+        condition +: sets.map(_._2))
+      val rows = live(m.dirs)
+      val origCols = rows.columns.filterNot(DvCols.contains).toSeq
+      val setMap = sets.toMap
+      val unknown = setMap.keySet.diff(origCols.toSet)
+      require(unknown.isEmpty, s"UPDATE sets unknown column(s): ${unknown.mkString(", ")}")
+      // checkpoint pins the matched set: tombstones and updated copies
+      // must come from the SAME row set even under a flaky predicate
+      val hit = rows.filter(condition).localCheckpoint()
+      if (hit.isEmpty) None
+      else Some(RowChange(Some(hit), Some(hit.select(origCols.map { c =>
+        setMap.get(c).map(_.cast(rows.schema(c).dataType).as(c)).getOrElse(col(c))
+      }: _*))))
+    }
 
   /** Partition-scoped overwrite — the Delta `replaceWhere` shape:
     * delete(condition) + append(df) in ONE commit. Live rows matching
@@ -731,35 +766,35 @@ object TimeTravel {
     * statement would smuggle rows into partitions it promised not to
     * touch, so rows outside the predicate fail the commit up front. */
   def replaceWhere(spark: SparkSession, path: String,
-      condition: org.apache.spark.sql.Column, df: DataFrame): Long = {
-    val cur = latest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"nothing to replace at $path"))
-    requireRefsResolvable(spark, path, cur, "replaceWhere predicate", Seq(condition))
-    val offenders = df.filter(!condition).limit(1).count()
-    if (offenders > 0) throw new IllegalArgumentException(
-      "replaceWhere: replacement rows must satisfy the replace condition " +
-        "(a row outside the predicate would escape the declared scope)")
-    val m = manifest(spark, path, cur)
-    val prevDvs = m.dvs
-    val mapping = Some(m.cols).filter(_.nonEmpty)
-    val v = cur + 1
-    val data = scanWithPos(spark, path, m)
-    val live =
-      if (prevDvs.isEmpty) data
-      else data.join(
-        spark.read.parquet(prevDvs.map(d => s"$path/$d"): _*), DvCols, "left_anti")
-    // r16 (guide §2.6): the tombstone write and the replacement write
-    // share no state (live rows vs caller's df) and land in DISJOINT
-    // unpublished directories — concurrent jobs, one atomic publish
-    ParallelJobs.awaitAll[Unit](Seq(
-      () => live.filter(condition).select(DvCols.head, DvCols.tail: _*)
-        .write.mode("overwrite").parquet(s"$path/${dvDir(v)}"),
-      () => mapping.map(toPhysical(df, _)).getOrElse(df)
-        .write.mode("overwrite").parquet(s"$path/${dataDir(path, v)}")))
-    publish(spark, path, v, m.dirs :+ dataDir(path, v), dvs = prevDvs :+ dvDir(v),
-      cols = m.cols)
-    v
-  }
+      condition: org.apache.spark.sql.Column, df: DataFrame): Long =
+    rowLevelCommit(spark, path, "replace") { (m, live) =>
+      requireRefsResolvable(spark, path, m.version, "replaceWhere predicate", Seq(condition))
+      val offenders = df.filter(!condition).limit(1).count()
+      if (offenders > 0) throw new IllegalArgumentException(
+        "replaceWhere: replacement rows must satisfy the replace condition " +
+          "(a row outside the predicate would escape the declared scope)")
+      Some(RowChange(Some(live(m.dirs).filter(condition)), Some(df)))
+    }
+
+  /** Keyed row-level commit — the vector store's upsert and delete:
+    * tombstone every live row whose value in a key frame's column
+    * appears in that frame (`keys` are one-column frames, each named
+    * after the table column it matches), and add `data` — cast to the
+    * table's declared columns — as one new data directory with
+    * `statsCols` sidecars, both in one manifest rename. The key frames
+    * are the build side of one filter over one scan, so a few changed
+    * keys broadcast and the commit costs O(changed rows), never a
+    * rewrite of the rows it keeps. */
+  private[graft] def commitKeyed(spark: SparkSession, path: String, keys: Seq[DataFrame],
+      data: Option[DataFrame] = None, statsCols: Seq[String] = Nil): Long =
+    rowLevelCommit(spark, path, "change", statsCols) { (m, live) =>
+      import org.apache.spark.sql.functions.{col, lit}
+      val rows = live(m.dirs)
+      val hit = keys.map(k => col(k.columns.head).isin(k)).foldLeft(lit(false))(_ || _)
+      Some(RowChange(Some(rows.filter(hit)), data.map(d =>
+        d.select(rows.schema.fields.toSeq.filterNot(f => DvCols.contains(f.name))
+          .map(f => col(f.name).cast(f.dataType).as(f.name)): _*))))
+    }
 
   /** DESCRIBE HISTORY face: one row per committed version — its tag (if
     * any), how many data directories the snapshot sees, how many of
@@ -791,8 +826,7 @@ object TimeTravel {
     * version mark the consumer records. */
   def readAppendsSince(spark: SparkSession, path: String, sinceVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
-    val cur = toVersion.orElse(latest(spark, path)).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $path"))
+    val cur = resolve(spark, path, toVersion)
     val added = appendedDirsSince(spark, path, sinceVersion, cur)
     if (added.isEmpty) spark.emptyDataFrame
     else spark.read.parquet(added.map(d => s"$path/$d"): _*)
@@ -873,13 +907,16 @@ object TimeTravel {
     * half of the maintenance pair — [[vacuum]] then reclaims the old
     * dirs once no kept version references them). Row set is identical
     * by construction; `targetFiles` bounds the rewrite's output files.
-    * History stays readable: this is a commit like any other. */
+    * History stays readable: this is a commit like any other. A table
+    * already compact — one data dir of at most `targetFiles` files, and
+    * no deletion vectors to fold in — is left as it is. */
   def optimize(spark: SparkSession, path: String, targetFiles: Int = 1,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long = {
-    val v = latest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"nothing to optimize at $path"))
-    // already compact = one data dir AND no deletion vectors to fold in
-    if (listing(spark, path, v).size <= 1 && dvListing(spark, path, v).isEmpty) v
+    val v = resolve(spark, path, missing = "nothing to optimize")
+    val m = manifest(spark, path, v)
+    val f = fs(spark, path)
+    if (m.dvs.isEmpty && m.dirs.size <= 1 && m.dirs.forall(d =>
+        dataFiles(f, new Path(s"$path/$d")).size <= targetFiles.max(1))) v
     else commitOverwrite(read(spark, path, Some(v)).coalesce(targetFiles.max(1)),
       path, statsCols, bloomCols)
   }
@@ -896,8 +933,7 @@ object TimeTravel {
   def optimizeZorder(spark: SparkSession, path: String, colA: String, colB: String,
       targetFiles: Int = 8, withStats: Boolean = false): Long = {
     import org.apache.spark.sql.functions.col
-    val v = latest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"nothing to optimize at $path"))
+    val v = resolve(spark, path, missing = "nothing to optimize")
     val z = graft.operators.LayoutOps.zValue(col(colA), col(colB))
     val clustered = read(spark, path, Some(v))
       .repartitionByRange(targetFiles.max(1), z)
@@ -961,9 +997,8 @@ object TimeTravel {
     * schema is the table's.
     *
     * Scale note: this face rewrites the LIVE listing (the semantic
-    * form); a 100 TB deployment scopes the rewrite with partition
-    * pruning first — exactly what [[VectorStore.upsert]]'s
-    * partition-scoped overwrite does for the `load_dt` layout. */
+    * form); a keyed change that must not rewrite the rows it keeps is
+    * [[commitKeyed]], which [[VectorStore.upsert]] uses. */
   def merge(spark: SparkSession, path: String, source: DataFrame, key: String,
       deleteWhen: org.apache.spark.sql.Column = org.apache.spark.sql.functions.lit(false)): Long = {
     val target = read(spark, path)
@@ -1099,6 +1134,20 @@ object TimeTravel {
         s.genericGetMax.asInstanceOf[Number].longValue)))
   }
 
+  /** Per non-empty data file of `dir`: column `c`'s [min, max] as
+    * [[footerBounds]] reads it (None when every value is null) and its
+    * null count, from the footer alone — no Spark job; None for a file
+    * whose footer cannot say. */
+  private[sources] def footerRanges(spark: SparkSession, dir: Path, c: String,
+      dt: DataType): Seq[Option[(Option[(Long, Long)], Long)]] = {
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(dir.getFileSystem(conf), dir).map(FooterStats.footer(conf, _))
+      .filter(FooterStats.rows(_) > 0).map { ft =>
+        for (b <- footerBounds(ft, c, dt); s <- FooterStats.merged(ft, c) if s.isNumNullsSet)
+          yield (b, s.getNumNulls)
+      }
+  }
+
   /** The data files of a directory, as Spark's file listing keeps them. */
   private def dataFiles(f: FileSystem, dir: Path): Seq[Path] =
     f.listStatus(dir).toSeq.map(_.getPath)
@@ -1225,8 +1274,7 @@ object TimeTravel {
     * directories it covered. */
   def collectStats(spark: SparkSession, path: String, statsCols: Seq[String],
       version: Option[Long] = None, bloomCols: Seq[String] = Nil): Seq[String] = {
-    val v = version.orElse(latest(spark, path)).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $path"))
+    val v = resolve(spark, path, version)
     val f = fs(spark, path)
     val missing = listing(spark, path, v)
       .filterNot(d => f.exists(statsDocOf(path, d)))
@@ -1256,8 +1304,7 @@ object TimeTravel {
       lo: Long, hi: Long,
       version: Option[Long] = None): (DataFrame, ZoneMaps.PruneStats) = {
     import org.apache.spark.sql.functions.col
-    val v = version.orElse(latest(spark, path)).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $path"))
+    val v = resolve(spark, path, version)
     val dirs = listing(spark, path, v)
     if (dirs.isEmpty) return (spark.emptyDataFrame, ZoneMaps.PruneStats(0, 0))
     val (toRead, st) = pruneFiles(spark, path, statsCol, lo, hi, v)
@@ -1279,12 +1326,8 @@ object TimeTravel {
       return (read(spark, path, Some(v)).filter(lit(false)), st)
     if (dvs.isEmpty)
       (scanFilesLogical(spark, path, v, toRead, declared).filter(residual), st)
-    else {
-      val withPos = scanFilesLogical(spark, path, v, toRead, declared,
-        withPos = true).filter(residual)
-      val dv = spark.read.parquet(dvs.map(d => s"$path/$d"): _*)
-      (withPos.join(dv, DvCols, "left_anti").drop(DvCols: _*), st)
-    }
+    else (minusDvs(spark, path, scanFilesLogical(spark, path, v, toRead, declared,
+      withPos = true).filter(residual), dvs).drop(DvCols: _*), st)
   }
 
   /** Point lookup with BLOOM file skipping: read only the files whose
@@ -1299,8 +1342,7 @@ object TimeTravel {
       key: Long,
       version: Option[Long] = None): (DataFrame, ZoneMaps.PruneStats) = {
     import org.apache.spark.sql.functions.col
-    val v = version.orElse(latest(spark, path)).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $path"))
+    val v = resolve(spark, path, version)
     val dirs = listing(spark, path, v)
     if (dirs.isEmpty) return (spark.emptyDataFrame, ZoneMaps.PruneStats(0, 0))
     val (toRead, st) = bloomFiles(spark, path, bloomCol, key, v)
@@ -1469,28 +1511,14 @@ object TimeTravel {
       v: Long, files: Seq[String],
       declared: org.apache.spark.sql.types.StructType,
       withPos: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     colsListing(spark, path, v) match {
       case None =>
         val base = spark.read.schema(declared).parquet(files: _*)
-        if (!withPos) base
-        else base.select(col("*"),
-          col("_metadata.file_path").as(DvCols.head),
-          col("_metadata.row_index").as(DvCols.last))
+        if (!withPos) base else base.select(col("*") +: positions: _*)
       case Some(cols) =>
-        files.groupBy(f => new Path(f).getParent.toString).toSeq.map {
-          case (_, fs0) =>
-            val raw = spark.read.parquet(fs0: _*)
-            val have = raw.columns.toSet
-            val projected = cols.map { c =>
-              (if (have(c.physical)) col(c.physical).cast(c.typeDdl)
-               else lit(null).cast(c.typeDdl)).as(c.logical)
-            } ++ (if (withPos)
-              Seq(col("_metadata.file_path").as(DvCols.head),
-                col("_metadata.row_index").as(DvCols.last))
-            else Seq.empty)
-            raw.select(projected: _*)
-        }.reduce(_.unionByName(_))
+        mappedScan(spark, files.groupBy(f => new Path(f).getParent.toString).values.toSeq,
+          cols, withPos)
     }
   }
 }

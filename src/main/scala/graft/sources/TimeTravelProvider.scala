@@ -78,6 +78,17 @@ class TimeTravelProvider extends TableProvider with DataSourceRegister
 object TimeTravelTable {
   def apply(options: CaseInsensitiveStringMap): TimeTravelTable = apply(options, None)
 
+  /** The snapshot a V2 relation's table scans: a `graft-table`, or a
+    * versioned `graft-store` — the tables the DvApply and StatsPrune
+    * rules rewrite. */
+  private[graft] object Of {
+    def unapply(t: Table): Option[TimeTravelTable] = t match {
+      case tt: TimeTravelTable => Some(tt)
+      case store: GraftStoreTable => store.snapshot
+      case _ => None
+    }
+  }
+
   /** `knownSchema`: the snapshot's schema when the caller already
     * resolved it, so the parquet delegate does not infer it again. */
   private[sources] def apply(options: CaseInsensitiveStringMap,
@@ -127,7 +138,7 @@ final class TimeTravelTable private[sources] (path: String, versionOpt: Option[L
   // mapped tables never touch the delegate: its inference would read
   // PHYSICAL names (and can fail outright on widened heterogeneous
   // directory types); their logical schema comes from the library read
-  private lazy val delegate: ParquetTable =
+  private[sources] lazy val delegate: ParquetTable =
     ParquetTable(name(), spark, options, dirs, knownSchema, classOf[ParquetFileFormat])
 
   override def name(): String = s"graft_table($path@v$snapshotVersion)"

@@ -126,20 +126,10 @@ final class TimeTravelSource(spark: SparkSession, path: String,
     * as a stream-static anti-join (data side streaming, DV side
     * batch). */
   private def snapshotAt(v: Long): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val dirs = TimeTravel.listing(spark, path, v)
-    val dvs = TimeTravel.dvListing(spark, path, v)
-    val data = GraftPlanApi.markFileRelationsStreaming(
-      spark.read.schema(dataSchema).parquet(dirs.map(d => s"$path/$d"): _*))
-    if (dvs.isEmpty) data
-    else {
-      val fp = "_dv_fp"; val ri = "_dv_ri"
-      val withPos = data.select(col("*"),
-        col("_metadata.file_path").as(fp),
-        col("_metadata.row_index").as(ri))
-      val dv = spark.read.parquet(dvs.map(d => s"$path/$d"): _*)
-      withPos.join(dv, Seq(fp, ri), "left_anti").drop(fp, ri)
-    }
+    TimeTravel.applyDvs(spark, path, GraftPlanApi.markFileRelationsStreaming(
+      spark.read.schema(dataSchema).parquet(dirs.map(d => s"$path/$d"): _*)),
+      TimeTravel.dvListing(spark, path, v))
   }
 
   private def emptyStreaming(s: StructType): DataFrame =

@@ -126,7 +126,7 @@ object VectorIndex {
     * cell partitions. One narrow assignment pass + an append-mode
     * partitioned write; untouched cells gain no files, queries need no
     * code path change, and repeated appends compose with
-    * [[VectorStore.compact]]-style layout maintenance. Rebuild (retrain)
+    * [[CellCompaction]] layout maintenance. Rebuild (retrain)
     * only when appended mass shifts the centroids enough to hurt recall
     * — the published IVF practice. */
   def append(spark: SparkSession, path: String, emb: DataFrame,

@@ -104,6 +104,41 @@ class IndexSpec extends SparkSpec {
     assert(plan.contains("NOT (vec_id#") && !plan.contains("cast(qid"), plan)
   }
 
+  test("a string-keyed index over the vector store after a CDC round serves the exact top-10") {
+    import org.apache.spark.sql.expressions.Window
+    import graft.sources.VectorStore
+    import spark.implicits._
+    val store = Files.createTempDirectory("vindex_store").toFile.getAbsolutePath + "/store"
+    val rows = emb.select(concat(lit("v"), col("vec_id").cast("string")).as("chunk_id"),
+      concat(lit("file"), (col("vec_id") % 10).cast("string")).as("name"),
+      col("embedding").cast("array<float>").as("vector"),
+      to_date(lit("2023-01-01")).as("load_dt"))
+    VectorStore.replaceAll(spark, store, rows)
+    // one CDC round: file3's chunks re-embedded, file7 deleted
+    VectorStore.upsert(spark, store, rows.filter(col("name") === "file3")
+        .withColumn("vector", reverse(col("vector")))
+        .withColumn("load_dt", to_date(lit("2023-02-01"))),
+      superseded = Some(Seq("file3").toDF("name")))
+    VectorStore.deleteWhere(spark, store, Seq("file7").toDF("name"), "name")
+    val live = VectorStore.read(spark, store)
+    val p = Files.createTempDirectory("vindex_cdc").toFile.getAbsolutePath + "/index"
+    VectorIndex.build(live, "chunk_id", "vector", Cells, iters = 2, path = p)
+    val got = VectorIndex.query(spark, p, "chunk_id", "vector", queries, probes = Cells, k = 10)
+      .select(col("qid"), col("chunk_id"), col("rk"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    val qdf = queries.map { case (qid, qv) => (qid, qv.toSeq) }.toDF("qid", "qe")
+    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("chunk_id"))
+    val exact = live.crossJoin(broadcast(qdf))
+      .withColumn("sim", Similarity.cosineIn(spark,
+        col("qe"), col("vector").cast("array<double>")))
+      .withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= 10)
+      .collect().map(r => (r.getAs[Long]("qid"), r.getAs[String]("chunk_id"),
+        r.getAs[Long]("rk"))).toSet
+    assert(got.size == 10 * queries.size && got == exact)
+    assert(got.forall(!_._2.endsWith("7")), "a deleted file's chunk was served")
+  }
+
   private lazy val pqPath = {
     val p = Files.createTempDirectory("vindexpq").toFile.getAbsolutePath + "/index"
     VectorIndex.buildIvfPq(emb, "vec_id", "embedding", Cells, kmIters = 2,

@@ -123,12 +123,20 @@ class IngestSpec extends SparkSpec {
     assert(graft.pipeline.Ledger.read(spark, ledger).count() == 4)
   }
 
-  private def leftovers(store: String): Seq[String] =
-    Seq(".staging", ".old").map(store + _).filter(new java.io.File(_).exists())
+  /** Entries beside the store dir: a staged swap would leave some. */
+  private def leftovers(store: String): Seq[String] = {
+    val f = new java.io.File(store)
+    f.getParentFile.listFiles().map(_.getName).filterNot(Set(f.getName, "ledger")).toSeq
+  }
 
-  private def partFiles(store: String, dt: String): Set[(String, Long)] =
-    new java.io.File(store, s"load_dt=$dt").listFiles()
-      .filter(_.getName.startsWith("part-")).map(f => (f.getName, f.length)).toSet
+  /** The store's dirs under `kind` (`data` or `dv`). */
+  private def dirs(store: String, kind: String): Set[String] =
+    Option(new java.io.File(store, kind).list()).toSet.flatten
+
+  /** (data dir, file name, size) of every data file in the store. */
+  private def dataFiles(store: String): Set[(String, String, Long)] =
+    dirs(store, "data").flatMap(d => new java.io.File(s"$store/data/$d").listFiles()
+      .filter(_.getName.startsWith("part-")).map(f => (d, f.getName, f.length)))
 
   test("an update that yields no chunks still drops every old chunk of that file") {
     val dir = Files.createTempDirectory("ingest_empty").toFile.getAbsolutePath
@@ -156,30 +164,31 @@ class IngestSpec extends SparkSpec {
     assert(VectorStore.read(spark, store).filter(col("name") === "a.txt").count() == aChunks)
   }
 
-  test("CDC calls swap only touched partitions and leave no staging or old sibling") {
+  test("a CDC round keeps every data file, adds one data and one DV dir, leaves no sibling") {
     val dir = Files.createTempDirectory("ingest_swap").toFile.getAbsolutePath
     val (ledger, store) = (s"$dir/ledger", s"$dir/store")
     IngestJob.fullRefresh(spark, initial, ledger, store, "2023-01-01")
-    val jan = partFiles(store, "2023-01-01")
     def landed(d: (Timestamp, String)) = initial.unionByName(
       filesDf(Seq(("d.txt", "http://x.io/d.txt", d._1, d._2.getBytes("UTF-8")))))
-    // d.txt new: only 02-01 is written
-    IngestJob.incremental(spark, landed(t1 -> "fresh file"), ledger, store, "2023-02-01")
-    assert(leftovers(store).isEmpty)
-    assert(partFiles(store, "2023-01-01") == jan, "untouched partition was rewritten")
-    // d.txt updated: only 02-01 (its old chunks) and 03-01 (its new ones) swap
-    IngestJob.incremental(spark, landed(ts("2023-03-01 00:00:00") -> "newer words"),
-      ledger, store, "2023-03-01")
-    assert(leftovers(store).isEmpty)
-    assert(partFiles(store, "2023-01-01") == jan, "untouched partition was rewritten")
-    assert(!new java.io.File(store, "load_dt=2023-02-01").exists(),
-      "a partition left with no rows is swapped out")
+    /** Run `f`; assert it kept every data file and added `data`/`dv` dirs. */
+    def commit(data: Int, dv: Int)(f: => Unit): Unit = {
+      val (files, d0, v0) = (dataFiles(store), dirs(store, "data"), dirs(store, "dv"))
+      f
+      assert(files.subsetOf(dataFiles(store)), "an existing data file was rewritten")
+      assert((dirs(store, "data") -- d0).size == data && (dirs(store, "dv") -- v0).size == dv)
+      assert(leftovers(store).isEmpty, leftovers(store))
+    }
+    // d.txt new
+    commit(data = 1, dv = 1)(
+      IngestJob.incremental(spark, landed(t1 -> "fresh file"), ledger, store, "2023-02-01"))
+    // d.txt updated: its old chunks tombstoned, its new ones added, together
+    commit(data = 1, dv = 1)(IngestJob.incremental(spark,
+      landed(ts("2023-03-01 00:00:00") -> "newer words"), ledger, store, "2023-03-01"))
     assert(VectorStore.read(spark, store).filter(col("name") === "d.txt")
       .select(col("text")).collect().map(_.getString(0)).toSeq == Seq("newer words"))
     import spark.implicits._
-    IngestJob.deleteFiles(spark, Seq("d.txt").toDF("name"), ledger, store)
-    assert(leftovers(store).isEmpty)
-    assert(partFiles(store, "2023-01-01") == jan, "untouched partition was rewritten")
+    commit(data = 0, dv = 1)(
+      IngestJob.deleteFiles(spark, Seq("d.txt").toDF("name"), ledger, store))
     val s = VectorStore.read(spark, store)
     assert(s.filter(col("name") === "d.txt").count() == 0)
     assert(s.select("name").distinct().count() == 3)
@@ -224,11 +233,11 @@ class IngestSpec extends SparkSpec {
       while (!plans.toArray.exists(_.toString.contains("ingest_bcast_marker")) &&
           System.nanoTime() < deadline) Thread.sleep(20)
     } finally spark.listenerManager.unregister(listener)
-    val staged = plans.toArray.map(_.toString).filter(_.contains("store.staging"))
-    assert(staged.length == 1, plans)
-    assert(staged.head.contains("BroadcastHashJoin") &&
-      !staged.head.contains("Exchange hashpartitioning"),
-      s"the staged write must broadcast the changed keys:\n${staged.head}")
+    val tombstones = plans.toArray.map(_.toString).filter(_.contains("store/dv/v"))
+    assert(tombstones.length == 1, plans)
+    assert(tombstones.head.contains("BroadcastHashJoin") &&
+      !tombstones.head.contains("Exchange hashpartitioning"),
+      s"the tombstone write must broadcast the changed keys:\n${tombstones.head}")
   }
 
   test("unsupported file types are filtered before parsing") {

@@ -520,6 +520,42 @@ class LayoutSpec extends SparkSpec {
     assert((System.nanoTime() - t0) / 1e9 < 30, "timeout must not wait for the hung job")
   }
 
+  test("ParallelJobs.awaitAll: a timeout cancels the thunks' Spark jobs; pool threads are daemons") {
+    import graft.sources.ParallelJobs
+    import scala.concurrent.duration._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tagged = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.contains("graft-parallel"))) tagged.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    val daemon = new java.util.concurrent.atomic.AtomicBoolean(false)
+    try {
+      intercept[java.util.concurrent.TimeoutException] {
+        ParallelJobs.awaitAll[Unit](Seq(() => {
+          daemon.set(Thread.currentThread().isDaemon)
+          sc.parallelize(Seq(1), 1).foreach { _ =>
+            // a task that only ends when it is killed (or after 60 s)
+            val t0 = System.nanoTime()
+            while (!org.apache.spark.TaskContext.get().isInterrupted() &&
+              System.nanoTime() - t0 < 60L * 1000 * 1000 * 1000) Thread.sleep(20)
+          }
+        }), timeout = 1.second)
+      }
+      assert(daemon.get(), "pool threads must be daemon threads")
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      def running = tagged.toArray.map(_.asInstanceOf[Int]).toSet
+        .intersect(sc.statusTracker.getActiveJobIds().toSet)
+      while ((tagged.isEmpty || running.nonEmpty) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(!tagged.isEmpty, "the thunk's job must carry the call's job tag")
+      assert(running.isEmpty, s"tagged jobs still active after the timeout: $running")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("commitSeries ≡ sequential overwrite+appends: listings, reads, pruning") {
     import graft.sources.TimeTravel
     import spark.implicits._

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.functions.{Embedders, HtmlFunctions}
 import graft.pipeline.{BatchedEmbedder, DocPipeline, HttpEmbedBackend, Ledger}
-import graft.sources.VectorStore
+import graft.sources.{TimeTravel, VectorStore}
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSpec {
@@ -96,63 +96,62 @@ class PipelineSpec extends SparkSpec {
     VectorStore.upsert(spark, path,
       rows(1 to 10, "2023-01-01", "a").unionByName(rows(11 to 20, "2023-02-01", "a")))
     assert(VectorStore.read(spark, path).count() == 20)
+    // every commit adds dirs: no data file already in the store changes
+    def untouched(f: => Unit): Unit = {
+      val before = dataFiles(path)
+      f
+      assert(before.subsetOf(dataFiles(path)), "an existing data file was rewritten")
+      assert(leftovers(path).isEmpty)
+    }
 
-    val jan = new java.io.File(path, "load_dt=2023-01-01")
-    def files(f: java.io.File): Set[(String, Long)] =
-      f.listFiles().filter(_.getName.startsWith("part-"))
-        .map(x => (x.getName, x.length)).toSet
-    val janBefore = files(jan)
-
-    // replace 5 keys inside the Feb partition: Jan's files must be untouched
-    VectorStore.upsert(spark, path, rows(11 to 15, "2023-02-01", "b"))
+    // replace 5 keys of Feb
+    untouched(VectorStore.upsert(spark, path, rows(11 to 15, "2023-02-01", "b")))
     val s1 = VectorStore.read(spark, path)
     assert(s1.count() == 20)
     assert(s1.filter(col("payload") === "b").count() == 5)
-    assert(files(jan) == janBefore, "untouched partition was rewritten")
-    assert(leftovers(path).isEmpty)
 
-    // a key re-ingested under a new load_dt moves partitions, no duplicate
-    VectorStore.upsert(spark, path, rows(Seq(1), "2023-03-01", "c"))
+    // a key re-ingested under a new load_dt moves, no duplicate
+    untouched(VectorStore.upsert(spark, path, rows(Seq(1), "2023-03-01", "c")))
     val s2 = VectorStore.read(spark, path)
     assert(s2.count() == 20)
     assert(s2.filter(col("chunk_id") === "c1").count() == 1)
     assert(s2.filter(col("chunk_id") === "c1")
       .select(col("load_dt").cast("string")).head().getString(0) == "2023-03-01")
 
-    // deleting every Feb key drops the partition directory entirely
-    VectorStore.deleteWhere(spark, path,
-      (11 to 20).map(i => s"c$i").toDF("chunk_id"), "chunk_id")
+    // deleting every Feb key leaves no Feb row
+    untouched(VectorStore.deleteWhere(spark, path,
+      (11 to 20).map(i => s"c$i").toDF("chunk_id"), "chunk_id"))
     assert(VectorStore.read(spark, path).count() == 10)
-    assert(!new java.io.File(path, "load_dt=2023-02-01").exists())
-    assert(leftovers(path).isEmpty)
+    assert(VectorStore.read(spark, path)
+      .filter(col("load_dt") === java.sql.Date.valueOf("2023-02-01")).isEmpty)
 
-    // a superseded key set drops matching rows in the same rewrite
-    val janNow = files(jan)
-    VectorStore.upsert(spark, path, rows(Seq(30), "2023-03-01", "d"),
-      superseded = Some(Seq("c").toDF("payload")))
+    // a superseded key set drops matching rows in the same commit
+    untouched(VectorStore.upsert(spark, path, rows(Seq(30), "2023-03-01", "d"),
+      superseded = Some(Seq("c").toDF("payload"))))
     val s3 = VectorStore.read(spark, path)
     assert(s3.select("chunk_id").collect().map(_.getString(0)).toSet ==
       (2 to 10).map(i => s"c$i").toSet + "c30")
-    assert(files(jan) == janNow, "untouched partition was rewritten")
-    assert(leftovers(path).isEmpty)
   }
 
-  private def leftovers(path: String): Seq[String] =
-    Seq(".staging", ".old").map(path + _).filter(new java.io.File(_).exists())
+  /** Entries beside the store dir: a staged swap would leave some. */
+  private def leftovers(path: String): Seq[String] = {
+    val store = new java.io.File(path)
+    store.getParentFile.listFiles().map(_.getName).filterNot(_ == store.getName).toSeq
+  }
 
-  /** (partition dir, file name, size) of every data file in the store. */
-  private def storeFiles(path: String): Set[(String, String, Long)] =
-    new java.io.File(path).listFiles().filter(_.getName.startsWith("load_dt=")).toSet
-      .flatMap((p: java.io.File) => p.listFiles().filter(_.getName.startsWith("part-"))
-        .map(f => (p.getName, f.getName, f.length)))
+  /** (data dir, file name, size) of every data file under the store. */
+  private def dataFiles(path: String): Set[(String, String, Long)] =
+    Option(new java.io.File(path, "data").listFiles()).toSet.flatten
+      .flatMap((d: java.io.File) => d.listFiles().filter(_.getName.startsWith("part-"))
+        .map(f => (d.getName, f.getName, f.length)))
 
   test("vector store: a failed staging write leaves every partition as it was") {
     val path = Files.createTempDirectory("vstore_fail").toFile.getAbsolutePath + "/store"
     VectorStore.upsert(spark, path,
       dtRows(1 to 10, "2023-01-01", "a").unionByName(dtRows(11 to 20, "2023-02-01", "a")))
-    val before = storeFiles(path)
+    val (before, versions) = (dataFiles(path), TimeTravel.versions(spark, path))
     val rowsBefore = VectorStore.read(spark, path).collect().map(_.toString).toSet
-    // the payload fails only when the staging write's tasks compute it
+    // the payload fails only when the data write's tasks compute it
     // (the repartition keeps the optimizer from folding it into a local relation)
     val bad = dtRows(Seq(1, 11, 30), "2023-03-01", "x").repartition(2)
       .withColumn("payload", raise_error(lit("staging write fails")).cast("string"))
@@ -161,25 +160,35 @@ class PipelineSpec extends SparkSpec {
     failing(VectorStore.upsert(spark, path, bad))
     failing(VectorStore.upsert(spark, path, bad,
       superseded = Some(dtRows(Seq(2), "2023-01-01", "a").select("chunk_id"))))
-    assert(storeFiles(path) == before)
+    assert(TimeTravel.versions(spark, path) == versions, "a failed write published")
+    assert(dataFiles(path) == before)
     assert(VectorStore.read(spark, path).collect().map(_.toString).toSet == rowsBefore)
     assert(leftovers(path).isEmpty)
   }
 
-  test("vector store: a partition left in .old by an interrupted swap is restored first") {
+  test("vector store: a crash before publish changes no snapshot; a retry converges") {
     val path = Files.createTempDirectory("vstore_crash").toFile.getAbsolutePath + "/store"
     VectorStore.upsert(spark, path,
       dtRows(1 to 10, "2023-01-01", "a").unionByName(dtRows(11 to 20, "2023-02-01", "a")))
-    // a swap that stopped between its two renames: Feb moved out, not back in
-    new java.io.File(path + ".old").mkdirs()
-    assert(new java.io.File(path, "load_dt=2023-02-01")
-      .renameTo(new java.io.File(path + ".old", "load_dt=2023-02-01")))
-    // the next upsert replaces a Feb key: it must see Feb, not duplicate c11
+    val versions = TimeTravel.versions(spark, path)
+    val rowsBefore = VectorStore.read(spark, path).collect().map(_.toString).toSet
+    // the data write dies after the tombstone write may have landed
+    val bad = dtRows(Seq(11), "2023-03-01", "b").repartition(2)
+      .withColumn("payload", raise_error(lit("crash before publish")).cast("string"))
+    intercept[Exception](VectorStore.upsert(spark, path, bad))
+    // and a crashed writer left a whole orphan data dir for the next version
+    dtRows(Seq(11, 99), "2023-03-01", "orphan")
+      .write.mode("overwrite").parquet(f"$path/data/v${versions.last + 1}%05d")
+    assert(TimeTravel.versions(spark, path) == versions)
+    assert(VectorStore.read(spark, path).collect().map(_.toString).toSet == rowsBefore,
+      "unpublished dirs must stay invisible")
+    // the retry replaces the orphans and lands exactly its own change
     VectorStore.upsert(spark, path, dtRows(Seq(11), "2023-03-01", "b"))
     val s = VectorStore.read(spark, path)
     assert(s.count() == 20)
     assert(s.filter(col("chunk_id") === "c11").select("payload")
       .collect().map(_.getString(0)).toSeq == Seq("b"))
+    assert(s.filter(col("payload") === "orphan").isEmpty)
     assert(leftovers(path).isEmpty)
   }
 
@@ -203,17 +212,91 @@ class PipelineSpec extends SparkSpec {
     assert(store.count() == 4)
     assert(store.columns.contains("load_dt"))
     assert(store.filter(col("chunk_id") === "c2").select("payload").head().getString(0) == "new")
-    // incoming rows keep their dates; legacy survivors land in the null partition
+    // incoming rows keep their dates; legacy survivors carry a null load_dt
     assert(store.filter(col("load_dt").cast("string") === "2023-05-01").count() == 2)
     assert(store.filter(col("load_dt").isNull).count() == 2)
-    // the store is hive-partitioned from here on: the next upsert takes the
-    // partition-scoped path and only touches affected partitions
-    assert(new java.io.File(path, "load_dt=2023-05-01").exists())
+    // the store is versioned from here on, and the legacy files are gone
+    assert(TimeTravel.versions(spark, path).nonEmpty)
+    assert(!new java.io.File(path).list().exists(_.startsWith("part-")))
     VectorStore.upsert(spark, path,
       Seq(("c5", "newer", java.sql.Date.valueOf("2023-06-01")))
         .toDF("chunk_id", "payload", "load_dt"))
     assert(VectorStore.read(spark, path).count() == 5)
-    assert(new java.io.File(path, "load_dt=2023-06-01").exists())
+  }
+
+  test("vector store: both legacy layouts, flat and load_dt=, are adopted with their rows intact") {
+    import spark.implicits._
+    val legacy = Seq(("c1", "a", java.sql.Date.valueOf("2023-01-01")),
+      ("c2", "b", java.sql.Date.valueOf("2023-02-01")),
+      ("c3", "c", null.asInstanceOf[java.sql.Date])).toDF("chunk_id", "payload", "load_dt")
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("chunk_id", "payload", "load_dt").collect().map(_.toString).toSet
+    for (hive <- Seq(false, true)) {
+      val path = Files.createTempDirectory("vstore_adopt").toFile.getAbsolutePath + "/store"
+      val w = legacy.write.mode("overwrite")
+      (if (hive) w.partitionBy("load_dt") else w).parquet(path)
+      assert(rowsOf(VectorStore.read(spark, path)) == rowsOf(legacy),
+        "an unversioned store reads as it is")
+      VectorStore.upsert(spark, path, dtRows(Seq(4), "2023-03-01", "d"))
+      assert(TimeTravel.versions(spark, path).nonEmpty)
+      assert(new java.io.File(path).list().forall(n =>
+        !n.startsWith("part-") && !n.startsWith("load_dt=")), "old entries must go")
+      val store = VectorStore.read(spark, path)
+      assert(store.schema("load_dt").dataType == org.apache.spark.sql.types.DateType)
+      assert(rowsOf(store) == rowsOf(legacy.unionByName(dtRows(Seq(4), "2023-03-01", "d"))),
+        s"hive layout = $hive")
+    }
+  }
+
+  test("vector store: an upsert changes no data file and writes about its own rows' bytes") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("vstore_amp").toFile.getAbsolutePath + "/store"
+    val rnd = new scala.util.Random(7)
+    def rows(ids: Range, v: String) = ids.map(i => (s"chunk-$i", s"file-${i / 4}",
+      rnd.alphanumeric.take(200).mkString + v, Seq.fill(64)(rnd.nextFloat()),
+      java.sql.Date.valueOf("2023-01-01"))).toDF("chunk_id", "name", "text", "vector", "load_dt")
+    VectorStore.upsert(spark, path, rows(0 until 1000, "a").repartition(4))
+    val before = dataFiles(path)
+    val incoming = rows(800 until 1100, "b").repartition(2).localCheckpoint()
+    VectorStore.upsert(spark, path, incoming)
+    val after = dataFiles(path)
+    assert(before.subsetOf(after), "an existing data file was rewritten")
+    val written = (after -- before).toSeq.map(_._3).sum
+    // raw bytes: strings as UTF-8, floats and dates at their width
+    val raw = incoming.select(sum(octet_length(col("chunk_id")) + octet_length(col("name")) +
+      octet_length(col("text")) + size(col("vector")) * 4 + 4)).head().getLong(0)
+    assert(written <= 2 * raw, s"upsert wrote $written bytes for $raw raw bytes")
+    assert(VectorStore.read(spark, path).count() == 1100)
+  }
+
+  test("vector store: a reader concurrent with upserts never sees a file half-changed") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("vstore_iso").toFile.getAbsolutePath + "/store"
+    val files = 5
+    // file f's generation g has 1 to 3 chunks, all tagged with g
+    def gen(f: Int, g: Int) = (0 to (f + g) % 3).map(j => (s"f$f-g$g-$j", s"f$f", g))
+      .toDF("chunk_id", "name", "gen")
+    VectorStore.upsert(spark, path, (0 until files).map(gen(_, 0)).reduce(_ unionByName _))
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val writer = new Thread(() => try (1 to 6).foreach { g =>
+      val f = g % files
+      VectorStore.upsert(spark, path, gen(f, g), superseded = Some(Seq(s"f$f").toDF("name")))
+    } finally done.set(true))
+    writer.start()
+    var reads = 0
+    while (!done.get() || reads == 0) {
+      // per file: its distinct generations and its chunk count
+      val seen = VectorStore.read(spark, path).groupBy("name")
+        .agg(countDistinct(col("gen")).as("gens"), count(lit(1)).as("n"))
+        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(seen.keySet == (0 until files).map(f => s"f$f").toSet, s"a file lost every chunk: $seen")
+      assert(seen.values.forall(_._1 == 1), s"a file's old and new chunks were both visible: $seen")
+      reads += 1
+    }
+    writer.join()
+    val last = VectorStore.read(spark, path)
+    assert(last.filter(col("name") === "f1").select("gen").distinct()
+      .collect().map(_.getInt(0)).toSeq == Seq(6))
   }
 
   test("batched sink flushes per batch, one client per partition") {
@@ -263,50 +346,51 @@ class PipelineSpec extends SparkSpec {
       .toDF("chunk_id", "payload", "load_dt")
   }
 
+  /** The store's latest snapshot: (data dirs, deletion-vector dirs). */
+  private def snapshotDirs(path: String): (Int, Int) = {
+    val h = TimeTravel.history(spark, path).orderBy(col("version").desc).head()
+    (h.getAs[Int]("n_dirs"), h.getAs[Int]("n_dvs"))
+  }
+
   test("compact coalesces oversized partitions, preserves rows, skips tidy ones") {
     val path = Files.createTempDirectory("vstore_compact").toFile.getAbsolutePath + "/store"
-    // 6 files in the 01-01 partition, 1 file in 06-01
-    graft.sources.VectorStore.upsert(spark, path,
-      dtRows(1 to 12, "2023-01-01", "a").repartition(6)
-        .unionByName(dtRows(13 to 14, "2023-06-01", "b").coalesce(1)))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def files(part: String) =
-      fs.listStatus(new org.apache.hadoop.fs.Path(path, s"load_dt=$part"))
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_")
-          && !st.getPath.getName.startsWith("."))
-    assert(files("2023-01-01").length > 1, "fixture must start fragmented")
-    val janStamp = files("2023-06-01").map(_.getPath.getName).toSet
-    val before = graft.sources.VectorStore.read(spark, path)
+    // 6 files in a first data dir, then a second dir and its tombstones
+    VectorStore.upsert(spark, path, dtRows(1 to 12, "2023-01-01", "a").repartition(6))
+    VectorStore.upsert(spark, path, dtRows(11 to 14, "2023-06-01", "b").coalesce(1))
+    assert(dataFiles(path).size > 2, "fixture must start fragmented")
+    assert(snapshotDirs(path) == (2, 1))
+    val before = VectorStore.read(spark, path)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    // huge target → every partition wants exactly one file
-    graft.sources.VectorStore.compact(spark, path)
-    assert(files("2023-01-01").length == 1, "fragmented partition must compact to one file")
-    assert(files("2023-06-01").map(_.getPath.getName).toSet == janStamp,
-      "already-compact partition must not be rewritten")
-    val after = graft.sources.VectorStore.read(spark, path)
+    // huge target → the store wants exactly one file
+    VectorStore.compact(spark, path)
+    assert(snapshotDirs(path) == (1, 0), "compact must fold the dirs and the tombstones")
+    val live = TimeTravel.versions(spark, path).last
+    assert(dataFiles(path).count(_._1 == f"v$live%05d") == 1,
+      "fragmented store must compact to one file")
+    val after = VectorStore.read(spark, path)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(after == before, "compaction must not change the row set")
+    VectorStore.compact(spark, path)
+    assert(TimeTravel.versions(spark, path).last == live,
+      "an already-compact store must not be rewritten")
   }
 
   test("retention drops only partitions strictly before the cutoff; null partition survives") {
-    import graft.sources.VectorStore
     val path = Files.createTempDirectory("vstore_ttl").toFile.getAbsolutePath + "/store"
-    VectorStore.upsert(spark, path,
-      dtRows(1 to 3, "2023-01-01", "old")
-        .unionByName(dtRows(4 to 6, "2023-03-01", "mid"))
-        .unionByName(dtRows(7 to 9, "2023-06-01", "new")))
-    // migrate a legacy row into the null partition via an unpartitioned seed
+    // one data dir per load date, plus one holding a null load_dt
+    VectorStore.upsert(spark, path, dtRows(1 to 3, "2023-01-01", "old"))
+    VectorStore.upsert(spark, path, dtRows(4 to 6, "2023-03-01", "mid"))
+    VectorStore.upsert(spark, path, dtRows(7 to 9, "2023-06-01", "new"))
     import spark.implicits._
     VectorStore.upsert(spark, path,
       Seq(("c99", "legacy", null.asInstanceOf[java.sql.Date]))
         .toDF("chunk_id", "payload", "load_dt"))
     val dropped = VectorStore.dropPartitionsBefore(spark, path, "2023-03-01")
-    assert(dropped == 1, "exactly the 2023-01-01 partition is older than the cutoff")
+    assert(dropped == 1, "exactly the 2023-01-01 dir is older than the cutoff")
     val left = VectorStore.read(spark, path).select("chunk_id").collect()
       .map(_.getString(0)).toSet
     assert(left == Set("c4", "c5", "c6", "c7", "c8", "c9", "c99"),
-      "cutoff-day and newer rows plus the ageless null partition survive")
+      "cutoff-day and newer rows plus the ageless null rows survive")
     // idempotent: nothing older remains
     assert(VectorStore.dropPartitionsBefore(spark, path, "2023-03-01") == 0)
     intercept[IllegalArgumentException] {
@@ -314,8 +398,21 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("retention drops whole data dirs from footer stats with zero Spark jobs") {
+    val path = Files.createTempDirectory("vstore_ttl_jobs").toFile.getAbsolutePath + "/store"
+    VectorStore.upsert(spark, path, dtRows(1 to 4, "2023-01-01", "a").repartition(2))
+    VectorStore.upsert(spark, path, dtRows(5 to 6, "2023-02-01", "b"))
+    VectorStore.upsert(spark, path, dtRows(7 to 8, "2023-06-01", "c"))
+    val files = dataFiles(path)
+    var dropped = -1
+    val jobs = jobsOf { dropped = VectorStore.dropPartitionsBefore(spark, path, "2023-03-01") }
+    assert(dropped == 2 && jobs == 0, s"dropped $dropped dirs with $jobs Spark jobs")
+    assert(dataFiles(path) == files, "retention must not rewrite a data file")
+    assert(VectorStore.read(spark, path).select("chunk_id").collect().map(_.getString(0))
+      .toSet == Set("c7", "c8"))
+  }
+
   test("retention on an unpartitioned store falls back to a filter rewrite") {
-    import graft.sources.VectorStore
     import spark.implicits._
     val path = Files.createTempDirectory("vstore_ttl_flat").toFile.getAbsolutePath + "/store"
     // unpartitioned layout: single write without hive dirs but WITH the column
@@ -324,17 +421,18 @@ class PipelineSpec extends SparkSpec {
       ("c", "z", null.asInstanceOf[java.sql.Date]))
       .toDF("chunk_id", "payload", "load_dt")
       .write.mode("overwrite").parquet(path)
+    // the adopted rows share one dir that spans the cutoff: no dir is
+    // dropped, and the older row is tombstoned instead
     assert(VectorStore.dropPartitionsBefore(spark, path, "2023-03-01") == 0)
     val left = VectorStore.read(spark, path).select("chunk_id").collect()
       .map(_.getString(0)).toSet
-    assert(left == Set("b", "c"), "old row rewritten away; null load_dt kept")
+    assert(left == Set("b", "c"), "old row removed; null load_dt kept")
   }
 
   test("compact and upsert keep the null (legacy-migrated) partition's rows") {
-    // migrated legacy rows live in load_dt=__HIVE_DEFAULT_PARTITION__
-    // with NULL values; '=' / isin comparisons silently skip nulls, so
-    // partition matching must go through a null-safe token or a
-    // 'layout maintenance' compact() deletes the whole legacy partition
+    // migrated legacy rows carry a NULL load_dt; '=' / isin comparisons
+    // silently skip nulls, so a 'layout maintenance' compact() or a keyed
+    // upsert that compared load_dt values would lose or duplicate them
     val path = Files.createTempDirectory("vstore_null").toFile.getAbsolutePath + "/store"
     import spark.implicits._
     (1 to 8).map(i => (s"L$i", "legacy")).toDF("chunk_id", "payload")
@@ -343,69 +441,60 @@ class PipelineSpec extends SparkSpec {
     VectorStore.upsert(spark, path, dtRows(1 to 2, "2023-05-01", "n")) // migrates
     assert(VectorStore.read(spark, path).filter(col("load_dt").isNull).count() == 8)
 
-    // force fragmentation: land one more file straight into the null dir
-    Seq(("L9", "legacy")).toDF("chunk_id", "payload").coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$path/load_dt=__HIVE_DEFAULT_PARTITION__")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def nullFiles() = fs.listStatus(
-      new org.apache.hadoop.fs.Path(path, "load_dt=__HIVE_DEFAULT_PARTITION__"))
-      .count(st => st.isFile && !st.getPath.getName.startsWith("_")
-        && !st.getPath.getName.startsWith("."))
-    assert(nullFiles() > 1, "fixture must start fragmented")
+    // fragment: one more null row in a dir of its own
+    VectorStore.upsert(spark, path, Seq(("L9", "legacy", null.asInstanceOf[java.sql.Date]))
+      .toDF("chunk_id", "payload", "load_dt"))
+    assert(snapshotDirs(path)._1 > 1, "fixture must start fragmented")
     VectorStore.compact(spark, path)
     val store = VectorStore.read(spark, path)
     assert(store.filter(col("load_dt").isNull).count() == 9,
-      "compact must rewrite, not delete, the null partition")
-    assert(nullFiles() == 1, "null partition must actually compact")
+      "compact must rewrite, not delete, the null rows")
+    assert(snapshotDirs(path) == (1, 0), "the store must actually compact")
 
     // keyed upsert against a legacy row must replace it, not duplicate it
     VectorStore.upsert(spark, path,
       Seq(("L3", "replaced", java.sql.Date.valueOf("2023-07-01")))
         .toDF("chunk_id", "payload", "load_dt"))
     val l3 = VectorStore.read(spark, path).filter(col("chunk_id") === "L3")
-    assert(l3.count() == 1, "null-partition key must not survive alongside its replacement")
+    assert(l3.count() == 1, "null-load_dt key must not survive alongside its replacement")
     assert(l3.select("payload").head().getString(0) == "replaced")
   }
 
   test("v2 catalog table: append=upsert, SQL delete, overwrite=replace, partition-scoped") {
     val dir = Files.createTempDirectory("vstorev2").toFile
     val path = s"${dir.getAbsolutePath}/store"
-    // seed a partitioned store, then register it as a catalog table
+    // seed a store, then register it as a catalog table
     VectorStore.upsert(spark, path,
       dtRows(1 to 10, "2023-01-01", "a").unionByName(dtRows(11 to 20, "2023-02-01", "a")))
     spark.sql("DROP TABLE IF EXISTS graft_store")
     spark.sql(s"CREATE TABLE graft_store USING `graft-store` OPTIONS (path '$path')")
     try {
       assert(spark.table("graft_store").count() == 20)
-      // the catalog read path is the native parquet scan: load_dt
-      // predicates prune partitions instead of filtering rows
+      // the catalog read path skips files by the load_dt stats every
+      // store commit carries, instead of filtering every row
       val pruned = spark.table("graft_store")
         .filter(col("load_dt") === java.sql.Date.valueOf("2023-01-01"))
       assert(pruned.count() == 10)
-      assert(pruned.queryExecution.executedPlan.toString.contains("PartitionFilters: [isnotnull(load_dt"),
-        "load_dt predicate must reach the scan's partition filters")
+      assert(pruned.inputFiles.length < dataFiles(path).size,
+        s"load_dt predicate must skip files:\n${pruned.queryExecution.optimizedPlan}")
 
-      val jan = new java.io.File(path, "load_dt=2023-01-01")
-      def files(f: java.io.File): Set[(String, Long)] =
-        f.listFiles().filter(_.getName.startsWith("part-"))
-          .map(x => (x.getName, x.length)).toSet
-      val janBefore = files(jan)
-
-      // V2 append IS upsert: 5 replaced Feb keys, no duplicates, Jan untouched
+      val before = dataFiles(path)
+      // V2 append IS upsert: 5 replaced Feb keys, no duplicates, no file rewritten
       dtRows(11 to 15, "2023-02-01", "b").writeTo("graft_store").append()
       val s1 = spark.table("graft_store")
       assert(s1.count() == 20)
       assert(s1.filter(col("payload") === "b").count() == 5)
-      assert(files(jan) == janBefore, "untouched partition was rewritten through the V2 path")
+      assert(before.subsetOf(dataFiles(path)), "a data file was rewritten through the V2 path")
 
-      // SQL DELETE drives the partition-scoped anti-join rewrite
+      // SQL DELETE drives the keyed commit; the snapshot now carries
+      // tombstones, which the read applies in-plan
       spark.sql("DELETE FROM graft_store WHERE chunk_id IN " +
         (11 to 20).map(i => s"'c$i'").mkString("(", ",", ")"))
       assert(spark.table("graft_store").count() == 10)
-      assert(!new java.io.File(path, "load_dt=2023-02-01").exists(),
-        "emptied partition must be dropped")
+      assert(spark.table("graft_store")
+        .filter(col("load_dt") === java.sql.Date.valueOf("2023-02-01")).isEmpty,
+        "deleted rows must not be served")
+      assert(before.subsetOf(dataFiles(path)))
 
       // overwrite(true) = TRUNCATE capability = full replace
       dtRows(30 to 32, "2023-07-01", "z").writeTo("graft_store").overwrite(lit(true))
@@ -424,12 +513,13 @@ class PipelineSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS graft_store_m")
     spark.sql(s"CREATE TABLE graft_store_m USING `graft-store` OPTIONS (path '$path')")
     try {
+      assert(spark.table("graft_store_m").count() == 3, "the legacy store reads as it is")
       dtRows(Seq(2, 4), "2023-06-01", "new").writeTo("graft_store_m").append()
       val store = spark.table("graft_store_m")
       assert(store.count() == 4)
       assert(store.filter(col("payload") === "new").count() == 2)
-      assert(new java.io.File(path, "load_dt=2023-06-01").exists(),
-        "store must be hive-partitioned after the migrating upsert")
+      assert(TimeTravel.versions(spark, path).nonEmpty,
+        "store must be versioned after the migrating upsert")
     } finally spark.sql("DROP TABLE IF EXISTS graft_store_m")
   }
 

@@ -531,20 +531,38 @@ class PlanSpec extends SparkSpec {
   }
 
   test("vector store reads prune load_dt partitions at the source") {
-    // the store is hive-partitioned on load_dt; a date predicate must
-    // become a PartitionFilter (skip whole directories), not a post-scan
-    // row filter — at 100 TB that's the difference between reading one
-    // day and reading the corpus
+    // a date predicate must reach the parquet scan as a pushed filter
+    // (row groups whose footer range misses it are skipped), not stay a
+    // post-scan row filter — at 100 TB that's the difference between
+    // reading one day and reading the corpus
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("vstore_prune")
       .toFile.getAbsolutePath + "/store"
     val rows = Seq(("a", "2023-01-01", 1), ("b", "2023-06-01", 2))
       .toDF("chunk_id", "load_dt", "v")
     graft.sources.VectorStore.upsert(spark, dir, rows)
+    graft.sources.VectorStore.upsert(spark, dir, Seq(("a", "2023-07-01", 3))
+      .toDF("chunk_id", "load_dt", "v"))
     val p = phys(graft.sources.VectorStore.read(spark, dir)
       .filter(col("load_dt") === "2023-01-01"))
-    assert("""PartitionFilters: \[[^\]]*load_dt""".r.findFirstIn(p).isDefined,
-      s"load_dt predicate must prune at the partition level:\n$p")
+    assert("""PushedFilters: \[[^\]]*load_dt""".r.findFirstIn(p).isDefined,
+      s"load_dt predicate must be pushed into the scan:\n$p")
+  }
+
+  test("reading a snapshot with deletion vectors runs no more jobs than without") {
+    import graft.sources.TimeTravel
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tt_dv_jobs")
+      .toFile.getAbsolutePath + "/t"
+    val v1 = TimeTravel.commitOverwrite((1 to 20).map(i => (i.toLong, s"r$i")).toDF("k", "s"), dir)
+    val v2 = TimeTravel.deleteMoR(spark, dir, col("k") % 3 === 0)
+    val v3 = TimeTravel.deleteMoR(spark, dir, col("k") % 5 === 0)
+    // the tombstones are read with their fixed schema: planning the DV
+    // anti-join costs no schema-inference job
+    val plain = jobsOf { TimeTravel.read(spark, dir, Some(v1)); () }
+    assert(jobsOf { TimeTravel.read(spark, dir, Some(v2)); () } <= plain)
+    assert(jobsOf { TimeTravel.read(spark, dir, Some(v3)); () } <= plain)
+    assert(TimeTravel.read(spark, dir, Some(v3)).count() == 20 - 6 - 4 + 1)
   }
 
   test("jaccard df-cap window exchange is reused by the candidate join") {

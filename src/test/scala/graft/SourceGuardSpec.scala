@@ -9,8 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Guards the one-path design of `src/main`: every session comes from
   * [[GraftSession]], which loads [[GraftExtensions]], so no helper
   * probes the catalog or the planner to choose between a kernel and a
-  * composed fallback; and every JSON document goes through the one
-  * mapper in [[Json]], so no file builds its own or escapes by hand. */
+  * composed fallback; every JSON document goes through the one mapper
+  * in [[Json]], so no file builds its own or escapes by hand; and every
+  * table commit publishes through TimeTravel's manifest, so no file
+  * swaps a path with sibling dirs. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(String, String)] = {
@@ -35,6 +37,19 @@ class SourceGuardSpec extends AnyFunSuite {
     }
     assert(builders == Seq("graft/GraftSession.scala"),
       s"SparkSession.builder() must appear once, in GraftSession: $builders")
+  }
+
+  test("src/main has one commit protocol: no staged or parked sibling dirs, no store renames") {
+    val sources = mainSources
+    val siblings = for {
+      (path, text) <- sources
+      needle <- Seq("""+ ".staging"""", """+ ".old"""")
+      if text.contains(needle)
+    } yield s"$path: $needle"
+    assert(siblings.isEmpty, siblings.mkString("sibling-dir swaps in src/main:\n", "\n", ""))
+    // every vector-store commit publishes through TimeTravel's manifest
+    val store = sources.collectFirst { case ("graft/sources/VectorStore.scala", t) => t }
+    assert(store.exists(!_.contains("rename(")), "VectorStore must not rename paths itself")
   }
 
   test("src/main constructs an ObjectMapper only in Json and neither escapes nor scans JSON by hand") {
