@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.Fixtures
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, count, lit, sum}
 
@@ -46,10 +47,7 @@ object StepProbe {
   private def indexCompact(s: SparkSession, d: String): Unit = {
     import graft.sources.InvertedIndex
     val docs = Tables(s, d, "documents")
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_stepprobe_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val Seq(dir) = Fixtures.dirs(s, "graft_step", "index")
     time("build")(InvertedIndex.build(docs.filter(col("doc_id") % 3 === 0), dir))
     time("append1")(InvertedIndex.append(docs.filter(col("doc_id") % 3 === 1), dir))
     time("append2")(InvertedIndex.append(docs.filter(col("doc_id") % 3 === 2), dir))
@@ -57,21 +55,12 @@ object StepProbe {
     time("probe")(
       InvertedIndex.searchBm25(s, dir, Seq("vector", "hash", "join"), 25)
         .write.format("noop").mode("overwrite").save())
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
   }
-
-  private def fresh(s: SparkSession, names: String*): Seq[String] =
-    names.map { n =>
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_step_${n}_p${ProcessHandle.current().pid()}"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-      p
-    }
 
   /** Mirrors q_delta_vacuum's step sequence. */
   private def deltaVacuum(s: SparkSession, d: String): Unit = {
     import graft.sources.{DeltaExport, DeltaMaintenance, DeltaRead, TimeTravel}
-    val Seq(base, tgt) = fresh(s, "dvac_base", "dvac_tgt")
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_step", "dvac_base", "dvac_tgt")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), graft.Exact.units(col("c_acctbal"), 2).as("cents"))
     time("commit_v1")(TimeTravel.commitOverwrite(c.coalesce(1), base))
@@ -96,8 +85,8 @@ object StepProbe {
   private def mvIncremental(s: SparkSession, d: String): Unit = {
     import graft.plans.{MvCatalog, MvMaintenance}
     import graft.sources.TimeTravel
-    val Seq(base, mv) = fresh(s, "ivm_base", "ivm_mv")
-    val name = s"ivm_step_p${ProcessHandle.current().pid()}"
+    val Seq(base, mv) = Fixtures.dirs(s, "graft_step", "ivm_base", "ivm_mv")
+    val name = "ivm_step"
     MvMaintenance.unregister(name); MvCatalog.unregister(name)
     val o = Tables(s, d, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
@@ -118,7 +107,7 @@ object StepProbe {
   /** Mirrors q_tt_stream_cdf's step sequence. */
   private def ttStreamCdf(s: SparkSession, d: String): Unit = {
     import graft.sources.TimeTravel
-    val Seq(base, sink, cp) = fresh(s, "cdf_base", "cdf_sink", "cdf_cp")
+    val Seq(base, sink, cp) = Fixtures.dirs(s, "graft_step", "cdf_base", "cdf_sink", "cdf_cp")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), graft.Exact.units(col("c_acctbal"), 2).as("cents"))
     time("commit_v1")(TimeTravel.commitOverwrite(c, base))
@@ -172,7 +161,7 @@ object StepProbe {
     s.sparkContext.addSparkListener(listener)
     for (pass <- 1 to 2) {
       println(s"[step] pass,$pass")
-      val Seq(dir) = fresh(s, s"ttpa$pass")
+      val Seq(dir) = Fixtures.dirs(s, "graft_step", s"ttpa$pass")
       step("commit")(TimeTravel.commitSeries((1992 to 1998).map { y =>
         o.filter(col("dd") >= day(y) && col("dd") < day(y + 1)).coalesce(1)
       }, dir, statsCols = Seq("dd")))
@@ -188,7 +177,7 @@ object StepProbe {
   /** Times the at-rest IVF×PQ build (IndexSpec's parameters) — the r15
     * loop-exit pin's 10× timed evidence (VERDICT r15 #7). */
   private def buildIvfPq(s: SparkSession, d: String): Unit = {
-    val Seq(path) = fresh(s, "ivfpq")
+    val Seq(path) = Fixtures.dirs(s, "graft_step", "ivfpq")
     val emb = Tables(s, d, "embeddings")
     time("train_centroids")(graft.sources.VectorIndex.trainCentroids(
       emb, "vec_id", "embedding", 8, 2))
@@ -253,7 +242,7 @@ object StepProbe {
     * the r15 candidate-pin's 10× timed evidence (VERDICT r15 #7). */
   private def trigram(s: SparkSession, d: String): Unit = {
     import graft.sources.TrigramIndex
-    val Seq(path) = fresh(s, "trg")
+    val Seq(path) = Fixtures.dirs(s, "graft_step", "trg")
     val docs = Tables(s, d, "documents")
     time("build")(TrigramIndex.build(docs, path, cellHexChars = 1))
     time("search")({

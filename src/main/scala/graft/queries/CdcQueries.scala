@@ -106,11 +106,7 @@ object CdcQueries {
       |FROM customer
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin) { (s, d) =>
-    // per-process suffix: Bench and Verify can run concurrently against the
-    // same dataset dir, and SaveMode.Overwrite deletes while the other reads
-    val snapshotDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_csv_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(snapshotDir) = Fixtures.dirs(s, "graft_csv", "snapshot")
     graft.sources.CsvIo.writeLatin1(Tables(s, d, "customer"), snapshotDir)
     graft.sources.CsvIo.readLatin1(s, snapshotDir,
         "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, c_mktsegment STRING")
@@ -138,9 +134,7 @@ object CdcQueries {
       |FROM documents
       |GROUP BY lang, source
       |ORDER BY lang, source""".stripMargin) { (s, d) =>
-    val snapshotDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_jsonl_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(snapshotDir) = Fixtures.dirs(s, "graft_jsonl", "snapshot")
     graft.sources.JsonIo.writeLines(Tables(s, d, "documents"), snapshotDir)
     graft.sources.JsonIo.readLines(s, snapshotDir,
         "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
@@ -170,9 +164,7 @@ object CdcQueries {
       |FROM documents
       |GROUP BY lang, source
       |ORDER BY lang, source""".stripMargin) { (s, d) =>
-    val shardDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_tar_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(shardDir) = Fixtures.dirs(s, "graft_tar", "shards")
     val entries = Tables(s, d, "documents").select(
       pmod(col("doc_id"), lit(8)).as("shard"),
       format_string("%06d", col("doc_id")).as("key"),
@@ -225,9 +217,7 @@ object CdcQueries {
       |WHERE o_orderstatus = 'F'
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_orc_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(dir) = Fixtures.dirs(s, "graft_orc", "orc")
     Tables(s, d, "orders").write.mode("overwrite").orc(dir)
     s.read.orc(dir)
       .filter(col("o_orderstatus") === "F")
@@ -258,9 +248,7 @@ object CdcQueries {
       |FROM documents
       |GROUP BY lang, source
       |ORDER BY lang, source""".stripMargin) { (s, d) =>
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_avro_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(dir) = Fixtures.dirs(s, "graft_avro", "avro")
     graft.sources.AvroIo.write(
       Tables(s, d, "documents").withColumn("shard", pmod(col("doc_id"), lit(8))),
       dir, "shard", "doc_id")
@@ -299,14 +287,8 @@ object CdcQueries {
       |FROM o WHERE band <> 'b1'
       |GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_delta_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_delta", "delta")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       col("o_orderkey").as("id"), graft.Exact.units(col("o_totalprice"), 2).as("v"),
       (col("o_orderkey") % 3).cast("int").as("b"))
@@ -373,14 +355,8 @@ object CdcQueries {
       |FROM o WHERE band IN (0, 3)
       |GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import graft.sources.IcebergRead
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_iceberg_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_iceberg", "iceberg")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       col("o_orderkey").as("id"), graft.Exact.units(col("o_totalprice"), 2).as("v"),
       concat(lit("b"), (col("o_orderkey") % 4).cast("string")).as("band"))
@@ -433,14 +409,7 @@ object CdcQueries {
       |  true AS zero_copy
       |FROM c""".stripMargin) { (s, d) =>
     import graft.sources.{DeltaExport, DeltaRead, TimeTravel}
-    val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dexp_${tag}_p${ProcessHandle.current().pid()}"
-    val tgt = base + "_delta"
-    Seq(base, tgt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_dexp", "base", "delta")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), graft.Exact.units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitSeries(Seq( // v1, v2 staged in parallel (fresh table)
@@ -473,14 +442,7 @@ object CdcQueries {
       |  true AS zero_copy
       |FROM o""".stripMargin) { (s, d) =>
     import graft.sources.{IcebergExport, IcebergRead, TimeTravel}
-    val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_iexp_${tag}_p${ProcessHandle.current().pid()}"
-    val tgt = base + "_iceberg"
-    Seq(base, tgt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_iexp", "base", "iceberg")
     val o = Tables(s, d, "orders")
       .select(col("o_orderkey").as("id"), graft.Exact.units(col("o_totalprice"), 2).as("cents"))
     TimeTravel.commitSeries(Seq( // v1, v2 staged in parallel (fresh table)
@@ -521,14 +483,8 @@ object CdcQueries {
       |  CAST(SUM(id) AS BIGINT) AS sum_id
       |FROM o WHERE pos % 7 <> 3""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ddv_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_ddv", "ddv")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       col("o_orderkey").as("id"), graft.Exact.units(col("o_totalprice"), 2).as("cents"))
     val n = o.count()
@@ -580,14 +536,8 @@ object CdcQueries {
       |FROM o WHERE band <> 'b2'
       |GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.types.{LongType, MetadataBuilder, StringType, StructField, StructType}
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dcm_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_dcm", "dcm")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       col("o_orderkey").as("col-1"), graft.Exact.units(col("o_totalprice"), 2).as("col-2"),
       (col("o_orderkey") % 5).cast("int").as("b"))
@@ -651,14 +601,8 @@ object CdcQueries {
       |  CAST(SUM(cents) AS BIGINT) AS sum_cents
       |FROM o WHERE NOT (band = 0 AND pos % 5 = 2)""".stripMargin) { (s, d) =>
     import graft.sources.IcebergRead
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ipd_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_ipd", "ipd")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       col("o_orderkey").as("id"), graft.Exact.units(col("o_totalprice"), 2).as("cents"),
       (col("o_orderkey") % 2).as("band"))
@@ -721,14 +665,8 @@ object CdcQueries {
       |FROM (SELECT ch.*, 1 AS commit_version FROM ch)
       |GROUP BY change_type ORDER BY change_type""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dcdf_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_dcdf", "dcdf")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       col("o_orderkey").as("id"), graft.Exact.units(col("o_totalprice"), 2).as("cents"))
     def stage(df: org.apache.spark.sql.DataFrame, rel: String): Unit = {
@@ -791,14 +729,7 @@ object CdcQueries {
       |  true AS zero_copy
       |FROM c""".stripMargin) { (s, d) =>
     import graft.sources.{DeltaExport, DeltaRead, TimeTravel}
-    val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dexpa_${tag}_p${ProcessHandle.current().pid()}"
-    val tgt = base + "_delta"
-    Seq(base, tgt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_dexpa", "base", "delta")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), graft.Exact.units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c.filter(col("k") % 3 === 0), base) // v1
@@ -830,14 +761,7 @@ object CdcQueries {
       |  true AS zero_copy
       |FROM o""".stripMargin) { (s, d) =>
     import graft.sources.{IcebergExport, IcebergRead, TimeTravel}
-    val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_iexpa_${tag}_p${ProcessHandle.current().pid()}"
-    val tgt = base + "_iceberg"
-    Seq(base, tgt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_iexpa", "base", "iceberg")
     val o = Tables(s, d, "orders")
       .select(col("o_orderkey").as("id"), graft.Exact.units(col("o_totalprice"), 2).as("cents"))
     TimeTravel.commitOverwrite(o.filter(col("id") % 3 =!= 0), base) // v1
@@ -870,14 +794,8 @@ object CdcQueries {
       |  CAST(SUM(cents) AS BIGINT) AS sum_cents
       |FROM o GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dv2c_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_dv2c", "dv2c")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       concat(lit("b"), (col("o_orderkey") % 3).cast("string")).as("band"),
       graft.Exact.units(col("o_totalprice"), 2).as("cents"))
@@ -953,14 +871,8 @@ object CdcQueries {
       |FROM o WHERE band <> 'b1'
       |GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.types.{LongType, MetadataBuilder, StringType, StructField, StructType}
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_didm_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_didm", "didm")
+    new java.io.File(dir).mkdirs()
     def pqId(id: Long) = new MetadataBuilder().putLong("parquet.field.id", id).build()
     val o = Tables(s, d, "orders").select(
       col("o_orderkey").as("id"), graft.Exact.units(col("o_totalprice"), 2).as("cents"),
@@ -1032,14 +944,8 @@ object CdcQueries {
       |  AND NOT (band = 1 AND pos % 5 = 2)""".stripMargin) { (s, d) =>
     import graft.sources.IcebergRead
     import graft.sources.IcebergRead.EntryInfo
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ieq_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_ieq", "ieq")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       col("o_orderkey").as("id"), graft.Exact.units(col("o_totalprice"), 2).as("cents"),
       (col("o_orderkey") % 2).as("band"))
@@ -1099,14 +1005,7 @@ object CdcQueries {
       |  CAST(SUM(k) AS BIGINT) AS sum_k
       |FROM c WHERE k % 5 <> 2""".stripMargin) { (s, d) =>
     import graft.sources.{DeltaExport, DeltaRead, TimeTravel}
-    val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dxrl_${tag}_p${ProcessHandle.current().pid()}"
-    val tgt = base + "_delta"
-    Seq(base, tgt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_dxrl", "base", "delta")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), graft.Exact.units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c.filter(col("k") % 2 === 0), base) // v1
@@ -1137,14 +1036,7 @@ object CdcQueries {
       |  CAST(SUM(k) AS BIGINT) AS sum_k
       |FROM o WHERE k % 5 <> 2""".stripMargin) { (s, d) =>
     import graft.sources.{IcebergExport, IcebergRead, TimeTravel}
-    val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ixrl_${tag}_p${ProcessHandle.current().pid()}"
-    val tgt = base + "_iceberg"
-    Seq(base, tgt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_ixrl", "base", "iceberg")
     val o = Tables(s, d, "orders")
       .select(col("o_orderkey").as("k"), graft.Exact.units(col("o_totalprice"), 2).as("cents"))
     TimeTravel.commitOverwrite(o.filter(col("k") % 2 === 0), base) // v1
@@ -1178,14 +1070,7 @@ object CdcQueries {
       |  CAST(SUM(k) AS BIGINT) AS sum_k
       |FROM o WHERE NOT (k % 2 = 0 AND k % 7 = 3) AND k % 5 <> 2""".stripMargin) { (s, d) =>
     import graft.sources.{IcebergExport, IcebergRead, TimeTravel}
-    val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ixdv_${tag}_p${ProcessHandle.current().pid()}"
-    val tgt = base + "_iceberg"
-    Seq(base, tgt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_ixdv", "base", "iceberg")
     val o = Tables(s, d, "orders")
       .select(col("o_orderkey").as("k"), graft.Exact.units(col("o_totalprice"), 2).as("cents"))
     TimeTravel.commitOverwrite(o.filter(col("k") % 2 === 0), base) // v1
@@ -1235,14 +1120,7 @@ object CdcQueries {
       |  1 AS files_read
       |FROM c WHERE band = 2""".stripMargin) { (s, d) =>
     import graft.sources.{DeltaExport, DeltaRead, TimeTravel}
-    val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dskip_${tag}_p${ProcessHandle.current().pid()}"
-    val tgt = base + "_delta"
-    Seq(base, tgt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_dskip", "base", "delta")
     val c = Tables(s, d, "customer").select(
       col("c_custkey").as("k"), graft.Exact.units(col("c_acctbal"), 2).as("cents"))
       .withColumn("band", ntile(3).over(
@@ -1278,14 +1156,7 @@ object CdcQueries {
       |  1 AS files_read
       |FROM c WHERE band = 2""".stripMargin) { (s, d) =>
     import graft.sources.{IcebergExport, IcebergRead, TimeTravel}
-    val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_iskip_${tag}_p${ProcessHandle.current().pid()}"
-    val tgt = base + "_iceberg"
-    Seq(base, tgt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_iskip", "base", "iceberg")
     val c = Tables(s, d, "customer").select(
       col("c_custkey").as("k"), graft.Exact.units(col("c_acctbal"), 2).as("cents"))
       .withColumn("band", ntile(3).over(
@@ -1335,14 +1206,7 @@ object CdcQueries {
       |  1 AS files_read
       |FROM eb, b WHERE eb.tsu BETWEEN b.lo AND b.hi""".stripMargin) { (s, d) =>
     import graft.sources.{DeltaExport, DeltaRead, TimeTravel}
-    val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dntz_${tag}_p${ProcessHandle.current().pid()}"
-    val tgt = base + "_delta"
-    Seq(base, tgt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_dntz", "base", "delta")
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("ts"), col("event_id"))
     val e = Tables(s, d, "events")
@@ -1403,14 +1267,8 @@ object CdcQueries {
       |FROM o GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import graft.sources.{DeltaExport, DeltaRead}
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dfor_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_dfor", "dfor")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       concat(lit("b"), (col("o_orderkey") % 4).cast("string")).as("band"),
       col("o_orderkey").as("k"), graft.Exact.units(col("o_totalprice"), 2).as("cents"))
@@ -1481,14 +1339,8 @@ object CdcQueries {
       |FROM live GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import graft.sources.{DeltaExport, DeltaRead}
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dfdel_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_dfdel", "dfdel")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       concat(lit("b"), (col("o_orderkey") % 4).cast("string")).as("band"),
       col("o_orderkey").as("k"), graft.Exact.units(col("o_totalprice"), 2).as("cents"))
@@ -1558,14 +1410,8 @@ object CdcQueries {
       |FROM live GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import graft.sources.{DeltaExport, DeltaRead}
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dfmor_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_dfmor", "dfmor")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       concat(lit("b"), (col("o_orderkey") % 4).cast("string")).as("band"),
       col("o_orderkey").as("k"), graft.Exact.units(col("o_totalprice"), 2).as("cents"))
@@ -1636,14 +1482,8 @@ object CdcQueries {
       |FROM upd GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import graft.sources.{DeltaExport, DeltaRead}
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dfupd_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_dfupd", "dfupd")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       concat(lit("b"), (col("o_orderkey") % 4).cast("string")).as("band"),
       col("o_orderkey").as("k"), graft.Exact.units(col("o_totalprice"), 2).as("cents"))
@@ -1701,14 +1541,7 @@ object CdcQueries {
       |  CAST(SUM(amount) AS BIGINT) AS sum_amount
       |FROM o GROUP BY g ORDER BY g""".stripMargin) { (s, d) =>
     import graft.sources.{DeltaExport, DeltaRead, TimeTravel}
-    val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dxcm_${tag}_p${ProcessHandle.current().pid()}"
-    val tgt = base + "_delta"
-    Seq(base, tgt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_dxcm", "base", "delta")
     val o = Tables(s, d, "orders").select(
       col("o_orderkey").as("k"),
       graft.Exact.units(col("o_totalprice"), 2).as("cents"))
@@ -1749,14 +1582,7 @@ object CdcQueries {
       |SELECT k % 4 AS g, COUNT(*) AS n_rows, CAST(SUM(cnt) AS BIGINT) AS sum_cnt
       |FROM o GROUP BY g ORDER BY g""".stripMargin) { (s, d) =>
     import graft.sources.{DeltaExport, DeltaRead, TimeTravel}
-    val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dxw_${tag}_p${ProcessHandle.current().pid()}"
-    val tgt = base + "_delta"
-    Seq(base, tgt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_dxw", "base", "delta")
     val o = Tables(s, d, "orders").select(col("o_orderkey").as("k"))
     TimeTravel.commitOverwrite( // v1: the NARROW era — cnt is INT
       o.filter(col("k") % 2 === 0)
@@ -1798,13 +1624,8 @@ object CdcQueries {
       |  CAST(SUM(cents) AS BIGINT) AS sum_a
       |FROM o GROUP BY tag ORDER BY tag""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.types.{LongType, StructField, StructType, VariantType}
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_var_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(new java.io.File(dir)); new java.io.File(dir).mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_var", "var")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(col("o_orderkey").as("k"),
       graft.Exact.units(col("o_totalprice"), 2).as("cents"))
     val tmp = s"${dir}_stage"
@@ -1868,14 +1689,8 @@ object CdcQueries {
       |  CAST(SUM(cents) AS BIGINT) AS sum_cents
       |FROM o GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.types.{LongType, MetadataBuilder, StringType, StructField, StructType}
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dncm_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_dncm", "dncm")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       concat(lit("b"), (col("o_orderkey") % 4).cast("string")).as("band"),
       col("o_orderkey").as("id"), graft.Exact.units(col("o_totalprice"), 2).as("cents"))
@@ -1929,14 +1744,8 @@ object CdcQueries {
       |  CAST(SUM(cents) AS BIGINT) AS sum_cents
       |FROM o GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.types.{LongType, MetadataBuilder, StringType, StructField, StructType}
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_didn_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_didn", "didn")
+    new java.io.File(dir).mkdirs()
     def idm(id: Long) = new MetadataBuilder().putLong("parquet.field.id", id).build()
     val o = Tables(s, d, "orders").select(
       concat(lit("b"), (col("o_orderkey") % 4).cast("string")).as("band"),
@@ -1992,14 +1801,8 @@ object CdcQueries {
       |  CAST(SUM(cents) AS BIGINT) AS sum_cents
       |FROM o WHERE id % 10 = 5""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.types.{LongType, MetadataBuilder, StructField, StructType}
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_cdfidm_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_cdfidm", "cdfidm")
+    new java.io.File(dir).mkdirs()
     def pqId(id: Long) = new MetadataBuilder().putLong("parquet.field.id", id).build()
     val o = Tables(s, d, "orders").select(
       col("o_orderkey").as("id"), graft.Exact.units(col("o_totalprice"), 2).as("cents"))
@@ -2063,14 +1866,8 @@ object CdcQueries {
       |SELECT band, COUNT(*) AS n_rows, CAST(SUM(cents) AS BIGINT) AS sum_cents
       |FROM o GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import graft.sources.IcebergRead
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_icev3_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_icev3", "icev3")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       concat(lit("b"), (col("o_orderkey") % 4).cast("string")).as("band"),
       graft.Exact.units(col("o_totalprice"), 2).as("cents"))
@@ -2124,14 +1921,8 @@ object CdcQueries {
       |  AND NOT (band = 0 AND id % 11 = 0)""".stripMargin) { (s, d) =>
     import graft.sources.{IcebergRead, Puffin}
     import graft.sources.IcebergRead.EntryInfo
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_iv3dv_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val root = new java.io.File(dir)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(root); root.mkdirs()
+    val Seq(dir) = Fixtures.dirs(s, "graft_iv3dv", "iv3dv")
+    new java.io.File(dir).mkdirs()
     val o = Tables(s, d, "orders").select(
       col("o_orderkey").as("id"), graft.Exact.units(col("o_totalprice"), 2).as("cents"),
       (col("o_orderkey") % 2).as("band"))
@@ -2194,15 +1985,7 @@ object CdcQueries {
       |  CAST(SUM(cents) AS BIGINT) AS sum_cents
       |FROM o GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import graft.sources.{IcebergExport, IcebergRead, TimeTravel}
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_iexpp_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val src = s"$base/src"
-    val tgt = s"$base/tgt"
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(new java.io.File(base))
+    val Seq(src, tgt) = Fixtures.dirs(s, "graft_iexpp", "src", "tgt")
     val o = Tables(s, d, "orders").select(
       concat(lit("b"), (col("o_orderkey") % 3).cast("string")).as("band"),
       col("o_orderkey").as("id"), graft.Exact.units(col("o_totalprice"), 2).as("cents"))
@@ -2236,15 +2019,7 @@ object CdcQueries {
       |  CAST(SUM(cents) AS BIGINT) AS sum_cents, 1 AS files_read
       |FROM o WHERE day_idx = 1""".stripMargin) { (s, d) =>
     import graft.sources.{IcebergExport, IcebergRead, TimeTravel}
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_iexpd_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val src = s"$base/src"
-    val tgt = s"$base/tgt"
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(new java.io.File(base))
+    val Seq(src, tgt) = Fixtures.dirs(s, "graft_iexpd", "src", "tgt")
     // NTZ carries INT64 micros with real footer stats (the day-purity
     // source); day = 2024-03-01 + (k % 3), hours vary within each day
     val o = Tables(s, d, "orders").select(col("o_orderkey").as("k"),
@@ -2298,15 +2073,7 @@ object CdcQueries {
       |FROM o GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import graft.functions.IcebergPartitionFns.icebergBucket
     import graft.sources.{IcebergExport, IcebergRead, TimeTravel}
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_iexpb_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val src = s"$base/src"
-    val tgt = s"$base/tgt"
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(new java.io.File(base))
+    val Seq(src, tgt) = Fixtures.dirs(s, "graft_iexpb", "src", "tgt")
     val o = Tables(s, d, "orders").select(col("o_orderkey").as("k"),
       graft.Exact.units(col("o_totalprice"), 2).as("cents"))
     val seeded = o.filter(col("k") % 2 === 0)
@@ -2381,15 +2148,7 @@ object CdcQueries {
       |  CAST(SUM(cents) AS BIGINT) AS sum_cents
       |FROM u GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import graft.sources.{IcebergExport, IcebergRead, TimeTravel}
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ifdel_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val src = s"$base/src"
-    val tgt = s"$base/tgt"
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(new java.io.File(base))
+    val Seq(src, tgt) = Fixtures.dirs(s, "graft_ifdel", "src", "tgt")
     val o = Tables(s, d, "orders").select(col("o_orderkey").as("k"),
       graft.Exact.units(col("o_totalprice"), 2).as("cents"))
     TimeTravel.commitOverwrite(o.filter(col("k") % 2 === 0).coalesce(2), src)
@@ -2430,15 +2189,7 @@ object CdcQueries {
       |  CAST(SUM(cents) AS BIGINT) AS sum_cents, 1 AS n_new_versions
       |FROM upd GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import graft.sources.{IcebergExport, IcebergRead, TimeTravel}
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ifupd_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val src = s"$base/src"
-    val tgt = s"$base/tgt"
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(new java.io.File(base))
+    val Seq(src, tgt) = Fixtures.dirs(s, "graft_ifupd", "src", "tgt")
     val o = Tables(s, d, "orders").select(
       concat(lit("b"), (col("o_orderkey") % 4).cast("string")).as("band"),
       col("o_orderkey").as("k"), graft.Exact.units(col("o_totalprice"), 2).as("cents"))
@@ -2486,15 +2237,7 @@ object CdcQueries {
       |FROM u WHERE NOT k % 7 = 3
       |GROUP BY last_seq ORDER BY last_seq""".stripMargin) { (s, d) =>
     import graft.sources.{IcebergExport, IcebergRead, TimeTravel}
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_irl_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val src = s"$base/src"
-    val tgt = s"$base/tgt"
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(new java.io.File(base))
+    val Seq(src, tgt) = Fixtures.dirs(s, "graft_irl", "src", "tgt")
     val o = Tables(s, d, "orders").select(col("o_orderkey").as("k"))
     TimeTravel.commitOverwrite( // v1: even keys, one file in key order
       o.filter(col("k") % 2 === 0).coalesce(1).sortWithinPartitions("k"), src)

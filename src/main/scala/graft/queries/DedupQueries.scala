@@ -760,9 +760,7 @@ object DedupQueries {
        |WHERE a.doc_id % 10 = 3
        |GROUP BY query_doc, cand_doc
        |ORDER BY query_doc, cand_doc""".stripMargin) { (s, d) =>
-    val indexDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_mhidx_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(indexDir) = Fixtures.dirs(s, "graft_mhidx", "index")
     val corpus = docs(s, d).select(col("doc_id"), col("text"))
     graft.sources.MinHashIndex.build(corpus, indexDir)
     val queries = corpus.filter(col("doc_id") % 10 === 3)

@@ -16,19 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object LakehouseQueries {
 
-  private def freshDirs(s: org.apache.spark.sql.SparkSession,
-      d: String, tag: String): (String, String) = {
-    val t = Integer.toHexString(d.hashCode)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${t}_p" +
-      ProcessHandle.current().pid()
-    val tgt = base + "_tbl"
-    Seq(base, tgt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
-    (base, tgt)
-  }
-
   /** DESCRIBE HISTORY over an exported `_delta_log`: per-commit action
     * counts straight from the log (version, operation, adds, removes,
     * DV-carrying adds), plus the current row count so the history and
@@ -44,7 +31,7 @@ object LakehouseQueries {
       |FROM (VALUES (0, 2, 0, 0), (1, 2, 2, 2))
       |  AS v(version, n_adds, n_removes, n_dv_adds)
       |ORDER BY v.version""".stripMargin) { (s, d) =>
-    val (base, tgt) = freshDirs(s, d, "dhist")
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_dhist", "base", "tbl")
     val o = Tables(s, d, "orders")
       .select(col("o_orderkey").as("k"),
         graft.Exact.units(col("o_totalprice"), 2).as("cents"))
@@ -77,7 +64,7 @@ object LakehouseQueries {
       |SELECT 0 AS dv_removed_dry, 3 AS jsons_removed, 1 AS dv_removed,
       |  COUNT(*) AS n_rows, CAST(SUM(cents) AS BIGINT) AS sum_cents
       |FROM c WHERE NOT (k % 5 = 2 OR k % 7 = 3)""".stripMargin) { (s, d) =>
-    val (base, tgt) = freshDirs(s, d, "dvac")
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_dvac", "base", "tbl")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"),
         graft.Exact.units(col("c_acctbal"), 2).as("cents"))
@@ -122,7 +109,7 @@ object LakehouseQueries {
       |  1 AS orphans_removed, 1 AS snapshots_left,
       |  COUNT(*) AS n_rows, CAST(SUM(cents) AS BIGINT) AS sum_cents
       |FROM su WHERE NOT (k % 5 = 2 OR k % 7 = 3)""".stripMargin) { (s, d) =>
-    val (base, tgt) = freshDirs(s, d, "iexp")
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_iexp", "base", "tbl")
     val su = Tables(s, d, "supplier")
       .select(col("s_suppkey").as("k"),
         graft.Exact.units(col("s_acctbal"), 2).as("cents"))
@@ -159,7 +146,7 @@ object LakehouseQueries {
       |  UNION ALL
       |  SELECT 1, 1, (SELECT COUNT(*) FROM o WHERE k % 7 = 3), 2
       |) ORDER BY content""".stripMargin) { (s, d) =>
-    val (base, tgt) = freshDirs(s, d, "imeta")
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_imeta", "base", "tbl")
     val o = Tables(s, d, "orders")
       .select(col("o_orderkey").as("k"),
         graft.Exact.units(col("o_totalprice"), 2).as("cents"))
@@ -199,7 +186,7 @@ object LakehouseQueries {
       |  SELECT 'v1', 'tag', COUNT(*), CAST(SUM(cents) AS BIGINT)
       |  FROM c WHERE band = 1
       |) ORDER BY ref_name""".stripMargin) { (s, d) =>
-    val (base, tgt) = freshDirs(s, d, "irefs")
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_irefs", "base", "tbl")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"),
         graft.Exact.units(col("c_acctbal"), 2).as("cents"))
@@ -257,7 +244,7 @@ object LakehouseQueries {
       |  CAST(SUM(cents) AS BIGINT) AS sum_cents,
       |  (SELECT COUNT(*) FROM su WHERE NOT (k % 5 = 2)) AS n_at_delete
       |FROM survivors""".stripMargin) { (s, d) =>
-    val (base, tgt) = freshDirs(s, d, "ieqx")
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_ieqx", "base", "tbl")
     val su = Tables(s, d, "supplier")
       .select(col("s_suppkey").as("k"),
         graft.Exact.units(col("s_acctbal"), 2).as("cents"))
@@ -304,7 +291,7 @@ object LakehouseQueries {
       |  CAST(SUM(cents) AS BIGINT) AS sum_cents
       |FROM survivors GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
     import graft.sources.IcebergRead.{EntryInfo, Fixture}
-    val (base, tgt) = freshDirs(s, d, "iafor")
+    val Seq(base, tgt) = Fixtures.dirs(s, "graft_iafor", "base", "tbl")
     val su = Tables(s, d, "supplier").select(
       concat(lit("b"), (col("s_suppkey") % 4).cast("string")).as("band"),
       col("s_suppkey").as("k"),

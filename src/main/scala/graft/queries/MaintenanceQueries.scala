@@ -22,18 +22,6 @@ object MaintenanceQueries {
 
   import Exact._
 
-  /** A fresh directory for one execution of a fixture: unique to the
-    * call, so two executions running at once in one JVM never share
-    * files, and deleted when the JVM's FileSystem closes. */
-  private def fixtureDir(s: SparkSession, prefix: String): String = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"${System.getProperty("java.io.tmpdir")}/${prefix}_${java.util.UUID.randomUUID}")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    fs.mkdirs(p)
-    fs.deleteOnExit(p)
-    p.toString
-  }
-
   private def ev(s: SparkSession, d: String) = Tables(s, d, "events")
   private def li(s: SparkSession, d: String) = Tables(s, d, "lineitem")
 
@@ -230,9 +218,7 @@ object MaintenanceQueries {
       |     WHERE cents BETWEEN 5000000 AND 9999999) AS key_sum,
       |  (SELECT COUNT(*) FROM z) AS files_total,
       |  (SELECT COUNT(*) FROM z WHERE mn <= 9999999 AND mx >= 5000000) AS files_read""".stripMargin) { (s, d) =>
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_zonemap_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(dir) = Fixtures.dirs(s, "graft_zonemap", "zonemap")
     val base = Tables(s, d, "orders")
       .select(col("o_orderkey"), units(col("o_totalprice"), 2).as("cents"))
       .withColumn("zone", floor(col("cents").cast("double") / 2000000.0).cast("long"))
@@ -354,9 +340,7 @@ object MaintenanceQueries {
          |  (SELECT CAST(SUM(adm) AS BIGINT) FROM admit a WHERE a.probe_key = p.probe_key) AS files_bloom
          |FROM probes p
          |ORDER BY probe_key""".stripMargin) { (s, d) =>
-      val dir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_zonemap_pt_${Integer.toHexString(d.hashCode)}" +
-          s"_p${ProcessHandle.current().pid()}"
+      val Seq(dir) = Fixtures.dirs(s, "graft_zonemap_pt", "zonemap_pt")
       val base = Tables(s, d, "orders")
         .select(col("o_orderkey"), units(col("o_totalprice"), 2).as("cents"))
         .withColumn("zone", floor(col("cents").cast("double") / 2000000.0).cast("long"))
@@ -413,7 +397,7 @@ object MaintenanceQueries {
       |)
       |ORDER BY version""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir = fixtureDir(s, "graft_tt")
+    val Seq(dir) = Fixtures.dirs(s, "graft_tt", "table")
     val base = Tables(s, d, "orders")
       .select(col("o_orderdate"), units(col("o_totalprice"), 2).as("cents"))
     val cut = lit("1997-01-01 00:00:00").cast("timestamp")
@@ -453,11 +437,7 @@ object MaintenanceQueries {
       |GROUP BY 1
       |ORDER BY has_cents""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_schev_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val Seq(dir) = Fixtures.dirs(s, "graft_schev", "schev")
     val cust = Tables(s, d, "customer")
     TimeTravel.commitOverwrite(
       cust.filter(col("c_custkey") % 2 === 0).select(col("c_custkey"), col("c_name")), dir)
@@ -575,9 +555,7 @@ object MaintenanceQueries {
          |  (SELECT COUNT(*) FROM zs, scal WHERE mnd <= hi AND mxd >= lo) AS files_zorder,
          |  (SELECT COUNT(*) FROM ls, scal WHERE mnd <= hi AND mxd >= lo) AS files_linear""".stripMargin) { (s, d) =>
       import graft.sources.ZoneMaps
-      val dir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_zskip_${Integer.toHexString(d.hashCode)}" +
-          s"_p${ProcessHandle.current().pid()}"
+      val Seq(dir) = Fixtures.dirs(s, "graft_zskip", "zskip")
       val day = expr("datediff(cast(o_orderdate as date), date'1970-01-01')").cast("long")
       val base = Tables(s, d, "orders").select(
         col("o_orderkey"), col("o_custkey").cast("long").as("ck"), day.as("day"))
@@ -630,11 +608,7 @@ object MaintenanceQueries {
       |GROUP BY cohort
       |ORDER BY cohort""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_merge_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val Seq(dir) = Fixtures.dirs(s, "graft_merge", "merge")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c, dir)
@@ -683,12 +657,7 @@ object MaintenanceQueries {
       |GROUP BY bucket
       |ORDER BY bucket""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_expect_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val (mainDir, qDir) = (s"$base/main", s"$base/quarantine")
-    val fsp = new org.apache.hadoop.fs.Path(base)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val Seq(mainDir, qDir) = Fixtures.dirs(s, "graft_expect", "main", "quarantine")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitAppendExpect(c, mainDir, qDir, Map(
@@ -741,11 +710,7 @@ object MaintenanceQueries {
       |)
       |ORDER BY version""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dv_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val Seq(dir) = Fixtures.dirs(s, "graft_dv", "dv")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c, dir)                            // v1
@@ -792,11 +757,7 @@ object MaintenanceQueries {
       |GROUP BY 1
       |ORDER BY 1""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_cdf_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(dir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val Seq(dir) = Fixtures.dirs(s, "graft_cdf", "cdf")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c, dir)                            // v1
@@ -889,9 +850,7 @@ object MaintenanceQueries {
       |FROM r JOIN c ON c.cum >= r.target_rank
       |GROUP BY r.q, r.target_rank, r.total
       |ORDER BY r.q""".stripMargin) { (s, d) =>
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_qsk_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(dir) = Fixtures.dirs(s, "graft_qsk", "qsk")
     import s.implicits._
     // build per-shard sketches and persist them — at 100 TB these are
     // the per-partition histograms a stats job leaves beside the data
@@ -1085,15 +1044,13 @@ object MaintenanceQueries {
       |GROUP BY user_id
       |ORDER BY user_id""".stripMargin) { (s, d) =>
     import graft.plans.MvCatalog
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_mv_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(dir) = Fixtures.dirs(s, "graft_mv", "mv")
     def agg = ev(s, d).groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(units(col("value"), 2)).as("sum_cents"))
     MvCatalog.register(s, s"per_user_${Integer.toHexString(d.hashCode)}", agg, dir)
     val q = agg
     val fromMv =
-      q.queryExecution.executedPlan.toString.contains(new java.io.File(dir).getName)
+      Fixtures.scans(q, dir)
     q.withColumn("read_from_mv", lit(fromMv)).orderBy("user_id")
   }
 
@@ -1121,9 +1078,7 @@ object MaintenanceQueries {
       |GROUP BY user_id
       |ORDER BY user_id""".stripMargin) { (s, d) =>
     import graft.plans.MvCatalog
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_mvs_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(dir) = Fixtures.dirs(s, "graft_mvs", "mv")
     // the max_cents aggregate keeps this definition canonically DISTINCT
     // from q_mv_rewrite's (the MvCatalog is session-scoped and Verify
     // runs every query in one session — two entries with identical
@@ -1137,7 +1092,7 @@ object MaintenanceQueries {
       .agg(count(lit(1)).as("n_events"), sum(units(col("value"), 2)).as("sum_cents"),
         max(units(col("value"), 2)).as("max_cents"))
     val fromMv =
-      q.queryExecution.executedPlan.toString.contains(new java.io.File(dir).getName)
+      Fixtures.scans(q, dir)
     q.withColumn("read_from_mv", lit(fromMv)).orderBy("user_id")
   }
 
@@ -1162,9 +1117,7 @@ object MaintenanceQueries {
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin) { (s, d) =>
     import graft.plans.MvCatalog
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_mvp_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(dir) = Fixtures.dirs(s, "graft_mvp", "mv")
     def defAgg = ev(s, d).groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(units(col("value"), 2)).as("sum_cents"),
         max(units(col("value"), 2)).as("max_cents"))
@@ -1172,7 +1125,7 @@ object MaintenanceQueries {
     val q = ev(s, d).groupBy(col("event_type"))
       .agg(sum(units(col("value"), 2)).as("sum_cents"), count(lit(1)).as("n_events"))
     val fromMv =
-      q.queryExecution.executedPlan.toString.contains(new java.io.File(dir).getName)
+      Fixtures.scans(q, dir)
     q.withColumn("read_from_mv", lit(fromMv)).orderBy("event_type")
   }
 
@@ -1200,9 +1153,7 @@ object MaintenanceQueries {
       |FROM orders
       |GROUP BY bucket
       |ORDER BY bucket""".stripMargin) { (s, d) =>
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_filemeta_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(dir) = Fixtures.dirs(s, "graft_filemeta", "filemeta")
     Tables(s, d, "orders")
       .withColumn("bucket", col("o_orderkey") % 8)
       .repartition(col("bucket"))
@@ -1246,7 +1197,7 @@ object MaintenanceQueries {
       |)
       |ORDER BY version""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir = fixtureDir(s, "graft_ttdv")
+    val Seq(dir) = Fixtures.dirs(s, "graft_ttdv", "table")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c, dir)               // v1
@@ -1293,13 +1244,7 @@ object MaintenanceQueries {
     import graft.plans.{MvCatalog, MvMaintenance}
     import graft.sources.TimeTravel
     val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ivm_${tag}_p${ProcessHandle.current().pid()}"
-    val mv = base + "_mv"
-    Seq(base, mv).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, mv) = Fixtures.dirs(s, "graft_ivm", "base", "mv")
     val name = s"ivm_$tag"
     MvMaintenance.unregister(name); MvCatalog.unregister(name)
     val o = Tables(s, d, "orders")
@@ -1316,7 +1261,7 @@ object MaintenanceQueries {
       res.deltaFiles.forall(f => f.contains("data/v00002") && !f.contains("data/v00001"))
     val q = define(TimeTravel.read(s, base))
     val fromMv =
-      q.queryExecution.executedPlan.toString.contains(new java.io.File(mv).getName)
+      Fixtures.scans(q, mv)
     q.withColumn("refresh_mode", lit(res.mode))
       .withColumn("delta_only", lit(deltaOnly))
       .withColumn("read_from_mv", lit(fromMv))
@@ -1346,7 +1291,7 @@ object MaintenanceQueries {
       |  true AS agg_pushed
       |FROM orders""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir = fixtureDir(s, "graft_ttap")
+    val Seq(dir) = Fixtures.dirs(s, "graft_ttap", "table")
     val o = Tables(s, d, "orders")
       .select(col("o_orderkey"), units(col("o_totalprice"), 2).as("cents"))
     TimeTravel.commitOverwrite(o.filter(col("o_orderkey") % 2 === 0), dir)
@@ -1393,7 +1338,7 @@ object MaintenanceQueries {
       |FROM orders
       |WHERE o_orderdate >= DATE '1995-01-01' AND o_orderdate < DATE '1996-01-01'""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir = fixtureDir(s, "graft_ttpr")
+    val Seq(dir) = Fixtures.dirs(s, "graft_ttpr", "table")
     val o = Tables(s, d, "orders").select(
       expr("datediff(cast(o_orderdate as date), date'1970-01-01')").cast("long").as("dd"),
       units(col("o_totalprice"), 2).as("cents"))
@@ -1425,7 +1370,7 @@ object MaintenanceQueries {
       |FROM orders
       |WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1997-01-01'""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir = fixtureDir(s, "graft_ttpa")
+    val Seq(dir) = Fixtures.dirs(s, "graft_ttpa", "table")
     val o = Tables(s, d, "orders").select(
       expr("datediff(cast(o_orderdate as date), date'1970-01-01')").cast("long").as("dd"),
       units(col("o_totalprice"), 2).as("cents"))
@@ -1467,7 +1412,7 @@ object MaintenanceQueries {
       |FROM orders
       |WHERE o_orderdate >= DATE '1997-01-01' AND o_orderdate < DATE '1998-01-01'""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir = fixtureDir(s, "graft_ttpm")
+    val Seq(dir) = Fixtures.dirs(s, "graft_ttpm", "table")
     val o = Tables(s, d, "orders").select(
       expr("datediff(cast(o_orderdate as date), date'1970-01-01')").cast("long").as("dd"),
       units(col("o_totalprice"), 2).as("cents"))
@@ -1521,7 +1466,7 @@ object MaintenanceQueries {
       |WHERE c_custkey = 421
       |ORDER BY c_custkey""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir = fixtureDir(s, "graft_ttbl")
+    val Seq(dir) = Fixtures.dirs(s, "graft_ttbl", "table")
     val c = Tables(s, d, "customer").select(col("c_custkey"), col("c_nationkey"),
       units(col("c_acctbal"), 2).as("cents"))
     // three commits split on a NON-key attribute: custkeys scatter
@@ -1578,13 +1523,7 @@ object MaintenanceQueries {
     import graft.plans.{MvCatalog, MvMaintenance}
     import graft.sources.TimeTravel
     val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_iva_${tag}_p${ProcessHandle.current().pid()}"
-    val mv = base + "_mv"
-    Seq(base, mv).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, mv) = Fixtures.dirs(s, "graft_iva", "base", "mv")
     val name = s"iva_$tag"
     MvMaintenance.unregister(name); MvCatalog.unregister(name)
     val o = Tables(s, d, "orders")
@@ -1602,7 +1541,7 @@ object MaintenanceQueries {
       res.deltaFiles.forall(f => f.contains("data/v00002") && !f.contains("data/v00001"))
     val q = define(TimeTravel.read(s, base))
     val fromMv =
-      q.queryExecution.executedPlan.toString.contains(new java.io.File(mv).getName)
+      Fixtures.scans(q, mv)
     q.withColumn("refresh_mode", lit(res.mode))
       .withColumn("delta_only", lit(deltaOnly))
       .withColumn("read_from_mv", lit(fromMv))
@@ -1641,16 +1580,7 @@ object MaintenanceQueries {
     import graft.plans.{MvCatalog, MvMaintenance}
     import graft.sources.TimeTravel
     val tag = Integer.toHexString(d.hashCode)
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_rav_${tag}_p${ProcessHandle.current().pid()}"
-    // the MV dir name must NOT contain the base dir name, or the
-    // "never rescans the base" plan probe below can't distinguish them
-    val mv =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ravmv_${tag}_p${ProcessHandle.current().pid()}"
-    Seq(base, mv).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sessionState.newHadoopConf()).delete(hp, true)
-    }
+    val Seq(base, mv) = Fixtures.dirs(s, "graft_rav", "base", "mv")
     val name = s"rav_$tag"
     MvMaintenance.unregister(name); MvCatalog.unregister(name)
     val o = Tables(s, d, "orders")
@@ -1665,9 +1595,7 @@ object MaintenanceQueries {
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_orders"), avg(col("cents")).as("avg_cents"),
         sum(col("cents")).as("sum_cents"))
-    val plan = q.queryExecution.executedPlan.toString
-    val fromState = plan.contains("_state") &&
-      !plan.contains(new java.io.File(base).getName)
+    val fromState = Fixtures.scans(q, s"$mv/_state") && !Fixtures.scans(q, base)
     q.withColumn("rolled_from_state", lit(fromState))
       .orderBy("o_orderpriority")
   }
@@ -1707,7 +1635,7 @@ object MaintenanceQueries {
       |  true AS via_sql
       |FROM merged""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir = fixtureDir(s, "graft_ttms")
+    val Seq(dir) = Fixtures.dirs(s, "graft_ttms", "table")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c, dir) // v1
@@ -1762,7 +1690,7 @@ object MaintenanceQueries {
       |  true AS via_sql
       |FROM live""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir = fixtureDir(s, "graft_ttds")
+    val Seq(dir) = Fixtures.dirs(s, "graft_ttds", "table")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), units(col("c_acctbal"), 2).as("cents"))
     // v1 holds most rows; the k % 9 = 0 slice arrives via SQL INSERT
@@ -1804,7 +1732,7 @@ object MaintenanceQueries {
       |WHERE CAST(o_orderdate AS DATE) >= DATE '1997-01-01'
       |  AND CAST(o_orderdate AS DATE) < DATE '1998-01-01'""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir = fixtureDir(s, "graft_ttpd")
+    val Seq(dir) = Fixtures.dirs(s, "graft_ttpd", "table")
     val o = Tables(s, d, "orders").select(
       expr("cast(o_orderdate as date)").as("od"),
       units(col("o_totalprice"), 2).as("cents"))
@@ -1851,9 +1779,7 @@ object MaintenanceQueries {
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin) { (s, d) =>
     import graft.plans.MvCatalog
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_mvr_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(dir) = Fixtures.dirs(s, "graft_mvr", "mv")
     def fine = ev(s, d).groupBy(col("event_type"), (col("user_id") % 50).as("cohort"))
       .agg(count(lit(1)).as("n_events"), sum(units(col("value"), 2)).as("sum_cents"),
         min(units(col("value"), 2)).as("min_cents"))
@@ -1862,7 +1788,7 @@ object MaintenanceQueries {
       .agg(count(lit(1)).as("n_events"), sum(units(col("value"), 2)).as("sum_cents"),
         min(units(col("value"), 2)).as("min_cents"))
     val fromMv =
-      q.queryExecution.executedPlan.toString.contains(new java.io.File(dir).getName)
+      Fixtures.scans(q, dir)
     q.withColumn("rolled_up", lit(fromMv)).orderBy("event_type")
   }
 
@@ -1897,7 +1823,7 @@ object MaintenanceQueries {
       |  true AS via_sql
       |FROM live""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir = fixtureDir(s, "graft_ttrw")
+    val Seq(dir) = Fixtures.dirs(s, "graft_ttrw", "table")
     val c = Tables(s, d, "customer").select(col("c_custkey").as("k"),
       (col("c_custkey") % 4).as("band"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c, dir) // v1
@@ -1947,10 +1873,7 @@ object MaintenanceQueries {
       |FROM c""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
     import graft.streaming.TableStreams
-    val root = fixtureDir(s, "graft_ttss")
-    val base = s"$root/table"
-    val sink = s"$root/sink"
-    val cp = s"$root/cp"
+    val Seq(base, sink, cp) = Fixtures.dirs(s, "graft_ttss", "table", "sink", "cp")
     val c = Tables(s, d, "customer").select(col("c_custkey").as("k"),
       (col("c_custkey") % 3).as("band"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c.filter(col("band") === 0), base) // v1
@@ -1995,7 +1918,7 @@ object MaintenanceQueries {
       |  true AS mapped
       |FROM c""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val dir = fixtureDir(s, "graft_ttse2")
+    val Seq(dir) = Fixtures.dirs(s, "graft_ttse2", "table")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(
@@ -2049,9 +1972,7 @@ object MaintenanceQueries {
       |  true AS via_stream
       |FROM feed GROUP BY ct ORDER BY ct""".stripMargin) { (s, d) =>
     import graft.sources.TimeTravel
-    val root = fixtureDir(s, "graft_ttcdf")
-    val base = s"$root/table"
-    val sink = s"$root/sink"; val cp = s"$root/cp"
+    val Seq(base, sink, cp) = Fixtures.dirs(s, "graft_ttcdf", "table", "sink", "cp")
     val c = Tables(s, d, "customer")
       .select(col("c_custkey").as("k"), units(col("c_acctbal"), 2).as("cents"))
     TimeTravel.commitOverwrite(c, base) // v1

@@ -582,9 +582,7 @@ object MultimodalQueries {
        |  FROM documents WHERE doc_id % 20 = 0
        |)
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_binfile_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(dir) = Fixtures.dirs(s, "graft_binfile", "binfile")
     val header = Array[Byte](0x89.toByte, 'G', 'R', 'F', 0x00)
     val sel = docs(s, d).filter(col("doc_id") % 20 === 0)
       .select(col("doc_id"), graft.functions.TextFunctions.cleanText(col("text")).as("clean"))

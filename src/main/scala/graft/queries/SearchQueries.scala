@@ -269,9 +269,7 @@ object SearchQueries {
        |SELECT doc_id, score FROM bm
        |ORDER BY score DESC, doc_id
        |LIMIT 25""".stripMargin) { (s, d) =>
-    val indexDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_invidx_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
+    val Seq(indexDir) = Fixtures.dirs(s, "graft_invidx", "index")
     graft.sources.InvertedIndex.build(docs(s, d), indexDir)
     graft.sources.InvertedIndex.searchBm25(s, indexDir, Bm25Terms, 25)
   }
@@ -297,11 +295,7 @@ object SearchQueries {
        |ORDER BY score DESC, doc_id
        |LIMIT 25""".stripMargin) { (s, d) =>
     import graft.sources.InvertedIndex
-    val indexDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_invcmp_${Integer.toHexString(d.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}"
-    val fsp = new org.apache.hadoop.fs.Path(indexDir)
-    fsp.getFileSystem(s.sessionState.newHadoopConf()).delete(fsp, true)
+    val Seq(indexDir) = Fixtures.dirs(s, "graft_invcmp", "index")
     InvertedIndex.build(docs(s, d).filter(col("doc_id") % 3 === 0), indexDir)
     InvertedIndex.append(docs(s, d).filter(col("doc_id") % 3 === 1), indexDir)
     InvertedIndex.append(docs(s, d).filter(col("doc_id") % 3 === 2), indexDir)
@@ -1211,9 +1205,7 @@ object SearchQueries {
          |WHERE contains(cl.t, '$TrigramPattern')
          |ORDER BY cl.doc_id""".stripMargin) { (s, d) =>
       import graft.sources.TrigramIndex
-      val indexDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_trgidx_${Integer.toHexString(d.hashCode)}" +
-          s"_p${ProcessHandle.current().pid()}"
+      val Seq(indexDir) = Fixtures.dirs(s, "graft_trgidx", "index")
       // 16-cell layout at this corpus size (recorded in _meta; the
       // production default is 256 — see TrigramIndex.build)
       TrigramIndex.build(docs(s, d), indexDir, cellHexChars = 1)

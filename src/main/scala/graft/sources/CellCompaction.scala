@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.col
@@ -19,10 +19,9 @@ import org.apache.spark.sql.functions.col
   * Mechanics: cells whose file count exceeds what their byte size
   * needs (ceil(bytes / targetBytes)) are rewritten — staged to a
   * sibling directory first (Spark refuses to overwrite a path it is
-  * reading), then published by PER-CELL directory swap (park live,
-  * rename staged in, roll back on failure); right-sized cells are
-  * never touched or read, and the staged bytes are never re-shuffled
-  * through a second write.
+  * reading), then published by PER-CELL directory swap ([[swapIn]]);
+  * right-sized cells are never touched or read, and the staged bytes
+  * are never re-shuffled through a second write.
   * Driver work is O(cells) listing (bounded by each family's layout:
   * ≤256 dirs); row data never visits the driver. Oversized cells split
   * on a rows-per-file bound derived from the slice's observed
@@ -38,6 +37,39 @@ import org.apache.spark.sql.functions.col
   * manifest rename keeps readers on a whole snapshot.
   */
 object CellCompaction {
+
+  /** The index layouts' one park-and-swap, and the only place in
+    * `src/main` that replaces a path through sibling dirs (table
+    * commits publish through [[TimeTravel]]'s manifest instead).
+    * `write` stages the new bytes into `<live>.compact-staging`; then
+    * each of `live`'s `children` (the whole of `live` when Nil) is
+    * parked in `<live>.compact-old`, its staged copy renamed in, and
+    * the parked copy renamed back if that fails. The parked and staging
+    * dirs are deleted at the end. A reader listing a swapped dir between
+    * its two renames sees it missing: callers document that window. */
+  private[sources] def swapIn(fs: FileSystem, live: Path, children: Seq[String] = Nil)(
+      write: Path => Unit): Unit = {
+    val staging = new Path(s"$live.compact-staging")
+    val parked = new Path(s"$live.compact-old")
+    Seq(staging, parked).foreach(p => if (fs.exists(p)) fs.delete(p, true))
+    write(staging)
+    val moves =
+      if (children.isEmpty) Seq((staging, live, parked))
+      else {
+        fs.mkdirs(parked)
+        children.map(c => (new Path(staging, c), new Path(live, c), new Path(parked, c)))
+      }
+    moves.foreach { case (staged, dst, old) =>
+      if (!fs.rename(dst, old))
+        throw new java.io.IOException(s"compact: park $dst failed")
+      if (!fs.rename(staged, dst)) {
+        fs.rename(old, dst) // roll the live dir back before failing
+        throw new java.io.IOException(s"compact: publish $dst failed")
+      }
+    }
+    fs.delete(parked, true)
+    fs.delete(staging, true)
+  }
 
   /** Compact oversized cells under `path`; returns the compacted cell
     * values (empty = layout already right-sized, nothing touched). */
@@ -80,34 +112,16 @@ object CellCompaction {
       oversized.map(o => () => o._3.map(footerRows).sum)).sum
     val bytes = math.max(1L, oversized.map(_._2).sum)
     val rowsPerFile = math.max(1L, rows * targetBytes / bytes)
-    val staging = new Path(path + ".compact-staging")
-    val parked = new Path(path + ".compact-old")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    if (fs.exists(parked)) fs.delete(parked, true)
-    fs.mkdirs(parked)
-    slice.repartition(col(cellCol))
-      .write.option("maxRecordsPerFile", rowsPerFile)
-      .partitionBy(cellCol).parquet(staging.toString)
-    // publish by PER-CELL DIRECTORY SWAP — the bytes were already
-    // written right-sized into staging, so re-reading and re-shuffling
-    // them through a second Spark write (dynamic overwrite) would
-    // double the I/O of what is pure layout maintenance. Same safe
-    // dance as the index compactors: the live dir is parked
-    // (recoverable), never deleted before its replacement is in place.
-    values.foreach { v =>
-      val dirName = s"$cellCol=${ExternalCatalogUtils.escapePathName(v)}"
-      val live = new Path(root, dirName)
-      val staged = new Path(staging, dirName)
-      val old = new Path(parked, dirName)
-      if (!fs.rename(live, old))
-        throw new java.io.IOException(s"cell compact: park $live failed")
-      if (!fs.rename(staged, live)) {
-        fs.rename(old, live) // roll the live cell back before failing
-        throw new java.io.IOException(s"cell compact: publish $dirName failed")
-      }
+    // publish by PER-CELL DIRECTORY SWAP — the bytes are written
+    // right-sized into staging, so re-reading and re-shuffling them
+    // through a second Spark write (dynamic overwrite) would double the
+    // I/O of what is pure layout maintenance
+    swapIn(fs, root, values.map(v => s"$cellCol=${ExternalCatalogUtils.escapePathName(v)}")) {
+      staging =>
+        slice.repartition(col(cellCol))
+          .write.option("maxRecordsPerFile", rowsPerFile)
+          .partitionBy(cellCol).parquet(staging.toString)
     }
-    fs.delete(parked, true)
-    fs.delete(staging, true)
     values
   }
 }

@@ -136,27 +136,18 @@ object InvertedIndex {
     val batched = fs.listStatus(root).exists(st =>
       st.isDirectory && st.getPath.getName.startsWith("batch_id="))
     if (batched) {
-      // fold batch dirs -> flat cells, staged then swapped atomically
-      val staging = new Path(path + ".compact-staging")
-      val old = new Path(path + ".compact-old")
-      if (fs.exists(staging)) fs.delete(staging, true)
-      if (fs.exists(old)) fs.delete(old, true)
-      spark.read.parquet(path)
-        .select(col("term"), col("doc_id"), col("tf"), col("cell"))
-        .repartition(col("cell"))
-        .write.partitionBy("cell").parquet(staging.toString)
-      spark.read.parquet(doclenPath(path)).select(col("doc_id"), col("dl"))
-        .coalesce(1).write.parquet(s"$staging/_doclen")
-      spark.read.parquet(s"$staging/_doclen")
-        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).cast("long").as("total_dl"))
-        .coalesce(1).write.parquet(s"$staging/_stats")
-      if (!fs.rename(root, old))
-        throw new java.io.IOException(s"index compact: rename $root -> $old failed")
-      if (!fs.rename(staging, root)) {
-        fs.rename(old, root) // roll the live index back before failing
-        throw new java.io.IOException(s"index compact: rename $staging -> $root failed")
+      // fold batch dirs -> flat cells, staged then swapped in whole
+      CellCompaction.swapIn(fs, root) { staging =>
+        spark.read.parquet(path)
+          .select(col("term"), col("doc_id"), col("tf"), col("cell"))
+          .repartition(col("cell"))
+          .write.partitionBy("cell").parquet(staging.toString)
+        spark.read.parquet(doclenPath(path)).select(col("doc_id"), col("dl"))
+          .coalesce(1).write.parquet(s"$staging/_doclen")
+        spark.read.parquet(s"$staging/_doclen")
+          .agg(count(lit(1)).as("n_docs"), sum(col("dl")).cast("long").as("total_dl"))
+          .coalesce(1).write.parquet(s"$staging/_stats")
       }
-      fs.delete(old, true)
     } else {
       // r15 (guide §2.6): the cell compaction and the doclen fold act
       // on DISJOINT directories — run them as concurrent jobs; only
@@ -169,24 +160,11 @@ object InvertedIndex {
           val dlFiles = fs.listStatus(dlDir).count(f =>
             f.isFile && !f.getPath.getName.startsWith("_") &&
               !f.getPath.getName.startsWith("."))
-          if (dlFiles > 1) {
-            // same safe dance as the whole-index branch above: the live
-            // _doclen is renamed ASIDE (recoverable), never deleted before
-            // its replacement is in place
-            val dlStaging = new Path(doclenPath(path) + ".compact-staging")
-            val dlOld = new Path(doclenPath(path) + ".compact-old")
-            if (fs.exists(dlStaging)) fs.delete(dlStaging, true)
-            if (fs.exists(dlOld)) fs.delete(dlOld, true)
-            spark.read.parquet(doclenPath(path)).select(col("doc_id"), col("dl"))
-              .coalesce(1).write.parquet(dlStaging.toString)
-            if (!fs.rename(dlDir, dlOld))
-              throw new java.io.IOException(s"doclen compact: rename $dlDir aside failed")
-            if (!fs.rename(dlStaging, dlDir)) {
-              fs.rename(dlOld, dlDir) // roll the live sidecar back before failing
-              throw new java.io.IOException(s"doclen compact: rename into $dlDir failed")
+          if (dlFiles > 1)
+            CellCompaction.swapIn(fs, dlDir) { staging =>
+              spark.read.parquet(doclenPath(path)).select(col("doc_id"), col("dl"))
+                .coalesce(1).write.parquet(staging.toString)
             }
-            fs.delete(dlOld, true)
-          }
         })
       spark.read.parquet(doclenPath(path))
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).cast("long").as("total_dl"))

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * the Delta/Iceberg commit protocol reduced to its load-bearing core:
   *
   *   - data files are IMMUTABLE: each commit writes its rows to a fresh
-  *     `data/v<NNNNN>/` directory and never touches earlier ones;
+  *     `data/v<NNNNN>-<uuid>/` directory and never touches earlier ones;
   *   - a snapshot is a MANIFEST (`_versions/v<NNNNN>.json`) listing the
   *     data directories visible at that version — append = previous
   *     listing + the new directory, overwrite = just the new one,
@@ -32,7 +32,7 @@ import org.apache.spark.sql.types._
   *     explicitly vacuumed, which is what makes reproducible training
   *     runs possible ("train on the corpus exactly as of version 12");
   *   - a commit may opt its directory into FILE-SKIPPING stats: one
-  *     JSON document, `stats/v<NNNNN>/stats.json`, written through
+  *     JSON document, `stats/v<NNNNN>-<uuid>/stats.json`, written through
   *     [[graft.Json]] and staged-then-renamed before the manifest is
   *     published. It lists the range-tracked columns with their types,
   *     the bloom columns, and per non-empty data file its
@@ -68,8 +68,11 @@ object TimeTravel {
 
   private def vname(v: Long) = f"v$v%05d"
   private def manifestDir(path: String) = new Path(s"$path/_versions")
-  private def dataDir(path: String, v: Long) = s"data/${vname(v)}"
-  private def dvDir(v: Long) = s"dv/${vname(v)}"
+  /** A fresh name for one commit attempt's data or DV dir of version
+    * `v`: two writers racing for `v` never write into one dir, so the
+    * loser's rows cannot land inside the winner's snapshot. */
+  private def dataDir(v: Long) = s"data/${vname(v)}-${java.util.UUID.randomUUID}"
+  private def dvDir(v: Long) = s"dv/${vname(v)}-${java.util.UUID.randomUUID}"
 
   /** DV tombstone key columns: (file URI, row position within file) —
     * `_metadata.row_index` is stable per physical parquet file, which
@@ -463,20 +466,17 @@ object TimeTravel {
       deleteMoR(spark, path, condition)
     }
 
-  /** Write version `v`'s data directory, and its stats sidecar when
-    * `statsCols` or `bloomCols` ask for one; returns the directory.
+  /** Write the data directory `dir` (a [[dataDir]] name), and its stats
+    * sidecar when `statsCols` or `bloomCols` ask for one; returns `dir`.
     * A LOGICAL-shape `df` of a mapped table writes the physical names,
     * and the sidecar keys on them too: a caller's logical columns
     * translate through the era's map (the probe side translates back
     * — [[planProbes]]), so skipping keeps working across renames. */
-  private def writeWithStats(df: DataFrame, path: String, v: Long,
+  private def writeWithStats(df: DataFrame, path: String, dir: String,
       mapping: Option[Seq[ColMap]], statsCols: Seq[String],
       bloomCols: Seq[String]): String = {
-    val dir = dataDir(path, v)
     val written = mapping.map(toPhysical(df, _)).getOrElse(df)
-    // overwrite: a crash between data write and manifest publish leaves
-    // an orphan (invisible) dir that the retried commit must reclaim
-    written.write.mode("overwrite").parquet(s"$path/$dir")
+    written.write.parquet(s"$path/$dir")
     def phys(c: String): String =
       mapping.flatMap(_.find(_.logical == c)).map(_.physical).getOrElse(c)
     if (statsCols.nonEmpty || bloomCols.nonEmpty)
@@ -505,7 +505,7 @@ object TimeTravel {
     // A mapped table's appends arrive in LOGICAL shape and write the
     // immutable physical names; the mapping itself carries forward
     val mapping = prev.map(_.cols).filter(_.nonEmpty)
-    val dir = writeWithStats(df, path, v, mapping, statsCols, bloomCols)
+    val dir = writeWithStats(df, path, dataDir(v), mapping, statsCols, bloomCols)
     publish(spark, path, v, prev.map(_.dirs).getOrElse(Seq.empty) :+ dir, tag,
       prev.map(_.dvs).getOrElse(Seq.empty), mapping.getOrElse(Seq.empty))
     v
@@ -533,23 +533,22 @@ object TimeTravel {
     val cur = latest(spark, path)
     val v = cur.getOrElse(0L) + 1
     val mapping = cur.flatMap(colsListing(spark, path, _))
-    val dir = writeWithStats(df, path, v, mapping, statsCols, bloomCols)
+    val dir = writeWithStats(df, path, dataDir(v), mapping, statsCols, bloomCols)
     publish(spark, path, v, Seq(dir), cols = mapping.getOrElse(Seq.empty))
     v
   }
 
   /** Build a FRESH table's first N commits in one parallel staging
-    * pass. Byte-identical outcome to `commitOverwrite(batches.head)`
-    * followed by `commitAppend(batches(i))` in order — same
-    * `data/vNNNNN` directories, same stats sidecars, same cumulative
-    * manifest listings — but the N data writes overlap as concurrent
-    * jobs ([[ParallelJobs]]), and the N manifests publish afterwards in
-    * order (driver-side microseconds each). The per-commit writes are
-    * independent ONLY because the version slots are pre-assigned 1..N,
-    * which is sound solely on an empty table — hence the fresh-table
-    * guard (concurrent writers would race the pre-assigned names, so
-    * this is a bulk-build tool, not a multi-writer commit path; those
-    * stay on [[commitAppendRetrying]]).
+    * pass. The same outcome as `commitOverwrite(batches.head)` followed
+    * by `commitAppend(batches(i))` in order — one data directory per
+    * batch, same stats sidecars, same cumulative manifest listings —
+    * but the N data writes overlap as concurrent jobs
+    * ([[ParallelJobs]]), and the N manifests publish afterwards in
+    * order (driver-side microseconds each). The versions are
+    * pre-assigned 1..N, which is sound solely on an empty table — hence
+    * the fresh-table guard (a concurrent writer would race the
+    * pre-assigned manifests, so this is a bulk-build tool, not a
+    * multi-writer commit path; those stay on [[commitAppendRetrying]]).
     */
   def commitSeries(batches: Seq[DataFrame], path: String,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Seq[Long] = {
@@ -559,7 +558,7 @@ object TimeTravel {
       s"commitSeries pre-assigns versions 1..N and requires a fresh table at $path")
     val vs = (1L to batches.size.toLong).toSeq
     val dirs = ParallelJobs.awaitAll(vs.zip(batches).map { case (v, b) =>
-      () => writeWithStats(b, path, v, None, statsCols, bloomCols)
+      () => writeWithStats(b, path, dataDir(v), None, statsCols, bloomCols)
     })
     vs.foreach(v => publish(spark, path, v, dirs.take(v.toInt)))
     vs
@@ -664,7 +663,7 @@ object TimeTravel {
     * manifest and the live rows of any of its data directories, each
     * row with its (file, pos) position and the prior tombstones
     * subtracted; write the tombstones and the new rows it returns as
-    * concurrent jobs into the next version's unpublished `dv/` and
+    * concurrent jobs into this attempt's own unpublished `dv/` and
     * `data/` directories (the new data carries `statsCols` sidecars);
     * then publish both, minus the dropped directories, in ONE manifest
     * rename — a reader sees the whole change or none of it, and the
@@ -672,9 +671,9 @@ object TimeTravel {
     * commits nothing and returns the current version.
     *
     * A crash before the publish leaves only unpublished directories,
-    * which no reader lists and the retried commit of the same version
-    * overwrites. A concurrent writer that publishes that version first
-    * makes this one fail with [[CommitConflictException]]. */
+    * which no reader lists and [[vacuum]] reclaims. A concurrent writer
+    * that publishes that version first makes this one fail with
+    * [[CommitConflictException]]; its dirs stay unpublished. */
   private[sources] def rowLevelCommit(spark: SparkSession, path: String, what: String,
       statsCols: Seq[String] = Nil)(
       change: (Manifest, Seq[String] => DataFrame) => Option[RowChange]): Long = {
@@ -687,17 +686,18 @@ object TimeTravel {
       case None => cur
       case Some(c) =>
         val mapping = Some(m.cols).filter(_.nonEmpty)
+        val dvs = c.tombstones.map(dvDir(v) -> _)
+        val data = c.data.map(dataDir(v) -> _)
         val writes: Seq[() => Unit] =
-          c.tombstones.toSeq.map(t => () =>
-            t.select(DvCols.head, DvCols.tail: _*)
-              .write.mode("overwrite").parquet(s"$path/${dvDir(v)}")) ++
-          c.data.toSeq.map(d => () => {
-            writeWithStats(d, path, v, mapping, statsCols, Nil); ()
-          })
+          dvs.toSeq.map { case (dir, t) => () =>
+            t.select(DvCols.head, DvCols.tail: _*).write.parquet(s"$path/$dir")
+          } ++
+          data.toSeq.map { case (dir, d) => () => {
+            writeWithStats(d, path, dir, mapping, statsCols, Nil); ()
+          } }
         if (writes.nonEmpty) ParallelJobs.awaitAll(writes)
-        publish(spark, path, v,
-          m.dirs.filterNot(c.dropDirs.toSet) ++ c.data.map(_ => dataDir(path, v)),
-          dvs = m.dvs ++ c.tombstones.map(_ => dvDir(v)), cols = m.cols)
+        publish(spark, path, v, m.dirs.filterNot(c.dropDirs.toSet) ++ data.map(_._1),
+          dvs = m.dvs ++ dvs.map(_._1), cols = m.cols)
         v
     }
   }
@@ -798,15 +798,16 @@ object TimeTravel {
 
   /** DESCRIBE HISTORY face: one row per committed version — its tag (if
     * any), how many data directories the snapshot sees, how many of
-    * those this commit ADDED (0 ⇒ overwrite/rollback/metadata-only),
-    * and its deletion-vector count. Driver-side O(commits) manifest
-    * reads, no data touched — the audit surface an operator reads
-    * before rolling back or vacuuming. */
+    * those the previous version's manifest did not list (0 ⇒
+    * metadata-only, a pure delete, or a rollback to a listing the
+    * previous version still held), and its deletion-vector count.
+    * Driver-side O(commits) manifest reads, no data touched — the audit
+    * surface an operator reads before rolling back or vacuuming. */
   def history(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val rows = versions(spark, path).map { v =>
-      val m = manifest(spark, path, v)
-      (v, m.tag, m.dirs.size, m.dirs.count(_ == dataDir(path, v)), m.dvs.size)
+    val ms = versions(spark, path).map(manifest(spark, path, _))
+    val rows = ms.zip(Seq.empty[String] +: ms.map(_.dirs)).map { case (m, prev) =>
+      (m.version, m.tag, m.dirs.size, m.dirs.count(d => !prev.contains(d)), m.dvs.size)
     }
     rows.toDF("version", "tag", "n_dirs", "n_added", "n_dvs")
   }
@@ -1066,8 +1067,8 @@ object TimeTravel {
 
   // ------------------------------------------------------- file skipping
 
-  /** Stats sidecar for a data directory: `stats/v<NNNNN>/` mirrors
-    * `data/v<NNNNN>/` and is immutable with it. It holds one document,
+  /** Stats sidecar for a data directory: `stats/v<NNNNN>-<uuid>/` mirrors
+    * `data/v<NNNNN>-<uuid>/` and is immutable with it. It holds one document,
     * [[StatsDocName]]. */
   private def statsDirOf(dataDirRel: String): String =
     "stats/" + dataDirRel.stripPrefix("data/")

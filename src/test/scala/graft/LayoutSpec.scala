@@ -611,12 +611,19 @@ class LayoutSpec extends SparkSpec {
     assert(ptP.collect().toSeq == ptS.collect().toSeq)
   }
 
+  /** The data dir, relative to the table, that version `v`'s commit wrote
+    * (`data/v<NNNNN>-<uuid>`). */
+  private def dataDirOf(dir: String, v: Long): String = {
+    val Array(d) = new java.io.File(s"$dir/data").list().filter(_.startsWith(f"v$v%05d-"))
+    s"data/$d"
+  }
+
   /** The footer metadata of every data file of a table version. */
   private def footers(dir: String, v: Long) = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
-    new java.io.File(f"$dir/data/v$v%05d").listFiles()
+    new java.io.File(s"$dir/${dataDirOf(dir, v)}").listFiles()
       .filter(_.getName.endsWith(".parquet")).toSeq.map { f =>
         val rdr = ParquetFileReader.open(HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
@@ -633,7 +640,7 @@ class LayoutSpec extends SparkSpec {
     def commitAndCompare(df: org.apache.spark.sql.DataFrame, statsCols: Seq[String],
         bloomCols: Seq[String] = Nil): (Long, TimeTravel.DirStats) = {
       val v = TimeTravel.commitAppend(df, dir, statsCols = statsCols, bloomCols = bloomCols)
-      val rel = f"data/v$v%05d"
+      val rel = dataDirOf(dir, v)
       val doc = TimeTravel.readStats(spark, dir, rel)
         .getOrElse(fail(s"no stats document for $rel"))
       assert(doc.columns.keys.toSeq == statsCols && doc.blooms == bloomCols)
@@ -709,7 +716,8 @@ class LayoutSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("tttorn").toFile.getAbsolutePath + "/t"
     TimeTravel.commitOverwrite(spark.range(0, 100).toDF("k").coalesce(1), dir,
       statsCols = Seq("k"))
-    val doc = new java.io.File(s"$dir/stats/v00001/stats.json").toPath
+    val statsDir = s"$dir/stats/" + dataDirOf(dir, 1).stripPrefix("data/")
+    val doc = new java.io.File(s"$statsDir/stats.json").toPath
     val good = java.nio.file.Files.readString(doc)
     val bad = Seq(good.take(good.length / 2), "not json", "", "[]",
       """{"columns":{"k":"bigint"},"blooms":[],"files":[{"file":"f","n_rows":"many",""" +
@@ -717,21 +725,58 @@ class LayoutSpec extends SparkSpec {
     bad.foreach { body =>
       java.nio.file.Files.writeString(doc, body)
       // the checksummed local FS would otherwise reject the edit first
-      new java.io.File(s"$dir/stats/v00001/.stats.json.crc").delete()
+      new java.io.File(s"$statsDir/.stats.json.crc").delete()
       val e = intercept[java.io.IOException](TimeTravel.readPruned(spark, dir, "k", 0, 10))
-      assert(e.getMessage.contains(s"$dir/stats/v00001/stats.json"),
+      assert(e.getMessage.contains(s"$statsDir/stats.json"),
         s"the error must name the sidecar: ${e.getMessage}")
     }
   }
 
-  test("two q_tt_prune_auto executions at once both return the oracle result") {
-    val q = SparkEntry.queries("q_tt_prune_auto")
-    // the oracle SQL reads `orders`: a session of its own keeps the view private
-    val oracleSession = spark.newSession()
-    Tables(oracleSession, sf, "orders").createOrReplaceTempView("orders")
-    val want = oracleSession.sql(SparkEntry.oracleSql("q_tt_prune_auto")).collect().toSeq
-    val got = graft.sources.ParallelJobs.awaitAll(Seq.fill(2)(() => q(spark, sf).collect().toSeq))
-    assert(want.nonEmpty && want.head.getBoolean(2))
-    got.foreach(rows => assert(rows == want, s"$rows != oracle $want"))
+  // queries whose fixtures write scratch dirs; the first three have an
+  // oracle Spark SQL can run, the others use DuckDB-only functions and
+  // are held to a lone execution instead
+  private val sparkOracle = Seq("q_tt_prune_auto", "q_delta_export", "q_csv_roundtrip")
+  (sparkOracle ++ Seq("q_index_compact", "q_inverted_search", "q_zonemap_point",
+      "q_neardup_index")).foreach { name =>
+    val ref = if (sparkOracle.contains(name)) "oracle" else "lone-run"
+    test(s"two $name executions at once both return the $ref result") {
+      val q = SparkEntry.queries(name)
+      val want =
+        if (sparkOracle.contains(name)) {
+          // the oracle SQL reads the sf tables: a session of its own keeps the views private
+          val oracleSession = spark.newSession()
+          Tables.all.foreach(t => Tables(oracleSession, sf, t).createOrReplaceTempView(t))
+          oracleSession.sql(SparkEntry.oracleSql(name)).collect().toSeq
+        } else q(spark, sf).collect().toSeq
+      val got = graft.sources.ParallelJobs.awaitAll(Seq.fill(2)(() => q(spark, sf).collect().toSeq))
+      assert(want.nonEmpty)
+      got.foreach(rows => assert(rows == want, s"$rows != $ref $want"))
+    }
+  }
+
+  test("Fixtures.dirs registers a fresh root for deletion and returns absent children") {
+    val Seq(a, b) = graft.queries.Fixtures.dirs(spark, "graft_fixture_test", "a", "b")
+    val root = new org.apache.hadoop.fs.Path(a).getParent
+    assert(new org.apache.hadoop.fs.Path(b).getParent == root)
+    assert(root.getName.startsWith("graft_fixture_test_"))
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.getFileStatus(root).isDirectory)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(a)) && !fs.exists(new org.apache.hadoop.fs.Path(b)))
+    assert(fs.cancelDeleteOnExit(root), "the root must be registered with deleteOnExit")
+    fs.deleteOnExit(root)
+    // a second call never shares the first one's root
+    val Seq(c) = graft.queries.Fixtures.dirs(spark, "graft_fixture_test", "a")
+    assert(new org.apache.hadoop.fs.Path(c).getParent != root)
+  }
+
+  test("Tables serves the new schema of a dir rewritten at the same path") {
+    val dir = java.nio.file.Files.createTempDirectory("tables_memo").toFile.getAbsolutePath
+    spark.range(3).toDF("a").write.parquet(s"$dir/t.parquet")
+    assert(Tables(spark, dir, "t").columns.toSeq == Seq("a"))
+    spark.range(5).selectExpr("id AS b", "CAST(id AS STRING) AS c")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val now = Tables(spark, dir, "t")
+    assert(now.columns.toSeq == Seq("b", "c"))
+    assert(now.count() == 5)
   }
 }

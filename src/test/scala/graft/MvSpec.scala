@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class MvSpec extends SparkSpec {
 
   private def mvDir(tag: String) =
-    s"${System.getProperty("java.io.tmpdir")}/graft_mv_${tag}_p${ProcessHandle.current().pid()}"
+    graft.queries.Fixtures.dirs(spark, "graft_mv", s"mv_$tag").head
 
   private def perUserAgg: DataFrame =
     Tables(spark, sf, "events")
@@ -236,11 +236,6 @@ class MvSpec extends SparkSpec {
     import graft.sources.TimeTravel
     val base = mvDir("ivm_base")
     val mv = mvDir("ivm_mv")
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(spark.sessionState.newHadoopConf()).delete(hp, true)
-    }
-    rm(base); rm(mv)
     def define(df: DataFrame): DataFrame = df.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"),
         min(col("cents")).as("mn"), max(col("cents")).as("mx"))
@@ -280,7 +275,7 @@ class MvSpec extends SparkSpec {
       val expect2 = define(TimeTravel.read(spark, base)).orderBy("user_id").collect().toSeq
       assert(spark.read.parquet(mv).orderBy("user_id").collect().toSeq == expect2,
         "rebuild after a MoR delete must reflect the deletion")
-    } finally { MvMaintenance.clear(); MvCatalog.clear(); rm(base); rm(mv) }
+    } finally { MvMaintenance.clear(); MvCatalog.clear() }
   }
 
   test("incremental maintenance fuzz: a random append history always folds ≡ recompute") {
@@ -288,11 +283,6 @@ class MvSpec extends SparkSpec {
     import graft.sources.TimeTravel
     val base = mvDir("ivm_fuzz_base")
     val mv = mvDir("ivm_fuzz_mv")
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(spark.sessionState.newHadoopConf()).delete(hp, true)
-    }
-    rm(base); rm(mv)
     // computed grouping expression (not a bare column): exercises the
     // Alias(groupingExpr) leg of the merge-spec introspection
     def define(df: DataFrame): DataFrame = df.groupBy((col("user_id") % 7).as("cohort"))
@@ -316,7 +306,7 @@ class MvSpec extends SparkSpec {
         assert(spark.read.parquet(mv).orderBy("cohort").collect().toSeq == truth,
           s"fold diverged from recompute after append batch $b")
       }
-    } finally { MvMaintenance.clear(); MvCatalog.clear(); rm(base); rm(mv) }
+    } finally { MvMaintenance.clear(); MvCatalog.clear() }
   }
 
   test("incremental maintenance: a projected-away grouping key declines to rebuild") {
@@ -324,11 +314,6 @@ class MvSpec extends SparkSpec {
     import graft.sources.TimeTravel
     val base = mvDir("ivm_pk_base")
     val mv = mvDir("ivm_pk_mv")
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(spark.sessionState.newHadoopConf()).delete(hp, true)
-    }
-    rm(base); rm(mv)
     // groupBy(user_id, event_type) but only user_id selected: the MV
     // legitimately holds several rows per user_id — merging on the
     // visible key would collapse them (the r8 review's finding)
@@ -350,7 +335,7 @@ class MvSpec extends SparkSpec {
       val expect = define(TimeTravel.read(spark, base))
         .orderBy("user_id", "s").collect().toSeq
       assert(spark.read.parquet(mv).orderBy("user_id", "s").collect().toSeq == expect)
-    } finally { MvMaintenance.clear(); MvCatalog.clear(); rm(base); rm(mv) }
+    } finally { MvMaintenance.clear(); MvCatalog.clear() }
   }
 
   test("incremental maintenance: a non-self-maintainable definition declines to rebuild") {
@@ -358,11 +343,6 @@ class MvSpec extends SparkSpec {
     import graft.sources.TimeTravel
     val base = mvDir("ivm_avg_base")
     val mv = mvDir("ivm_avg_mv")
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(spark.sessionState.newHadoopConf()).delete(hp, true)
-    }
-    rm(base); rm(mv)
     // DISTINCT aggregates are outside both the mergeable class and the
     // decomposition algebra (distinct-of-distincts cannot fold)
     def define(df: DataFrame): DataFrame = df.groupBy(col("user_id"))
@@ -379,7 +359,7 @@ class MvSpec extends SparkSpec {
       MvCatalog.clear()
       val expect = define(TimeTravel.read(spark, base)).orderBy("user_id").collect().toSeq
       assert(spark.read.parquet(mv).orderBy("user_id").collect().toSeq == expect)
-    } finally { MvMaintenance.clear(); MvCatalog.clear(); rm(base); rm(mv) }
+    } finally { MvMaintenance.clear(); MvCatalog.clear() }
   }
 
   test("incremental maintenance: an avg decomposes to sum+count pieces and folds ≡ recompute") {
@@ -387,11 +367,6 @@ class MvSpec extends SparkSpec {
     import graft.sources.TimeTravel
     val base = mvDir("ivm_davg_base")
     val mv = mvDir("ivm_davg_mv")
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(spark.sessionState.newHadoopConf()).delete(hp, true)
-    }
-    rm(base); rm(mv)
     // avg beside directly-mergeable aggregates over a computed key —
     // the decomposed-state tier: pieces live in mv/_state, the serving
     // parquet keeps the definition's exact schema
@@ -422,7 +397,7 @@ class MvSpec extends SparkSpec {
       }
       // the serving schema is the definition's, pieces stay hidden
       assert(spark.read.parquet(mv).columns.toSeq == Seq("cohort", "n", "avg_cents", "mx"))
-    } finally { MvMaintenance.clear(); MvCatalog.clear(); rm(base); rm(mv) }
+    } finally { MvMaintenance.clear(); MvCatalog.clear() }
   }
 
   test("roll-up over an avg-bearing MV folds the average from the decomposed state") {
@@ -430,11 +405,6 @@ class MvSpec extends SparkSpec {
     import graft.sources.TimeTravel
     val base = mvDir("ravg_base")
     val mv = mvDir("ravg_mv")
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(spark.sessionState.newHadoopConf()).delete(hp, true)
-    }
-    rm(base); rm(mv)
     def fine(df: DataFrame): DataFrame = df
       .groupBy(col("event_type"), (col("user_id") % 5).as("cohort"))
       .agg(count(lit(1)).as("n"), avg(col("cents")).as("avg_cents"),
@@ -452,10 +422,9 @@ class MvSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), avg(col("cents")).as("avg_cents"),
           sum(col("cents")).as("s"))
       val plan = q.queryExecution.executedPlan.toString
-      assert(plan.contains("_state"),
+      assert(graft.queries.Fixtures.scans(q, s"$mv/_state"),
         s"avg roll-up must read the piece state:\n$plan")
-      assert(!plan.contains(new java.io.File(base).getName),
-        "the base table must not be rescanned")
+      assert(!graft.queries.Fixtures.scans(q, base), "the base table must not be rescanned")
       val served = q.orderBy("event_type").collect().toSeq
       MvCatalog.clear()
       val truth = TimeTravel.read(spark, base)
@@ -473,9 +442,10 @@ class MvSpec extends SparkSpec {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"))
       val plan2 = q2.queryExecution.executedPlan.toString
-      assert(plan2.contains(new java.io.File(mv).getName) && !plan2.contains("_state"),
+      assert(graft.queries.Fixtures.scans(q2, mv) &&
+        !graft.queries.Fixtures.scans(q2, s"$mv/_state"),
         s"avg-free roll-up should not need the state:\n$plan2")
-    } finally { MvMaintenance.clear(); MvCatalog.clear(); rm(base); rm(mv) }
+    } finally { MvMaintenance.clear(); MvCatalog.clear() }
   }
 
   test("streaming delta maintenance: published MV serves the rewrite, replay-idempotent") {

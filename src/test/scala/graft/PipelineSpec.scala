@@ -177,12 +177,12 @@ class PipelineSpec extends SparkSpec {
       .withColumn("payload", raise_error(lit("crash before publish")).cast("string"))
     intercept[Exception](VectorStore.upsert(spark, path, bad))
     // and a crashed writer left a whole orphan data dir for the next version
-    dtRows(Seq(11, 99), "2023-03-01", "orphan")
-      .write.mode("overwrite").parquet(f"$path/data/v${versions.last + 1}%05d")
+    val orphan = f"data/v${versions.last + 1}%05d-${java.util.UUID.randomUUID}"
+    dtRows(Seq(11, 99), "2023-03-01", "orphan").write.parquet(s"$path/$orphan")
     assert(TimeTravel.versions(spark, path) == versions)
     assert(VectorStore.read(spark, path).collect().map(_.toString).toSet == rowsBefore,
       "unpublished dirs must stay invisible")
-    // the retry replaces the orphans and lands exactly its own change
+    // the retry writes dirs of its own and lands exactly its own change
     VectorStore.upsert(spark, path, dtRows(Seq(11), "2023-03-01", "b"))
     val s = VectorStore.read(spark, path)
     assert(s.count() == 20)
@@ -190,6 +190,9 @@ class PipelineSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq == Seq("b"))
     assert(s.filter(col("payload") === "orphan").isEmpty)
     assert(leftovers(path).isEmpty)
+    // the orphans stay unpublished until vacuum reclaims them
+    assert(TimeTravel.vacuum(spark, path, keepVersions = 2).contains(orphan))
+    assert(VectorStore.read(spark, path).collect().toSet == s.collect().toSet)
   }
 
   test("vector store: legacy unpartitioned store migrates when incoming has load_dt") {
@@ -365,7 +368,7 @@ class PipelineSpec extends SparkSpec {
     VectorStore.compact(spark, path)
     assert(snapshotDirs(path) == (1, 0), "compact must fold the dirs and the tombstones")
     val live = TimeTravel.versions(spark, path).last
-    assert(dataFiles(path).count(_._1 == f"v$live%05d") == 1,
+    assert(dataFiles(path).count(_._1.startsWith(f"v$live%05d-")) == 1,
       "fragmented store must compact to one file")
     val after = VectorStore.read(spark, path)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
@@ -631,8 +634,9 @@ class PipelineSpec extends SparkSpec {
 
     // vacuum keeping only the latest version (v4 → dirs v1+v2) drops
     // exactly v3's directory; v4 still reads intact, v3 is now gone
+    def versionOf(dirs: Seq[String]) = dirs.map(_.replaceAll("-[0-9a-f-]{36}$", ""))
     val dropped = TimeTravel.vacuum(spark, dir, keepVersions = 1)
-    assert(dropped == Seq("data/v00003"))
+    assert(versionOf(dropped) == Seq("data/v00003"), dropped)
     assert(ids(v4) == (0L until 15L))
     intercept[Exception](TimeTravel.read(spark, dir, Some(v3)).count())
 
@@ -641,7 +645,7 @@ class PipelineSpec extends SparkSpec {
     val v5 = TimeTravel.optimize(spark, dir)
     assert(v5 == 5L && ids(v5) == (0L until 15L))
     val dropped2 = TimeTravel.vacuum(spark, dir, keepVersions = 1)
-    assert(dropped2 == Seq("data/v00001", "data/v00002"))
+    assert(versionOf(dropped2) == Seq("data/v00001", "data/v00002"), dropped2)
     assert(ids(v5) == (0L until 15L))
     // an already-compact table is a no-op, not a fresh version
     assert(TimeTravel.optimize(spark, dir) == v5)
@@ -741,7 +745,8 @@ class PipelineSpec extends SparkSpec {
     val v2 = TimeTravel.deleteMoR(spark, dir, col("id") < 3L)
     assert(ids == (3L until 10L))
     assert((dataDirs, dataMtimes) == before, "a MoR delete must not touch data files")
-    assert(new java.io.File(s"$dir/dv").listFiles().map(_.getName).toSeq == Seq("v00002"))
+    assert(new java.io.File(s"$dir/dv").listFiles().map(_.getName).toSeq
+      .map(_.replaceAll("-[0-9a-f-]{36}$", "")) == Seq("v00002"))
     // pre-delete snapshot still complete
     assert(TimeTravel.read(spark, dir, Some(v1)).count() == 10)
 
@@ -830,18 +835,45 @@ class PipelineSpec extends SparkSpec {
     // from a stale latest must throw at publish, not overwrite the
     // winner's manifest (the race window the public API can't
     // interleave — driven through the publish step directly)
+    val Array(v1Dir) = new java.io.File(s"$dir/data").list().map("data/" + _)
     val winner = new java.io.File(s"$dir/_versions/v00002.json")
-    java.nio.file.Files.writeString(winner.toPath,
-      """{"version":2,"dirs":["data/v00001"]}""")
+    java.nio.file.Files.writeString(winner.toPath, s"""{"version":2,"dirs":["$v1Dir"]}""")
     val before = java.nio.file.Files.readString(winner.toPath)
     intercept[java.io.IOException] {
-      TimeTravel.publish(spark, dir, 2L, Seq("data/v00001", "data/v00002"))
+      TimeTravel.publish(spark, dir, 2L, Seq(v1Dir, "data/v00002"))
     }
     assert(java.nio.file.Files.readString(winner.toPath) == before,
       "the winner's manifest must survive byte-identical")
     // the conflicted table still reads and commits normally afterwards
     assert(TimeTravel.read(spark, dir).count() == 1)
     assert(TimeTravel.commitAppend(Seq((2L, "b")).toDF("id", "payload"), dir) == 3L)
+  }
+
+  test("racing writers: the loser's rows never land in the winner's snapshot") {
+    import graft.sources.CommitConflictException
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val dir = Files.createTempDirectory("ttrace").toFile.getAbsolutePath + "/t"
+    TimeTravel.commitOverwrite(Seq(0L).toDF("id"), dir) // v1
+    // writer B resolves v2, then parks inside its data write job
+    val park = udf { (id: Long) =>
+      RaceLatches.started.countDown()
+      RaceLatches.release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      id
+    }
+    val b = Future(TimeTravel.commitAppend(
+      Seq(100L, 101L, 102L).toDF("id").coalesce(1).select(park(col("id")).as("id")), dir))
+    try {
+      assert(RaceLatches.started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      // writer A commits v2 while B is still writing
+      assert(TimeTravel.commitAppend(Seq(1L, 2L).toDF("id"), dir) == 2L)
+    } finally RaceLatches.release.countDown()
+    intercept[CommitConflictException](Await.result(b, 120.seconds))
+    assert(TimeTravel.read(spark, dir, Some(2L)).as[Long].collect().sorted.toSeq ==
+      Seq(0L, 1L, 2L))
+    assert(TimeTravel.versions(spark, dir) == Seq(1L, 2L))
   }
 
   test("conflict retry: concurrent appends both land, each as its own version") {
@@ -1396,4 +1428,11 @@ class PipelineSpec extends SparkSpec {
     be.embedBatch(Seq("c")) // 20ms into the next window: waits the rest
     assert(sleeps.toSeq == Seq(50L, 30L))
   }
+}
+
+/** Latches a test's write job parks on, so it can interleave two writers
+  * (a UDF reaches them statically; a latch does not serialize). */
+object RaceLatches {
+  val started = new java.util.concurrent.CountDownLatch(1)
+  val release = new java.util.concurrent.CountDownLatch(1)
 }

@@ -851,7 +851,7 @@ class PlanSpec extends SparkSpec {
     // user-written join sequence by estimated cardinality instead of
     // executing it literally. Tables live in a tmp-located database so
     // the repo dir stays clean; stats come from ANALYZE TABLE.
-    val dbDir = s"${System.getProperty("java.io.tmpdir")}/graft_cbo_p${ProcessHandle.current().pid()}"
+    val dbDir = graft.queries.Fixtures.dirs(spark, "graft_cbo", "db").head
     val conf = spark.conf
     val saved = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled",
       "spark.sql.autoBroadcastJoinThreshold")

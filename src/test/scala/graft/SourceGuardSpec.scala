@@ -10,9 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[GraftSession]], which loads [[GraftExtensions]], so no helper
   * probes the catalog or the planner to choose between a kernel and a
   * composed fallback; every JSON document goes through the one mapper
-  * in [[Json]], so no file builds its own or escapes by hand; and every
-  * table commit publishes through TimeTravel's manifest, so no file
-  * swaps a path with sibling dirs. */
+  * in [[Json]], so no file builds its own or escapes by hand; every
+  * table commit publishes through TimeTravel's manifest, so the one
+  * file that swaps a path with sibling dirs is the index compactions'
+  * park-and-swap, `CellCompaction.swapIn` (whose reader window its
+  * callers document); and every scratch dir comes from
+  * `graft.queries.Fixtures`. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(String, String)] = {
@@ -50,6 +53,23 @@ class SourceGuardSpec extends AnyFunSuite {
     // every vector-store commit publishes through TimeTravel's manifest
     val store = sources.collectFirst { case ("graft/sources/VectorStore.scala", t) => t }
     assert(store.exists(!_.contains("rename(")), "VectorStore must not rename paths itself")
+    // the index compactions' park-and-swap is the one sibling-dir swap
+    val swaps = sources.collect {
+      case (path, text) if text.contains(".compact-staging") || text.contains(".compact-old") =>
+        path
+    }
+    assert(swaps == Seq("graft/sources/CellCompaction.scala"),
+      s"compaction staging/parked dirs outside CellCompaction.swapIn: $swaps")
+  }
+
+  test("src/main builds scratch dirs only in Fixtures") {
+    val users = for {
+      (path, text) <- mainSources
+      needle <- Seq("java.io.tmpdir", "ProcessHandle.current().pid")
+      if text.contains(needle)
+    } yield path
+    assert(users.distinct == Seq("graft/queries/Fixtures.scala"),
+      s"tmpdir or pid-keyed paths outside graft.queries.Fixtures: $users")
   }
 
   test("src/main constructs an ObjectMapper only in Json and neither escapes nor scans JSON by hand") {

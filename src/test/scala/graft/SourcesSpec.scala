@@ -528,7 +528,9 @@ class SourcesSpec extends SparkSpec {
     val repl = (1L to 10L).map(i => (i, s"fresh_$i", i * 1000)).toDF("k", "nm", "bal")
     repl.createOrReplaceTempView("dml_rw_src")
     // fingerprint the seed data files before the scoped overwrite
-    val seedFiles = spark.read.parquet(s"$dirSql/data/v00001")
+    val Array(seedDir) = new java.io.File(s"$dirSql/data").listFiles()
+      .filter(_.getName.startsWith("v00001-")).map(_.getPath)
+    val seedFiles = spark.read.parquet(seedDir)
       .inputFiles.sorted.toSeq
     val seedBytes = seedFiles.map(f =>
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(new java.net.URI(f))))
