@@ -6,7 +6,8 @@ import scala.collection.immutable.ListMap
 
 import graft.Json
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, MetadataBuilder, StructType}
 
 /** EXPORT a versioned-table snapshot AS a Delta table — the interop
   * direction [[DeltaRead]] doesn't cover: any Delta-speaking engine
@@ -47,17 +48,6 @@ object DeltaExport {
     * reserved set). */
   private def encodePath(f: String): String =
     new Path(f).toUri.toASCIIString
-
-  /** [[append]]'s gate only (snapshots export mappings as name mode,
-    * r14): the published metaData pins the schemaString, so appending
-    * through a source-side mapping change cannot be expressed — a
-    * fresh snapshot re-publishes the new mapping. */
-  private def requireUnmapped(spark: SparkSession, sourcePath: String, v: Long): Unit =
-    if (TimeTravel.colsListing(spark, sourcePath, v).nonEmpty)
-      throw new UnsupportedOperationException(
-        s"v$v of $sourcePath resolves through a column mapping; append " +
-          "cannot follow it under the pinned metaData — export a fresh " +
-          "snapshot (which publishes the mapping as name mode)")
 
   /** TimestampNTZType anywhere in the schema — the protocol requires
     * the `timestampNtz` table feature named for it (r14). */
@@ -467,7 +457,10 @@ object DeltaExport {
     val g1 = toVersion.getOrElse(TimeTravel.versions(spark, sourcePath).lastOption
       .getOrElse(throw new IllegalArgumentException(s"no versions at $sourcePath")))
     if (g1 <= g0) return 0
-    requireUnmapped(spark, sourcePath, g1)
+    // the published metaData pins the schemaString: appending through
+    // a source-side mapping change cannot be expressed
+    TimeTravel.requireUnmapped(spark, sourcePath, g1, "DeltaExport.append",
+      "export a fresh snapshot, which publishes the mapping as name mode")
     var rowLevel = false
     ((g0 + 1) to g1).foreach { v =>
       TimeTravel.classifyCommit(spark, sourcePath, v) match {
@@ -745,48 +738,6 @@ object DeltaExport {
     }
   }
 
-  /** Sum of footer null counts for `cols` across every parquet part
-    * under `dir` (recursive), keyed by column name; None when some
-    * row-bearing file lacks statistics for the column. NOT NULL /
-    * `required` writer obligations validate from the STAGED footers —
-    * already written, so no persist and no second pass over the frame
-    * (r15 review: the aggregate-prepass doubled write I/O). */
-  private[sources] def stagedNullCounts(
-      conf: org.apache.hadoop.conf.Configuration, dir: Path,
-      cols: Seq[String]): Map[String, Option[Long]] = {
-    import scala.jdk.CollectionConverters._
-    val fs = dir.getFileSystem(conf)
-    val parts = Seq.newBuilder[Path]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && s.getPath.getName.endsWith(".parquet"))
-        parts += s.getPath
-    }
-    val acc = scala.collection.mutable.Map[String, Option[Long]](
-      cols.map(_ -> (Some(0L): Option[Long])): _*)
-    parts.result().foreach { p =>
-      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try {
-        if (rdr.getRecordCount > 0) {
-          val footer = rdr.getFooter
-          cols.foreach { c =>
-            val chunks = footer.getBlocks.asScala.flatMap(_.getColumns.asScala
-              .filter(_.getPath.toDotString == c))
-            val stats = chunks.map(_.getStatistics)
-            val n: Option[Long] =
-              if (chunks.isEmpty || stats.exists(s => s == null || !s.isNumNullsSet))
-                None
-              else Some(stats.map(_.getNumNulls).sum)
-            acc(c) = for { a <- acc(c); b <- n } yield a + b
-          }
-        }
-      } finally rdr.close()
-    }
-    acc.toMap
-  }
-
   /** NOT NULL is a writer obligation the spec requires every appender
     * to enforce. Top-level non-nullable columns are validated from the
     * staged footers ([[appendForeign]]); non-nullable fields NESTED
@@ -837,6 +788,129 @@ object DeltaExport {
     }
   }
 
+  /** File-key and row-position columns of a foreign positioned scan. */
+  private val FK = "__graft_fk"
+  private val RI = "__graft_pos"
+
+  /** A foreign Delta table anchored at its head, the [[ForeignCommit]]
+    * view every foreign Delta writer stages against and commits on:
+    * the base version is listed first, then replayed capped at it, so
+    * `st0` is exactly the base even when a commit lands mid-replay.
+    * `guard` is the writer's protocol check; the OCC loop re-runs it on
+    * every head it re-validates. A file's delete state is its DV. */
+  private final class ForeignDelta(spark: SparkSession, val path: String,
+      guard: (DeltaRead.LogState, StructType) => Unit) extends ForeignCommit.Table {
+    private val states = scala.collection.mutable.Map.empty[Long, DeltaRead.LogState]
+    private def at(v: Long) = states.getOrElseUpdate(v, DeltaRead.replay(spark, path, Some(v)))
+    def head(): Long = nextDeltaVersion(spark, path) - 1
+    val base: Long = head()
+    val st0: DeltaRead.LogState = at(base)
+    val schema: StructType = DataType.fromJson(st0.schemaJson.getOrElse(
+      throw new IllegalStateException(s"delta log at $path has no metaData action")))
+      .asInstanceOf[StructType]
+    guard(st0, schema)
+    val parts: Seq[String] = st0.partitionCols
+    lazy val colMap: Map[String, String] = DeltaRead.colMapOf(path, st0)
+    lazy val colIds: Map[String, Int] = DeltaRead.colIdsOf(path, st0)
+    def cdfOn: Boolean =
+      st0.config.get("delta.enableChangeDataFeed").exists(_.equalsIgnoreCase("true"))
+    def physOf(c: String): String = colMap.getOrElse(c, c)
+    def keyOf(a: DeltaRead.AddFile): String =
+      PathKeys.normKey(new Path(DeltaRead.resolvePath(path, a.path)).toString)
+
+    def shape(v: Long): Any = {
+      val st = at(v)
+      guard(st, schema)
+      (st.schemaJson, st.partitionCols)
+    }
+    def files(v: Long): Map[String, Any] = at(v).adds.map { case (p, a) => p -> a.dv }
+    def isConflict(e: Throwable): Boolean =
+      Option(e.getMessage).exists(_.contains("concurrent export")) ||
+        e.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException]
+    def shapeMoved(op: String): String =
+      s"concurrent metaData change at $path moved the schema under this $op; " +
+        "re-read the table and retry explicitly"
+    def fileMoved(op: String, f: String): String =
+      s"concurrent commit at $path removed or rewrote $f under this $op; " +
+        s"re-read and re-issue the $op against the new state"
+
+    /** Data files carry only DATA columns, under their physical shape:
+      * mapped names (nested included) and, in id mode, parquet field ids. */
+    lazy val dataSel: Seq[Column] = {
+      val idMode = st0.config.get("delta.columnMapping.mode").contains("id")
+      schema.fields.toSeq.filterNot(f => parts.contains(f.name)).map { f =>
+        val physT = physicalWriteType(f.dataType, idMode)
+        val c = org.apache.spark.sql.functions.col(f.name)
+        val mb = new MetadataBuilder()
+        colIds.get(f.name).foreach(id => mb.putLong("parquet.field.id", id.toLong))
+        (if (colMap.nonEmpty && physT != f.dataType) c.cast(physT) else c)
+          .as(physOf(f.name), mb.build())
+      }
+    }
+
+    /** The logical view of `adds` with the file-key column (and the
+      * row-position column when `withPos`). */
+    def scan(adds: Seq[DeltaRead.AddFile], withPos: Boolean = false): DataFrame =
+      DeltaRead.scanAdds(spark, path, adds, schema, parts, colMap, colIds,
+        Some(FK), if (withPos) Some(RI) else None)
+
+    /** Rename the parts staged under `dir` to `name(k)` and build their
+      * add (or, for change data, cdc) actions under partition values `pv`. */
+    def publish(stage: ForeignCommit.Staging, dir: Path, pv: Map[String, String],
+        name: Int => String, cdc: Boolean = false): Seq[Action] =
+      stage.publish(dir, name).map { case (n, dest) =>
+        if (cdc) cdcAction(n, pv, stage.fs.getFileStatus(dest).getLen)
+        else addOfFile(stage.conf, dest.toString, n, pv)
+      }
+
+    /** Stage `rows` (a [[scan]] of `files`) under `sub` in one
+      * distributed write, one `__gp=<i>` group per distinct partition
+      * tuple of `files` (several affected files of one partition
+      * compact into its group), `extra` columns beside the data ones;
+      * `validate` sees the written dir before anything is published. */
+    def stageFiles(stage: ForeignCommit.Staging, sub: String, rows: DataFrame,
+        files: Seq[DeltaRead.AddFile], extra: Seq[Column], name: (Int, Int) => String,
+        cdc: Boolean = false, validate: Path => Unit = _ => ()): Seq[Action] = {
+      import org.apache.spark.sql.functions.{broadcast, col}
+      import org.apache.spark.sql.types.{IntegerType, StringType, StructField}
+      import scala.jdk.CollectionConverters._
+      val tuples = files.groupBy(_.partitionValues).toSeq
+        .sortBy(_._1.toSeq.sorted.mkString(" ")).map(_._1).zipWithIndex
+      val byTuple = tuples.toMap
+      val gpMap = spark.createDataFrame(
+        files.map(a => org.apache.spark.sql.Row(keyOf(a), byTuple(a.partitionValues))).asJava,
+        StructType(Seq(StructField("__gfk", StringType, nullable = false),
+          StructField("__gp", IntegerType, nullable = false))))
+      val dir = stage.dir(sub)
+      rows.join(broadcast(gpMap), col(FK) === col("__gfk"))
+        .select(dataSel ++ extra :+ col("__gp"): _*)
+        .write.partitionBy("__gp").mode("overwrite").parquet(dir.toString)
+      validate(dir)
+      tuples.flatMap { case (pv, i) =>
+        publish(stage, new Path(dir, s"__gp=$i"), pv, k => name(i, k), cdc)
+      }
+    }
+
+    /** Commit `actions` under a `commitInfo` naming `operation` and
+      * `engine`, re-validating `affected` (log paths) on a moved head. */
+    def commit(operation: String, engine: String, op: String, actions: Seq[Action],
+        affected: Set[String], maxRetries: Int): Long =
+      ForeignCommit.commit(this, base, op, maxRetries, affected) { (v, _) =>
+        writeCommit(spark, path, v + 1,
+          action("commitInfo", "operation" -> operation, "engineInfo" -> engine) +: actions)
+        v + 1
+      }
+
+    /** A row-level commit: removes of every `affected` file, then `actions`. */
+    def commitRowLevel(operation: String, engine: String, op: String,
+        affected: Seq[DeltaRead.AddFile], actions: Seq[Action], maxRetries: Int): Long = {
+      val now = System.currentTimeMillis()
+      commit(operation, engine, op,
+        affected.map(a => removeAction(a.path, now, Some(a.partitionValues), a.size)) ++ actions,
+        affected.map(_.path).toSet, maxRetries)
+    }
+  }
+
   /** APPEND `df` into ANY Delta table — including tables this engine
     * did not create (r13 verdict #2, the largest remaining interop
     * write gap): stage the rows as new parquet files inside the table
@@ -866,19 +940,13 @@ object DeltaExport {
   def appendForeign(spark: SparkSession,
       df: org.apache.spark.sql.DataFrame, targetPath: String,
       maxRetries: Int = 3): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
-    // version-ANCHORED base state (the deleteForeign stance): list
-    // first, replay capped at that version, and have the OCC loop
-    // re-validate whenever the commit target moves past the anchor —
-    // a racing metaData change that lands BEFORE our listing must not
-    // be silently committed past
-    val baseV = nextDeltaVersion(spark, targetPath) - 1
-    val st0 = DeltaRead.replay(spark, targetPath, Some(baseV))
-    val schemaJson = st0.schemaJson.getOrElse(throw new IllegalStateException(
-      s"delta log at $targetPath has no metaData action"))
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    requireForeignAppendable(targetPath, st0, schema)
+    import org.apache.spark.sql.functions.col
+    // version-ANCHORED base state: the OCC loop re-validates whenever
+    // the commit target moves past the anchor — a racing metaData
+    // change that lands BEFORE our listing must not be silently
+    // committed past
+    val t = new ForeignDelta(spark, targetPath, requireForeignAppendable(targetPath, _, _))
+    val schema = t.schema
     // column ORDER is presentation, not schema (every write below
     // selects by NAME): require the same name set with the same types
     def byName(st: StructType) =
@@ -889,175 +957,50 @@ object DeltaExport {
         s"appendForeign frame schema ${df.schema.simpleString} does not " +
           s"match the table's ${schema.simpleString} at $targetPath")
     // NOT NULL enforcement (the spec's writer obligation): nested
-    // non-nullable fields decline by name; top-level ones are asserted
-    // below with one aggregate pass over the (persisted) frame.
+    // non-nullable fields decline by name; top-level ones validate
+    // from the staged footers, before any file is published
     schema.fields.filter(f => nestedNonNullable(f.dataType)).foreach { f =>
       throw new UnsupportedOperationException(
         s"column ${f.name} of $targetPath carries nested non-nullable " +
           "fields; appendForeign validates top-level NOT NULL only")
     }
     val notNullCols = schema.fields.filter(!_.nullable).map(_.name).toSeq
-    val parts = st0.partitionCols
-    val colMap = DeltaRead.colMapOf(targetPath, st0)
-    def physOf(c: String) = colMap.getOrElse(c, c)
-    // id mode (r15): every field must carry its delta.columnMapping.id
-    // — colIdsOf validates recursively and loudly; the write then tags
-    // parquet.field.id so id-binding readers resolve the new files
-    val idMode =
-      st0.config.get("delta.columnMapping.mode").contains("id")
-    val colIds = if (idMode) DeltaRead.colIdsOf(targetPath, st0) else Map.empty[String, Int]
-    // data files carry only DATA columns, under their physical shape
-    val dataSel = schema.fields.toSeq.filterNot(f => parts.contains(f.name))
-      .map { f =>
-        val physT = physicalWriteType(f.dataType, idMode)
-        val c = col(f.name)
-        val mb = new org.apache.spark.sql.types.MetadataBuilder()
-        colIds.get(f.name).foreach(id => mb.putLong("parquet.field.id", id.toLong))
-        (if (colMap.nonEmpty && physT != f.dataType) c.cast(physT) else c)
-          .as(physOf(f.name), mb.build())
-      }
-    val uuid = java.util.UUID.randomUUID().toString.take(12)
-    val staging = s"$targetPath/_graft_staging_$uuid"
-    val conf = spark.sessionState.newHadoopConf()
-    val fsys = new Path(targetPath).getFileSystem(conf)
-    def publish(staged: Path, destName: String,
-        pv: Map[String, String]): Action = {
-      val dest = new Path(targetPath, destName)
-      if (!fsys.rename(staged, dest)) throw new java.io.IOException(
-        s"staging publish failed for $dest")
-      addOfFile(conf, dest.toString, destName, pv)
-    }
-    // Persist when a pass beyond the write itself reads the frame
-    // (the partition-tuple collect). Without it a nondeterministic
-    // input (rand(), re-evaluated shuffle) can re-evaluate differently
-    // between passes — tuples absent from the collected map would
-    // silently drop rows from the commit.
-    val multiPass = parts.nonEmpty
-    val src = if (multiPass)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
-    // NOT NULL validates from the STAGED footers (null counts ride
-    // every parquet footer) instead of an aggregate prepass — no
-    // persist, no second read of the frame; a violating append fails
-    // BEFORE any file is published (the staging dir is discarded)
-    val notNullData = notNullCols.filterNot(parts.contains)
-      .map(n => physOf(n) -> n)
+    val parts = t.parts
+    val stage = new ForeignCommit.Staging(spark, targetPath)
     def requireStagedNotNull(): Unit =
-      if (notNullData.nonEmpty) {
-        val counts = stagedNullCounts(conf, new Path(staging),
-          notNullData.map(_._1))
-        val violated = notNullData.flatMap { case (phys, logical) =>
-          counts(phys) match {
-            case Some(0L) => None
-            case Some(c) => Some(s"$logical ($c nulls)")
-            case None => throw new IllegalStateException(
-              s"staged files carry no null-count statistics for $logical; " +
-                "cannot validate NOT NULL")
-          }
-        }
-        if (violated.nonEmpty) throw new IllegalArgumentException(
-          s"appendForeign frame carries nulls in NOT NULL column(s) of " +
-            s"$targetPath: ${violated.mkString(", ")}")
-      }
-    val adds = Seq.newBuilder[Action]
-    try {
+      ForeignCommit.requireNoStagedNulls(stage.conf, stage.root,
+        notNullCols.filterNot(parts.contains).map(n => t.physOf(n) -> n), "NOT NULL",
+        s"appendForeign frame carries nulls in NOT NULL column(s) of $targetPath")
+    val adds = try {
       if (parts.isEmpty) {
-        src.select(dataSel: _*).write.mode("overwrite").parquet(staging)
+        df.select(t.dataSel: _*).write.mode("overwrite").parquet(stage.root.toString)
         requireStagedNotNull()
-        fsys.listStatus(new Path(staging)).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName).zipWithIndex.foreach { case (s, i) =>
-            adds += publish(s.getPath, s"part-$uuid-$i.parquet", Map.empty)
-          }
+        t.publish(stage, stage.root, Map.empty, i => s"part-${stage.uuid}-$i.parquet")
       } else {
-        // identity partitioning: one broadcast tuple→index map keyed
-        // null-safely, ONE distributed partitionBy write (no per-tuple
-        // jobs), index dirs decode exactly (no path-unescape guesswork)
-        val tuples = src.select(parts.map(col): _*).distinct().collect()
-        notNullCols.filter(parts.contains).foreach { p =>
-          val j = parts.indexOf(p)
-          if (tuples.exists(_.isNullAt(j))) throw new IllegalArgumentException(
-            s"appendForeign frame carries nulls in NOT NULL column(s) of " +
-              s"$targetPath: $p (partition column)")
-        }
-        val idxSchema = StructType(
-          parts.map(p => schema(p).copy(nullable = true)) :+
-            StructField("__gp", IntegerType, nullable = false))
-        import scala.jdk.CollectionConverters._
-        val idxDf = spark.createDataFrame(
-          tuples.zipWithIndex.map { case (r, i) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-          }.toSeq.asJava, idxSchema)
-        // LEFT join + loud assert: with `src` persisted the tuple map
-        // is consistent by construction, but if the cache is evicted
-        // and a nondeterministic input re-evaluates, a row whose tuple
-        // is absent from the map must FAIL the job, not silently drop.
-        val joined = src.as("l").join(broadcast(idxDf.as("r")),
-          parts.map(p => col(s"l.$p") <=> col(s"r.$p")).reduce(_ && _),
-          "left")
-        import org.apache.spark.sql.functions.{assert_true, lit, when => sqlWhen}
-        val gpGuarded = sqlWhen(
-          assert_true(col("r.__gp").isNotNull,
-            lit("appendForeign: row's partition tuple is absent from the " +
-              "collected map — nondeterministic input re-evaluated?")).isNull,
-          col("r.__gp")).as("__gp")
-        joined.select(dataSel.map(c => c) :+ gpGuarded: _*)
-          .write.partitionBy("__gp").mode("overwrite").parquet(staging)
-        requireStagedNotNull()
-        tuples.zipWithIndex.foreach { case (r, i) =>
-          val dir = new Path(staging, s"__gp=$i")
-          if (fsys.exists(dir)) {
-            val pv = parts.zipWithIndex.map { case (p, j) =>
-              physOf(p) -> partitionValueString(r.get(j), schema(p).dataType)
-            }.toMap
-            fsys.listStatus(dir).toSeq
-              .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-              .sortBy(_.getPath.getName).zipWithIndex.foreach { case (s, k) =>
-                adds += publish(s.getPath, s"part-$uuid-$i-$k.parquet", pv)
-              }
+        // identity partitioning: one index dir per partition tuple,
+        // decoded exactly (no path-unescape guesswork)
+        val tuples = ForeignCommit.writeGrouped(spark, df, parts.map(col), t.dataSel,
+          stage.root) { tuples =>
+          notNullCols.filter(parts.contains).foreach { p =>
+            val j = parts.indexOf(p)
+            if (tuples.exists(_.isNullAt(j))) throw new IllegalArgumentException(
+              s"appendForeign frame carries nulls in NOT NULL column(s) of " +
+                s"$targetPath: $p (partition column)")
           }
         }
+        requireStagedNotNull()
+        tuples.toSeq.zipWithIndex.flatMap { case (r, i) =>
+          val pv = parts.zipWithIndex.map { case (p, j) =>
+            t.physOf(p) -> partitionValueString(r.get(j), schema(p).dataType)
+          }.toMap
+          t.publish(stage, new Path(stage.root, s"__gp=$i"), pv,
+            k => s"part-${stage.uuid}-$i-$k.parquet")
+        }
       }
-    } finally {
-      if (multiPass) src.unpersist(): Unit
-      fsys.delete(new Path(staging), true): Unit
-    }
-    val data = adds.result()
-    // OCC commit: the data files are final; only the JSON number races.
-    // Validation keys on the commit target moving past the anchored
-    // base (not just on a put-if-absent collision), so intervening
-    // commits are always re-checked for schema/protocol drift.
-    var attempt = 0
-    var lastErr: Throwable = null
-    var validatedThrough = baseV
-    while (attempt <= maxRetries) {
-      val v = nextDeltaVersion(spark, targetPath)
-      if (v != validatedThrough + 1) {
-        val stNow = DeltaRead.replay(spark, targetPath, Some(v - 1))
-        requireForeignAppendable(targetPath, stNow, schema)
-        if (stNow.schemaJson != st0.schemaJson ||
-            stNow.partitionCols != st0.partitionCols)
-          throw new IllegalStateException(
-            s"concurrent metaData change at $targetPath moved the schema " +
-              "under this append; re-read the table and retry explicitly",
-            lastErr)
-        validatedThrough = v - 1
-      }
-      val actions =
-        action("commitInfo", "operation" -> "WRITE",
-          "engineInfo" -> "graft-appendForeign") +: data
-      try { writeCommit(spark, targetPath, v, actions); return v }
-      catch {
-        case e: Throwable
-            if Option(e.getMessage).exists(_.contains("concurrent export")) ||
-              e.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException] =>
-          lastErr = e
-          attempt += 1
-      }
-    }
-    throw new java.io.IOException(
-      s"commit to $targetPath still conflicting after $maxRetries retries",
-      lastErr)
+    } finally stage.close()
+    // a pure-add commit conflicts only with metaData/protocol drift:
+    // no affected files to re-validate
+    t.commit("WRITE", "graft-appendForeign", "append", adds, Set.empty, maxRetries)
   }
 
   // ------------------------------------------------- foreign delete
@@ -1122,25 +1065,15 @@ object DeltaExport {
   def updateForeign(spark: SparkSession, targetPath: String,
       predicate: org.apache.spark.sql.Column,
       sets: Map[String, org.apache.spark.sql.Column],
-      maxRetries: Int = 3): Long =
-    updateForeignImpl(spark, targetPath, predicate, sets, maxRetries, () => ())
-
-  private[graft] def updateForeignImpl(spark: SparkSession, targetPath: String,
-      predicate: org.apache.spark.sql.Column,
-      sets: Map[String, org.apache.spark.sql.Column],
-      maxRetries: Int, beforeCommit: () => Unit): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, sum, when}
-    import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
+      maxRetries: Int = 3): Long = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(sets.nonEmpty, "updateForeign needs at least one SET column")
-    val currentV = nextDeltaVersion(spark, targetPath) - 1
-    val st0 = DeltaRead.replay(spark, targetPath, Some(currentV))
-    val schemaJson = st0.schemaJson.getOrElse(throw new IllegalStateException(
-      s"delta log at $targetPath has no metaData action"))
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    requireForeignDeletable(targetPath, st0) // writer vocabulary + appendOnly
+    // writer vocabulary + appendOnly
+    val t = new ForeignDelta(spark, targetPath, (st, _) => requireForeignDeletable(targetPath, st))
+    val schema = t.schema
     // value-creating obligations (the appendForeign stance): an update
     // this writer cannot VALIDATE must not commit past them
-    val constraints = st0.config.keys.filter(_.startsWith("delta.constraints."))
+    val constraints = t.st0.config.keys.filter(_.startsWith("delta.constraints."))
     if (constraints.nonEmpty) throw new UnsupportedOperationException(
       s"delta table at $targetPath declares CHECK constraint(s) " +
         s"${constraints.toSeq.sorted.mkString(", ")}; updateForeign cannot " +
@@ -1159,31 +1092,21 @@ object DeltaExport {
           s"column ${f.name} of $targetPath is an identity column; " +
             "updateForeign cannot reassign its values")
     }
-    val parts = st0.partitionCols
     sets.keys.foreach { n =>
       if (!schema.fieldNames.contains(n)) throw new IllegalArgumentException(
         s"SET column $n is not a column of $targetPath")
-      if (parts.contains(n)) throw new UnsupportedOperationException(
+      if (t.parts.contains(n)) throw new UnsupportedOperationException(
         s"SET of partition column $n would move rows across partitions; " +
           "delete + append instead")
     }
-    if (st0.adds.isEmpty) return currentV
-    val colMap = DeltaRead.colMapOf(targetPath, st0)
-    val colIds = DeltaRead.colIdsOf(targetPath, st0)
-    val idMode = st0.config.get("delta.columnMapping.mode").contains("id")
-    def physOf(c: String) = colMap.getOrElse(c, c)
-    def keyOf(a: DeltaRead.AddFile): String = PathKeys.normKey(
-      new Path(DeltaRead.resolvePath(targetPath, a.path)).toString)
-    val FK = "__graft_fk"
+    if (t.st0.adds.isEmpty) return t.base
     val matchedF = coalesce(predicate, lit(false))
-    val allAdds = st0.adds.values.toSeq.sortBy(_.path)
-    val fullScan = DeltaRead.scanAdds(spark, targetPath, allAdds, schema,
-      parts, colMap, colIds, Some(FK))
+    val allAdds = t.st0.adds.values.toSeq.sortBy(_.path)
+    val fullScan = t.scan(allAdds)
     // the UPDATED logical view: matched rows take their SET values —
-    // built once so the determinism probe, the type check, the rewrite
+    // built once so the determinism guard, the type check, the rewrite
     // and the postimage all share the exact same expressions
-    def updatedSel(matched: org.apache.spark.sql.Column)
-        : Seq[org.apache.spark.sql.Column] =
+    def updatedSel(matched: Column): Seq[Column] =
       schema.fields.toSeq.map { f =>
         sets.get(f.name) match {
           case Some(v) => when(matched, v).otherwise(col(f.name)).as(f.name)
@@ -1201,110 +1124,28 @@ object DeltaExport {
           s"SET of $n produces ${got.simpleString}; the column is " +
             s"${schema(n).dataType.simpleString} — cast explicitly")
     }
-    val probe = fullScan.select(updatedSel(matchedF) :+ col(FK): _*)
-    // determinism guard over predicate AND set expressions
-    val detOk = probe.filter(matchedF).queryExecution.analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition.deterministic
-      case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        p.projectList.forall(_.deterministic)
-    }.forall(identity)
-    if (!detOk) throw new UnsupportedOperationException(
+    ForeignCommit.requireDeterministic(fullScan, matchedF +: updatedSel(matchedF),
       "updateForeign needs deterministic predicate and SET expressions: " +
         "the match pass and the rewrite pass must agree on every row")
-    val perFile = fullScan
-      .groupBy(col(FK))
-      .agg(count(lit(1)).as("n"),
-        sum(when(matchedF, 1L).otherwise(0L)).as("m"))
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(2)).toMap
-    val affected = allAdds.filter(a => perFile.get(keyOf(a)).exists(_ > 0))
-    if (affected.isEmpty) return currentV
-    val cdfOn = st0.config.get("delta.enableChangeDataFeed")
-      .exists(_.equalsIgnoreCase("true"))
-    val dataSel = schema.fields.toSeq.filterNot(f => parts.contains(f.name))
-      .map { f =>
-        val physT = physicalWriteType(f.dataType, idMode)
-        val c = col(f.name)
-        val mb = new org.apache.spark.sql.types.MetadataBuilder()
-        colIds.get(f.name).foreach(id =>
-          mb.putLong("parquet.field.id", id.toLong))
-        (if (colMap.nonEmpty && physT != f.dataType) c.cast(physT) else c)
-          .as(physOf(f.name), mb.build())
-      }
-    val uuid = java.util.UUID.randomUUID().toString.take(12)
-    val staging = s"$targetPath/_graft_staging_$uuid"
-    val conf = spark.sessionState.newHadoopConf()
-    val fsys = new Path(targetPath).getFileSystem(conf)
-    def publish(staged: Path, destName: String, pv: Map[String, String],
-        cdc: Boolean): Action = {
-      val dest = new Path(targetPath, destName)
-      Option(dest.getParent).foreach(fsys.mkdirs(_): Unit)
-      if (!fsys.rename(staged, dest)) throw new java.io.IOException(
-        s"staging publish failed for $dest")
-      if (cdc) cdcAction(destName, pv, fsys.getFileStatus(dest).getLen)
-      else addOfFile(conf, dest.toString, destName, pv)
-    }
-    def gpFrames(adds: Seq[DeltaRead.AddFile])
-        : (Seq[(Map[String, String], Int)], org.apache.spark.sql.DataFrame) = {
-      val tuples = adds.groupBy(_.partitionValues).toSeq
-        .sortBy(_._1.toSeq.sorted.mkString(" ")).map(_._1).zipWithIndex
-      val byTuple = tuples.toMap
-      val rows = adds.map(a =>
-        org.apache.spark.sql.Row(keyOf(a), byTuple(a.partitionValues)))
-      import scala.jdk.CollectionConverters._
-      val df = spark.createDataFrame(rows.asJava, StructType(Seq(
-        StructField("__gfk", StringType, nullable = false),
-        StructField("__gp", IntegerType, nullable = false))))
-      (tuples, df)
-    }
+    val perFile = ForeignCommit.matchCounts(fullScan, FK, matchedF)
+    val affected = allAdds.filter(a => perFile.get(t.keyOf(a)).exists(_._2 > 0))
+    if (affected.isEmpty) return t.base
     val notNullData = schema.fields.filter(!_.nullable).map(_.name).toSeq
-      .filterNot(parts.contains).map(n => physOf(n) -> n)
-    val adds = Seq.newBuilder[Action]
-    val cdcs = Seq.newBuilder[Action]
-    try {
-      // the rewrite: every affected file's rows, matched ones updated
-      val (tuples, gpMap) = gpFrames(affected)
-      val affectedScan = DeltaRead.scanAdds(spark, targetPath, affected,
-        schema, parts, colMap, colIds, Some(FK))
-      affectedScan
-        .select(updatedSel(matchedF) :+ col(FK): _*)
-        .join(broadcast(gpMap), col(FK) === col("__gfk"))
-        .select(dataSel :+ col("__gp"): _*)
-        .write.partitionBy("__gp").mode("overwrite")
-        .parquet(s"$staging/data")
-      // NOT NULL re-validates on the staged result: a SET may have
+      .filterNot(t.parts.contains).map(n => t.physOf(n) -> n)
+    val stage = new ForeignCommit.Staging(spark, targetPath)
+    val actions = try {
+      // the rewrite: every affected file's rows, matched ones updated;
+      // NOT NULL re-validates on the staged result — a SET may have
       // introduced nulls the original files never carried
-      if (notNullData.nonEmpty) {
-        val counts = stagedNullCounts(conf, new Path(s"$staging/data"),
-          notNullData.map(_._1))
-        val violated = notNullData.flatMap { case (phys, logical) =>
-          counts(phys) match {
-            case Some(0L) => None
-            case Some(c) => Some(s"$logical ($c nulls)")
-            case None => throw new IllegalStateException(
-              s"staged files carry no null-count statistics for $logical; " +
-                "cannot validate NOT NULL")
-          }
-        }
-        if (violated.nonEmpty) throw new IllegalArgumentException(
-          s"updateForeign SET introduces nulls in NOT NULL column(s) of " +
-            s"$targetPath: ${violated.mkString(", ")}")
-      }
-      tuples.foreach { case (pv, i) =>
-        val dir = new Path(s"$staging/data", s"__gp=$i")
-        if (fsys.exists(dir))
-          fsys.listStatus(dir).toSeq
-            .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName).zipWithIndex.foreach { case (s, k) =>
-              adds += publish(s.getPath, s"part-$uuid-u$i-$k.parquet", pv, cdc = false)
-            }
-      }
-      if (cdfOn) {
+      val adds = t.stageFiles(stage, "data",
+        t.scan(affected).select(updatedSel(matchedF) :+ col(FK): _*), affected, Nil,
+        (i, k) => s"part-${stage.uuid}-u$i-$k.parquet",
+        validate = dir => ForeignCommit.requireNoStagedNulls(stage.conf, dir,
+          notNullData, "NOT NULL",
+          s"updateForeign SET introduces nulls in NOT NULL column(s) of $targetPath"))
+      val cdcs = if (!t.cdfOn) Nil else {
         // matched rows BOTH ways: preimage as stored, postimage updated
-        val (cTuples, cGpMap) = gpFrames(affected)
-        val matchedRows = DeltaRead.scanAdds(spark, targetPath, affected,
-          schema, parts, colMap, colIds, Some(FK)).filter(matchedF)
+        val matchedRows = t.scan(affected).filter(matchedF)
         val pre = matchedRows.select(
           (schema.fields.toSeq.map(f => col(f.name)) :+
             lit("update_preimage").as("_change_type") :+ col(FK)): _*)
@@ -1312,68 +1153,13 @@ object DeltaExport {
           .select(updatedSel(lit(true)) :+ col(FK): _*)
           .select((schema.fields.toSeq.map(f => col(f.name)) :+
             lit("update_postimage").as("_change_type") :+ col(FK)): _*)
-        pre.unionByName(post)
-          .join(broadcast(cGpMap), col(FK) === col("__gfk"))
-          .select(dataSel :+ col("_change_type") :+ col("__gp"): _*)
-          .write.partitionBy("__gp").mode("overwrite")
-          .parquet(s"$staging/cdc")
-        cTuples.foreach { case (pv, i) =>
-          val dir = new Path(s"$staging/cdc", s"__gp=$i")
-          if (fsys.exists(dir))
-            fsys.listStatus(dir).toSeq
-              .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-              .sortBy(_.getPath.getName).zipWithIndex.foreach { case (s, k) =>
-                cdcs += publish(s.getPath,
-                  s"_change_data/cdc-$uuid-u$i-$k.parquet", pv, cdc = true)
-              }
-        }
+        t.stageFiles(stage, "cdc", pre.unionByName(post), affected,
+          Seq(col("_change_type")), (i, k) => s"_change_data/cdc-${stage.uuid}-u$i-$k.parquet",
+          cdc = true)
       }
-    } finally fsys.delete(new Path(staging), true): Unit
-    val now = System.currentTimeMillis()
-    val removes = affected.map(a =>
-      removeAction(a.path, now, Some(a.partitionValues), a.size))
-    beforeCommit()
-    var attempt = 0
-    var lastErr: Throwable = null
-    var validatedThrough = currentV
-    while (attempt <= maxRetries) {
-      val v = nextDeltaVersion(spark, targetPath)
-      if (v != validatedThrough + 1) {
-        val stNow = DeltaRead.replay(spark, targetPath, Some(v - 1))
-        requireForeignDeletable(targetPath, stNow)
-        if (stNow.schemaJson != st0.schemaJson ||
-            stNow.partitionCols != st0.partitionCols)
-          throw new IllegalStateException(
-            s"concurrent metaData change at $targetPath moved the schema " +
-              "under this update; re-read the table and retry explicitly",
-            lastErr)
-        affected.foreach { a =>
-          stNow.adds.get(a.path) match {
-            case Some(b) if b.dv == a.dv => ()
-            case _ => throw new IllegalStateException(
-              s"concurrent commit at $targetPath removed or rewrote " +
-                s"${a.path} under this update; re-read and re-issue the " +
-                "update against the new state", lastErr)
-          }
-        }
-        validatedThrough = v - 1
-      }
-      val actions =
-        Seq(action("commitInfo", "operation" -> "UPDATE",
-          "engineInfo" -> "graft-updateForeign")) ++
-          removes ++ adds.result() ++ cdcs.result()
-      try { writeCommit(spark, targetPath, v, actions); return v }
-      catch {
-        case e: Throwable
-            if Option(e.getMessage).exists(_.contains("concurrent export")) ||
-              e.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException] =>
-          lastErr = e
-          attempt += 1
-      }
-    }
-    throw new java.io.IOException(
-      s"commit to $targetPath still conflicting after $maxRetries retries",
-      lastErr)
+      adds ++ cdcs
+    } finally stage.close()
+    t.commitRowLevel("UPDATE", "graft-updateForeign", "update", affected, actions, maxRetries)
   }
 
   /** MERGE-ON-READ delete into ANY Delta table that speaks deletion
@@ -1397,59 +1183,34 @@ object DeltaExport {
     * files in the same commit. Same version-anchored OCC. */
   def deleteForeignMoR(spark: SparkSession, targetPath: String,
       predicate: org.apache.spark.sql.Column, maxRetries: Int = 3): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
-    import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
-    val currentV = nextDeltaVersion(spark, targetPath) - 1
-    val st0 = DeltaRead.replay(spark, targetPath, Some(currentV))
-    val schemaJson = st0.schemaJson.getOrElse(throw new IllegalStateException(
-      s"delta log at $targetPath has no metaData action"))
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    requireForeignDeletable(targetPath, st0)
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    val t = new ForeignDelta(spark, targetPath, (st, _) => requireForeignDeletable(targetPath, st))
+    val st0 = t.st0
     if (!(st0.minReader >= 3 && st0.readerFeatures.contains("deletionVectors") &&
         st0.minWriter >= 7 && st0.writerFeatures.contains("deletionVectors")))
       throw new UnsupportedOperationException(
         s"delta table at $targetPath does not speak deletionVectors; " +
           "upgrading a foreign table's protocol is not this writer's call — " +
           "use deleteForeign (copy-on-write) instead")
-    if (st0.adds.isEmpty) return currentV
-    val parts = st0.partitionCols
-    val colMap = DeltaRead.colMapOf(targetPath, st0)
-    val colIds = DeltaRead.colIdsOf(targetPath, st0)
-    val idMode = st0.config.get("delta.columnMapping.mode").contains("id")
-    def physOf(c: String) = colMap.getOrElse(c, c)
-    def keyOf(a: DeltaRead.AddFile): String = PathKeys.normKey(
-      new Path(DeltaRead.resolvePath(targetPath, a.path)).toString)
-    val FK = "__graft_fk"
-    val RI = "__graft_pos"
+    if (st0.adds.isEmpty) return t.base
     val matchedF = coalesce(predicate, lit(false))
     val allAdds = st0.adds.values.toSeq.sortBy(_.path)
-    val fullScan = DeltaRead.scanAdds(spark, targetPath, allAdds, schema,
-      parts, colMap, colIds, Some(FK), Some(RI))
-    val detOk = fullScan.filter(matchedF).queryExecution.analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition.deterministic
-    }.forall(identity)
-    if (!detOk) throw new UnsupportedOperationException(
+    val fullScan = t.scan(allAdds, withPos = true)
+    ForeignCommit.requireDeterministic(fullScan, Seq(matchedF),
       "deleteForeignMoR needs a deterministic predicate: the published " +
         "tombstones must be the rows the caller saw match")
     // matched coordinates, grouped per file — O(matched rows) driver,
     // the MoR boundedness contract
-    val newPos: Map[String, Seq[Long]] = fullScan.filter(matchedF)
-      .select(col(FK), col(RI)).distinct().collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-      .groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2).toSeq.sorted }
-    if (newPos.isEmpty) return currentV
-    val affected = allAdds.filter(a => newPos.contains(keyOf(a)))
-    val cdfOn = st0.config.get("delta.enableChangeDataFeed")
-      .exists(_.equalsIgnoreCase("true"))
+    val newPos = ForeignCommit.matchedPositions(
+      fullScan.filter(matchedF).select(col(FK), col(RI))).toMap
+    if (newPos.isEmpty) return t.base
+    val affected = allAdds.filter(a => newPos.contains(t.keyOf(a)))
     val conf = spark.sessionState.newHadoopConf()
-    val fsys = new Path(targetPath).getFileSystem(conf)
-    val uuid = java.util.UUID.randomUUID().toString.take(12)
     // one cumulative DV per affected file: existing positions fold in
     val dvAdds = affected.map { a =>
       val existing = a.dv.map(d =>
         DeltaDv.positions(spark, targetPath, d).toSeq).getOrElse(Nil)
-      val cumulative = (existing ++ newPos(keyOf(a))).distinct.sorted
+      val cumulative = (existing ++ newPos(t.keyOf(a))).distinct.sorted
       val dvUuid = java.util.UUID.randomUUID()
       val desc = DeltaDv.writeDvFile(spark, targetPath, dvUuid, cumulative)
       val p = new Path(DeltaRead.resolvePath(targetPath, a.path))
@@ -1462,100 +1223,15 @@ object DeltaExport {
       addAction(a.path, a.partitionValues, len, mt, a.stats, Some(desc))
     }
     // CDF: the deleted rows themselves, staged exactly as the CoW path
-    val cdcs = Seq.newBuilder[Action]
-    if (cdfOn) {
-      val staging = s"$targetPath/_graft_staging_$uuid"
-      val dataSel = schema.fields.toSeq.filterNot(f => parts.contains(f.name))
-        .map { f =>
-          val physT = physicalWriteType(f.dataType, idMode)
-          val c = col(f.name)
-          val mb = new org.apache.spark.sql.types.MetadataBuilder()
-          colIds.get(f.name).foreach(id =>
-            mb.putLong("parquet.field.id", id.toLong))
-          (if (colMap.nonEmpty && physT != f.dataType) c.cast(physT) else c)
-            .as(physOf(f.name), mb.build())
-        }
-      def publish(staged: Path, destName: String,
-          pv: Map[String, String]): Action = {
-        val dest = new Path(targetPath, destName)
-        Option(dest.getParent).foreach(fsys.mkdirs(_): Unit)
-        if (!fsys.rename(staged, dest)) throw new java.io.IOException(
-          s"staging publish failed for $dest")
-        cdcAction(destName, pv, fsys.getFileStatus(dest).getLen)
-      }
-      try {
-        val tuples = affected.groupBy(_.partitionValues).toSeq
-          .sortBy(_._1.toSeq.sorted.mkString(" ")).map(_._1).zipWithIndex
-        val byTuple = tuples.toMap
-        import scala.jdk.CollectionConverters._
-        val gpMap = spark.createDataFrame(
-          affected.map(a => org.apache.spark.sql.Row(
-            keyOf(a), byTuple(a.partitionValues))).asJava,
-          StructType(Seq(StructField("__gfk", StringType, nullable = false),
-            StructField("__gp", IntegerType, nullable = false))))
-        DeltaRead.scanAdds(spark, targetPath, affected, schema, parts,
-          colMap, colIds, Some(FK))
-          .filter(matchedF)
-          .join(broadcast(gpMap), col(FK) === col("__gfk"))
-          .select(dataSel :+ lit("delete").as("_change_type") :+ col("__gp"): _*)
-          .write.partitionBy("__gp").mode("overwrite")
-          .parquet(s"$staging/cdc")
-        tuples.foreach { case (pv, i) =>
-          val dir = new Path(s"$staging/cdc", s"__gp=$i")
-          if (fsys.exists(dir))
-            fsys.listStatus(dir).toSeq
-              .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-              .sortBy(_.getPath.getName).zipWithIndex.foreach { case (s, k) =>
-                cdcs += publish(s.getPath,
-                  s"_change_data/cdc-$uuid-$i-$k.parquet", pv)
-              }
-        }
-      } finally fsys.delete(new Path(staging), true): Unit
-    }
-    val now = System.currentTimeMillis()
-    val removes = affected.map(a =>
-      removeAction(a.path, now, Some(a.partitionValues), a.size))
-    var attempt = 0
-    var lastErr: Throwable = null
-    var validatedThrough = currentV
-    while (attempt <= maxRetries) {
-      val v = nextDeltaVersion(spark, targetPath)
-      if (v != validatedThrough + 1) {
-        val stNow = DeltaRead.replay(spark, targetPath, Some(v - 1))
-        requireForeignDeletable(targetPath, stNow)
-        if (stNow.schemaJson != st0.schemaJson ||
-            stNow.partitionCols != st0.partitionCols)
-          throw new IllegalStateException(
-            s"concurrent metaData change at $targetPath moved the schema " +
-              "under this delete; re-read the table and retry explicitly",
-            lastErr)
-        affected.foreach { a =>
-          stNow.adds.get(a.path) match {
-            case Some(b) if b.dv == a.dv => ()
-            case _ => throw new IllegalStateException(
-              s"concurrent commit at $targetPath removed or rewrote " +
-                s"${a.path} under this delete; re-read and re-issue the " +
-                "delete against the new state", lastErr)
-          }
-        }
-        validatedThrough = v - 1
-      }
-      val actions =
-        Seq(action("commitInfo", "operation" -> "DELETE",
-          "engineInfo" -> "graft-deleteForeignMoR")) ++
-          removes ++ dvAdds ++ cdcs.result()
-      try { writeCommit(spark, targetPath, v, actions); return v }
-      catch {
-        case e: Throwable
-            if Option(e.getMessage).exists(_.contains("concurrent export")) ||
-              e.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException] =>
-          lastErr = e
-          attempt += 1
-      }
-    }
-    throw new java.io.IOException(
-      s"commit to $targetPath still conflicting after $maxRetries retries",
-      lastErr)
+    val stage = new ForeignCommit.Staging(spark, targetPath)
+    val cdcs = try {
+      if (!t.cdfOn) Nil
+      else t.stageFiles(stage, "cdc", t.scan(affected).filter(matchedF), affected,
+        Seq(lit("delete").as("_change_type")),
+        (i, k) => s"_change_data/cdc-${stage.uuid}-$i-$k.parquet", cdc = true)
+    } finally stage.close()
+    t.commitRowLevel("DELETE", "graft-deleteForeignMoR", "delete", affected,
+      dvAdds ++ cdcs, maxRetries)
   }
 
   /** DELETE the rows matching `predicate` from ANY Delta table —
@@ -1595,202 +1271,38 @@ object DeltaExport {
     * nothing matched. */
   def deleteForeign(spark: SparkSession,
       targetPath: String, predicate: org.apache.spark.sql.Column,
-      maxRetries: Int = 3): Long =
-    deleteForeignImpl(spark, targetPath, predicate, maxRetries, () => ())
-
-  /** [[deleteForeign]] with a race seam: `beforeCommit` runs after the
-    * rewrite is staged and before the OCC loop — the window a
-    * concurrent writer's commit lands in. Tests plant a conflicting
-    * commit there to pin the loud-conflict contract deterministically;
-    * production callers never reach this overload. */
-  private[graft] def deleteForeignImpl(spark: SparkSession,
-      targetPath: String, predicate: org.apache.spark.sql.Column,
-      maxRetries: Int, beforeCommit: () => Unit): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, not, sum, when}
-    import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
-    // version-ANCHORED base state: list first, then replay capped at
-    // that version, so st0 is exactly the state of currentV even if a
-    // concurrent commit lands mid-replay — the OCC loop below compares
-    // every later state against this anchor
-    val currentV = nextDeltaVersion(spark, targetPath) - 1
-    val st0 = DeltaRead.replay(spark, targetPath, Some(currentV))
-    val schemaJson = st0.schemaJson.getOrElse(throw new IllegalStateException(
-      s"delta log at $targetPath has no metaData action"))
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    requireForeignDeletable(targetPath, st0)
-    if (st0.adds.isEmpty) return currentV
-    val parts = st0.partitionCols
-    val colMap = DeltaRead.colMapOf(targetPath, st0)
-    val colIds = DeltaRead.colIdsOf(targetPath, st0)
-    val idMode = st0.config.get("delta.columnMapping.mode").contains("id")
-    def physOf(c: String) = colMap.getOrElse(c, c)
-    def keyOf(a: DeltaRead.AddFile): String = PathKeys.normKey(
-      new Path(DeltaRead.resolvePath(targetPath, a.path)).toString)
-    val FK = "__graft_fk"
+      maxRetries: Int = 3): Long = {
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
+    val t = new ForeignDelta(spark, targetPath, (st, _) => requireForeignDeletable(targetPath, st))
+    if (t.st0.adds.isEmpty) return t.base
     val matchedF = coalesce(predicate, lit(false))
-    val allAdds = st0.adds.values.toSeq.sortBy(_.path)
-    val fullScan = DeltaRead.scanAdds(spark, targetPath, allAdds, schema,
-      parts, colMap, colIds, Some(FK))
-    // determinism guard on the ANALYZED condition (an unresolved
-    // rand() would claim deterministic): the match pass and the
-    // rewrite pass must agree on every row, or rows are silently lost
-    val detOk = fullScan.filter(matchedF).queryExecution.analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition.deterministic
-    }.forall(identity)
-    if (!detOk) throw new UnsupportedOperationException(
+    val allAdds = t.st0.adds.values.toSeq.sortBy(_.path)
+    val fullScan = t.scan(allAdds)
+    ForeignCommit.requireDeterministic(fullScan, Seq(matchedF),
       "deleteForeign needs a deterministic predicate: the match pass and " +
         "the rewrite pass must agree on every row")
     // pass 1 — per-file live and matched counts, ONE distributed scan
-    val perFile = fullScan
-      .groupBy(col(FK))
-      .agg(count(lit(1)).as("n"),
-        sum(when(matchedF, 1L).otherwise(0L)).as("m"))
-      .collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val affected = allAdds.filter(a => perFile.get(keyOf(a)).exists(_._2 > 0))
-    if (affected.isEmpty) return currentV
+    val perFile = ForeignCommit.matchCounts(fullScan, FK, matchedF)
+    val affected = allAdds.filter(a => perFile.get(t.keyOf(a)).exists(_._2 > 0))
+    if (affected.isEmpty) return t.base
     val partials = affected.filter { a =>
-      val (n, m) = perFile(keyOf(a)); m < n
+      val (n, m) = perFile(t.keyOf(a)); m < n
     }
-    val cdfOn = st0.config.get("delta.enableChangeDataFeed")
-      .exists(_.equalsIgnoreCase("true"))
-    // data files carry only DATA columns, under their physical shape
-    // (the appendForeign write contract)
-    val dataSel = schema.fields.toSeq.filterNot(f => parts.contains(f.name))
-      .map { f =>
-        val physT = physicalWriteType(f.dataType, idMode)
-        val c = col(f.name)
-        val mb = new org.apache.spark.sql.types.MetadataBuilder()
-        colIds.get(f.name).foreach(id =>
-          mb.putLong("parquet.field.id", id.toLong))
-        (if (colMap.nonEmpty && physT != f.dataType) c.cast(physT) else c)
-          .as(physOf(f.name), mb.build())
-      }
-    val uuid = java.util.UUID.randomUUID().toString.take(12)
-    val staging = s"$targetPath/_graft_staging_$uuid"
-    val conf = spark.sessionState.newHadoopConf()
-    val fsys = new Path(targetPath).getFileSystem(conf)
-    def publish(staged: Path, destName: String, pv: Map[String, String],
-        cdc: Boolean): Action = {
-      val dest = new Path(targetPath, destName)
-      Option(dest.getParent).foreach(fsys.mkdirs(_): Unit)
-      if (!fsys.rename(staged, dest)) throw new java.io.IOException(
-        s"staging publish failed for $dest")
-      if (cdc) cdcAction(destName, pv, fsys.getFileStatus(dest).getLen)
-      else addOfFile(conf, dest.toString, destName, pv)
-    }
-    // the gp index: one broadcast (file key → group) map; groups are
-    // the distinct partition TUPLES of the files being rewritten, so
-    // several affected files of one partition compact into its group
-    def gpFrames(adds: Seq[DeltaRead.AddFile])
-        : (Seq[(Map[String, String], Int)], org.apache.spark.sql.DataFrame) = {
-      val tuples = adds.groupBy(_.partitionValues).toSeq
-        .sortBy(_._1.toSeq.sorted.mkString(" ")).map(_._1).zipWithIndex
-      val byTuple = tuples.toMap
-      val rows = adds.map(a =>
-        org.apache.spark.sql.Row(keyOf(a), byTuple(a.partitionValues)))
-      import scala.jdk.CollectionConverters._
-      val df = spark.createDataFrame(rows.asJava, StructType(Seq(
-        StructField("__gfk", StringType, nullable = false),
-        StructField("__gp", IntegerType, nullable = false))))
-      (tuples, df)
-    }
-    val adds = Seq.newBuilder[Action]
-    val cdcs = Seq.newBuilder[Action]
-    try {
-      if (partials.nonEmpty) {
-        // pass 2 — survivors of the partial files only, one job
-        val (tuples, gpMap) = gpFrames(partials)
-        DeltaRead.scanAdds(spark, targetPath, partials, schema, parts,
-          colMap, colIds, Some(FK))
-          .filter(not(matchedF))
-          .join(broadcast(gpMap), col(FK) === col("__gfk"))
-          .select(dataSel :+ col("__gp"): _*)
-          .write.partitionBy("__gp").mode("overwrite")
-          .parquet(s"$staging/data")
-        tuples.foreach { case (pv, i) =>
-          val dir = new Path(s"$staging/data", s"__gp=$i")
-          if (fsys.exists(dir))
-            fsys.listStatus(dir).toSeq
-              .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-              .sortBy(_.getPath.getName).zipWithIndex.foreach { case (s, k) =>
-                adds += publish(s.getPath, s"part-$uuid-d$i-$k.parquet", pv, cdc = false)
-              }
-        }
-      }
-      if (cdfOn) {
-        // the deleted rows themselves, as the spec's change-data files
-        val (tuples, gpMap) = gpFrames(affected)
-        DeltaRead.scanAdds(spark, targetPath, affected, schema, parts,
-          colMap, colIds, Some(FK))
-          .filter(matchedF)
-          .join(broadcast(gpMap), col(FK) === col("__gfk"))
-          .select(dataSel :+ lit("delete").as("_change_type") :+ col("__gp"): _*)
-          .write.partitionBy("__gp").mode("overwrite")
-          .parquet(s"$staging/cdc")
-        tuples.foreach { case (pv, i) =>
-          val dir = new Path(s"$staging/cdc", s"__gp=$i")
-          if (fsys.exists(dir))
-            fsys.listStatus(dir).toSeq
-              .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-              .sortBy(_.getPath.getName).zipWithIndex.foreach { case (s, k) =>
-                cdcs += publish(s.getPath,
-                  s"_change_data/cdc-$uuid-$i-$k.parquet", pv, cdc = true)
-              }
-        }
-      }
-    } finally fsys.delete(new Path(staging), true): Unit
-    val now = System.currentTimeMillis()
-    val removes = affected.map(a =>
-      removeAction(a.path, now, Some(a.partitionValues), a.size))
-    beforeCommit()
-    // OCC commit: rewritten files are final; only the JSON number
-    // races. A delete conflicts with ANY intervening commit that
-    // touched its affected files, not just one that takes our exact
-    // version slot — so validation keys on the commit TARGET moving
-    // past the anchored base, which catches racing commits that landed
-    // before we listed just as well as put-if-absent collisions.
-    var attempt = 0
-    var lastErr: Throwable = null
-    var validatedThrough = currentV
-    while (attempt <= maxRetries) {
-      val v = nextDeltaVersion(spark, targetPath)
-      if (v != validatedThrough + 1) {
-        val stNow = DeltaRead.replay(spark, targetPath, Some(v - 1))
-        requireForeignDeletable(targetPath, stNow)
-        if (stNow.schemaJson != st0.schemaJson ||
-            stNow.partitionCols != st0.partitionCols)
-          throw new IllegalStateException(
-            s"concurrent metaData change at $targetPath moved the schema " +
-              "under this delete; re-read the table and retry explicitly",
-            lastErr)
-        affected.foreach { a =>
-          stNow.adds.get(a.path) match {
-            case Some(b) if b.dv == a.dv => ()
-            case _ => throw new IllegalStateException(
-              s"concurrent commit at $targetPath removed or rewrote " +
-                s"${a.path} under this delete; re-read and re-issue the " +
-                "delete against the new state", lastErr)
-          }
-        }
-        validatedThrough = v - 1
-      }
-      val actions =
-        Seq(action("commitInfo", "operation" -> "DELETE",
-          "engineInfo" -> "graft-deleteForeign")) ++
-          removes ++ adds.result() ++ cdcs.result()
-      try { writeCommit(spark, targetPath, v, actions); return v }
-      catch {
-        case e: Throwable
-            if Option(e.getMessage).exists(_.contains("concurrent export")) ||
-              e.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException] =>
-          lastErr = e
-          attempt += 1
-      }
-    }
-    throw new java.io.IOException(
-      s"commit to $targetPath still conflicting after $maxRetries retries",
-      lastErr)
+    val stage = new ForeignCommit.Staging(spark, targetPath)
+    val actions = try {
+      // pass 2 — survivors of the partial files only, one job
+      val adds =
+        if (partials.isEmpty) Nil
+        else t.stageFiles(stage, "data", t.scan(partials).filter(not(matchedF)),
+          partials, Nil, (i, k) => s"part-${stage.uuid}-d$i-$k.parquet")
+      // the deleted rows themselves, as the spec's change-data files
+      val cdcs =
+        if (!t.cdfOn) Nil
+        else t.stageFiles(stage, "cdc", t.scan(affected).filter(matchedF), affected,
+          Seq(lit("delete").as("_change_type")),
+          (i, k) => s"_change_data/cdc-${stage.uuid}-$i-$k.parquet", cdc = true)
+      adds ++ cdcs
+    } finally stage.close()
+    t.commitRowLevel("DELETE", "graft-deleteForeign", "delete", affected, actions, maxRetries)
   }
 }

@@ -9,7 +9,7 @@ import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 /** EXPORT a versioned-table snapshot AS an Iceberg v2 table — the
@@ -630,12 +630,6 @@ object IcebergExport {
     publishMeta(dir, Json.mapper.valueToTree[JsonNode](root), metaV)
   }
 
-  private def requireUnmapped(spark: SparkSession, sourcePath: String, v: Long): Unit =
-    if (TimeTravel.colsListing(spark, sourcePath, v).nonEmpty)
-      throw new UnsupportedOperationException(
-        s"snapshot v$v of $sourcePath resolves through a column mapping; run " +
-          "TimeTravel.optimize to rewrite, then export the folded version")
-
   /** Scheme-normalized path key ([[DeltaExport]]'s normKey): graft DV
     * sidecars record `_metadata.file_path` URIs while the data
     * manifests record `inputFiles` URIs, and the two render the
@@ -671,23 +665,14 @@ object IcebergExport {
       (manifestForm, r.getLong(1))
     }.sortBy(identity).toSeq // spec: position deletes sort by (file_path, pos)
     import spark.implicits._
-    val pairs = pairRows.toDF("file_path", "pos")
-      .coalesce(1).sortWithinPartitions("file_path", "pos")
-    val stage = s"$targetPath/deletes/.stage-$g"
-    pairs.write.mode("overwrite").parquet(stage)
-    val part = new java.io.File(stage).listFiles()
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("delete stage wrote no part"))
-    val dst = new java.io.File(f"$targetPath/deletes/pd-$g%05d.parquet")
-    java.nio.file.Files.move(part.toPath, dst.toPath)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(new java.io.File(stage))
-    val delFiles = describeFiles(spark, Seq(dst.getAbsolutePath))
+    val stage = new ForeignCommit.Staging(spark, targetPath)
+    val name = f"deletes/pd-$g%05d.parquet"
+    val delFile = try publishOne(stage, name, stageOne(spark, stage, name,
+      pairRows.toDF("file_path", "pos").coalesce(1).sortWithinPartitions("file_path", "pos")))
+    finally stage.close()
     // deletes of a partitioned table publish GLOBAL: the empty spec
     writeManifest(targetPath, f"md-$g%05d.avro", snapId, seqNum,
-      delFiles, fields, content = 1, partCols = Nil, specId = delSpecId)
+      Seq(delFile), fields, content = 1, partCols = Nil, specId = delSpecId)
   }
 
   /** Publish tombstones as format-version-3 DELETION VECTORS: ONE
@@ -791,6 +776,39 @@ object IcebergExport {
     w.close()
     ManifestRef(f.getAbsolutePath, f.length(), 0, 0L, 1, specId,
       existingCount = kept.size, existingRows = rows, minSeq = Some(minSeq))
+  }
+
+  /** Carry a head snapshot's manifest-list records forward: a delete
+    * manifest holding a prior vector of a `revectored` data file
+    * (normalized keys) is rewritten WITHOUT it as `name(i)` (survivors
+    * as EXISTING), or omitted when emptied — the v3 at-most-one-DV
+    * rule. Returns the records kept by reference and the rewrites. */
+  private def carryForward(spark: SparkSession, targetPath: String,
+      prior: Seq[GenericRecord], revectored: Set[String],
+      fields: Seq[(Int, String, Boolean, String)],
+      name: Int => String): (Seq[GenericRecord], Seq[ManifestRef]) = {
+    if (revectored.isEmpty) return (prior, Nil)
+    val kept = Seq.newBuilder[GenericRecord]
+    val rewritten = Seq.newBuilder[ManifestRef]
+    prior.zipWithIndex.foreach { case (rec, i) =>
+      def num(f: String) = Option(rec.get(f)).map(_.asInstanceOf[Number].intValue()).getOrElse(0)
+      if (num("content") == 0) kept += rec
+      else {
+        val entries = avroRecords(spark,
+          IcebergRead.resolve(targetPath, String.valueOf(rec.get("manifest_path"))))
+        val (dropped, survivors) = entries.partition { e =>
+          val df = e.get("data_file").asInstanceOf[GenericRecord]
+          Option(if (df.getSchema.getField("referenced_data_file") == null) null
+            else df.get("referenced_data_file"))
+            .exists(r => revectored(normKey(
+              IcebergRead.resolve(targetPath, String.valueOf(r)).toString)))
+        }
+        if (dropped.isEmpty) kept += rec
+        else if (survivors.nonEmpty) rewritten += writeExistingDeleteManifest(
+          targetPath, name(i), survivors, fields, num("partition_spec_id"))
+      }
+    }
+    (kept.result(), rewritten.result())
   }
 
   /** The partition columns a `partitionBy` names, typed and id'd
@@ -1133,9 +1151,9 @@ object IcebergExport {
   // ------------------------------------------------- ref writes (r15)
 
   /** CREATE a named branch or tag (r14 verdict #6 — the write half of
-    * [[IcebergRead.readRef]]): a metadata-only commit via the same
-    * deep-copy mutation + CREATE_NEW OCC as foreign appends, so it
-    * works on graft exports and foreign tables alike. Points at
+    * [[IcebergRead.readRef]]): a metadata-only commit on the
+    * [[ForeignCommit.retry]] loop (deep-copy mutation + CREATE_NEW), so
+    * it works on graft exports and foreign tables alike. Points at
     * `snapshotId` (default: the current snapshot); the name must be
     * free. Returns the pinned snapshot id. */
   def createRef(spark: SparkSession, targetPath: String, name: String,
@@ -1147,10 +1165,9 @@ object IcebergExport {
       s"ref type must be 'branch' or 'tag', got '$refType'")
     require(name.nonEmpty && name != "main",
       "ref name must be non-empty and not 'main'")
-    var attempt = 0
-    var lastErr: Throwable = null
-    while (attempt <= maxRetries) {
-      val (baseV, meta) = foreignBase(targetPath)
+    val t = new ForeignIceberg(spark, targetPath)
+    ForeignCommit.retry(t, maxRetries) { (v, _, _) =>
+      val meta = t.meta(v)
       val root = meta.deepCopy[JsonNode]().asInstanceOf[ObjectNode]
       val refs = Option(root.get("refs")).collect { case o: ObjectNode => o }
         .getOrElse(root.putObject("refs"))
@@ -1167,15 +1184,9 @@ object IcebergExport {
       node.put("snapshot-id", sid)
       node.put("type", refType): Unit
       root.put("last-updated-ms", System.currentTimeMillis())
-      try { publishMeta(targetPath, root, baseV + 1); return sid }
-      catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          lastErr = e; attempt += 1
-      }
+      publishMeta(targetPath, root, (v + 1).toInt)
+      sid
     }
-    throw new java.io.IOException(
-      s"ref commit to $targetPath still conflicting after $maxRetries retries",
-      lastErr)
   }
 
   /** DROP a named ref — `main` refuses (the table's identity pointer);
@@ -1185,26 +1196,17 @@ object IcebergExport {
     import com.fasterxml.jackson.databind.node.ObjectNode
     requireLocalScheme(targetPath, "dropRef")
     require(name != "main", "refusing to drop 'main'")
-    var attempt = 0
-    var lastErr: Throwable = null
-    while (attempt <= maxRetries) {
-      val (baseV, meta) = foreignBase(targetPath)
-      val root = meta.deepCopy[JsonNode]().asInstanceOf[ObjectNode]
+    val t = new ForeignIceberg(spark, targetPath)
+    ForeignCommit.retry(t, maxRetries) { (v, _, _) =>
+      val root = t.meta(v).deepCopy[JsonNode]().asInstanceOf[ObjectNode]
       val refs = Option(root.get("refs")).collect { case o: ObjectNode => o }
         .filter(_.has(name))
         .getOrElse(throw new IllegalArgumentException(
           s"no ref '$name' at $targetPath"))
       refs.remove(name): Unit
       root.put("last-updated-ms", System.currentTimeMillis())
-      try { publishMeta(targetPath, root, baseV + 1); return }
-      catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          lastErr = e; attempt += 1
-      }
+      publishMeta(targetPath, root, (v + 1).toInt)
     }
-    throw new java.io.IOException(
-      s"ref commit to $targetPath still conflicting after $maxRetries retries",
-      lastErr)
   }
 
   /** The spec id a GLOBAL (empty-partition) delete manifest should
@@ -1219,133 +1221,293 @@ object IcebergExport {
       .getOrElse(parsed.map(_.get("spec-id").asInt()).max + 1)
   }
 
-  /** Stage `df` as field-id-tagged parquet under `targetPath/data`
-    * with the table's partition layout (identity and every served
-    * transform — the `__gp` broadcast-map write), validating
-    * `required` columns from the staged footers; returns the
-    * described files ready for a manifest. The shared write half of
-    * [[appendForeign]] and [[updateForeign]]. */
+  /** A foreign Iceberg table anchored at its newest metadata, the
+    * [[ForeignCommit]] view every foreign Iceberg writer stages against
+    * and commits on. A data file's key is its normalized resolved path;
+    * its delete state is the set of deletion vectors that reference it
+    * (v2 position-delete files only ever add tombstones, so a racing
+    * one cannot be resurrected and is not part of the state). */
+  private final class ForeignIceberg(spark: SparkSession, val path: String)
+      extends ForeignCommit.Table {
+    private val metas = scala.collection.mutable.Map.empty[Long, JsonNode]
+    private val lives = scala.collection.mutable.Map.empty[Long, Seq[IcebergRead.EntryInfo]]
+    def head(): Long = {
+      val (v, m) = foreignBase(path)
+      metas(v.toLong) = m
+      v.toLong
+    }
+    def meta(v: Long): JsonNode = metas(v)
+    def live(v: Long): Seq[IcebergRead.EntryInfo] =
+      lives.getOrElseUpdate(v, IcebergRead.liveEntries(spark, path, meta(v)))
+    val base: Long = head()
+    val meta0: JsonNode = meta(base)
+    lazy val fv: Int = Option(meta0.get("format-version")).map(_.asInt()).getOrElse(1)
+    def v3: Boolean = fv == 3
+    lazy val fields: Seq[(Int, String, Boolean, String)] = fieldsOfMeta(meta0)
+    lazy val partCols: Seq[PartCol] = partColsOfMeta(meta0, fields)
+    lazy val snaps0: Seq[Snap] = snapsOfMeta(meta0)
+    def keyOf(p: String): String = PathKeys.normKey(IcebergRead.resolve(path, p).toString)
+
+    def shape(v: Long): Any = (fieldsOfMeta(meta(v)), partColsOfMeta(meta(v), fields))
+    def files(v: Long): Map[String, Any] = {
+      val dvs = live(v).filter(e => e.content == 1 && e.dv.nonEmpty)
+        .groupBy(e => keyOf(e.dv.get._1))
+        .map { case (k, es) => k -> es.map(e => (e.path, e.dv.get)).toSet }
+      live(v).filter(_.content == 0).map { e =>
+        keyOf(e.path) -> dvs.getOrElse(keyOf(e.path), Set.empty)
+      }.toMap
+    }
+    def isConflict(e: Throwable): Boolean = e.isInstanceOf[java.nio.file.FileAlreadyExistsException]
+    def shapeMoved(op: String): String =
+      s"concurrent schema or spec change at $path moved the table under this " +
+        s"$op; re-read and retry explicitly"
+    def fileMoved(op: String, f: String): String =
+      s"concurrent commit at $path removed, rewrote or re-vectored $f under " +
+        s"this $op; re-read and re-issue the $op"
+
+    def requireSnapshot(): Unit =
+      if (snaps0.isEmpty) throw new IllegalStateException(
+        s"no snapshots at $path; export or append a snapshot first")
+    def requireRowLineage(): Unit =
+      if (v3 && !meta0.has("next-row-id")) throw new UnsupportedOperationException(
+        s"format-version-3 table at $path carries no next-row-id; " +
+          "v3 requires row lineage — cannot assign row ids")
+    /** What a commit-free write returns: the current snapshot id. */
+    def currentId: Long = Option(meta0.get("current-snapshot-id")).map(_.asLong())
+      .filter(_ != -1L).getOrElse(snaps0.last.id)
+
+    /** The base's rows with their file (`__g_fp`) and row position
+      * (`__g_ri`), existing deletes applied. */
+    def positioned(): DataFrame =
+      IcebergRead.readEntries(spark, path, meta0, live(base), withPositions = true)
+
+    /** (file_path, pos) of `rows`, a [[positioned]] scan, with file_path
+      * the EXACT string the manifests record (readers match byte-exact). */
+    def coordinates(rows: DataFrame): DataFrame = {
+      import org.apache.spark.sql.functions.{broadcast, col}
+      import spark.implicits._
+      val data = live(base).filter(_.content == 0)
+      val byKey = data.map(e => keyOf(e.path) -> e.path).toMap
+      if (byKey.size != data.size) throw new IllegalStateException(
+        s"two manifest data paths normalize to one key at $path — " +
+          "cannot address position deletes unambiguously")
+      rows.select(col("__g_fp"), col("__g_ri").cast("long").as("pos"))
+        .join(broadcast(byKey.toSeq.toDF("__g_fp", "__g_file_path")), Seq("__g_fp"))
+        .select(col("__g_file_path").as("file_path"), col("pos"))
+        .distinct()
+    }
+  }
+
+  /** The anchored target of a foreign DML write: a local table of
+    * format version 2 or 3 (v1 manifests speak another entry shape). */
+  private def foreignDml(spark: SparkSession, targetPath: String, op: String): ForeignIceberg = {
+    requireLocalScheme(targetPath, op)
+    val t = new ForeignIceberg(spark, targetPath)
+    if (t.fv != 2 && t.fv != 3) throw new UnsupportedOperationException(
+      s"iceberg table at $targetPath is format-version ${t.fv}; foreign writes " +
+        "speak versions 2 and 3")
+    t
+  }
+
+  /** Write `df` (one partition, in its order) as ONE parquet file under
+    * `stage`, described from its footer; [[publishOne]] moves it to
+    * `name`. */
+  private def stageOne(spark: SparkSession, stage: ForeignCommit.Staging,
+      name: String, df: DataFrame): NewFile = {
+    val dir = stage.dir(name)
+    df.write.mode("overwrite").parquet(dir.toString)
+    val part = stage.parts(dir).headOption.getOrElse(
+      throw new IllegalStateException(s"the stage of $name wrote no part"))
+    describeFiles(spark, Seq(part.toString)).head
+  }
+
+  private def publishOne(stage: ForeignCommit.Staging, name: String,
+      staged: NewFile): NewFile =
+    staged.copy(path = stage.publish(stage.dir(name), _ => name).head._2.toUri.getPath)
+
+  /** The tombstones of a foreign delete or update: a v2
+    * position-delete file, or v3 cumulative positions per data file
+    * (their puffin embeds each attempt's ids, so [[files]] writes it per
+    * attempt). `affected` keys the tombstoned data files; it is read
+    * only when the OCC loop re-validates. */
+  private final class Tombstones(positionFile: Option[NewFile],
+      vectors: Seq[(String, Seq[Long])], val revectored: Set[String],
+      keys: => Set[String]) {
+    lazy val affected: Set[String] = keys
+    def files(spark: SparkSession, t: ForeignIceberg, uuid: String, attempt: Int,
+        s: Stamp): Seq[NewFile] =
+      positionFile.map(Seq(_)).getOrElse {
+        val puffinPath = new java.io.File(
+          s"${t.path}/deletes/dvf-$uuid-a$attempt.puffin").getAbsolutePath
+        val refs = Puffin.writeDvFile(spark, puffinPath, vectors, s.snapId, s.seqNum)
+        val puffinLen = new java.io.File(puffinPath).length()
+        refs.map(r => NewFile(puffinPath, r.cardinality, puffinLen,
+          dv = Some((r.referencedDataFile, r.offset, r.length))))
+      }
+  }
+
+  /** Stage the tombstones of `coords` ([[ForeignIceberg.coordinates]]):
+    *
+    *   - v2: ONE position-delete parquet (`deletes/pdf-*.parquet`) of
+    *     (file_path, pos) rows sorted as the spec requires, carrying the
+    *     reserved field ids 2147483546/2147483545 so id-binding engines
+    *     resolve it;
+    *   - v3: deletion vectors, one per affected file and CUMULATIVE: a
+    *     file that already carries a DV gets ONE superseding vector
+    *     holding old ∪ new positions (the at-most-one-DV rule), and its
+    *     prior entry is dropped from the carried-forward manifests.
+    *
+    * None when nothing matched — on v2 the staged file's footer row
+    * count says so, with nothing published. */
+  private def stageTombstones(spark: SparkSession, t: ForeignIceberg,
+      stage: ForeignCommit.Staging, coords: DataFrame): Option[Tombstones] =
+    if (!t.v3) {
+      import org.apache.spark.sql.functions.col
+      def id(n: Long) = new MetadataBuilder().putLong("parquet.field.id", n).build()
+      val name = s"deletes/pdf-${stage.uuid}.parquet"
+      val staged = stageOne(spark, stage, name,
+        coords.select(col("file_path").as("file_path", id(2147483546L)),
+          col("pos").as("pos", id(2147483545L)))
+          .coalesce(1).sortWithinPartitions("file_path", "pos"))
+      if (staged.recordCount == 0) None
+      else {
+        val pd = publishOne(stage, name, staged)
+        Some(new Tombstones(Some(pd), Nil, Set.empty,
+          spark.read.parquet(pd.path).select("file_path").distinct().collect()
+            .map(r => t.keyOf(r.getString(0))).toSet))
+      }
+    } else {
+      val newByFile = ForeignCommit.matchedPositions(coords)
+      if (newByFile.isEmpty) None
+      else {
+        val existingByRef: Map[String, Seq[Long]] =
+          t.live(t.base).filter(e => e.content == 1 && e.dv.nonEmpty)
+            .groupBy(e => t.keyOf(e.dv.get._1))
+            .map { case (k, es) =>
+              k -> es.flatMap { e =>
+                val (_, off, len) = e.dv.get
+                Puffin.dvPositions(spark,
+                  IcebergRead.resolve(t.path, e.path).toString, off, len)
+              }.toSeq
+            }
+        val byFile = newByFile.map { case (p, ps) =>
+          (p, (ps ++ existingByRef.getOrElse(t.keyOf(p), Nil)).distinct.sorted)
+        }
+        val keys = byFile.map(f => t.keyOf(f._1)).toSet
+        Some(new Tombstones(None, byFile, keys.filter(existingByRef.contains), keys))
+      }
+    }
+
+  /** The ids one publish attempt stamps on its manifests. */
+  private final case class Stamp(snapId: Long, seqNum: Long,
+      rowBase: Option[Long], specId: Int, delSpecId: Int, schemaId: Int)
+
+  /** One publish attempt of a foreign write on head `v`: stamp the next
+    * sequence number and a free snapshot id in the `idBit` space (out of
+    * the graft-version ids that snapshot/append stamp, so they never
+    * collide), write this attempt's `manifests`, carry the head's
+    * manifests forward (dropping superseded vectors of `revectored`
+    * files — rewrites named `<carry>-<uuid>-a<n>-c<i>.avro`), and commit
+    * metadata v+1 as `snap-<tag>-<uuid>-a<n>.avro`. `addedRows` advances
+    * v3 row lineage; a write of `deletes` references the table's empty
+    * spec. Returns the snapshot id. */
+  private def publishSnapshot(spark: SparkSession, t: ForeignIceberg, v: Long,
+      attempt: Int, uuid: String, tag: String, idBit: Int, operation: String,
+      revectored: Set[String] = Set.empty, carry: String = "",
+      addedRows: Option[Long] = None, deletes: Boolean = true,
+      ref: Option[String] = None)(manifests: Stamp => Seq[ManifestRef]): Long = {
+    val meta = t.meta(v)
+    val snaps = snapsOfMeta(meta)
+    val seqNum = math.max(
+      Option(meta.get("last-sequence-number")).map(_.asLong()).getOrElse(0L),
+      snaps.map(_.seqNum).foldLeft(0L)(math.max)) + 1
+    val taken = snaps.map(_.id).toSet
+    var snapId = (1L << idBit) | seqNum
+    while (taken(snapId)) snapId += 1
+    val rowBase = Option(meta.get("next-row-id")).map(_.asLong())
+    if (t.v3 && addedRows.nonEmpty && rowBase.isEmpty) throw new IllegalStateException(
+      s"concurrent writer dropped next-row-id at ${t.path}")
+    val specId = Option(meta.get("default-spec-id")).map(_.asInt()).getOrElse(0)
+    // a GLOBAL delete manifest references an EMPTY spec: the table's
+    // default when unpartitioned, an existing empty spec otherwise — or
+    // a fresh one the commit publishes alongside the snapshot
+    val delSpecId = if (t.partCols.isEmpty) specId else emptySpecIdOf(meta)
+    val schemaId = Option(meta.get("current-schema-id")).map(_.asInt()).getOrElse(0)
+    val fresh = manifests(Stamp(snapId, seqNum, if (t.v3) rowBase else None,
+      specId, delSpecId, schemaId))
+    // the commit extends the HEAD it targets: main's current snapshot,
+    // or — for a branch commit — the named ref's
+    val headId: Option[Long] = ref match {
+      case Some(name) =>
+        val (sid, tpe) = IcebergRead.refsOf(meta).getOrElse(name,
+          throw new IllegalArgumentException(
+            s"no ref '$name' at ${t.path}; create the branch first"))
+        if (tpe == "tag") throw new UnsupportedOperationException(
+          s"ref '$name' at ${t.path} is a TAG — tags are immutable; " +
+            "commit to a branch")
+        Some(sid)
+      case None =>
+        Option(meta.get("current-snapshot-id")).map(_.asLong()).filter(_ != -1L)
+    }
+    val prior = headId.flatMap(id => snaps.find(_.id == id)).map(s =>
+      avroRecords(spark, IcebergRead.resolve(t.path, s.manifestList))).getOrElse(Nil)
+    val (kept, rewritten) = carryForward(spark, t.path, prior, revectored,
+      t.fields, i => s"$carry-$uuid-a$attempt-c$i.avro")
+    val ml = writeManifestList(t.path, s"snap-$tag-$uuid-a$attempt.avro",
+      snapId, seqNum, kept, fresh ++ rewritten, v3 = t.v3)
+    commitForeignMeta(t.path, meta, (v + 1).toInt, snapId, seqNum, ml, operation,
+      firstRowId = if (t.v3) rowBase else None,
+      nextRowId = if (t.v3) addedRows.flatMap(n => rowBase.map(_ + n)) else None,
+      ensureEmptySpec = if (deletes && t.partCols.nonEmpty) Some(delSpecId) else None,
+      ref = ref)
+    snapId
+  }
+
+  /** Stage `df` as field-id-tagged parquet under `data/` of `t` with the
+    * table's partition layout (identity and every served transform —
+    * [[ForeignCommit.writeGrouped]]), validating `required` columns
+    * from the staged footers; returns the published files described
+    * for a manifest. The shared write half of [[appendForeign]] and
+    * [[updateForeign]]. */
   private def stageForeignData(spark: SparkSession,
-      df: org.apache.spark.sql.DataFrame, targetPath: String,
-      fields: Seq[(Int, String, Boolean, String)], partCols: Seq[PartCol],
-      uuid: String): Seq[NewFile] = {
-    import org.apache.spark.sql.functions.{assert_true, broadcast, col, lit, when => sqlWhen}
-    val requiredCols = fields.filter(_._3).map(_._2)
-    // persist when a pass beyond the write reads the frame (the
-    // partition-tuple collect) — same nondeterminism stance as the
-    // Delta twin. `required` validates from the STAGED footers, not
-    // an aggregate prepass, so it forces no persist and no second
-    // read; a violating append fails BEFORE any file is published.
-    val multiPass = partCols.nonEmpty
-    val src = if (multiPass)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
-    val stage = s"$targetPath/_graft_staging_$uuid"
-    val conf = spark.sessionState.newHadoopConf()
-    val fsys = new Path(targetPath).getFileSystem(conf)
+      df: org.apache.spark.sql.DataFrame, t: ForeignIceberg,
+      stage: ForeignCommit.Staging): Seq[NewFile] = {
+    import org.apache.spark.sql.functions.col
+    val (fields, partCols) = (t.fields, t.partCols)
+    val dir = stage.dir("data")
     val sel = fields.map { case (id, n, _, _) =>
-      col(n).as(n, new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong("parquet.field.id", id.toLong).build())
+      col(n).as(n, new MetadataBuilder().putLong("parquet.field.id", id.toLong).build())
     }
     def requireStagedRequired(): Unit =
-      if (requiredCols.nonEmpty) {
-        val counts = DeltaExport.stagedNullCounts(conf, new Path(stage),
-          requiredCols)
-        val violated = requiredCols.flatMap { c =>
-          counts(c) match {
-            case Some(0L) => None
-            case Some(n) => Some(s"$c ($n nulls)")
-            case None => throw new IllegalStateException(
-              s"staged files carry no null-count statistics for $c; " +
-                "cannot validate the required column")
-          }
-        }
-        if (violated.nonEmpty) throw new IllegalArgumentException(
-          s"appendForeign frame carries nulls in required column(s) of " +
-            s"$targetPath: ${violated.mkString(", ")}")
-      }
-    def publish(staged: Path, destName: String): String = {
-      val dest = new Path(s"$targetPath/data", destName)
-      fsys.mkdirs(dest.getParent)
-      if (!fsys.rename(staged, dest)) throw new java.io.IOException(
-        s"staging publish failed for $dest")
-      dest.toUri.getPath
-    }
-    val stagedPaths = Seq.newBuilder[String]
-    try {
+      ForeignCommit.requireNoStagedNulls(stage.conf, dir,
+        fields.filter(_._3).map(f => f._2 -> f._2), "the required column",
+        s"appendForeign frame carries nulls in required column(s) of ${t.path}")
+    val published =
       if (partCols.isEmpty) {
-        src.select(sel: _*).write.mode("overwrite").parquet(stage)
+        df.select(sel: _*).write.mode("overwrite").parquet(dir.toString)
         requireStagedRequired()
-        fsys.listStatus(new Path(stage)).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName).zipWithIndex.foreach { case (s, i) =>
-            stagedPaths += publish(s.getPath, s"gf-$uuid-$i.parquet")
-          }
+        stage.publish(dir, i => s"data/gf-${stage.uuid}-$i.parquet")
       } else {
-        // partitioning: the same broadcast tuple→index map + ONE
-        // partitionBy("__gp") write as the Delta twin — tuples are the
-        // TRANSFORMED values (identity = the column itself), so every
-        // spec transform groups here; the real source columns STAY in
-        // the data files (the shape engines write), and
+        // tuples are the TRANSFORMED values (identity = the column
+        // itself), so every spec transform groups here; the real source
+        // columns STAY in the data files (the shape engines write), and
         // [[describeFiles]] re-derives each file's tuple from footer
         // stats with the purity check (bucket, non-monotonic, rides
         // `knownValues` from one distinct-per-file scan instead)
-        // the data side binds the SOURCE column names (the spec's
-        // display name may differ); the manifest partition record
-        // keeps the spec names via writeManifest
-        val tCols = partCols.zipWithIndex.map { case (pc, i) =>
-          transformColumn(pc, col(pc.srcName)).as(s"__gt$i")
+        val tuples = ForeignCommit.writeGrouped(spark, df,
+          partCols.map(pc => transformColumn(pc, col(pc.srcName))), sel, dir) { tuples =>
+          if (tuples.exists(r => (0 until r.size).exists(r.isNullAt)))
+            throw new UnsupportedOperationException(
+              s"null partition values at ${t.path} are outside this " +
+                "writer's set")
         }
-        val tSchema = src.select(tCols: _*).schema
-        val tuples = src.select(tCols: _*).distinct().collect()
-        if (tuples.exists(r => (0 until r.size).exists(r.isNullAt)))
-          throw new UnsupportedOperationException(
-            s"null partition values at $targetPath are outside this " +
-              "writer's set")
-        val idxSchema = StructType(
-          tSchema.fields.map(_.copy(nullable = true)).toSeq :+
-            StructField("__gp", IntegerType, nullable = false))
-        import scala.jdk.CollectionConverters._
-        val idxDf = spark.createDataFrame(
-          tuples.zipWithIndex.map { case (r, i) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-          }.toSeq.asJava, idxSchema)
-        val joined = src.as("l").join(broadcast(idxDf.as("r")),
-          partCols.zipWithIndex.map { case (pc, i) =>
-            transformColumn(pc, col(s"l.${pc.srcName}")) <=> col(s"r.__gt$i")
-          }.reduce(_ && _), "left")
-        val gpGuarded = sqlWhen(
-          assert_true(col("r.__gp").isNotNull,
-            lit("appendForeign: row's partition tuple is absent from the " +
-              "collected map — nondeterministic input re-evaluated?")).isNull,
-          col("r.__gp")).as("__gp")
-        // the join leaves partition-column names on BOTH sides — the
-        // data projection must bind the LEFT (data) occurrences
-        val selL = fields.map { case (id, n, _, _) =>
-          col(s"l.$n").as(n, new org.apache.spark.sql.types.MetadataBuilder()
-            .putLong("parquet.field.id", id.toLong).build())
-        }
-        joined.select(selL :+ gpGuarded: _*)
-          .write.partitionBy("__gp").mode("overwrite").parquet(stage)
         requireStagedRequired()
-        tuples.indices.foreach { i =>
-          val dir = new Path(stage, s"__gp=$i")
-          if (fsys.exists(dir))
-            fsys.listStatus(dir).toSeq
-              .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-              .sortBy(_.getPath.getName).zipWithIndex.foreach { case (s, k) =>
-                stagedPaths += publish(s.getPath, s"gf-$uuid-$i-$k.parquet")
-              }
-        }
+        tuples.indices.flatMap(i => stage.publish(new Path(dir, s"__gp=$i"),
+          k => s"data/gf-${stage.uuid}-$i-$k.parquet"))
       }
-    } finally {
-      if (multiPass) src.unpersist(): Unit
-      fsys.delete(new Path(stage), true): Unit
-    }
-    describeFiles(spark, stagedPaths.result(), partCols,
-      statFields = fields,
-      knownValues = if (hasBucket(partCols))
-        scanDerivedTuples(spark, stagedPaths.result(), partCols)
+    val paths = published.map(_._2.toUri.getPath)
+    describeFiles(spark, paths, partCols, statFields = fields,
+      knownValues = if (hasBucket(partCols)) scanDerivedTuples(spark, paths, partCols)
       else Map.empty)
   }
 
@@ -1380,16 +1542,8 @@ object IcebergExport {
   def appendForeign(spark: SparkSession, df: org.apache.spark.sql.DataFrame,
       targetPath: String, maxRetries: Int = 3,
       ref: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{assert_true, broadcast, col, lit, when => sqlWhen}
-    requireLocalScheme(targetPath, "appendForeign")
-    val (v0, meta0) = foreignBase(targetPath)
-    val fv = Option(meta0.get("format-version")).map(_.asInt()).getOrElse(1)
-    if (fv != 2 && fv != 3) throw new UnsupportedOperationException(
-      s"iceberg table at $targetPath is format-version $fv; foreign writes " +
-        "speak versions 2 and 3")
-    val v3 = fv == 3
-    val fields = fieldsOfMeta(meta0)
-    val partCols = partColsOfMeta(meta0, fields)
+    val t = foreignDml(spark, targetPath, "appendForeign")
+    val (fields, partCols) = (t.fields, t.partCols)
     partCols.foreach { pc =>
       val ok = pc.transform match {
         case "identity" => Set("long", "int", "string").contains(pc.icebergType)
@@ -1409,9 +1563,7 @@ object IcebergExport {
           "day/hour/month/year, bucket[N], and truncate[W] over their " +
           "spec-allowed source types")
     }
-    if (v3 && !meta0.has("next-row-id")) throw new UnsupportedOperationException(
-      s"format-version-3 table at $targetPath carries no next-row-id; " +
-        "v3 requires row lineage — cannot assign row ids")
+    t.requireRowLineage()
     // schema check by NAME + type; ids belong to the table
     val dfTypes = df.schema.fields.map(f => f.name -> f.dataType).toMap
     def matches(n: String, t: String): Boolean = dfTypes.get(n).exists { dt =>
@@ -1424,75 +1576,19 @@ object IcebergExport {
         s"appendForeign frame schema ${df.schema.simpleString} does not " +
           s"match the table schema (${fields.map(f => s"${f._2}: ${f._4}")
             .mkString(", ")}) at $targetPath")
-    val uuid = java.util.UUID.randomUUID().toString.take(12)
-    val files = stageForeignData(spark, df, targetPath, fields, partCols,
-      uuid)
-    val addedRows = files.map(_.recordCount).sum
-    // OCC: the data files are final; manifests + list are cheap and
-    // rewritten per attempt (they embed the racing seq/snapshot ids)
-    var attempt = 0
-    var lastErr: Throwable = null
-    while (attempt <= maxRetries) {
-      val (baseV, meta) = if (attempt == 0) (v0, meta0) else foreignBase(targetPath)
-      if (attempt > 0 &&
-          (fieldsOfMeta(meta) != fields || partColsOfMeta(meta, fields) != partCols))
-        throw new IllegalStateException(
-          s"concurrent schema or spec change at $targetPath moved the table " +
-            "under this append; re-read and retry explicitly", lastErr)
-      val snaps = snapsOfMeta(meta)
-      val seqNum = math.max(
-        Option(meta.get("last-sequence-number")).map(_.asLong()).getOrElse(0L),
-        snaps.map(_.seqNum).foldLeft(0L)(math.max)) + 1
-      val taken = snaps.map(_.id).toSet
-      var snapId = (1L << 41) | seqNum
-      while (taken(snapId)) snapId += 1
-      val rowBase = Option(meta.get("next-row-id")).map(_.asLong())
-      if (v3 && rowBase.isEmpty) throw new IllegalStateException(
-        s"concurrent writer dropped next-row-id at $targetPath", lastErr)
-      val specId = Option(meta.get("default-spec-id")).map(_.asInt()).getOrElse(0)
-      val schemaId = Option(meta.get("current-schema-id")).map(_.asInt()).getOrElse(0)
-      val mref = writeManifest(targetPath, f"mf-$uuid-a$attempt.avro", snapId,
-        seqNum, files, fields, partCols = partCols, specId = specId, v3 = v3,
-        firstRowBase = if (v3) rowBase else None, schemaId = schemaId)
-      // the commit extends the HEAD it targets: main's current
-      // snapshot, or — for a branch commit (r15) — the named ref's
-      val headId: Option[Long] = ref match {
-        case Some(name) =>
-          val refs = IcebergRead.refsOf(meta)
-          val (sid, tpe) = refs.getOrElse(name,
-            throw new IllegalArgumentException(
-              s"no ref '$name' at $targetPath; create the branch first"))
-          if (tpe == "tag") throw new UnsupportedOperationException(
-            s"ref '$name' at $targetPath is a TAG — tags are immutable; " +
-              "commit to a branch")
-          Some(sid)
-        case None =>
-          Option(meta.get("current-snapshot-id")).map(_.asLong())
-            .filter(_ != -1L)
-      }
-      val prior = headId.flatMap(id => snaps.find(_.id == id)) match {
-        case Some(s) => avroRecords(spark,
-          IcebergRead.resolve(targetPath, s.manifestList))
-        case None => Nil
-      }
-      val ml = writeManifestList(targetPath, f"snap-gf-$uuid-a$attempt.avro",
-        snapId, seqNum, prior, Seq(mref), v3 = v3)
-      try {
-        commitForeignMeta(targetPath, meta, baseV + 1, snapId, seqNum, ml,
-          "append",
-          firstRowId = if (v3) rowBase else None,
-          nextRowId = if (v3) rowBase.map(_ + addedRows) else None,
-          ref = ref)
-        return snapId
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          lastErr = e
-          attempt += 1
+    val stage = new ForeignCommit.Staging(spark, targetPath)
+    val files = try stageForeignData(spark, df, t, stage) finally stage.close()
+    // the data files are final; manifests + list are cheap and rewritten
+    // per attempt (they embed the racing seq/snapshot ids)
+    ForeignCommit.commit(t, t.base, "append", maxRetries) { (v, attempt) =>
+      publishSnapshot(spark, t, v, attempt, stage.uuid, "gf", 41, "append",
+        addedRows = Some(files.map(_.recordCount).sum), deletes = false,
+        ref = ref) { s =>
+        Seq(writeManifest(targetPath, s"mf-${stage.uuid}-a$attempt.avro", s.snapId,
+          s.seqNum, files, fields, partCols = partCols, specId = s.specId,
+          v3 = t.v3, firstRowBase = s.rowBase, schemaId = s.schemaId))
       }
     }
-    throw new java.io.IOException(
-      s"commit to $targetPath still conflicting after $maxRetries retries",
-      lastErr)
   }
 
   /** Write Iceberg metadata at `targetPath` exposing
@@ -1513,7 +1609,8 @@ object IcebergExport {
     val v3 = formatVersion == 3
     val v = version.getOrElse(TimeTravel.versions(spark, sourcePath).lastOption
       .getOrElse(throw new IllegalArgumentException(s"no versions at $sourcePath")))
-    requireUnmapped(spark, sourcePath, v)
+    TimeTravel.requireUnmapped(spark, sourcePath, v, "IcebergExport.snapshot",
+      "run TimeTravel.optimize to rewrite, then export the folded version")
     val dirs = TimeTravel.listing(spark, sourcePath, v)
     val scan = spark.read.parquet(dirs.map(d => s"$sourcePath/$d"): _*)
     val fields = fieldsOf(scan.schema)
@@ -1570,7 +1667,8 @@ object IcebergExport {
     val g1 = toVersion.getOrElse(TimeTravel.versions(spark, sourcePath).lastOption
       .getOrElse(throw new IllegalArgumentException(s"no versions at $sourcePath")))
     if (g1 <= g0) return 0
-    requireUnmapped(spark, sourcePath, g1)
+    TimeTravel.requireUnmapped(spark, sourcePath, g1, "IcebergExport.append",
+      "run TimeTravel.optimize to rewrite, then export the folded version")
     var rowLevel = false
     ((g0 + 1) to g1).foreach { v =>
       TimeTravel.classifyCommit(spark, sourcePath, v) match {
@@ -1655,32 +1753,10 @@ object IcebergExport {
       IcebergRead.resolve(targetPath, priorSnaps.last.manifestList))
     // carry prior manifests forward — for a v3 DV replacement, delete
     // manifests holding a superseded vector are rewritten without it
-    // (surviving entries as EXISTING), or omitted when emptied
-    val priorKept = Seq.newBuilder[GenericRecord]
-    priorRecords.zipWithIndex.foreach { case (rec, i) =>
-      val content = Option(rec.get("content"))
-        .map(_.asInstanceOf[Number].intValue()).getOrElse(0)
-      if (revectored.isEmpty || content == 0) priorKept += rec
-      else {
-        val mPath = IcebergRead.resolve(targetPath,
-          String.valueOf(rec.get("manifest_path")))
-        val entries = avroRecords(spark, mPath)
-        val (dropped, kept) = entries.partition { e =>
-          val df = e.get("data_file").asInstanceOf[GenericRecord]
-          Option(if (df.getSchema.getField("referenced_data_file") == null) null
-            else df.get("referenced_data_file"))
-            .exists(r => revectored(normKey(String.valueOf(r))))
-        }
-        if (dropped.isEmpty) priorKept += rec
-        else if (kept.nonEmpty)
-          manifests += writeExistingDeleteManifest(targetPath,
-            f"md-$g1%05d-c$i.avro", kept, fields,
-            Option(rec.get("partition_spec_id"))
-              .map(_.asInstanceOf[Number].intValue()).getOrElse(0))
-      }
-    }
+    val (priorKept, rewritten) = carryForward(spark, targetPath, priorRecords,
+      revectored, fields, i => f"md-$g1%05d-c$i.avro")
     val ml = writeManifestList(targetPath, f"snap-$g1%05d.avro", snapId, seqNum,
-      priorKept.result(), manifests.result(), v3 = v3)
+      priorKept, manifests.result() ++ rewritten, v3 = v3)
     writeMetadata(targetPath, metaV + 1, g1, fields,
       priorSnaps :+ Snap(snapId, seqNum, System.currentTimeMillis(), ml,
         if (rowLevel) "overwrite" else "append", firstRowId = rowBase),
@@ -1709,22 +1785,15 @@ object IcebergExport {
     * manifests are reused by reference. */
   def appendEqualityDeletes(spark: SparkSession, targetPath: String,
       keys: org.apache.spark.sql.DataFrame, maxRetries: Int = 3): Long = {
-    requireLocalScheme(targetPath, "appendEqualityDeletes")
-    val (v0, meta0) = foreignBase(targetPath)
-    val fv = Option(meta0.get("format-version")).map(_.asInt()).getOrElse(1)
-    if (fv != 2 && fv != 3) throw new UnsupportedOperationException(
-      s"iceberg table at $targetPath is format-version $fv; foreign writes " +
-        "speak versions 2 and 3")
-    val v3 = fv == 3
+    import org.apache.spark.sql.functions.col
+    val t = foreignDml(spark, targetPath, "appendEqualityDeletes")
     // field ids come from the table's OWN schema (r15: externally
     // created tables carry non-positional ids; the graft.source-version
     // requirement is lifted — graft exports pass through identically
     // because their ids ARE positional)
-    val fields = fieldsOfMeta(meta0)
-    val partCols = partColsOfMeta(meta0, fields)
-    if (snapsOfMeta(meta0).isEmpty) throw new IllegalStateException(
-      s"no snapshots at $targetPath; export or append a snapshot first")
-    val byName = fields.map(t => t._2 -> t).toMap
+    val fields = t.fields
+    t.requireSnapshot()
+    val byName = fields.map(f => f._2 -> f).toMap
     require(keys.columns.nonEmpty, "equality delete needs at least one column")
     val eqIds = keys.columns.toSeq.map { c =>
       val f = byName.getOrElse(c, throw new IllegalArgumentException(
@@ -1738,90 +1807,28 @@ object IcebergExport {
     // the delete file carries the table FIELD IDS at every column so
     // id-binding engines resolve it without name guessing; staged ONCE
     // (uuid-named — the snapshot id is chosen per OCC attempt)
-    import org.apache.spark.sql.functions.col
-    val uuid = java.util.UUID.randomUUID().toString.take(12)
-    val withIds = keys.select(keys.columns.toSeq.map { c =>
-      col(c).as(c, new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong("parquet.field.id", byName(c)._1.toLong).build())
-    }: _*).distinct()
-    val stage = s"$targetPath/deletes/.stage-eq-$uuid"
-    withIds.coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = new java.io.File(stage).listFiles()
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("equality stage wrote no part"))
-    val dst = new java.io.File(s"$targetPath/deletes/eq-$uuid.parquet")
-    dst.getParentFile.mkdirs()
-    java.nio.file.Files.move(part.toPath, dst.toPath)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-    }
-    deleteRec(new java.io.File(stage))
-    val delFiles = describeFiles(spark, Seq(dst.getAbsolutePath))
-      .map(_.copy(equalityIds = eqIds))
-    // OCC commit: the delete parquet is final; manifest + list rewrite
-    // per attempt (they embed the racing seq/snapshot ids)
-    var attempt = 0
-    var lastErr: Throwable = null
-    while (attempt <= maxRetries) {
-      val (baseV, meta) = if (attempt == 0) (v0, meta0) else foreignBase(targetPath)
-      if (attempt > 0 &&
-          (fieldsOfMeta(meta) != fields || partColsOfMeta(meta, fields) != partCols))
-        throw new IllegalStateException(
-          s"concurrent schema or spec change at $targetPath moved the table " +
-            "under this delete; re-read and retry explicitly", lastErr)
-      val snaps = snapsOfMeta(meta)
-      val seqNum = math.max(
-        Option(meta.get("last-sequence-number")).map(_.asLong()).getOrElse(0L),
-        snaps.map(_.seqNum).foldLeft(0L)(math.max)) + 1
-      // OUT of the graft-version id space (snapshot/append stamp ids
-      // from graft versions): a later append must never collide with
-      // an equality-delete snapshot's id — high bit + the growing
-      // sequence number, bumped past any foreign id already taken
-      val taken = snaps.map(_.id).toSet
-      var snapId = (1L << 40) | seqNum
-      while (taken(snapId)) snapId += 1
-      val rowBase = Option(meta.get("next-row-id")).map(_.asLong())
-      val schemaId = Option(meta.get("current-schema-id")).map(_.asInt()).getOrElse(0)
-      // a GLOBAL delete manifest references an EMPTY spec: the table's
-      // default when unpartitioned, an existing empty spec otherwise —
-      // or a fresh one the commit publishes alongside the snapshot
-      val delSpecId =
-        if (partCols.isEmpty)
-          Option(meta.get("default-spec-id")).map(_.asInt()).getOrElse(0)
-        else emptySpecIdOf(meta)
-      val mref = writeManifest(targetPath, s"me-$uuid-a$attempt.avro", snapId,
-        seqNum, delFiles, fields, content = 2, partCols = Nil,
-        specId = delSpecId, v3 = v3, schemaId = schemaId)
-      val cur = Option(meta.get("current-snapshot-id")).map(_.asLong())
-        .filter(_ != -1L).flatMap(id => snaps.find(_.id == id))
-        .getOrElse(snaps.last)
-      val priorRecords = avroRecords(spark,
-        IcebergRead.resolve(targetPath, cur.manifestList))
-      val ml = writeManifestList(targetPath, s"snap-eq-$uuid-a$attempt.avro",
-        snapId, seqNum, priorRecords, Seq(mref), v3 = v3)
-      try {
-        commitForeignMeta(targetPath, meta, baseV + 1, snapId, seqNum, ml,
-          "overwrite",
-          firstRowId = if (v3) rowBase else None,
-          nextRowId = None, // deletes assign no row ids
-          ensureEmptySpec = if (partCols.isEmpty) None else Some(delSpecId))
-        return snapId
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          lastErr = e
-          attempt += 1
+    val stage = new ForeignCommit.Staging(spark, targetPath)
+    val name = s"deletes/eq-${stage.uuid}.parquet"
+    val delFile = try publishOne(stage, name, stageOne(spark, stage, name,
+      keys.select(keys.columns.toSeq.map { c =>
+        col(c).as(c, new MetadataBuilder()
+          .putLong("parquet.field.id", byName(c)._1.toLong).build())
+      }: _*).distinct().coalesce(1))).copy(equalityIds = eqIds)
+    finally stage.close()
+    ForeignCommit.commit(t, t.base, "delete", maxRetries) { (v, attempt) =>
+      publishSnapshot(spark, t, v, attempt, stage.uuid, "eq", 40, "overwrite") { s =>
+        Seq(writeManifest(targetPath, s"me-${stage.uuid}-a$attempt.avro", s.snapId,
+          s.seqNum, Seq(delFile), fields, content = 2, partCols = Nil,
+          specId = s.delSpecId, v3 = t.v3, schemaId = s.schemaId))
       }
     }
-    throw new java.io.IOException(
-      s"commit to $targetPath still conflicting after $maxRetries retries",
-      lastErr)
   }
 
   /** PREDICATE-based merge-on-read DELETE into ANY v2/v3 Iceberg table
     * (r15 — the positional sibling of [[appendEqualityDeletes]], and
     * the Iceberg face of [[DeltaExport.deleteForeign]]): matched rows'
-    * physical coordinates ((data file, row position), existing deletes
-    * already applied via [[IcebergRead.readWithPositions]]) publish as
+    * physical coordinates ((data file, row position) of the anchored
+    * base, existing deletes already applied) publish as
     *
     *   - v2: ONE position-delete parquet (`deletes/pdf-*.parquet`) of
     *     (file_path, pos) rows sorted as the spec requires, carrying
@@ -1833,223 +1840,40 @@ object IcebergExport {
     *     vector holding its cumulative old ∪ new positions, and the
     *     prior vector's entry is dropped from the carried-forward
     *     manifests (survivors rewritten as EXISTING) — the spec's
-    *     at-most-one-DV rule, honored on foreign chains too; a retry
-    *     that finds a racing commit re-vectored one of our files
-    *     fails loudly instead of resurrecting its tombstones.
+    *     at-most-one-DV rule, honored on foreign chains too.
     *
-    * Same OCC as the other foreign writes: snapshot id outside the
-    * graft-version space, CREATE_NEW put-if-absent, bounded retry with
-    * schema/spec re-validation. Data files are never touched — cost is
-    * O(matched rows), the MoR trade. Nondeterministic predicates
-    * decline. Zero matches commit nothing and return the current
-    * snapshot id. */
+    * Same OCC as the other foreign writes ([[ForeignCommit]]): snapshot
+    * id outside the graft-version space, CREATE_NEW put-if-absent; a
+    * retry that finds a racing commit rewrote, removed or re-vectored
+    * one of the matched files fails loudly instead of tombstoning a
+    * dead path or resurrecting tombstones. Data files are never
+    * touched — cost is O(matched rows), the MoR trade.
+    * Nondeterministic predicates decline. Zero matches commit nothing
+    * and return the current snapshot id. */
   def deleteForeign(spark: SparkSession, targetPath: String,
       predicate: org.apache.spark.sql.Column, maxRetries: Int = 3): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
-    requireLocalScheme(targetPath, "deleteForeign")
-    val (v0, meta0) = foreignBase(targetPath)
-    val fv = Option(meta0.get("format-version")).map(_.asInt()).getOrElse(1)
-    if (fv != 2 && fv != 3) throw new UnsupportedOperationException(
-      s"iceberg table at $targetPath is format-version $fv; foreign writes " +
-        "speak versions 2 and 3")
-    val v3 = fv == 3
-    val fields = fieldsOfMeta(meta0)
-    val partCols = partColsOfMeta(meta0, fields)
-    val snaps0 = snapsOfMeta(meta0)
-    if (snaps0.isEmpty) throw new IllegalStateException(
-      s"no snapshots at $targetPath; export or append a snapshot first")
-    val curId = Option(meta0.get("current-snapshot-id")).map(_.asLong())
-      .filter(_ != -1L).getOrElse(snaps0.last.id)
-    val rows = IcebergRead.readWithPositions(spark, targetPath)
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    val t = foreignDml(spark, targetPath, "deleteForeign")
+    t.requireSnapshot()
+    val rows = t.positioned()
     val matchedF = coalesce(predicate, lit(false))
-    val detOk = rows.filter(matchedF).queryExecution.analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition.deterministic
-    }.forall(identity)
-    if (!detOk) throw new UnsupportedOperationException(
+    ForeignCommit.requireDeterministic(rows, Seq(matchedF),
       "deleteForeign needs a deterministic predicate: the published " +
         "tombstones must be the rows the caller saw match")
-    val live = IcebergRead.liveEntries(spark, targetPath, meta0, None)
-    val dataEntries = live.filter(_.content == 0)
-    // normalized key → the EXACT path string the manifests record
-    // (readers match file_path byte-exact)
-    val byKey = dataEntries.map(e => PathKeys.normKey(
-      IcebergRead.resolve(targetPath, e.path).toString) -> e.path).toMap
-    if (byKey.size != dataEntries.size) throw new IllegalStateException(
-      s"two manifest data paths normalize to one key at $targetPath — " +
-        "cannot address position deletes unambiguously")
-    val uuid = java.util.UUID.randomUUID().toString.take(12)
-    import spark.implicits._
-    val mapDf = byKey.toSeq.toDF("__g_fp", "__g_file_path")
-    val matched = rows.filter(matchedF)
-      .select(col("__g_fp"), col("__g_ri").cast("long").as("pos"))
-      .join(broadcast(mapDf), Seq("__g_fp"))
-      .select(col("__g_file_path").as("file_path"), col("pos"))
-      .distinct()
-    // staged payloads are final before the OCC loop; only the
-    // manifests/list rewrite per attempt (they embed racing ids)
-    var delPayload: Either[String, Seq[(String, Seq[Long])]] = null
-    var revectored = Set.empty[String] // normKeys whose prior DV supersedes
-    var affectedKeys = Set.empty[String] // v3: data files our vectors cover
-    if (!v3) {
-      // v2: one sorted position-delete parquet with the reserved ids
-      val fpMeta = new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong("parquet.field.id", 2147483546L).build()
-      val posMeta = new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong("parquet.field.id", 2147483545L).build()
-      val stage = s"$targetPath/deletes/.stage-pd-$uuid"
-      matched
-        .select(col("file_path").as("file_path", fpMeta),
-          col("pos").as("pos", posMeta))
-        .coalesce(1).sortWithinPartitions("file_path", "pos")
-        .write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException("delete stage wrote no part"))
-      val dst = new java.io.File(s"$targetPath/deletes/pdf-$uuid.parquet")
-      dst.getParentFile.mkdirs()
-      val empty = spark.read.parquet(part.getAbsolutePath).isEmpty
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-      }
-      deleteRec(new java.io.File(stage))
-      if (empty) { dst.delete(); return curId } // zero matches: no commit
-      delPayload = Left(dst.getAbsolutePath)
-    } else {
-      // v3: deletion vectors, one per affected file — CUMULATIVE: a
-      // file that already carries a DV gets ONE superseding vector
-      // holding old ∪ new positions (the at-most-one-DV rule), and its
-      // prior entry is dropped from the carried-forward manifests below
-      val newByFile = matched.collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (p, ps) => (p, ps.map(_._2).toSeq.sorted) }
-      if (newByFile.isEmpty) return curId
-      val existingByRef: Map[String, Seq[Long]] =
-        live.filter(e => e.content == 1 && e.dv.nonEmpty)
-          .groupBy(e => PathKeys.normKey(
-            IcebergRead.resolve(targetPath, e.dv.get._1).toString))
-          .map { case (k, es) =>
-            k -> es.flatMap { e =>
-              val (_, off, len) = e.dv.get
-              Puffin.dvPositions(spark,
-                IcebergRead.resolve(targetPath, e.path).toString, off, len)
-            }.toSeq
+    val stage = new ForeignCommit.Staging(spark, targetPath)
+    try stageTombstones(spark, t, stage, t.coordinates(rows.filter(matchedF))) match {
+      case None => t.currentId // zero matches: no commit
+      case Some(tomb) =>
+        ForeignCommit.commit(t, t.base, "delete", maxRetries, tomb.affected) { (v, attempt) =>
+          publishSnapshot(spark, t, v, attempt, stage.uuid, "pd", 40, "delete",
+            revectored = tomb.revectored, carry = "mp") { s =>
+            Seq(writeManifest(targetPath, s"mp-${stage.uuid}-a$attempt.avro", s.snapId,
+              s.seqNum, tomb.files(spark, t, stage.uuid, attempt, s), t.fields,
+              content = 1, partCols = Nil, specId = s.delSpecId, v3 = t.v3,
+              schemaId = s.schemaId))
           }
-      val byFile = newByFile.map { case (p, ps) =>
-        val k = PathKeys.normKey(IcebergRead.resolve(targetPath, p).toString)
-        if (existingByRef.contains(k)) revectored += k
-        (p, (ps ++ existingByRef.getOrElse(k, Nil)).distinct.sorted)
-      }
-      affectedKeys = byFile.map(f => PathKeys.normKey(
-        IcebergRead.resolve(targetPath, f._1).toString)).toSet
-      delPayload = Right(byFile)
-    }
-    var attempt = 0
-    var lastErr: Throwable = null
-    while (attempt <= maxRetries) {
-      val (baseV, meta) = if (attempt == 0) (v0, meta0) else foreignBase(targetPath)
-      if (attempt > 0 &&
-          (fieldsOfMeta(meta) != fields || partColsOfMeta(meta, fields) != partCols))
-        throw new IllegalStateException(
-          s"concurrent schema or spec change at $targetPath moved the table " +
-            "under this delete; re-read and retry explicitly", lastErr)
-      if (attempt > 0 && affectedKeys.nonEmpty) {
-        // a racing commit that vectored one of OUR files would be
-        // resurrected by our (now stale) cumulative vector — loud
-        def dvStateOf(l: Seq[IcebergRead.EntryInfo]) =
-          l.filter(e => e.content == 1 && e.dv.nonEmpty)
-            .map(e => (PathKeys.normKey(IcebergRead
-              .resolve(targetPath, e.dv.get._1).toString), e.path, e.dv.get))
-            .filter(t => affectedKeys(t._1)).toSet
-        if (dvStateOf(IcebergRead.liveEntries(spark, targetPath, meta)) !=
-            dvStateOf(live))
-          throw new IllegalStateException(
-            s"concurrent commit at $targetPath re-vectored a file under " +
-              "this delete; re-read and re-issue the delete", lastErr)
-      }
-      val snaps = snapsOfMeta(meta)
-      val seqNum = math.max(
-        Option(meta.get("last-sequence-number")).map(_.asLong()).getOrElse(0L),
-        snaps.map(_.seqNum).foldLeft(0L)(math.max)) + 1
-      val taken = snaps.map(_.id).toSet
-      var snapId = (1L << 40) | seqNum
-      while (taken(snapId)) snapId += 1
-      val rowBase = Option(meta.get("next-row-id")).map(_.asLong())
-      val schemaId = Option(meta.get("current-schema-id")).map(_.asInt()).getOrElse(0)
-      val delSpecId =
-        if (partCols.isEmpty)
-          Option(meta.get("default-spec-id")).map(_.asInt()).getOrElse(0)
-        else emptySpecIdOf(meta)
-      val delFiles = delPayload match {
-        case Left(pdPath) => describeFiles(spark, Seq(pdPath))
-        case Right(byFile) =>
-          // puffin embeds the racing snapshot/sequence ids → per attempt
-          val puffinPath = new java.io.File(
-            s"$targetPath/deletes/dvf-$uuid-a$attempt.puffin").getAbsolutePath
-          val refs = Puffin.writeDvFile(spark, puffinPath, byFile, snapId, seqNum)
-          val puffinLen = new java.io.File(puffinPath).length()
-          refs.map(r => NewFile(puffinPath, r.cardinality, puffinLen,
-            dv = Some((r.referencedDataFile, r.offset, r.length))))
-      }
-      val mref = writeManifest(targetPath, s"mp-$uuid-a$attempt.avro", snapId,
-        seqNum, delFiles, fields, content = 1, partCols = Nil,
-        specId = delSpecId, v3 = v3, schemaId = schemaId)
-      val cur = Option(meta.get("current-snapshot-id")).map(_.asLong())
-        .filter(_ != -1L).flatMap(id => snaps.find(_.id == id))
-        .getOrElse(snaps.last)
-      val priorRecords = avroRecords(spark,
-        IcebergRead.resolve(targetPath, cur.manifestList))
-      // v3 supersede: delete manifests holding a prior vector of a
-      // re-vectored file are rewritten WITHOUT it (surviving entries
-      // as EXISTING), or omitted entirely when emptied — the graft
-      // append path's carry-forward rule, applied to a foreign chain
-      val extraManifests = Seq.newBuilder[ManifestRef]
-      val priorKept = Seq.newBuilder[org.apache.avro.generic.GenericRecord]
-      priorRecords.zipWithIndex.foreach { case (rec, i) =>
-        val content = Option(rec.get("content"))
-          .map(_.asInstanceOf[Number].intValue()).getOrElse(0)
-        if (revectored.isEmpty || content == 0) priorKept += rec
-        else {
-          val mPath = IcebergRead.resolve(targetPath,
-            String.valueOf(rec.get("manifest_path")))
-          val entries = avroRecords(spark, mPath)
-          val (dropped, kept) = entries.partition { e =>
-            val df = e.get("data_file").asInstanceOf[
-              org.apache.avro.generic.GenericRecord]
-            Option(if (df.getSchema.getField("referenced_data_file") == null)
-              null else df.get("referenced_data_file"))
-              .exists(r => revectored(PathKeys.normKey(IcebergRead
-                .resolve(targetPath, String.valueOf(r)).toString)))
-          }
-          if (dropped.isEmpty) priorKept += rec
-          else if (kept.nonEmpty)
-            extraManifests += writeExistingDeleteManifest(targetPath,
-              s"mp-$uuid-a$attempt-c$i.avro", kept, fields,
-              Option(rec.get("partition_spec_id"))
-                .map(_.asInstanceOf[Number].intValue()).getOrElse(0))
         }
-      }
-      val ml = writeManifestList(targetPath, s"snap-pd-$uuid-a$attempt.avro",
-        snapId, seqNum, priorKept.result(),
-        Seq(mref) ++ extraManifests.result(), v3 = v3)
-      try {
-        commitForeignMeta(targetPath, meta, baseV + 1, snapId, seqNum, ml,
-          "delete",
-          firstRowId = if (v3) rowBase else None,
-          nextRowId = None,
-          ensureEmptySpec = if (partCols.isEmpty) None else Some(delSpecId))
-        return snapId
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          lastErr = e
-          attempt += 1
-      }
-    }
-    throw new java.io.IOException(
-      s"commit to $targetPath still conflicting after $maxRetries retries",
-      lastErr)
+    } finally stage.close()
   }
 
   /** PREDICATE-based UPDATE of ANY v2/v3 Iceberg table — ONE
@@ -2075,30 +1899,17 @@ object IcebergExport {
       predicate: org.apache.spark.sql.Column,
       sets: Map[String, org.apache.spark.sql.Column],
       maxRetries: Int = 3): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, when}
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     require(sets.nonEmpty, "updateForeign needs at least one SET column")
-    requireLocalScheme(targetPath, "updateForeign")
-    val (v0, meta0) = foreignBase(targetPath)
-    val fv = Option(meta0.get("format-version")).map(_.asInt()).getOrElse(1)
-    if (fv != 2 && fv != 3) throw new UnsupportedOperationException(
-      s"iceberg table at $targetPath is format-version $fv; foreign writes " +
-        "speak versions 2 and 3")
-    val v3 = fv == 3
-    val fields = fieldsOfMeta(meta0)
-    val partCols = partColsOfMeta(meta0, fields)
-    val snaps0 = snapsOfMeta(meta0)
-    if (snaps0.isEmpty) throw new IllegalStateException(
-      s"no snapshots at $targetPath; export or append a snapshot first")
-    if (v3 && !meta0.has("next-row-id")) throw new UnsupportedOperationException(
-      s"format-version-3 table at $targetPath carries no next-row-id; " +
-        "v3 requires row lineage — cannot assign row ids")
-    val curId = Option(meta0.get("current-snapshot-id")).map(_.asLong())
-      .filter(_ != -1L).getOrElse(snaps0.last.id)
-    val byName = fields.map(t => t._2 -> t).toMap
+    val t = foreignDml(spark, targetPath, "updateForeign")
+    val fields = t.fields
+    t.requireSnapshot()
+    t.requireRowLineage()
+    val byName = fields.map(f => f._2 -> f).toMap
     sets.keys.foreach(n => if (!byName.contains(n))
       throw new IllegalArgumentException(
         s"SET column $n is not a column of $targetPath"))
-    val rows = IcebergRead.readWithPositions(spark, targetPath)
+    val rows = t.positioned()
     val matchedF = coalesce(predicate, lit(false))
     // exact-type contract per SET expression (checked on its OWN type)
     sets.foreach { case (n, v) =>
@@ -2110,203 +1921,37 @@ object IcebergExport {
     val updatedSel = fields.map { case (_, n, _, _) =>
       sets.get(n).map(v => v.as(n)).getOrElse(col(n))
     }
-    val detOk = rows.filter(matchedF).select(updatedSel: _*)
-      .queryExecution.analyzed.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition.deterministic
-        case pr: org.apache.spark.sql.catalyst.plans.logical.Project =>
-          pr.projectList.forall(_.deterministic)
-      }.forall(identity)
-    if (!detOk) throw new UnsupportedOperationException(
+    ForeignCommit.requireDeterministic(rows, matchedF +: updatedSel,
       "updateForeign needs deterministic predicate and SET expressions: " +
         "the tombstoned rows and the re-staged rows must be the same rows")
-    val live = IcebergRead.liveEntries(spark, targetPath, meta0, None)
-    val dataEntries = live.filter(_.content == 0)
-    val byKey = dataEntries.map(e => PathKeys.normKey(
-      IcebergRead.resolve(targetPath, e.path).toString) -> e.path).toMap
-    if (byKey.size != dataEntries.size) throw new IllegalStateException(
-      s"two manifest data paths normalize to one key at $targetPath — " +
-        "cannot address position deletes unambiguously")
-    val uuid = java.util.UUID.randomUUID().toString.take(12)
-    import spark.implicits._
-    val mapDf = byKey.toSeq.toDF("__g_fp", "__g_file_path")
     // the matched set is read ONCE, persisted: positions and re-staged
     // rows must come from the same evaluation
     val matchedRows = rows.filter(matchedF)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val coords = matchedRows
-        .select(col("__g_fp"), col("__g_ri").cast("long").as("pos"))
-        .join(broadcast(mapDf), Seq("__g_fp"))
-        .select(col("__g_file_path").as("file_path"), col("pos"))
-        .distinct().collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-      if (coords.isEmpty) return curId
-      // delete payload (the deleteForeign shapes)
-      var revectored = Set.empty[String]
-      var affectedKeys = Set.empty[String]
-      var delPayload: Either[String, Seq[(String, Seq[Long])]] = null
-      if (!v3) {
-        val fpMeta = new org.apache.spark.sql.types.MetadataBuilder()
-          .putLong("parquet.field.id", 2147483546L).build()
-        val posMeta = new org.apache.spark.sql.types.MetadataBuilder()
-          .putLong("parquet.field.id", 2147483545L).build()
-        val stage = s"$targetPath/deletes/.stage-pd-$uuid"
-        coords.toSeq.toDF("file_path", "pos")
-          .select(col("file_path").as("file_path", fpMeta),
-            col("pos").as("pos", posMeta))
-          .coalesce(1).sortWithinPartitions("file_path", "pos")
-          .write.mode("overwrite").parquet(stage)
-        val part = new java.io.File(stage).listFiles()
-          .find(_.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException("delete stage wrote no part"))
-        val dst = new java.io.File(s"$targetPath/deletes/pdf-$uuid.parquet")
-        dst.getParentFile.mkdirs()
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        def deleteRec(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(): Unit
-        }
-        deleteRec(new java.io.File(stage))
-        delPayload = Left(dst.getAbsolutePath)
-      } else {
-        val newByFile = coords.groupBy(_._1).toSeq.sortBy(_._1)
-          .map { case (p, ps) => (p, ps.map(_._2).toSeq.sorted) }
-        val existingByRef: Map[String, Seq[Long]] =
-          live.filter(e => e.content == 1 && e.dv.nonEmpty)
-            .groupBy(e => PathKeys.normKey(
-              IcebergRead.resolve(targetPath, e.dv.get._1).toString))
-            .map { case (k, es) =>
-              k -> es.flatMap { e =>
-                val (_, off, len) = e.dv.get
-                Puffin.dvPositions(spark,
-                  IcebergRead.resolve(targetPath, e.path).toString, off, len)
-              }.toSeq
-            }
-        val byFile = newByFile.map { case (p, ps) =>
-          val k = PathKeys.normKey(IcebergRead.resolve(targetPath, p).toString)
-          if (existingByRef.contains(k)) revectored += k
-          (p, (ps ++ existingByRef.getOrElse(k, Nil)).distinct.sorted)
-        }
-        affectedKeys = byFile.map(f => PathKeys.normKey(
-          IcebergRead.resolve(targetPath, f._1).toString)).toSet
-        delPayload = Right(byFile)
-      }
-      // the re-staged half: matched rows with SETs applied, written
-      // under the table's real ids and partition layout
-      val files = stageForeignData(spark, matchedRows.select(updatedSel: _*),
-        targetPath, fields, partCols, uuid)
-      val addedRows = files.map(_.recordCount).sum
-      var attempt = 0
-      var lastErr: Throwable = null
-      while (attempt <= maxRetries) {
-        val (baseV, meta) = if (attempt == 0) (v0, meta0) else foreignBase(targetPath)
-        if (attempt > 0 &&
-            (fieldsOfMeta(meta) != fields || partColsOfMeta(meta, fields) != partCols))
-          throw new IllegalStateException(
-            s"concurrent schema or spec change at $targetPath moved the table " +
-              "under this update; re-read and retry explicitly", lastErr)
-        if (attempt > 0) {
-          // ANY change to the delete state of our affected files — or
-          // their removal — makes the staged tombstones stale: loud
-          def dvStateOf(l: Seq[IcebergRead.EntryInfo]) =
-            l.filter(e => e.content == 1 && e.dv.nonEmpty)
-              .map(e => (PathKeys.normKey(IcebergRead
-                .resolve(targetPath, e.dv.get._1).toString), e.path, e.dv.get))
-              .filter(t => affectedKeys(t._1)).toSet
-          val liveNow = IcebergRead.liveEntries(spark, targetPath, meta)
-          val dataNow = liveNow.filter(_.content == 0)
-            .map(e => PathKeys.normKey(
-              IcebergRead.resolve(targetPath, e.path).toString)).toSet
-          val touched = coords.map(c => PathKeys.normKey(
-            IcebergRead.resolve(targetPath, c._1).toString)).toSet
-          if (!touched.subsetOf(dataNow) ||
-              (affectedKeys.nonEmpty &&
-                dvStateOf(liveNow) != dvStateOf(live)))
-            throw new IllegalStateException(
-              s"concurrent commit at $targetPath moved a file under this " +
-                "update; re-read and re-issue the update", lastErr)
-        }
-        val snaps = snapsOfMeta(meta)
-        val seqNum = math.max(
-          Option(meta.get("last-sequence-number")).map(_.asLong()).getOrElse(0L),
-          snaps.map(_.seqNum).foldLeft(0L)(math.max)) + 1
-        val taken = snaps.map(_.id).toSet
-        var snapId = (1L << 42) | seqNum
-        while (taken(snapId)) snapId += 1
-        val rowBase = Option(meta.get("next-row-id")).map(_.asLong())
-        if (v3 && rowBase.isEmpty) throw new IllegalStateException(
-          s"concurrent writer dropped next-row-id at $targetPath", lastErr)
-        val specId = Option(meta.get("default-spec-id")).map(_.asInt()).getOrElse(0)
-        val schemaId = Option(meta.get("current-schema-id")).map(_.asInt()).getOrElse(0)
-        val delSpecId =
-          if (partCols.isEmpty) specId
-          else emptySpecIdOf(meta)
-        val delFiles = delPayload match {
-          case Left(pdPath) => describeFiles(spark, Seq(pdPath))
-          case Right(byFile) =>
-            val puffinPath = new java.io.File(
-              s"$targetPath/deletes/dvf-$uuid-a$attempt.puffin").getAbsolutePath
-            val refs = Puffin.writeDvFile(spark, puffinPath, byFile, snapId, seqNum)
-            val puffinLen = new java.io.File(puffinPath).length()
-            refs.map(r => NewFile(puffinPath, r.cardinality, puffinLen,
-              dv = Some((r.referencedDataFile, r.offset, r.length))))
-        }
-        val dataMref = writeManifest(targetPath, s"mu-$uuid-a$attempt.avro",
-          snapId, seqNum, files, fields, partCols = partCols, specId = specId,
-          v3 = v3, firstRowBase = if (v3) rowBase else None, schemaId = schemaId)
-        val delMref = writeManifest(targetPath, s"mud-$uuid-a$attempt.avro",
-          snapId, seqNum, delFiles, fields, content = 1, partCols = Nil,
-          specId = delSpecId, v3 = v3, schemaId = schemaId)
-        val cur = Option(meta.get("current-snapshot-id")).map(_.asLong())
-          .filter(_ != -1L).flatMap(id => snaps.find(_.id == id))
-          .getOrElse(snaps.last)
-        val priorRecords = avroRecords(spark,
-          IcebergRead.resolve(targetPath, cur.manifestList))
-        val extraManifests = Seq.newBuilder[ManifestRef]
-        val priorKept = Seq.newBuilder[org.apache.avro.generic.GenericRecord]
-        priorRecords.zipWithIndex.foreach { case (rec, i) =>
-          val content = Option(rec.get("content"))
-            .map(_.asInstanceOf[Number].intValue()).getOrElse(0)
-          if (revectored.isEmpty || content == 0) priorKept += rec
-          else {
-            val mPath = IcebergRead.resolve(targetPath,
-              String.valueOf(rec.get("manifest_path")))
-            val entries = avroRecords(spark, mPath)
-            val (dropped, kept) = entries.partition { e =>
-              val df0 = e.get("data_file").asInstanceOf[
-                org.apache.avro.generic.GenericRecord]
-              Option(if (df0.getSchema.getField("referenced_data_file") == null)
-                null else df0.get("referenced_data_file"))
-                .exists(r => revectored(PathKeys.normKey(IcebergRead
-                  .resolve(targetPath, String.valueOf(r)).toString)))
-            }
-            if (dropped.isEmpty) priorKept += rec
-            else if (kept.nonEmpty)
-              extraManifests += writeExistingDeleteManifest(targetPath,
-                s"mud-$uuid-a$attempt-c$i.avro", kept, fields,
-                Option(rec.get("partition_spec_id"))
-                  .map(_.asInstanceOf[Number].intValue()).getOrElse(0))
+    val stage = new ForeignCommit.Staging(spark, targetPath)
+    try stageTombstones(spark, t, stage, t.coordinates(matchedRows)) match {
+      case None => t.currentId // zero matches: no commit
+      case Some(tomb) =>
+        // the re-staged half: matched rows with SETs applied, written
+        // under the table's real ids and partition layout
+        val files = stageForeignData(spark, matchedRows.select(updatedSel: _*), t, stage)
+        ForeignCommit.commit(t, t.base, "update", maxRetries, tomb.affected) { (v, attempt) =>
+          publishSnapshot(spark, t, v, attempt, stage.uuid, "up", 42, "overwrite",
+            revectored = tomb.revectored, carry = "mud",
+            addedRows = Some(files.map(_.recordCount).sum)) { s =>
+            Seq(
+              writeManifest(targetPath, s"mu-${stage.uuid}-a$attempt.avro", s.snapId,
+                s.seqNum, files, fields, partCols = t.partCols, specId = s.specId,
+                v3 = t.v3, firstRowBase = s.rowBase, schemaId = s.schemaId),
+              writeManifest(targetPath, s"mud-${stage.uuid}-a$attempt.avro", s.snapId,
+                s.seqNum, tomb.files(spark, t, stage.uuid, attempt, s), fields,
+                content = 1, partCols = Nil, specId = s.delSpecId, v3 = t.v3,
+                schemaId = s.schemaId))
           }
         }
-        val ml = writeManifestList(targetPath, s"snap-up-$uuid-a$attempt.avro",
-          snapId, seqNum, priorKept.result(),
-          Seq(dataMref, delMref) ++ extraManifests.result(), v3 = v3)
-        try {
-          commitForeignMeta(targetPath, meta, baseV + 1, snapId, seqNum, ml,
-            "overwrite",
-            firstRowId = if (v3) rowBase else None,
-            nextRowId = if (v3) rowBase.map(_ + addedRows) else None,
-            ensureEmptySpec = if (partCols.isEmpty) None else Some(delSpecId))
-          return snapId
-        } catch {
-          case e: java.nio.file.FileAlreadyExistsException =>
-            lastErr = e
-            attempt += 1
-        }
-      }
-      throw new java.io.IOException(
-        s"commit to $targetPath still conflicting after $maxRetries retries",
-        lastErr)
-    } finally matchedRows.unpersist(): Unit
+    } finally {
+      stage.close()
+      matchedRows.unpersist(): Unit
+    }
   }
 }

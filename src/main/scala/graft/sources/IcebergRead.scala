@@ -990,18 +990,6 @@ object IcebergRead {
       .drop("__g_fp")
   }
 
-  /** [[read]] keeping each row's physical coordinates — normalized
-    * data-file path as `__g_fp`, file row index as `__g_ri` — with
-    * every existing merge-on-read delete already applied. The foreign
-    * MoR DELETE ([[IcebergExport.deleteForeign]]) turns matched rows'
-    * coordinates directly into position deletes / deletion vectors. */
-  private[sources] def readWithPositions(spark: SparkSession,
-      tablePath: String): DataFrame = {
-    val meta = currentMetadata(spark, tablePath)
-    readEntries(spark, tablePath, meta,
-      liveEntries(spark, tablePath, meta, None), withPositions = true)
-  }
-
   private[sources] def readEntries(spark: SparkSession, tablePath: String,
       meta: JsonNode, live: Seq[EntryInfo],
       withLineage: Boolean = false,

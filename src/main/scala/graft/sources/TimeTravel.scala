@@ -613,13 +613,14 @@ object TimeTravel {
     * so cannot host a column mapping (file skipping, the DSv2/SQL
     * relation): silently scanning physical names would serve wrong or
     * stale columns — the same reason Delta gates column mapping behind
-    * reader-version features. */
+    * reader-version features. The exporters decline the same way, each
+    * with its own `advice`. */
   private[sources] def requireUnmapped(spark: SparkSession, path: String,
-      v: Long, what: String): Unit =
+      v: Long, what: String, advice: String = "read via TimeTravel.read"): Unit =
     if (colsListing(spark, path, v).nonEmpty)
       throw new UnsupportedOperationException(
         s"$what does not support column-mapped tables (rename/drop/widen " +
-          s"history at $path); read via TimeTravel.read")
+          s"history at $path); $advice")
 
   /** Loud resolution gate for row-level predicates/assignments: every
     * column an expression NAMES must exist in the snapshot's LOGICAL

@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.MvCatalog
+import graft.queries.Fixtures.scans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,7 +27,7 @@ class MvSpec extends SparkSpec {
       val direct = perUserAgg.orderBy("user_id").collect()
       MvCatalog.register(spark, "per_user", perUserAgg, dir)
       val q = perUserAgg // re-built from scratch: new exprIds, same semantics
-      assert(planOf(q).contains(new java.io.File(dir).getName),
+      assert(scans(q, dir),
         s"rewritten plan must scan the MV:\n${planOf(q)}")
       assert(q.orderBy("user_id").collect().toSeq == direct.toSeq,
         "MV answer must equal the base-table answer")
@@ -40,14 +41,14 @@ class MvSpec extends SparkSpec {
       val other = Tables(spark, sf, "events")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"))
-      assert(!planOf(other).contains(new java.io.File(dir).getName),
+      assert(!scans(other, dir),
         "a different grouping must keep reading the base table")
       val filtered = Tables(spark, sf, "events")
         .filter(col("value") > 50.0)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
           sum(expr("CAST(ROUND(value * 100.0) AS BIGINT)")).as("sum_cents"))
-      assert(!planOf(filtered).contains(new java.io.File(dir).getName),
+      assert(!scans(filtered, dir),
         "an extra filter must NOT be served from the unfiltered MV")
     } finally { MvCatalog.clear() }
   }
@@ -66,7 +67,7 @@ class MvSpec extends SparkSpec {
       // filter-subsumption probe (predicate on the grouping column)
       val q = sliced
       val p = planOf(q)
-      assert(p.contains(new java.io.File(dir).getName),
+      assert(scans(q, dir),
         s"grouping-column slice must be served from the MV:\n$p")
       // and the re-applied predicate pushes into the MV scan itself
       assert(p.contains("PushedFilters") && !p.contains("events.parquet"),
@@ -88,7 +89,7 @@ class MvSpec extends SparkSpec {
       MvCatalog.register(spark, "per_user", perUserAgg, dir)
       val q = slim
       val p = planOf(q)
-      assert(p.contains(new java.io.File(dir).getName),
+      assert(scans(q, dir),
         s"column-subset query must be served from the MV:\n$p")
       assert(!p.contains("events.parquet"), s"must not touch the base table:\n$p")
       // pruning reaches the MV scan: the unused n_events column is not read
@@ -99,7 +100,7 @@ class MvSpec extends SparkSpec {
       val miss = Tables(spark, sf, "events")
         .groupBy(col("user_id"))
         .agg(max(expr("CAST(ROUND(value * 100.0) AS BIGINT)")).as("max_cents"))
-      assert(!planOf(miss).contains(new java.io.File(dir).getName),
+      assert(!scans(miss, dir),
         "a non-materialized aggregate must keep reading the base table")
 
       // the probes COMPOSE: a query that both filters on the grouping
@@ -115,7 +116,7 @@ class MvSpec extends SparkSpec {
         r
       }
       val pb = planOf(both)
-      assert(pb.contains(new java.io.File(dir).getName),
+      assert(scans(both, dir),
         s"filter+subset query must be served from the MV:\n$pb")
       assert(both.orderBy("user_id").collect().toSeq == directBoth.toSeq)
     } finally { MvCatalog.clear() }
@@ -141,27 +142,27 @@ class MvSpec extends SparkSpec {
       MvCatalog.register(spark, "per_user_type", fine, dir)
       // the coarser query re-aggregates the materialization...
       val p = planOf(coarse)
-      assert(p.contains(new java.io.File(dir).getName),
+      assert(scans(coarse, dir),
         s"roll-up must be served from the finer MV:\n$p")
       assert(!p.contains("events.parquet"), s"must not rescan the base table:\n$p")
       assert(coarse.orderBy("user_id").collect().toSeq == directCoarse,
         "re-aggregated answer must equal the base-table answer")
       // ...including the global aggregate
       val pg = planOf(global)
-      assert(pg.contains(new java.io.File(dir).getName),
+      assert(scans(global, dir),
         s"the global roll-up must be served too:\n$pg")
       assert(global.collect().toSeq == directGlobal)
       // an avg cannot be folded from per-group avgs: decline
       val avgQ = Tables(spark, sf, "events")
         .groupBy(col("user_id"))
         .agg(avg(expr("CAST(ROUND(value * 100.0) AS BIGINT)")).as("a"))
-      assert(!planOf(avgQ).contains(new java.io.File(dir).getName),
+      assert(!scans(avgQ, dir),
         "avg-of-avgs must NOT be served by re-aggregation")
       // grouping by a column the MV didn't materialize: decline
       val missing = Tables(spark, sf, "events")
         .groupBy(col("props"))
         .agg(count(lit(1)).as("n_events"))
-      assert(!planOf(missing).contains(new java.io.File(dir).getName))
+      assert(!scans(missing, dir))
     } finally { MvCatalog.clear() }
   }
 
@@ -179,7 +180,7 @@ class MvSpec extends SparkSpec {
           col("b.n_events").as("n2"), col("b.sum_cents").as("s2"))
       // plans without ambiguous-attribute failures and both sides scan the MV
       val p = planOf(joined)
-      assert(p.contains(new java.io.File(dir).getName))
+      assert(scans(joined, dir))
       assert(joined.count() == perUserAgg.count())
     } finally { MvCatalog.clear() }
   }
@@ -203,7 +204,7 @@ class MvSpec extends SparkSpec {
       MvCatalog.register(spark, "wide", wide, wideDir)
       MvCatalog.register(spark, "narrow", narrow, narrowDir)
       val p = planOf(narrow)
-      assert(p.contains(new java.io.File(narrowDir).getName),
+      assert(scans(narrow, narrowDir),
         s"the exact query must be served from its OWN materialization:\n$p")
     } finally { MvCatalog.clear() }
   }
@@ -213,7 +214,7 @@ class MvSpec extends SparkSpec {
     try {
       MvCatalog.register(spark, "per_user", perUserAgg, dir)
       MvCatalog.unregister("per_user")
-      assert(!planOf(perUserAgg).contains(new java.io.File(dir).getName))
+      assert(!scans(perUserAgg, dir))
     } finally { MvCatalog.clear() }
   }
 
@@ -227,7 +228,7 @@ class MvSpec extends SparkSpec {
       // register overwrites the materialization from the definition, so
       // this succeeds — the guard is about the read-back schema
       MvCatalog.register(spark, "per_user", perUserAgg, dir)
-      assert(planOf(perUserAgg).contains(new java.io.File(dir).getName))
+      assert(scans(perUserAgg, dir))
     } finally { MvCatalog.clear() }
   }
 
@@ -262,7 +263,7 @@ class MvSpec extends SparkSpec {
         "incremental fold must equal the full recompute")
       // and the transparent rewrite serves the refreshed parquet
       val q = define(TimeTravel.read(spark, base))
-      assert(planOf(q).contains(new java.io.File(mv).getName),
+      assert(scans(q, mv),
         s"refreshed MV must keep serving the rewrite:\n${planOf(q)}")
       assert(MvMaintenance.refresh(spark, "ivm").mode == "noop")
 
@@ -422,9 +423,9 @@ class MvSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), avg(col("cents")).as("avg_cents"),
           sum(col("cents")).as("s"))
       val plan = q.queryExecution.executedPlan.toString
-      assert(graft.queries.Fixtures.scans(q, s"$mv/_state"),
+      assert(scans(q, s"$mv/_state"),
         s"avg roll-up must read the piece state:\n$plan")
-      assert(!graft.queries.Fixtures.scans(q, base), "the base table must not be rescanned")
+      assert(!scans(q, base), "the base table must not be rescanned")
       val served = q.orderBy("event_type").collect().toSeq
       MvCatalog.clear()
       val truth = TimeTravel.read(spark, base)
@@ -442,8 +443,8 @@ class MvSpec extends SparkSpec {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"))
       val plan2 = q2.queryExecution.executedPlan.toString
-      assert(graft.queries.Fixtures.scans(q2, mv) &&
-        !graft.queries.Fixtures.scans(q2, s"$mv/_state"),
+      assert(scans(q2, mv) &&
+        !scans(q2, s"$mv/_state"),
         s"avg-free roll-up should not need the state:\n$plan2")
     } finally { MvMaintenance.clear(); MvCatalog.clear() }
   }
@@ -472,7 +473,7 @@ class MvSpec extends SparkSpec {
 
       // the registered query is now served from the streamed MV...
       val q = perUserAgg
-      assert(planOf(q).contains(new java.io.File(mv).getName),
+      assert(scans(q, mv),
         s"rewrite must serve the streamed materialization:\n${planOf(q)}")
       // ...and fold-of-deltas equals the from-scratch aggregate exactly
       MvCatalog.clear()

@@ -14,8 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * table commit publishes through TimeTravel's manifest, so the one
   * file that swaps a path with sibling dirs is the index compactions'
   * park-and-swap, `CellCompaction.swapIn` (whose reader window its
-  * callers document); and every scratch dir comes from
-  * `graft.queries.Fixtures`. */
+  * callers document); every scratch dir comes from
+  * `graft.queries.Fixtures`; and every foreign row-level writer commits
+  * through `ForeignCommit`, the one determinism guard and foreign OCC
+  * loop. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(String, String)] = {
@@ -60,6 +62,26 @@ class SourceGuardSpec extends AnyFunSuite {
     }
     assert(swaps == Seq("graft/sources/CellCompaction.scala"),
       s"compaction staging/parked dirs outside CellCompaction.swapIn: $swaps")
+  }
+
+  test("foreign writers share one determinism guard and one OCC loop, in ForeignCommit") {
+    val sources = mainSources.filter(_._1.startsWith("graft/sources/"))
+    def filesWith(needles: String*): Seq[String] = sources.collect {
+      case (path, text) if needles.forall(text.contains) => path
+    }
+    assert(filesWith("queryExecution.analyzed", ".deterministic") ==
+      Seq("graft/sources/ForeignCommit.scala"),
+      "the foreign determinism guard must live only in ForeignCommit")
+    // TimeTravel's own DML retries in withConflictRetry, outside the
+    // foreign path
+    val loops = (filesWith("still conflicting after") ++ filesWith("lastErr"))
+      .distinct.sorted
+    assert(loops == Seq("graft/sources/ForeignCommit.scala", "graft/sources/TimeTravel.scala"),
+      s"the foreign OCC retry loop must live only in ForeignCommit: $loops")
+    assert(sources.collectFirst { case ("graft/sources/TimeTravel.scala", t) => t }
+      .exists(t => "still conflicting after".r.findAllIn(t).size == 1 &&
+        t.contains("def withConflictRetry")),
+      "TimeTravel's one retry loop is withConflictRetry")
   }
 
   test("src/main builds scratch dirs only in Fixtures") {

@@ -4635,26 +4635,34 @@ class SourcesSpec extends SparkSpec {
     assert(DeltaRead.read(spark, dirR).select("id").as[Long].collect().toSet ==
       Set(3L, 4L, 5L, 6L, 100L), "no commit may be lost, no row resurrected")
     // a racing commit that REWRITES an affected file is a loud
-    // conflict even when it lands BEFORE the delete's version listing
+    // conflict even when it lands BEFORE the writer's version listing
     // (the anchored-validation contract, not just put-if-absent): the
-    // seam plants a compaction of f1 into f2 inside the race window
-    val dirX = Files.createTempDirectory("dfdel_conflict").toFile.getAbsolutePath + "/t"
-    new java.io.File(dirX).mkdirs()
-    writeDeltaPart(dirX, "f1.parquet", (1L to 3L).map(i => (i, i)))
-    writeDeltaPart(dirX, "f2.parquet", (1L to 3L).map(i => (i, i)))
-    writeDeltaCommit(dirX, 0, Seq(
-      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
-      metaAction(partitioned = false),
-      """{"add":{"path":"f1.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
-    val eX = intercept[IllegalStateException] {
-      DeltaExport.deleteForeignImpl(spark, dirX, col("id") === 1L, 3, () =>
-        writeDeltaCommit(dirX, 1, Seq(
-          """{"remove":{"path":"f1.parquet","deletionTimestamp":2,"dataChange":true}}""",
-          """{"add":{"path":"f2.parquet","partitionValues":{},"size":1,"modificationTime":2,"dataChange":true}}""")))
+    // seam plants a compaction of f1 into f2 inside the race window —
+    // for the copy-on-write delete and the vector (MoR) delete alike
+    Seq[(String, String, String => Long)](
+      ("deleteForeign", """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+        d => DeltaExport.deleteForeign(spark, d, col("id") === 1L)),
+      ("deleteForeignMoR",
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""",
+        d => DeltaExport.deleteForeignMoR(spark, d, col("id") === 1L))
+    ).foreach { case (op, protocol, write) =>
+      val dirX = Files.createTempDirectory("dfdel_conflict").toFile.getAbsolutePath + "/t"
+      new java.io.File(dirX).mkdirs()
+      writeDeltaPart(dirX, "f1.parquet", (1L to 3L).map(i => (i, i)))
+      writeDeltaPart(dirX, "f2.parquet", (1L to 3L).map(i => (i, i)))
+      writeDeltaCommit(dirX, 0, Seq(protocol, metaAction(partitioned = false),
+        """{"add":{"path":"f1.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      val eX = intercept[IllegalStateException] {
+        graft.sources.ForeignCommit.beforeCommit.withValue(() =>
+          writeDeltaCommit(dirX, 1, Seq(
+            """{"remove":{"path":"f1.parquet","deletionTimestamp":2,"dataChange":true}}""",
+            """{"add":{"path":"f2.parquet","partitionValues":{},"size":1,"modificationTime":2,"dataChange":true}}""")))(
+          write(dirX))
+      }
+      assert(eX.getMessage.contains("removed or rewrote"), s"$op: ${eX.getMessage}")
+      assert(!new java.io.File(s"$dirX/_delta_log/00000000000000000002.json").exists(),
+        s"the conflicted $op must not have committed anything")
     }
-    assert(eX.getMessage.contains("removed or rewrote"), eX.getMessage)
-    assert(!new java.io.File(s"$dirX/_delta_log/00000000000000000002.json").exists(),
-      "the conflicted delete must not have committed anything")
   }
 
   test("delta foreign DML: seeded randomized interleave of append/delete/update/MoR vs model") {
@@ -4782,6 +4790,12 @@ class SourcesSpec extends SparkSpec {
     val before = new java.io.File(s"$dir/_delta_log").listFiles().length
     DeltaExport.deleteForeignMoR(spark, dir, col("id") > 1000L): Unit
     assert(new java.io.File(s"$dir/_delta_log").listFiles().length == before)
+    // nondeterministic predicates decline: the vectors must be the rows
+    // the caller saw match
+    val eN = intercept[UnsupportedOperationException](
+      DeltaExport.deleteForeignMoR(spark, dir, rand() < 0.5))
+    assert(eN.getMessage.contains("deterministic"), eN.getMessage)
+    assert(new java.io.File(s"$dir/_delta_log").listFiles().length == before)
     // a table that does not speak deletionVectors declines by name
     val dirP = Files.createTempDirectory("dfmor_p").toFile.getAbsolutePath + "/t"
     new java.io.File(dirP).mkdirs()
@@ -4896,11 +4910,11 @@ class SourcesSpec extends SparkSpec {
       metaAction(partitioned = false),
       """{"add":{"path":"f1.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
     val eX = intercept[IllegalStateException] {
-      DeltaExport.updateForeignImpl(spark, dirX, col("id") === 1L,
-        Map("v" -> lit(9L)), 3, () =>
-          writeDeltaCommit(dirX, 1, Seq(
-            """{"remove":{"path":"f1.parquet","deletionTimestamp":2,"dataChange":true}}""",
-            """{"add":{"path":"f2.parquet","partitionValues":{},"size":1,"modificationTime":2,"dataChange":true}}""")))
+      graft.sources.ForeignCommit.beforeCommit.withValue(() =>
+        writeDeltaCommit(dirX, 1, Seq(
+          """{"remove":{"path":"f1.parquet","deletionTimestamp":2,"dataChange":true}}""",
+          """{"add":{"path":"f2.parquet","partitionValues":{},"size":1,"modificationTime":2,"dataChange":true}}""")))(
+        DeltaExport.updateForeign(spark, dirX, col("id") === 1L, Map("v" -> lit(9L))))
     }
     assert(eX.getMessage.contains("removed or rewrote"), eX.getMessage)
   }
@@ -5451,6 +5465,62 @@ class SourcesSpec extends SparkSpec {
     assert(IcebergRead.read(spark, tgt3).select("k").as[Long].collect().toSet ==
       ((4L to 10L).toSet - 5L ++ Seq(11L, 13L, 14L)),
       "fresh-file v3 deletes land beside the superseded history")
+  }
+
+  test("iceberg foreign DML: racing writers are safe; a rewritten affected file fails loudly") {
+    // the seam plants a commit that REWRITES the matched data file (f0
+    // compacted into f1, same rows) between staging and the first
+    // publish attempt. Tombstones staged against f0 would name a dead
+    // path and the matched rows would live on in f1, so delete and
+    // update must fail loudly with nothing lost; a global equality
+    // delete names no file and commits after the rewrite
+    import graft.sources.{ForeignCommit, IcebergExport, IcebergRead}
+    import graft.sources.IcebergRead.{EntryInfo, Fixture}
+    import spark.implicits._
+    val fields = Seq((4, "id", true, "long"), (7, "v", false, "long"),
+      (9, "band", false, "string"))
+    val rows = (1L to 10L).map(i => (i, i * 10, "b0"))
+    for {
+      fv <- Seq(2, 3)
+      (op, conflicts, write) <- Seq[(String, Boolean, String => Long)](
+        ("delete", true, d => IcebergExport.deleteForeign(spark, d, col("id") <= 3L)),
+        ("update", true, d => IcebergExport.updateForeign(spark, d, col("id") <= 3L,
+          Map("v" -> lit(0L)))),
+        ("equality delete", false, d => IcebergExport.appendEqualityDeletes(spark, d,
+          Seq(1L, 2L, 3L).toDF("id"))))
+    } {
+      val dir = Files.createTempDirectory(s"ifrace_v$fv").toFile.getAbsolutePath + "/t"
+      // metadata v`v`: snapshot `sid` holding ONE data file, `file`
+      def commitFile(v: Int, sid: Long, file: String,
+          prior: Seq[(Long, String)]): Seq[(Long, String)] = {
+        val m = Fixture.manifestV2(dir, s"m$v.avro", Seq(EntryInfo(1, file, 0, v.toLong,
+          Nil, recordCount = Some(10L), sizeInBytes = Some(new java.io.File(file).length()))))
+        val ml = Fixture.manifestListFull(dir, s"snap-ext-$v.avro", sid,
+          Seq((m, v.toLong, 0)), javaNames = true,
+          firstRowIds = if (fv == 3) Map(m -> 10L * (v - 1)) else Map.empty)
+        val snaps = prior :+ (sid -> ml)
+        Fixture.metadataMulti(dir, v, formatVersion = fv, currentSnapshotId = sid,
+          snapshots = snaps, fields,
+          extraJson = s""","last-sequence-number":$v,""" +
+            """"partition-specs":[{"spec-id":0,"fields":[]}],"default-spec-id":0""" +
+            (if (fv == 3) s""","next-row-id":${10 * v}""" else ""))
+        snaps
+      }
+      val base = commitFile(1, 77L, writeIcebergPart(dir, "f0.parquet", rows), Nil)
+      def rewrite(): Unit =
+        commitFile(2, 78L, writeIcebergPart(dir, "f1.parquet", rows), base): Unit
+      if (conflicts) {
+        val e = intercept[IllegalStateException](
+          ForeignCommit.beforeCommit.withValue(() => rewrite())(write(dir)))
+        assert(e.getMessage.contains(s"under this $op"), s"v$fv $op: ${e.getMessage}")
+        assert(!new java.io.File(s"$dir/metadata/v3.metadata.json").exists(),
+          s"v$fv: the conflicted $op must not commit")
+      } else ForeignCommit.beforeCommit.withValue(() => rewrite())(write(dir)): Unit
+      val survivors = if (conflicts) 1L to 10L else 4L to 10L
+      assert(IcebergRead.read(spark, dir).select("id", "v").as[(Long, Long)]
+        .collect().toSet == survivors.map(i => (i, i * 10)).toSet,
+        s"v$fv $op: no row lost, none resurrected")
+    }
   }
 
   test("iceberg foreign update: one overwrite snapshot tombstones and re-stages") {
