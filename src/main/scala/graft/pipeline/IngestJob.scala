@@ -1,8 +1,8 @@
 package graft.pipeline
 
 import graft.functions.{Chunkers, Embedders, TextFunctions => TF}
-import graft.sources.{ParseOps, VectorStore}
-import org.apache.spark.sql.{DataFrame, GraftPlanApi, Observation, SparkSession}
+import graft.sources.{ParseOps, TimeTravel, VectorStore}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanApi, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -30,7 +30,10 @@ import org.apache.spark.sql.streaming.Trigger
   * the DocPipeline shape, plan-asserted shuffle-free); the CDC diff is
   * one join on `name`; the store upsert is one keyed TimeTravel commit
   * that tombstones the superseded chunks and adds the fresh ones, so it
-  * writes O(changed chunks) and rewrites no stored row. Driver state is
+  * writes O(changed chunks) and rewrites no stored row. The ledger is a
+  * TimeTravel table as well; each of its writes reclaims its superseded
+  * dirs, and every entry point ends with the store's upkeep step, which
+  * folds its small dirs and reclaims superseded ones. Driver state is
   * the RunReport counters, never data.
   *
   * Embedding: the deterministic offline embedder by default (SURVEY
@@ -104,6 +107,7 @@ object IngestJob {
     val chunks = new Observation()
     VectorStore.replaceAll(spark, storePath, counted(prepareVectorData(files, loadDt), chunks))
     val n = writeLedger(files, ledgerPath)
+    VectorStore.upkeep(spark, storePath)
     RunReport(n, n, countOf(chunks))
   }
 
@@ -117,39 +121,52 @@ object IngestJob {
     * drops its old ones. The old chunks' tombstones and the new chunks
     * publish in one manifest rename, so a reader never sees an updated
     * file without chunks, or with both. A run that finds nothing changed
-    * leaves the store as it is. The ledger is
-    * overwritten only after the store: a crash before that replays the
-    * same diff, and the replay's upsert (key- and name-idempotent)
-    * converges on the same store. Unchanged files are never parsed,
+    * leaves the store as it is. Unchanged files are never parsed,
     * chunked or embedded; the report's counts are observed on the two
-    * checkpoints and the ledger write, with no extra action. */
+    * checkpoints and the ledger write, with no extra action.
+    *
+    * The store and the ledger publish one after the other, and the
+    * store commit is tagged with the run's identity: the ledger version
+    * the diff read, the diff's row count and an order-independent hash
+    * of its (name, last_modified) pairs. A run that failed after the
+    * store commit leaves the ledger at that version, so its replay
+    * computes the same tag, finds it on the store's latest manifest,
+    * and commits only the ledger: nothing is parsed, chunked or embedded
+    * twice. Any other replay redoes the upsert, which is key- and
+    * name-idempotent, so no change is dropped. */
   def incremental(spark: SparkSession, files: DataFrame,
       ledgerPath: String, storePath: String, loadDt: String): RunReport = {
-    // the pin cuts the plan's dependence on the ledger files BEFORE the
-    // end-of-run ledger overwrite (Spark refuses to overwrite a path a
-    // live plan still reads)
-    val (changed, changedN) = pinned(Ledger.newAndUpdated(files, Ledger.read(spark, ledgerPath)))
-    // materialized once: the upsert reads the vectors twice (their keys
-    // for the tombstones, then the new data dir), and parse+chunk+embed
-    // runs once
-    val (vectors, chunksN) = pinned(prepareVectorData(changed.drop("change_type"), loadDt))
-    if (changedN > 0)
-      VectorStore.upsert(spark, storePath, vectors, superseded = Some(changed.select("name")))
+    val ledgerV = TimeTravel.versions(spark, ledgerPath).lastOption.getOrElse(0L)
+    val (changed, changedN, diff) = pinned(Ledger.newAndUpdated(files, Ledger.read(spark, ledgerPath)),
+      bit_xor(xxhash64(col("name"), col("last_modified"))).as("h"))
+    val run = s"cdc:ledger-v$ledgerV:$changedN:${diff("h")}"
+    val chunksN =
+      if (changedN == 0 || TimeTravel.latestTag(spark, storePath).contains(run)) 0L
+      else {
+        // materialized once: the upsert reads the vectors twice (their
+        // keys for the tombstones, then the new data dir), and
+        // parse+chunk+embed runs once
+        val (vectors, n, _) = pinned(prepareVectorData(changed.drop("change_type"), loadDt))
+        VectorStore.upsert(spark, storePath, vectors, Some(changed.select("name")), Some(run))
+        n
+      }
     val filesIn = writeLedger(files, ledgerPath)
+    VectorStore.upkeep(spark, storePath)
     RunReport(filesIn, changedN, chunksN)
   }
 
-  /** `df` materialized once (`localCheckpoint`), with its row count,
-    * observed during that one job. The pin's planner statistics carry
-    * the count: the checkpoint would otherwise keep the estimate of the
-    * plan it cut (for the ledger diff, the product of the left-outer
-    * join's inputs), and the store upsert would shuffle the whole store
-    * to join it instead of broadcasting the few changed keys. */
-  private def pinned(df: DataFrame): (DataFrame, Long) = {
+  /** `df` materialized once (`localCheckpoint`), with its row count and
+    * the `extra` metrics, observed during that one job. The pin's
+    * planner statistics carry the count: the checkpoint would otherwise
+    * keep the estimate of the plan it cut (for the ledger diff, the
+    * product of the left-outer join's inputs), and the store upsert
+    * would shuffle the whole store to join it instead of broadcasting
+    * the few changed keys. */
+  private def pinned(df: DataFrame, extra: Column*): (DataFrame, Long, Map[String, Any]) = {
     val obs = new Observation()
-    val pin = counted(df, obs).localCheckpoint()
+    val pin = df.observe(obs, count(lit(1)).as("n"), extra: _*).localCheckpoint()
     val n = countOf(obs)
-    (GraftPlanApi.withRowCount(pin, n), n)
+    (GraftPlanApi.withRowCount(pin, n), n, obs.get)
   }
 
   private def counted(df: DataFrame, obs: Observation): DataFrame =
@@ -157,8 +174,8 @@ object IngestJob {
 
   private def countOf(obs: Observation): Long = obs.get("n").asInstanceOf[Long]
 
-  /** Overwrite the ledger with the listing of `files`; returns the file
-    * count, observed during the write. */
+  /** Commit the listing of `files` as the ledger's next version;
+    * returns the file count, observed during the write. */
   private def writeLedger(files: DataFrame, ledgerPath: String): Long = {
     val n = new Observation()
     Ledger.write(counted(listingOf(files), n), ledgerPath)
@@ -169,10 +186,11 @@ object IngestJob {
     * re-ingest loop (run the script again tomorrow,
     * data_ingestion.py:56-66) becomes a stream over the landed-files
     * source where each micro-batch is one incremental run — the same
-    * CDC diff, upsert with superseded-chunk drop, and ledger
-    * overwrite, so a crash replay re-lands on the identical store state
-    * (the upsert is key-idempotent and the diff sees the already-
-    * advanced ledger). AvailableNow drains the backlog and stops — the
+    * CDC diff, tagged upsert with superseded-chunk drop, and ledger
+    * commit, so a crash replay re-lands on the identical store state
+    * (a replay after the store commit finds its tag and embeds nothing;
+    * one after the ledger commit sees the already-advanced ledger and
+    * an empty diff). AvailableNow drains the backlog and stops — the
     * scheduled-ingest trigger shape ([[graft.streaming.IncrementalDedup]]
     * uses the same pattern, and for the same reason the screen runs as
     * a batch job inside foreachBatch: the diff needs a join against a
@@ -187,7 +205,7 @@ object IngestJob {
         // per-batch "current listing" = ledger ∪ batch (a micro-batch
         // sees only landed deltas, not the full listing a scheduled run
         // re-enumerates — unchanged ledger rows must survive the
-        // overwrite)
+        // ledger commit)
         val spark = batch.sparkSession
         // keep the optional `source` column the batch faces pass through
         val cols = Seq("name", "url", "last_modified", "content") ++
@@ -198,7 +216,6 @@ object IngestJob {
           .withColumn("content", lit(null).cast("binary"))
           .withColumn("source", lit("")) // never re-parsed; placeholder only
           .select(cols.map(col): _*)
-          .localCheckpoint() // the run ends by overwriting the ledger this plan reads
         incremental(spark, landed.unionByName(prior), ledgerPath, storePath, loadDt)
         ()
       }
@@ -209,13 +226,14 @@ object IngestJob {
 
   /** File removal (S12, `delete_filedata_from_vectordb`
     * cmfunctions.py:226-261): drop every chunk of the named files from
-    * the store and the files from the ledger. */
+    * the store, then commit the ledger without them. A run that failed
+    * between the two commits replays to the same state: the store
+    * delete finds nothing left to drop. */
   def deleteFiles(spark: SparkSession, names: DataFrame,
       ledgerPath: String, storePath: String): Unit = {
     VectorStore.deleteWhere(spark, storePath, names.select("name"), "name")
-    val remaining = Ledger.read(spark, ledgerPath)
-      .join(names.select("name"), Seq("name"), "left_anti")
-      .localCheckpoint() // see incremental(): must not read the path it overwrites
-    Ledger.write(remaining, ledgerPath)
+    Ledger.write(Ledger.read(spark, ledgerPath)
+      .join(names.select("name"), Seq("name"), "left_anti"), ledgerPath)
+    VectorStore.upkeep(spark, storePath)
   }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.sources.TimeTravel
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** File-metadata ledger + CDC (SURVEY.md §2.4 J1, §3.2).
@@ -12,9 +13,14 @@ import org.apache.spark.sql.functions._
   * NEW when its name is absent from the state, UPDATED when present but
   * the current timestamp is strictly newer.
   *
-  * Here the ledger is a parquet table and change detection is one
-  * left-outer join — O(n) with a broadcast when the state is small, a
-  * shuffled hash join otherwise; at 100 TB of listings both sides
+  * Here the ledger is a [[TimeTravel]] table, the vector store's commit
+  * protocol: each write is one overwrite commit of the whole listing,
+  * one data dir published by a manifest rename. A write that fails
+  * leaves the previous version as the ledger, and a run may read the
+  * version it replaces. A ledger in the earlier plain-parquet layout
+  * reads as it is, and its first write adopts it. Change detection is
+  * one left-outer join — O(n) with a broadcast when the state is small,
+  * a shuffled hash join otherwise; at 100 TB of listings both sides
   * partition by `name` and nothing touches the driver.
   */
 object Ledger {
@@ -33,13 +39,21 @@ object Ledger {
       .drop("_st_name", "_st_last_modified")
   }
 
-  /** Overwrite the ledger with the post-run listing (REF re-lists after
-    * download, data_ingestion.py:60,69 — state reflects downloaded truth). */
-  def write(listing: DataFrame, path: String): Unit =
-    listing.write.mode(SaveMode.Overwrite).parquet(path)
+  /** Commit the post-run listing as the ledger's next version (REF
+    * re-lists after download, data_ingestion.py:60,69 — state reflects
+    * downloaded truth), then reclaim the dirs of every version but the
+    * last [[KeepVersions]]. */
+  def write(listing: DataFrame, path: String): Unit = {
+    TimeTravel.overwriteAdopting(listing, path)
+    TimeTravel.vacuumShared(listing.sparkSession, path, KeepVersions): Unit
+  }
 
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** The versions a ledger write keeps: its own and the one before, so
+    * a run whose diff resolved the previous version before this write
+    * published still finishes its scan. Each version is one data dir. */
+  private val KeepVersions = 2
+
+  def read(spark: SparkSession, path: String): DataFrame = TimeTravel.readLatest(spark, path)
 
   /** S12 predicate delete re-expressed as an anti-join rewrite: keep
     * store rows whose key is NOT in `keys`. */

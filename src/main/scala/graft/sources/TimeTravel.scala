@@ -64,7 +64,7 @@ object TimeTravel {
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** The dirs a table keeps under its path. */
-  private[sources] val LayoutDirs = Set("_versions", "data", "dv", "stats")
+  private val LayoutDirs = Set("_versions", "data", "dv", "stats")
 
   private def vname(v: Long) = f"v$v%05d"
   private def manifestDir(path: String) = new Path(s"$path/_versions")
@@ -155,6 +155,11 @@ object TimeTravel {
     * tag and skips). */
   def tags(spark: SparkSession, path: String): Set[String] =
     versions(spark, path).flatMap(manifest(spark, path, _).tag).toSet
+
+  /** The latest version's commit tag: one manifest read, where [[tags]]
+    * reads them all. */
+  private[graft] def latestTag(spark: SparkSession, path: String): Option[String] =
+    latest(spark, path).flatMap(manifest(spark, path, _).tag)
 
   /** One logical column of a MAPPED table: `logical` is the name the
     * user sees NOW, `physical` the immutable name data files carry
@@ -526,15 +531,55 @@ object TimeTravel {
 
   /** Overwrite commit: the new version sees ONLY the new rows; earlier
     * snapshots keep their files and remain readable. `statsCols` as on
-    * [[commitAppend]]. */
+    * [[commitAppend]]; `tag` is recorded in the manifest ([[tags]]). */
   def commitOverwrite(df: DataFrame, path: String,
-      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long = {
+      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
+      tag: Option[String] = None): Long = {
     val spark = df.sparkSession
     val cur = latest(spark, path)
     val v = cur.getOrElse(0L) + 1
     val mapping = cur.flatMap(colsListing(spark, path, _))
     val dir = writeWithStats(df, path, dataDir(v), mapping, statsCols, bloomCols)
-    publish(spark, path, v, Seq(dir), cols = mapping.getOrElse(Seq.empty))
+    publish(spark, path, v, Seq(dir), tag, cols = mapping.getOrElse(Seq.empty))
+    v
+  }
+
+  // ------------------------------------------------- unversioned layout
+
+  /** The rows of a table still in the UNVERSIONED layout — parquet at
+    * `path`, flat or in hive `k=v` dirs, with no published version —
+    * read as plain parquet (hive discovery recovers the `k=v` columns);
+    * None for a TimeTravel table or an absent path. The vector store
+    * and the CDC ledger were kept that way before they became
+    * TimeTravel tables: they read through [[readLatest]], and their
+    * first write adopts the old rows ([[overwriteAdopting]]). */
+  private[graft] def unversioned(spark: SparkSession, path: String): Option[DataFrame] =
+    Some(unversionedEntries(spark, path)).filter(_.nonEmpty).map(old =>
+      spark.read.option("basePath", path).parquet(old.map(_.toString): _*))
+
+  /** The visible entries of an unversioned `path`, TimeTravel's own
+    * dirs aside (a first commit that never published leaves some). */
+  private def unversionedEntries(spark: SparkSession, path: String): Seq[Path] = {
+    val f = fs(spark, path)
+    if (!f.exists(new Path(path)) || versions(spark, path).nonEmpty) Nil
+    else f.listStatus(new Path(path)).toSeq.map(_.getPath)
+      .filterNot(p => p.getName.matches("[_.].*") || LayoutDirs(p.getName))
+  }
+
+  /** The latest snapshot; an unversioned table reads as plain parquet. */
+  private[graft] def readLatest(spark: SparkSession, path: String): DataFrame =
+    unversioned(spark, path).getOrElse(read(spark, path))
+
+  /** [[commitOverwrite]], then delete the unversioned entries the new
+    * version replaces — only once it is published, so `df` may read
+    * them and a failed write leaves them readable. An unversioned
+    * table's first write adopts it this way. */
+  private[graft] def overwriteAdopting(df: DataFrame, path: String,
+      statsCols: Seq[String] = Nil): Long = {
+    val spark = df.sparkSession
+    val old = unversionedEntries(spark, path)
+    val v = commitOverwrite(df, path, statsCols)
+    old.foreach(fs(spark, path).delete(_, true))
     v
   }
 
@@ -654,9 +699,11 @@ object TimeTravel {
   /** What one row-level commit changes: the live rows it tombstones
     * (carrying their [[DvCols]] positions), the rows of its one new data
     * directory (LOGICAL shape), and the data directories it drops
-    * whole. */
+    * whole. With `replaceDvs` its tombstones REPLACE the snapshot's
+    * deletion vectors instead of adding to them ([[fold]]). */
   private[sources] final case class RowChange(tombstones: Option[DataFrame],
-      data: Option[DataFrame] = None, dropDirs: Seq[String] = Nil)
+      data: Option[DataFrame] = None, dropDirs: Seq[String] = Nil,
+      replaceDvs: Boolean = false)
 
   /** The scaffold every row-level commit shares ([[deleteMoR]],
     * [[updateMoR]], [[replaceWhere]], [[commitKeyed]] and the vector
@@ -676,7 +723,7 @@ object TimeTravel {
     * that publishes that version first makes this one fail with
     * [[CommitConflictException]]; its dirs stay unpublished. */
   private[sources] def rowLevelCommit(spark: SparkSession, path: String, what: String,
-      statsCols: Seq[String] = Nil)(
+      statsCols: Seq[String] = Nil, tag: Option[String] = None)(
       change: (Manifest, Seq[String] => DataFrame) => Option[RowChange]): Long = {
     val cur = resolve(spark, path, missing = s"nothing to $what")
     val m = manifest(spark, path, cur)
@@ -697,8 +744,8 @@ object TimeTravel {
             writeWithStats(d, path, dir, mapping, statsCols, Nil); ()
           } }
         if (writes.nonEmpty) ParallelJobs.awaitAll(writes)
-        publish(spark, path, v, m.dirs.filterNot(c.dropDirs.toSet) ++ data.map(_._1),
-          dvs = m.dvs ++ dvs.map(_._1), cols = m.cols)
+        publish(spark, path, v, m.dirs.filterNot(c.dropDirs.toSet) ++ data.map(_._1), tag,
+          (if (c.replaceDvs) Nil else m.dvs) ++ dvs.map(_._1), m.cols)
         v
     }
   }
@@ -785,10 +832,12 @@ object TimeTravel {
     * `statsCols` sidecars, both in one manifest rename. The key frames
     * are the build side of one filter over one scan, so a few changed
     * keys broadcast and the commit costs O(changed rows), never a
-    * rewrite of the rows it keeps. */
+    * rewrite of the rows it keeps. `tag` is recorded in the manifest
+    * ([[latestTag]]). */
   private[graft] def commitKeyed(spark: SparkSession, path: String, keys: Seq[DataFrame],
-      data: Option[DataFrame] = None, statsCols: Seq[String] = Nil): Long =
-    rowLevelCommit(spark, path, "change", statsCols) { (m, live) =>
+      data: Option[DataFrame] = None, statsCols: Seq[String] = Nil,
+      tag: Option[String] = None): Long =
+    rowLevelCommit(spark, path, "change", statsCols, tag) { (m, live) =>
       import org.apache.spark.sql.functions.{col, lit}
       val rows = live(m.dirs)
       val hit = keys.map(k => col(k.columns.head).isin(k)).foldLeft(lit(false))(_ || _)
@@ -923,6 +972,27 @@ object TimeTravel {
       path, statsCols, bloomCols)
   }
 
+  /** Fold part of the live snapshot: the rows of the data dirs `dirs`,
+    * every tombstone applied, become one new dir of `targetFiles` files,
+    * and the tombstones that name rows of the other dirs move into one
+    * new deletion-vector dir. The snapshot then lists the other dirs, the
+    * new one and at most one DV dir; the row set is unchanged. Unlike
+    * [[optimize]], the dirs left out are neither read nor rewritten, so
+    * the commit costs the bytes of `dirs` plus the tombstones. */
+  private[graft] def fold(spark: SparkSession, path: String, dirs: Seq[String],
+      targetFiles: Int, statsCols: Seq[String]): Long =
+    rowLevelCommit(spark, path, "fold", statsCols) { (m, live) =>
+      import org.apache.spark.sql.functions.{col, regexp_extract}
+      val others = m.dirs.filterNot(dirs.toSet)
+      // a tombstone names its file's URI: <path>/data/<dir>/<file>
+      val carried = Some(m.dvs).filter(_.nonEmpty && others.nonEmpty).map(dvs =>
+        readDvs(spark, path, dvs).filter(
+          regexp_extract(col(DvCols.head), "/(data/[^/]+)/[^/]+$", 1).isin(others: _*)))
+      val folded = Some(dirs).filter(_.nonEmpty)
+        .map(live(_).drop(DvCols: _*).coalesce(targetFiles.max(1)))
+      Some(RowChange(carried, folded, dirs, replaceDvs = true))
+    }
+
   /** OPTIMIZE ZORDER BY — the layout-maintenance command that composes
     * [[optimize]] with [[graft.operators.LayoutOps.zValue]]: the live
     * snapshot is rewritten range-partitioned-and-sorted by the Morton
@@ -1035,12 +1105,28 @@ object TimeTravel {
   /** Drop data directories no LIVE version references (keeping the last
     * `keepVersions` manifests' files) — O(dropped dirs) deletes, rows
     * never read. A stats sidecar lives exactly as long as its data
-    * directory. */
-  def vacuum(spark: SparkSession, path: String, keepVersions: Int = 1): Seq[String] = {
-    val f = fs(spark, path)
+    * directory. The dirs of a commit still in flight — made for a
+    * version past the latest — are spared: that writer can still win
+    * its publish. */
+  def vacuum(spark: SparkSession, path: String, keepVersions: Int = 1): Seq[String] =
+    deleteDirs(spark, path, vacuumVictims(spark, path,
+      versions(spark, path).takeRight(keepVersions.max(1))))
+
+  /** [[vacuum]] for a table that other writers commit to: it drops only
+    * the dirs made for a version older than the oldest one it keeps. A
+    * writer still writing for a kept version has lost its race and fails
+    * with [[CommitConflictException]] at its publish, not on a dir
+    * deleted under its write, so a retrying writer
+    * ([[withConflictRetry]]) retries. Its dirs go once their version
+    * leaves the kept window. */
+  private[graft] def vacuumShared(spark: SparkSession, path: String,
+      keepVersions: Int): Seq[String] = {
     val kept = versions(spark, path).takeRight(keepVersions.max(1))
-    val victims = vacuumVictims(spark, path, kept)
-    victims.foreach(d => f.delete(new Path(s"$path/$d"), true))
+    deleteDirs(spark, path, vacuumVictims(spark, path, kept, kept.headOption))
+  }
+
+  private def deleteDirs(spark: SparkSession, path: String, victims: Seq[String]): Seq[String] = {
+    victims.foreach(d => fs(spark, path).delete(new Path(s"$path/$d"), true))
     if (victims.nonEmpty)
       manifestCache.keySet.removeIf(k => k._1 == path)
     victims
@@ -1048,10 +1134,13 @@ object TimeTravel {
 
   /** The directories [[vacuum]] WOULD drop if `keptVersions` were the
     * retained manifests — read-only (the dry-run face the SQL
-    * `CALL graft.vacuum(…, dry_run => true)` procedure serves). */
+    * `CALL graft.vacuum(…, dry_run => true)` procedure serves). A dir
+    * made for version `spareFrom` or later is spared; by default that
+    * is every version past the latest. */
   private[sources] def vacuumVictims(spark: SparkSession, path: String,
-      keptVersions: Seq[Long]): Seq[String] = {
+      keptVersions: Seq[Long], spareFrom: Option[Long] = None): Seq[String] = {
     val f = fs(spark, path)
+    val from = spareFrom.getOrElse(latest(spark, path).getOrElse(0L) + 1)
     val live = keptVersions.flatMap(listing(spark, path, _)).toSet ++
       keptVersions.flatMap(dvListing(spark, path, _))
     val liveAll = live ++ live.collect {
@@ -1062,9 +1151,14 @@ object TimeTravel {
       if (!f.exists(rootPath)) Seq.empty
       else f.listStatus(rootPath).toSeq
         .map(st => s"$root/${st.getPath.getName}")
-        .filterNot(liveAll.contains)
+        .filterNot(d => liveAll.contains(d) || madeFor(d).exists(_ >= from))
     }.sorted
   }
+
+  /** The version a `data/`, `dv/` or `stats/` dir was made for, read
+    * from its `v<NNNNN>` name. */
+  private def madeFor(dir: String): Option[Long] =
+    "v(\\d+)".r.findPrefixMatchOf(dir.substring(dir.indexOf('/') + 1)).map(_.group(1).toLong)
 
   // ------------------------------------------------------- file skipping
 

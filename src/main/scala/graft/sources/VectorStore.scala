@@ -35,15 +35,16 @@ import org.apache.spark.sql.types.{DateType, StructType}
   * new ones. A crash before the publish leaves dirs no reader lists,
   * and the retried commit overwrites them; a concurrent writer that
   * loses the publish race fails with [[CommitConflictException]].
-  * IngestJob writes its ledger only after the store, so a crash replays
-  * the same diff and converges on the same store. Superseded dirs stay
-  * on disk, and earlier snapshots readable, until [[TimeTravel.vacuum]].
+  * IngestJob's CDC ledger is a TimeTravel table too, and each round
+  * ends with [[upkeep]]: superseded dirs stay on disk, and earlier
+  * snapshots readable, for [[KeepVersions]] versions; the dirs of a
+  * commit still in flight stay until it publishes or loses.
   *
   * Every commit that writes data carries `load_dt` file-skipping stats
   * when the rows have the column. A path that holds parquet rows but no
   * `_versions/` is a store in the earlier layout (flat, or hive
   * `load_dt=` dirs): it reads as plain parquet, and the first write
-  * adopts it.
+  * adopts it ([[TimeTravel.unversioned]]).
   */
 object VectorStore {
 
@@ -73,40 +74,15 @@ object VectorStore {
   private def statsCols(schema: StructType): Seq[String] =
     Seq(PartitionCol).filter(schema.fieldNames.contains)
 
-  /** The data entries of a store in the earlier, unversioned layout —
-    * its visible files and dirs, TimeTravel's own dirs aside — when the
-    * path has no `_versions/`; else none. */
-  private def legacyEntries(spark: SparkSession, path: String): Seq[Path] =
-    if (!exists(spark, path) || versioned(spark, path)) Nil
-    else fileSystem(spark, path).listStatus(new Path(path)).toSeq.map(_.getPath)
-      .filterNot(p => p.getName.matches("[_.].*") || TimeTravel.LayoutDirs(p.getName))
-
-  /** The rows of the unversioned `entries`; hive discovery recovers
-    * `load_dt` from `load_dt=` dirs. */
-  private def legacyRows(spark: SparkSession, path: String, entries: Seq[Path]): DataFrame =
-    spark.read.option("basePath", path).parquet(entries.map(_.toString): _*)
-
-  /** `commit`, then delete the unversioned `entries` it replaced. */
-  private def replacing(spark: SparkSession, path: String, entries: Seq[Path])(
-      commit: => Long): Unit = {
-    commit
-    val fs = fileSystem(spark, path)
-    entries.foreach(fs.delete(_, true))
-  }
-
   /** Move a store in the unversioned layout onto TimeTravel: commit its
     * rows as the first version, then delete the old entries. A column
     * `like` has and the old rows lack becomes a typed null. */
-  private def adopt(spark: SparkSession, path: String, like: StructType): Unit = {
-    val old = legacyEntries(spark, path)
-    if (old.nonEmpty) {
-      val rows = legacyRows(spark, path, old)
+  private def adopt(spark: SparkSession, path: String, like: StructType): Unit =
+    TimeTravel.unversioned(spark, path).foreach { rows =>
       val aligned = like.fields.filterNot(f => rows.columns.contains(f.name))
         .foldLeft(rows)((df, f) => df.withColumn(f.name, lit(null).cast(f.dataType)))
-      replacing(spark, path, old)(
-        TimeTravel.commitOverwrite(aligned, path, statsCols(aligned.schema)))
+      TimeTravel.overwriteAdopting(aligned, path, statsCols(aligned.schema))
     }
-  }
 
   /** S11: create the store with a fixed schema iff absent. */
   def createIfAbsent(spark: SparkSession, path: String, schema: StructType): Unit =
@@ -116,10 +92,7 @@ object VectorStore {
         statsCols(schema))
 
   /** The latest snapshot (an unversioned store reads as plain parquet). */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val old = legacyEntries(spark, path)
-    if (old.isEmpty) TimeTravel.read(spark, path) else legacyRows(spark, path, old)
-  }
+  def read(spark: SparkSession, path: String): DataFrame = TimeTravel.readLatest(spark, path)
 
   /** S10: upsert keyed on `chunk_id` — existing rows with incoming keys
     * are replaced, others kept. `superseded` is a one-column frame named
@@ -128,22 +101,22 @@ object VectorStore {
     * names of the changed files, so an update that shrinks a file — even
     * to zero chunks — leaves none of its old chunks behind. Incoming
     * rows are cast to the store's columns; the first upsert of an absent
-    * store defines them. */
+    * store defines them. `tag` names the commit in its manifest
+    * ([[TimeTravel.latestTag]]). */
   def upsert(spark: SparkSession, path: String, incoming: DataFrame,
-      superseded: Option[DataFrame] = None): Unit = {
+      superseded: Option[DataFrame] = None, tag: Option[String] = None): Unit = {
     adopt(spark, path, incoming.schema)
     if (!versioned(spark, path))
-      TimeTravel.commitOverwrite(incoming, path, statsCols(incoming.schema))
+      TimeTravel.commitOverwrite(incoming, path, statsCols(incoming.schema), tag = tag)
     else TimeTravel.commitKeyed(spark, path, incoming.select(KeyCol) +: superseded.toSeq,
-      Some(incoming), statsCols(incoming.schema))
+      Some(incoming), statsCols(incoming.schema), tag)
   }
 
   /** Full replace (the V2 TRUNCATE/overwrite path): the store's
     * contents become exactly `incoming`, which may read the store it
     * replaces. */
   def replaceAll(spark: SparkSession, path: String, incoming: DataFrame): Unit =
-    replacing(spark, path, legacyEntries(spark, path))(
-      TimeTravel.commitOverwrite(incoming, path, statsCols(incoming.schema)))
+    TimeTravel.overwriteAdopting(incoming, path, statsCols(incoming.schema))
 
   /** S12: delete rows whose `keyCol` value appears in `keys`. */
   def deleteWhere(spark: SparkSession, path: String, keys: DataFrame, keyCol: String): Unit = {
@@ -196,14 +169,58 @@ object VectorStore {
     * into ceil(data bytes / `targetBytes`) files of one new dir; a store
     * already that compact is left as it is. Pure layout maintenance —
     * the row set is unchanged (asserted in PipelineSpec). */
-  def compact(spark: SparkSession, path: String,
-      targetBytes: Long = 128L * 1024 * 1024): Unit = {
+  def compact(spark: SparkSession, path: String, targetBytes: Long = TargetBytes): Unit = {
     adopt(spark, path, new StructType())
-    val fs = fileSystem(spark, path)
     val v = TimeTravel.versions(spark, path).last
-    val bytes = TimeTravel.listing(spark, path, v)
-      .map(d => fs.getContentSummary(new Path(s"$path/$d")).getLength).sum
-    TimeTravel.optimize(spark, path, math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt,
+    TimeTravel.optimize(spark, path,
+      filesFor(TimeTravel.listing(spark, path, v).map(bytesOf(spark, path, _)).sum, targetBytes),
       statsCols(read(spark, path).schema))
   }
+
+  private val TargetBytes = 128L * 1024 * 1024
+
+  private def bytesOf(spark: SparkSession, path: String, dir: String): Long =
+    fileSystem(spark, path).getContentSummary(new Path(s"$path/$dir")).getLength
+
+  private def filesFor(bytes: Long, targetBytes: Long): Int =
+    math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+
+  /** The live small data plus DV dirs past which [[upkeep]] folds them.
+    * A scan lists its paths with a Spark job once they pass Spark's
+    * parallel-listing threshold (`parallelPartitionDiscovery.threshold`,
+    * 32); at 24 neither the data nor the DV scan of a store of small
+    * dirs reaches it. A CDC round adds three dirs (a data and a DV dir
+    * from the upsert, a DV dir from the file delete), so the small dirs
+    * fold about every eighth round. */
+  private val MaxLiveDirs = 24
+
+  /** The versions [[upkeep]]'s vacuum keeps. An IngestJob entry point
+    * publishes one store commit and at most one fold before its vacuum
+    * runs, so three keep the snapshot a reader resolved before that
+    * call readable until the call returns; a read that spans more
+    * commits than that may find its files gone. */
+  private val KeepVersions = 3
+
+  /** Upkeep after a round's commits. Once the live snapshot lists more
+    * than [[MaxLiveDirs]] data dirs smaller than [[compact]]'s target
+    * size plus DV dirs, one [[TimeTravel.fold]] rewrites those small
+    * dirs, tombstones applied, into one dir, and moves the tombstones of
+    * the full dirs into one DV dir. A full dir is never rewritten, so a
+    * fold costs the bytes of the small dirs, at most a few target sizes,
+    * whatever the store's size; the rows a full dir's tombstones hide
+    * stay on disk until an explicit [[compact]]. Then the dirs of every
+    * version before the last [[KeepVersions]] go; a concurrent writer
+    * keeps its dirs ([[TimeTravel.vacuumShared]]). An unversioned store
+    * is left as it is. */
+  def upkeep(spark: SparkSession, path: String): Unit =
+    TimeTravel.versions(spark, path).lastOption.foreach { v =>
+      val m = TimeTravel.manifest(spark, path, v)
+      if (m.dirs.size + m.dvs.size > MaxLiveDirs) {
+        val small = m.dirs.map(d => d -> bytesOf(spark, path, d)).filter(_._2 < TargetBytes)
+        if (small.size + m.dvs.size > MaxLiveDirs)
+          TimeTravel.fold(spark, path, small.map(_._1),
+            filesFor(small.map(_._2).sum, TargetBytes), statsCols(read(spark, path).schema))
+      }
+      TimeTravel.vacuumShared(spark, path, KeepVersions)
+    }
 }

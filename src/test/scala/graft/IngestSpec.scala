@@ -3,8 +3,8 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import graft.pipeline.IngestJob
-import graft.sources.VectorStore
+import graft.pipeline.{IngestJob, Ledger}
+import graft.sources.{TimeTravel, VectorStore}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -238,6 +238,105 @@ class IngestSpec extends SparkSpec {
     assert(tombstones.head.contains("BroadcastHashJoin") &&
       !tombstones.head.contains("Exchange hashpartitioning"),
       s"the tombstone write must broadcast the changed keys:\n${tombstones.head}")
+  }
+
+  /** `df`'s rows, as a set of strings (vectors compare by value). */
+  private def rowSet(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
+
+  test("a failed ledger write leaves the previous ledger readable; a plain-parquet ledger is adopted") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("ingest_ledger").toFile.getAbsolutePath
+    val ledger = s"$dir/ledger"
+    val before = Seq(("a.txt", t0), ("b.txt", t0)).toDF("name", "last_modified")
+    Ledger.write(before, ledger)
+    // the UDF throws in the write's tasks, on the executors
+    val boom = udf((i: Long) => { if (i >= 0) throw new IllegalStateException("injected"); i })
+    val failing = spark.range(0, 2, 1, 2)
+      .select(boom(col("id")).cast("string").as("name"), lit(t1).as("last_modified"))
+    intercept[Exception](Ledger.write(failing, ledger))
+    assert(rowSet(Ledger.read(spark, ledger)) == rowSet(before))
+
+    // the layout the ledger had before it was versioned: plain parquet
+    val legacy = s"$dir/legacy"
+    before.write.parquet(legacy)
+    assert(rowSet(Ledger.read(spark, legacy)) == rowSet(before), "it reads as it is")
+    val grown = Seq(("c.txt", t1)).toDF("name", "last_modified")
+    // the first write may read the rows it replaces
+    Ledger.write(Ledger.read(spark, legacy).unionByName(grown), legacy)
+    assert(rowSet(Ledger.read(spark, legacy)) == rowSet(before.unionByName(grown)))
+    assert(TimeTravel.versions(spark, legacy) == Seq(1L))
+    assert(!new java.io.File(legacy).list().exists(_.startsWith("part-")), "old part files must go")
+  }
+
+  test("a CDC round replayed after its store commit embeds nothing and publishes no store version") {
+    val dir = Files.createTempDirectory("ingest_replay").toFile.getAbsolutePath
+    val changed = initial.withColumn("last_modified",
+        when(col("name") === "c.txt", lit(t1)).otherwise(col("last_modified")))
+      .withColumn("content",
+        when(col("name") === "c.txt", lit("short now".getBytes("UTF-8"))).otherwise(col("content")))
+    // fault-free
+    val (okLedger, okStore) = (s"$dir/ok/ledger", s"$dir/ok/store")
+    IngestJob.fullRefresh(spark, initial, okLedger, okStore, "2023-01-01")
+    IngestJob.incremental(spark, changed, okLedger, okStore, "2023-02-01")
+
+    val (ledger, store) = (s"$dir/ledger", s"$dir/store")
+    IngestJob.fullRefresh(spark, initial, ledger, store, "2023-01-01")
+    val storeVersions = TimeTravel.versions(spark, store)
+    // throws once the store commit is published: after it, only the
+    // ledger write evaluates `url`
+    val published = s"$store/_versions/v%05d.json".format(storeVersions.last + 1)
+    val boom = udf((u: String) => {
+      if (new java.io.File(published).exists()) throw new IllegalStateException("injected")
+      u
+    })
+    intercept[Exception](IngestJob.incremental(spark,
+      changed.withColumn("url", boom(col("url"))), ledger, store, "2023-02-01"))
+    assert(TimeTravel.versions(spark, store).size == storeVersions.size + 1, "the store committed")
+
+    val retry = IngestJob.incremental(spark, changed, ledger, store, "2023-02-01")
+    assert(retry.filesProcessed == 1 && retry.chunksUpserted == 0, retry)
+    assert(TimeTravel.versions(spark, store).size == storeVersions.size + 1,
+      "the retry must publish no store version")
+    assert(rowSet(VectorStore.read(spark, store)) == rowSet(VectorStore.read(spark, okStore)))
+    assert(rowSet(Ledger.read(spark, ledger)) == rowSet(Ledger.read(spark, okLedger)))
+  }
+
+  test("soak: over 20 CDC rounds the live dirs stay bounded and a round's jobs do not grow") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("ingest_soak").toFile.getAbsolutePath
+    val (ledger, store) = (s"$dir/ledger", s"$dir/store")
+    var landed = initial
+    IngestJob.fullRefresh(spark, landed, ledger, store, "2023-01-01")
+    def onDisk(table: String): Int = dirs(table, "data").size + dirs(table, "dv").size
+    /** (Spark jobs, store versions published) per round. */
+    val rounds = (1 to 20).map { r =>
+      val at = new Timestamp(t1.getTime + r * 1000L)
+      // a.txt changes, n<r>.txt lands, and the previous round's new file leaves
+      val gone = if (r == 1) "b.html" else s"n${r - 1}.txt"
+      landed = landed.filter(col("name") =!= "a.txt").unionByName(filesDf(Seq(
+        ("a.txt", "http://x.io/a.txt", at, s"alpha round $r".getBytes("UTF-8")),
+        (s"n$r.txt", s"http://x.io/n$r.txt", at, s"new file $r words".getBytes("UTF-8")))))
+        .localCheckpoint()
+      val v0 = TimeTravel.versions(spark, store).size
+      val jobs = jobsOf {
+        IngestJob.incremental(spark, landed, ledger, store, f"2023-02-$r%02d")
+        landed = landed.filter(col("name") =!= gone).localCheckpoint()
+        IngestJob.deleteFiles(spark, Seq(gone).toDF("name"), ledger, store)
+      }
+      // Spark lists more than 32 paths with a job of its own
+      assert(onDisk(store) < 32, s"round $r: the store keeps ${onDisk(store)} dirs")
+      assert(onDisk(ledger) <= 3, s"round $r: the ledger keeps ${onDisk(ledger)} dirs")
+      (jobs, TimeTravel.versions(spark, store).size - v0)
+    }
+    // a plain round publishes the upsert and the delete, and no compaction
+    assert(rounds(2)._2 == 2 && rounds(19)._2 == 2, rounds)
+    assert(rounds(19)._1 <= rounds(2)._1, s"(jobs, store versions) per round: $rounds")
+    val fresh = s"$dir/fresh"
+    IngestJob.fullRefresh(spark, landed, s"$fresh/ledger", s"$fresh/store", "2023-01-01")
+    def chunks(store: String) = VectorStore.read(spark, store)
+      .select("chunk_id", "name", "index", "text", "vector")
+    assert(rowSet(chunks(store)) == rowSet(chunks(s"$fresh/store")))
+    assert(rowSet(Ledger.read(spark, ledger)) == rowSet(Ledger.read(spark, s"$fresh/ledger")))
   }
 
   test("unsupported file types are filtered before parsing") {

@@ -378,6 +378,33 @@ class PipelineSpec extends SparkSpec {
       "an already-compact store must not be rewritten")
   }
 
+  test("fold rewrites only the named dirs; the other dirs' tombstones stay in force") {
+    val path = Files.createTempDirectory("tt_fold").toFile.getAbsolutePath + "/t"
+    def dirsNow = new java.io.File(s"$path/data").list().map("data/" + _).toSet
+    TimeTravel.commitOverwrite(dtRows(1 to 10, "2023-01-01", "a").repartition(2), path)
+    val full = dirsNow
+    val filesOfFull = dataFiles(path).filter(f => full(s"data/${f._1}"))
+    TimeTravel.commitAppend(dtRows(11 to 20, "2023-02-01", "b"), path)
+    TimeTravel.commitAppend(dtRows(21 to 30, "2023-03-01", "c"), path)
+    val small = (dirsNow -- full).toSeq
+    TimeTravel.deleteMoR(spark, path, col("chunk_id").isin("c1", "c11"))
+    TimeTravel.deleteMoR(spark, path, col("chunk_id") === "c21")
+    assert(snapshotDirs(path) == (3, 2))
+    val before = VectorStore.read(spark, path).collect().map(_.toString).toSet
+    val dvsBefore = new java.io.File(s"$path/dv").list().toSet
+
+    TimeTravel.fold(spark, path, small, 1, Seq("load_dt"))
+    assert(snapshotDirs(path) == (2, 1))
+    assert(VectorStore.read(spark, path).collect().map(_.toString).toSet == before)
+    assert(dataFiles(path).filter(f => full(s"data/${f._1}")) == filesOfFull,
+      "the dir left out is not rewritten")
+    val Seq(folded) = (dirsNow -- full -- small).toSeq
+    assert(spark.read.parquet(s"$path/$folded").count() == 18, "the folded dir holds live rows only")
+    val Seq(dv) = (new java.io.File(s"$path/dv").list().toSet -- dvsBefore).toSeq
+    assert(spark.read.parquet(s"$path/dv/$dv").count() == 1,
+      "only the full dir's tombstone (c1) carries over")
+  }
+
   test("retention drops only partitions strictly before the cutoff; null partition survives") {
     val path = Files.createTempDirectory("vstore_ttl").toFile.getAbsolutePath + "/store"
     // one data dir per load date, plus one holding a null load_dt
@@ -874,6 +901,56 @@ class PipelineSpec extends SparkSpec {
     assert(TimeTravel.read(spark, dir, Some(2L)).as[Long].collect().sorted.toSeq ==
       Seq(0L, 1L, 2L))
     assert(TimeTravel.versions(spark, dir) == Seq(1L, 2L))
+  }
+
+  test("racing writers: an ingest round's upkeep spares an upsert still writing") {
+    import graft.pipeline.IngestJob
+    import graft.sources.CommitConflictException
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import scala.util.{Failure, Success, Try}
+    val t0 = java.sql.Timestamp.valueOf("2023-01-01 00:00:00")
+    val t1 = java.sql.Timestamp.valueOf("2023-02-01 00:00:00")
+    def landed(at: java.sql.Timestamp, text: String) =
+      Seq(("a.txt", "http://x.io/a.txt", at, text.getBytes("UTF-8")))
+        .toDF("name", "url", "last_modified", "content")
+    // "idle": the ingest round changes nothing, so only its upkeep runs
+    // while the upsert writes; "changed": the round also publishes the
+    // version the upsert is writing for
+    for ((race, files) <- Seq("idle" -> landed(t0, "alpha beta"),
+        "changed" -> landed(t1, "gamma delta"))) {
+      val dir = Files.createTempDirectory(s"vstore_upkeep_$race").toFile.getAbsolutePath
+      val (ledger, store) = (s"$dir/ledger", s"$dir/store")
+      IngestJob.fullRefresh(spark, landed(t0, "alpha beta"), ledger, store, "2023-01-01")
+      val stored = VectorStore.read(spark, store)
+      // the upsert replaces every chunk; it parks inside its data write
+      val park = udf { (t: String) =>
+        RaceLatches(race)._1.countDown()
+        RaceLatches(race)._2.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        t + " (upserted)"
+      }
+      val incoming = spark.createDataFrame(
+          spark.sparkContext.parallelize(stored.collect().toSeq, 1), stored.schema)
+        .coalesce(1).withColumn("text", park(col("text")))
+      val upsert = Future(VectorStore.upsert(spark, store, incoming))
+      val round = try {
+        assert(RaceLatches(race)._1.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        IngestJob.incremental(spark, files, ledger, store, "2023-02-01")
+      } finally RaceLatches(race)._2.countDown()
+      val outcome = Try(Await.result(upsert, 120.seconds))
+      val texts = VectorStore.read(spark, store).select("text").as[String].collect().toSeq
+      outcome match {
+        case Success(_) =>
+          assert(race == "idle" && round.filesProcessed == 0, s"$race: the upsert won")
+          assert(texts.nonEmpty && texts.forall(_.endsWith(" (upserted)")), s"$race: $texts")
+        case Failure(e: CommitConflictException) =>
+          assert(race == "changed" && round.filesProcessed == 1, s"$race: $e")
+          assert(texts == Seq("gamma delta"), s"$race: $texts")
+        case Failure(e) => fail(s"$race: the upsert must win or lose its publish", e)
+      }
+    }
   }
 
   test("conflict retry: concurrent appends both land, each as its own version") {
@@ -1435,4 +1512,13 @@ class PipelineSpec extends SparkSpec {
 object RaceLatches {
   val started = new java.util.concurrent.CountDownLatch(1)
   val release = new java.util.concurrent.CountDownLatch(1)
+
+  private val named = new java.util.concurrent.ConcurrentHashMap[String,
+    (java.util.concurrent.CountDownLatch, java.util.concurrent.CountDownLatch)]()
+
+  /** A (started, release) pair of its own for the race named `race`. */
+  def apply(race: String): (java.util.concurrent.CountDownLatch,
+      java.util.concurrent.CountDownLatch) =
+    named.computeIfAbsent(race, _ => (new java.util.concurrent.CountDownLatch(1),
+      new java.util.concurrent.CountDownLatch(1)))
 }

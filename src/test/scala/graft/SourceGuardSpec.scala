@@ -15,9 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * file that swaps a path with sibling dirs is the index compactions'
   * park-and-swap, `CellCompaction.swapIn` (whose reader window its
   * callers document); every scratch dir comes from
-  * `graft.queries.Fixtures`; and every foreign row-level writer commits
+  * `graft.queries.Fixtures`; every foreign row-level writer commits
   * through `ForeignCommit`, the one determinism guard and foreign OCC
-  * loop. */
+  * loop; and the ingest pipeline's state, the vector store and the CDC
+  * ledger, is written only through TimeTravel. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(String, String)] = {
@@ -62,6 +63,26 @@ class SourceGuardSpec extends AnyFunSuite {
     }
     assert(swaps == Seq("graft/sources/CellCompaction.scala"),
       s"compaction staging/parked dirs outside CellCompaction.swapIn: $swaps")
+  }
+
+  test("pipeline state is written only through TimeTravel: no overwrite, no overwrite-hazard pin") {
+    val pipeline = mainSources.filter(_._1.startsWith("graft/pipeline/"))
+    val overwrites = for {
+      (path, text) <- pipeline
+      needle <- Seq("SaveMode.Overwrite", """.mode("overwrite")""")
+      if text.contains(needle)
+    } yield s"$path: $needle"
+    assert(overwrites.isEmpty, overwrites.mkString("path overwrites in graft/pipeline:\n", "\n", ""))
+    // a checkpoint pins the diff and the vectors for their row counts;
+    // none guards a path that a run both reads and overwrites
+    val ingest = pipeline.collectFirst { case ("graft/pipeline/IngestJob.scala", t) => t }
+      .getOrElse(fail("graft/pipeline/IngestJob.scala missing"))
+    val start = ingest.indexOf("private def pinned(")
+    assert(start >= 0, "IngestJob.pinned missing")
+    val pinned = ingest.substring(start, ingest.indexOf("\n  }\n", start))
+    def checkpoints(text: String) = """\.localCheckpoint\(""".r.findAllIn(text).size
+    assert(checkpoints(pinned) == 1 && checkpoints(ingest) == 1,
+      "IngestJob may checkpoint only inside pinned")
   }
 
   test("foreign writers share one determinism guard and one OCC loop, in ForeignCommit") {
