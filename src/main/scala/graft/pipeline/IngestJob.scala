@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.functions.{Chunkers, Embedders, TextFunctions => TF}
-import graft.sources.{ParseOps, TimeTravel, VectorStore}
+import graft.sources.{ParallelJobs, ParseOps, TimeTravel, VectorStore}
 import org.apache.spark.sql.{Column, DataFrame, GraftPlanApi, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -31,10 +31,13 @@ import org.apache.spark.sql.streaming.Trigger
   * one join on `name`; the store upsert is one keyed TimeTravel commit
   * that tombstones the superseded chunks and adds the fresh ones, so it
   * writes O(changed chunks) and rewrites no stored row. The ledger is a
-  * TimeTravel table as well; each of its writes reclaims its superseded
-  * dirs, and every entry point ends with the store's upkeep step, which
-  * folds its small dirs and reclaims superseded ones. Driver state is
-  * the RunReport counters, never data.
+  * TimeTravel table as well: each entry point stages the ledger's next
+  * version beside its store commit, as a concurrent job, and publishes
+  * it once the store commit has returned, so the store always publishes
+  * first. Each ledger write reclaims its superseded dirs, and every
+  * entry point ends with the store's upkeep step, which folds its small
+  * dirs and reclaims superseded ones. Driver state is the RunReport
+  * counters, never data.
   *
   * Embedding: the deterministic offline embedder by default (SURVEY
   * §7.4), one `graft_embed` per chunk normalized by the fused
@@ -93,8 +96,9 @@ object IngestJob {
       TF.extExtract(col("name")).as("file_type"))
 
   /** Full refresh (data_ingestion.py:80-99): process EVERY landed file,
-    * replace the store content wholesale, overwrite the ledger with the
-    * post-run listing (:60,69 — state reflects downloaded truth).
+    * replace the store content wholesale, then publish the post-run
+    * listing (:60,69 — state reflects downloaded truth) as the ledger,
+    * written beside the store write.
     *
     * The report's counts come from `observe()` metrics collected DURING
     * the store and ledger writes — not from re-reading the store
@@ -105,8 +109,8 @@ object IngestJob {
   def fullRefresh(spark: SparkSession, files: DataFrame,
       ledgerPath: String, storePath: String, loadDt: String): RunReport = {
     val chunks = new Observation()
-    VectorStore.replaceAll(spark, storePath, counted(prepareVectorData(files, loadDt), chunks))
-    val n = writeLedger(files, ledgerPath)
+    val (_, n) = withLedger(listingOf(files), ledgerPath)(
+      VectorStore.replaceAll(spark, storePath, counted(prepareVectorData(files, loadDt), chunks)))
     VectorStore.upkeep(spark, storePath)
     RunReport(n, n, countOf(chunks))
   }
@@ -125,10 +129,11 @@ object IngestJob {
     * chunked or embedded; the report's counts are observed on the two
     * checkpoints and the ledger write, with no extra action.
     *
-    * The store and the ledger publish one after the other, and the
-    * store commit is tagged with the run's identity: the ledger version
-    * the diff read, the diff's row count and an order-independent hash
-    * of its (name, last_modified) pairs. A run that failed after the
+    * The ledger's next version is written beside the diff and the
+    * upsert, and published after them: the store and the ledger publish
+    * one after the other, and the store commit is tagged with the run's
+    * identity: the ledger version the diff read, the diff's row count
+    * and an order-independent hash of its (name, last_modified) pairs. A run that failed after the
     * store commit leaves the ledger at that version, so its replay
     * computes the same tag, finds it on the store's latest manifest,
     * and commits only the ledger: nothing is parsed, chunked or embedded
@@ -137,20 +142,21 @@ object IngestJob {
   def incremental(spark: SparkSession, files: DataFrame,
       ledgerPath: String, storePath: String, loadDt: String): RunReport = {
     val ledgerV = TimeTravel.versions(spark, ledgerPath).lastOption.getOrElse(0L)
-    val (changed, changedN, diff) = pinned(Ledger.newAndUpdated(files, Ledger.read(spark, ledgerPath)),
-      bit_xor(xxhash64(col("name"), col("last_modified"))).as("h"))
-    val run = s"cdc:ledger-v$ledgerV:$changedN:${diff("h")}"
-    val chunksN =
-      if (changedN == 0 || TimeTravel.latestTag(spark, storePath).contains(run)) 0L
+    val state = Ledger.read(spark, ledgerPath)
+    val ((changedN, chunksN), filesIn) = withLedger(listingOf(files), ledgerPath) {
+      val (changed, n, diff) = pinned(Ledger.newAndUpdated(files, state),
+        bit_xor(xxhash64(col("name"), col("last_modified"))).as("h"))
+      val run = s"cdc:ledger-v$ledgerV:$n:${diff("h")}"
+      if (n == 0 || TimeTravel.latestTag(spark, storePath).contains(run)) (n, 0L)
       else {
         // materialized once: the upsert reads the vectors twice (their
         // keys for the tombstones, then the new data dir), and
         // parse+chunk+embed runs once
-        val (vectors, n, _) = pinned(prepareVectorData(changed.drop("change_type"), loadDt))
+        val (vectors, chunks, _) = pinned(prepareVectorData(changed.drop("change_type"), loadDt))
         VectorStore.upsert(spark, storePath, vectors, Some(changed.select("name")), Some(run))
-        n
+        (n, chunks)
       }
-    val filesIn = writeLedger(files, ledgerPath)
+    }
     VectorStore.upkeep(spark, storePath)
     RunReport(filesIn, changedN, chunksN)
   }
@@ -174,12 +180,19 @@ object IngestJob {
 
   private def countOf(obs: Observation): Long = obs.get("n").asInstanceOf[Long]
 
-  /** Commit the listing of `files` as the ledger's next version;
-    * returns the file count, observed during the write. */
-  private def writeLedger(files: DataFrame, ledgerPath: String): Long = {
+  /** Commit `ledger` as the ledger's next version beside `store`, an
+    * entry point's store work: the ledger's data write and `store` run
+    * as concurrent jobs, and the ledger publishes only once `store` has
+    * returned, so the store always publishes first. If `store` fails,
+    * the staged ledger version is not published, and its dir is left
+    * for a later ledger write to reclaim. Returns the ledger's row
+    * count, observed during its write. */
+  private def withLedger[A](ledger: DataFrame, ledgerPath: String)(store: => A): (A, Long) = {
     val n = new Observation()
-    Ledger.write(counted(listingOf(files), n), ledgerPath)
-    countOf(n)
+    val done = ParallelJobs.awaitAll(Seq[() => Either[TimeTravel.Staged, A]](
+      () => Left(Ledger.stage(counted(ledger, n), ledgerPath)), () => Right(store)))
+    done.collect { case Left(staged) => staged.publish() }
+    (done.collectFirst { case Right(a) => a }.get, countOf(n))
   }
 
   /** STREAMING face of [[incremental]]: the reference's scheduled
@@ -226,14 +239,14 @@ object IngestJob {
 
   /** File removal (S12, `delete_filedata_from_vectordb`
     * cmfunctions.py:226-261): drop every chunk of the named files from
-    * the store, then commit the ledger without them. A run that failed
-    * between the two commits replays to the same state: the store
-    * delete finds nothing left to drop. */
+    * the store, then publish the ledger without them, written beside the
+    * store delete. A run that failed between the two commits replays to
+    * the same state: the store delete finds nothing left to drop. */
   def deleteFiles(spark: SparkSession, names: DataFrame,
       ledgerPath: String, storePath: String): Unit = {
-    VectorStore.deleteWhere(spark, storePath, names.select("name"), "name")
-    Ledger.write(Ledger.read(spark, ledgerPath)
-      .join(names.select("name"), Seq("name"), "left_anti"), ledgerPath)
+    withLedger(Ledger.read(spark, ledgerPath)
+        .join(names.select("name"), Seq("name"), "left_anti"), ledgerPath)(
+      VectorStore.deleteWhere(spark, storePath, names.select("name"), "name"))
     VectorStore.upkeep(spark, storePath)
   }
 }

@@ -15,13 +15,15 @@ import org.apache.spark.sql.functions._
   *
   * Here the ledger is a [[TimeTravel]] table, the vector store's commit
   * protocol: each write is one overwrite commit of the whole listing,
-  * one data dir published by a manifest rename. A write that fails
-  * leaves the previous version as the ledger, and a run may read the
-  * version it replaces. A ledger in the earlier plain-parquet layout
-  * reads as it is, and its first write adopts it. Change detection is
-  * one left-outer join — O(n) with a broadcast when the state is small,
-  * a shuffled hash join otherwise; at 100 TB of listings both sides
-  * partition by `name` and nothing touches the driver.
+  * one data dir published by a manifest rename. [[IngestJob]] stages
+  * that dir beside its store commit and publishes it after the store's
+  * ([[stage]]). A write that fails leaves the previous version as the
+  * ledger, and a run may read the version it replaces. A ledger in the
+  * earlier plain-parquet layout reads as it is, and its first write
+  * adopts it. Change detection is one left-outer join — O(n) with a
+  * broadcast when the state is small, a shuffled hash join otherwise;
+  * at 100 TB of listings both sides partition by `name` and nothing
+  * touches the driver.
   */
 object Ledger {
 
@@ -43,10 +45,22 @@ object Ledger {
     * re-lists after download, data_ingestion.py:60,69 — state reflects
     * downloaded truth), then reclaim the dirs of every version but the
     * last [[KeepVersions]]. */
-  def write(listing: DataFrame, path: String): Unit = {
-    TimeTravel.overwriteAdopting(listing, path)
-    TimeTravel.vacuumShared(listing.sparkSession, path, KeepVersions): Unit
-  }
+  def write(listing: DataFrame, path: String): Unit = stage(listing, path).publish(): Unit
+
+  /** [[write]] in two steps: this writes the next version's data dir,
+    * and its `publish()` publishes that version and reclaims the old
+    * dirs. Until then readers see the previous version, and a staged
+    * version that never publishes leaves one unpublished dir, which a
+    * later write reclaims once its version leaves the kept window.
+    *
+    * A version is one file, written by one task: the listing is one
+    * short row per landed file, small beside the store's chunks and
+    * vectors, so its write runs beside the store commit without taking
+    * the store's cores, and every later diff reads one file (a large
+    * file still splits into one read task per row group). */
+  private[graft] def stage(listing: DataFrame, path: String): TimeTravel.Staged =
+    TimeTravel.stageAdopting(listing.coalesce(1), path)
+      .andThen(TimeTravel.vacuumShared(listing.sparkSession, path, KeepVersions): Unit)
 
   /** The versions a ledger write keeps: its own and the one before, so
     * a run whose diff resolved the previous version before this write

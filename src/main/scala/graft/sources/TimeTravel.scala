@@ -28,9 +28,11 @@ import org.apache.spark.sql.types._
   *     never a half-written table. Every writer goes through this one
   *     publish, [[VectorStore]] included;
   *   - readers resolve a version (or latest) to its listing and read
-  *     exactly those directories — old snapshots stay readable until
-  *     explicitly vacuumed, which is what makes reproducible training
-  *     runs possible ("train on the corpus exactly as of version 12");
+  *     exactly those directories, under the schema a data file's
+  *     footer records (no schema-inference job) — old snapshots stay
+  *     readable until explicitly vacuumed, which is what makes
+  *     reproducible training runs possible ("train on the corpus
+  *     exactly as of version 12");
   *   - a commit may opt its directory into FILE-SKIPPING stats: one
   *     JSON document, `stats/v<NNNNN>-<uuid>/stats.json`, written through
   *     [[graft.Json]] and staged-then-renamed before the manifest is
@@ -253,7 +255,7 @@ object TimeTravel {
       cols: Seq[ColMap], withPos: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val frames = groups.map { g =>
-      val raw = spark.read.parquet(g: _*)
+      val raw = spark.read.schema(footerSchema(spark, g)).parquet(g: _*)
       val have = raw.columns.toSet
       val projected = cols.map { c =>
         (if (have(c.physical)) col(c.physical).cast(c.typeDdl)
@@ -534,14 +536,35 @@ object TimeTravel {
     * [[commitAppend]]; `tag` is recorded in the manifest ([[tags]]). */
   def commitOverwrite(df: DataFrame, path: String,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-      tag: Option[String] = None): Long = {
+      tag: Option[String] = None): Long =
+    stageOverwrite(df, path, statsCols, bloomCols, tag).publish()
+
+  /** A commit whose data is written and whose manifest is not: nothing
+    * is visible until [[publish]], which publishes `version` (failing
+    * with [[CommitConflictException]] if another writer took it first),
+    * runs the steps chained with [[andThen]] and returns `version`.
+    * Until then its dirs are unpublished ones, which no reader lists and
+    * [[vacuum]] reclaims. */
+  private[graft] final class Staged private[TimeTravel] (version: Long,
+      publishOp: () => Unit) {
+    def publish(): Long = { publishOp(); version }
+
+    /** This commit, with `after` run once it has published. */
+    def andThen(after: => Unit): Staged = new Staged(version, () => { publishOp(); after })
+  }
+
+  /** The write half of [[commitOverwrite]]: version N+1's data dir and
+    * its stats sidecar, staged against the latest version N; the
+    * returned commit publishes it. */
+  private[graft] def stageOverwrite(df: DataFrame, path: String,
+      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
+      tag: Option[String] = None): Staged = {
     val spark = df.sparkSession
     val cur = latest(spark, path)
     val v = cur.getOrElse(0L) + 1
     val mapping = cur.flatMap(colsListing(spark, path, _))
     val dir = writeWithStats(df, path, dataDir(v), mapping, statsCols, bloomCols)
-    publish(spark, path, v, Seq(dir), tag, cols = mapping.getOrElse(Seq.empty))
-    v
+    new Staged(v, () => publish(spark, path, v, Seq(dir), tag, cols = mapping.getOrElse(Seq.empty)))
   }
 
   // ------------------------------------------------- unversioned layout
@@ -575,12 +598,16 @@ object TimeTravel {
     * them and a failed write leaves them readable. An unversioned
     * table's first write adopts it this way. */
   private[graft] def overwriteAdopting(df: DataFrame, path: String,
-      statsCols: Seq[String] = Nil): Long = {
+      statsCols: Seq[String] = Nil): Long =
+    stageAdopting(df, path, statsCols).publish()
+
+  /** The write half of [[overwriteAdopting]]: [[stageOverwrite]], with
+    * the unversioned entries deleted once the commit publishes. */
+  private[graft] def stageAdopting(df: DataFrame, path: String,
+      statsCols: Seq[String] = Nil): Staged = {
     val spark = df.sparkSession
     val old = unversionedEntries(spark, path)
-    val v = commitOverwrite(df, path, statsCols)
-    old.foreach(fs(spark, path).delete(_, true))
-    v
+    stageOverwrite(df, path, statsCols).andThen(old.foreach(fs(spark, path).delete(_, true)))
   }
 
   /** Build a FRESH table's first N commits in one parallel staging
@@ -648,9 +675,39 @@ object TimeTravel {
     import org.apache.spark.sql.functions.col
     if (m.cols.nonEmpty) mappedScan(spark, m.dirs.map(d => Seq(s"$path/$d")), m.cols, withPos)
     else {
-      val data = spark.read.option("mergeSchema", mergeSchema.toString)
-        .parquet(m.dirs.map(d => s"$path/$d"): _*)
+      val dirs = m.dirs.map(d => s"$path/$d")
+      val data =
+        if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+        else spark.read.schema(footerSchema(spark, dirs)).parquet(dirs: _*)
       if (withPos) data.select(col("*") +: positions: _*) else data
+    }
+  }
+
+  /** The footer key Spark writes its schema of the file's rows under. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The schema Spark's parquet inference without `mergeSchema` gives a
+    * read of `paths` (dirs or files), taken on the driver from the one
+    * footer that inference reads: that of the first data file in path
+    * order. No Spark job runs. Every data file of a table is written by
+    * Spark, which records its schema in the footer; a file without that
+    * record fails the read, naming the file, rather than have its schema
+    * guessed from the parquet types. */
+  private[graft] def footerSchema(spark: SparkSession, paths: Seq[String]): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val first = paths.sorted.iterator.flatMap { p =>
+      val at = new Path(p)
+      val f = at.getFileSystem(conf)
+      if (f.getFileStatus(at).isDirectory) dataFiles(f, at).headOption else Some(at)
+    }.nextOption().getOrElse(throw new java.io.IOException(
+      s"no data file to take a schema from in ${paths.mkString(", ")}"))
+    val json = Option(FooterStats.footer(conf, first).getFileMetaData
+      .getKeyValueMetaData.get(SparkSchemaKey)).getOrElse(throw new java.io.IOException(
+        s"$first carries no Spark schema ($SparkSchemaKey) in its footer"))
+    DataType.fromJson(json) match {
+      case s: StructType => s
+      case other => throw new java.io.IOException(
+        s"$first records a ${other.typeName}, not a row schema, under $SparkSchemaKey")
     }
   }
 
@@ -879,8 +936,9 @@ object TimeTravel {
       toVersion: Option[Long] = None): DataFrame = {
     val cur = resolve(spark, path, toVersion)
     val added = appendedDirsSince(spark, path, sinceVersion, cur)
+    val dirs = added.map(d => s"$path/$d")
     if (added.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(added.map(d => s"$path/$d"): _*)
+    else spark.read.schema(footerSchema(spark, dirs)).parquet(dirs: _*)
   }
 
   /** The directory diff behind [[readAppendsSince]] with its loud
@@ -1375,7 +1433,7 @@ object TimeTravel {
     val missing = listing(spark, path, v)
       .filterNot(d => f.exists(statsDocOf(path, d)))
     missing.foreach(d => writeStatsFor(spark, path, d,
-      spark.read.parquet(s"$path/$d").schema, statsCols, bloomCols))
+      footerSchema(spark, Seq(s"$path/$d")), statsCols, bloomCols))
     // backfill changes an EXISTING version's sidecar coverage, which
     // the manifest-mtime cache key cannot see — drop the path's entries
     if (missing.nonEmpty)

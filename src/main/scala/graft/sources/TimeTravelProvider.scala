@@ -44,11 +44,9 @@ class TimeTravelProvider extends TableProvider with DataSourceRegister
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     TimeTravelTable(options).schema()
 
-  // the schema inferSchema just returned: the delegate takes it instead
-  // of inferring it a second time
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    TimeTravelTable(new CaseInsensitiveStringMap(properties), Some(schema))
+    TimeTravelTable(new CaseInsensitiveStringMap(properties))
 
   override def supportsExternalMetadata(): Boolean = false
 
@@ -76,7 +74,12 @@ class TimeTravelProvider extends TableProvider with DataSourceRegister
 }
 
 object TimeTravelTable {
-  def apply(options: CaseInsensitiveStringMap): TimeTravelTable = apply(options, None)
+  def apply(options: CaseInsensitiveStringMap): TimeTravelTable = {
+    val path = Option(options.get("path")).getOrElse(
+      throw new IllegalArgumentException("graft-table requires a 'path' option"))
+    val version = Option(options.get("version")).map(_.toLong)
+    new TimeTravelTable(path, version, options)
+  }
 
   /** The snapshot a V2 relation's table scans: a `graft-table`, or a
     * versioned `graft-store` — the tables the DvApply and StatsPrune
@@ -88,24 +91,10 @@ object TimeTravelTable {
       case _ => None
     }
   }
-
-  /** `knownSchema`: the snapshot's schema when the caller already
-    * resolved it, so the parquet delegate does not infer it again. */
-  private[sources] def apply(options: CaseInsensitiveStringMap,
-      knownSchema: Option[StructType]): TimeTravelTable = {
-    val path = Option(options.get("path")).getOrElse(
-      throw new IllegalArgumentException("graft-table requires a 'path' option"))
-    val version = Option(options.get("version")).map(_.toLong)
-    new TimeTravelTable(path, version, options, knownSchema)
-  }
 }
 
-final class TimeTravelTable private[sources] (path: String, versionOpt: Option[Long],
-    options: CaseInsensitiveStringMap, knownSchema: Option[StructType])
-    extends Table with SupportsRead {
-
-  def this(path: String, versionOpt: Option[Long], options: CaseInsensitiveStringMap) =
-    this(path, versionOpt, options, None)
+final class TimeTravelTable(path: String, versionOpt: Option[Long],
+    options: CaseInsensitiveStringMap) extends Table with SupportsRead {
 
   private def spark: SparkSession = SparkSession.active
 
@@ -117,29 +106,32 @@ final class TimeTravelTable private[sources] (path: String, versionOpt: Option[L
   /** The table path, for [[graft.plans.DvApply]]'s rewrite. */
   private[graft] def tablePath: String = path
 
+  /** The snapshot's manifest, read once. */
+  private val snapshot = TimeTravel.manifest(spark, path, snapshotVersion)
+
   /** Pinned with the snapshot: whether it resolves through a COLUMN
     * MAPPING (rename/drop/widen history). A pass-through file scan
     * cannot serve it (physical names/types differ per era), so mapped
     * snapshots surface their LOGICAL schema here and rely on
     * [[graft.plans.DvApply]] to splice the library read in-plan —
     * the same mechanic as pending deletion vectors. */
-  private[graft] val mapped: Boolean =
-    TimeTravel.colsListing(spark, path, snapshotVersion).nonEmpty
+  private[graft] val mapped: Boolean = snapshot.cols.nonEmpty
 
   /** Pinned at construction with the rest of the snapshot: whether this
     * snapshot carries merge-on-read tombstones that a plain file scan
     * cannot apply. */
-  private[graft] val pendingDvs: Boolean =
-    TimeTravel.dvListing(spark, path, snapshotVersion).nonEmpty
+  private[graft] val pendingDvs: Boolean = snapshot.dvs.nonEmpty
 
-  private val dirs: Seq[String] =
-    TimeTravel.listing(spark, path, snapshotVersion).map(d => s"$path/$d")
+  private val dirs: Seq[String] = snapshot.dirs.map(d => s"$path/$d")
 
-  // mapped tables never touch the delegate: its inference would read
-  // PHYSICAL names (and can fail outright on widened heterogeneous
-  // directory types); their logical schema comes from the library read
+  // mapped tables never touch the delegate: its schema would carry
+  // PHYSICAL names (and one footer cannot speak for widened
+  // heterogeneous directory types); their logical schema comes from
+  // the library read. The delegate's schema is the one Spark's
+  // inference would read, taken from a footer on the driver.
   private[sources] lazy val delegate: ParquetTable =
-    ParquetTable(name(), spark, options, dirs, knownSchema, classOf[ParquetFileFormat])
+    ParquetTable(name(), spark, options, dirs, Some(TimeTravel.footerSchema(spark, dirs)),
+      classOf[ParquetFileFormat])
 
   override def name(): String = s"graft_table($path@v$snapshotVersion)"
 

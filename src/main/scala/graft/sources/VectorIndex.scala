@@ -4,7 +4,7 @@ import graft.functions.Similarity
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** IVF vector index AT REST: the in-memory centroid-routed search of
   * SimilarityQueries (`q_knn_ivf*`, `q_knn_kmeans`) persisted as a
@@ -97,6 +97,10 @@ object VectorIndex {
     cents
   }
 
+  /** The `_centroids` table's columns: the cell id and its centroid. */
+  private val CentroidSchema = StructType(Seq(StructField("cid", IntegerType),
+    StructField("c_units", ArrayType(LongType))))
+
   /** Train + write: the embedding table lands partitioned by nearest
     * cell; the centroid table lands in the `_centroids` sidecar. */
   def build(emb: DataFrame, idCol: String, vecCol: String,
@@ -113,9 +117,10 @@ object VectorIndex {
   }
 
   /** The K centroids in `cid` order: K rows, collected and sorted on
-    * the driver. */
+    * the driver. The table is read with the schema [[build]] writes it
+    * under, so no schema-inference job runs. */
   def loadCentroids(spark: SparkSession, path: String): Array[Array[Long]] =
-    spark.read.parquet(path + "/_centroids")
+    spark.read.schema(CentroidSchema).parquet(path + "/_centroids")
       .select(col("cid"), col("c_units")).collect()
       .sortBy(_.getInt(0))
       .map(_.getSeq[Long](1).toArray)

@@ -203,7 +203,10 @@ class IngestSpec extends SparkSpec {
       .withColumn("content",
         when(col("name") === "c.txt", lit("short now".getBytes("UTF-8"))).otherwise(col("content")))
     val n = jobsOf(IngestJob.incremental(spark, changed, ledger, store, "2023-02-01"))
-    assert(n <= 12, s"incremental ran $n Spark jobs")
+    import spark.implicits._
+    val d = jobsOf(IngestJob.deleteFiles(spark, Seq("c.txt").toDF("name"), ledger, store))
+    assert(n <= 8, s"incremental ran $n Spark jobs")
+    assert(d <= 5, s"deleteFiles ran $d Spark jobs")
   }
 
   test("a CDC upsert broadcasts the changed keys: its staged write shuffles no store rows") {
@@ -238,6 +241,16 @@ class IngestSpec extends SparkSpec {
     assert(tombstones.head.contains("BroadcastHashJoin") &&
       !tombstones.head.contains("Exchange hashpartitioning"),
       s"the tombstone write must broadcast the changed keys:\n${tombstones.head}")
+  }
+
+  /** A directory on the staging name of the next manifest `table`
+    * publishes, so that publish fails; delete it to let publishes
+    * through again. */
+  private def squatNextPublish(table: String): java.io.File = {
+    val next = TimeTravel.versions(spark, table).lastOption.getOrElse(0L) + 1
+    val squat = new java.io.File(s"$table/_versions/.v%05d.json.staging".format(next))
+    assert(squat.mkdirs(), squat)
+    squat
   }
 
   /** `df`'s rows, as a set of strings (vectors compare by value). */
@@ -282,16 +295,11 @@ class IngestSpec extends SparkSpec {
     val (ledger, store) = (s"$dir/ledger", s"$dir/store")
     IngestJob.fullRefresh(spark, initial, ledger, store, "2023-01-01")
     val storeVersions = TimeTravel.versions(spark, store)
-    // throws once the store commit is published: after it, only the
-    // ledger write evaluates `url`
-    val published = s"$store/_versions/v%05d.json".format(storeVersions.last + 1)
-    val boom = udf((u: String) => {
-      if (new java.io.File(published).exists()) throw new IllegalStateException("injected")
-      u
-    })
-    intercept[Exception](IngestJob.incremental(spark,
-      changed.withColumn("url", boom(col("url"))), ledger, store, "2023-02-01"))
+    // the ledger's publish fails, after the store commit
+    val squat = squatNextPublish(ledger)
+    intercept[Exception](IngestJob.incremental(spark, changed, ledger, store, "2023-02-01"))
     assert(TimeTravel.versions(spark, store).size == storeVersions.size + 1, "the store committed")
+    squat.delete()
 
     val retry = IngestJob.incremental(spark, changed, ledger, store, "2023-02-01")
     assert(retry.filesProcessed == 1 && retry.chunksUpserted == 0, retry)
@@ -299,6 +307,68 @@ class IngestSpec extends SparkSpec {
       "the retry must publish no store version")
     assert(rowSet(VectorStore.read(spark, store)) == rowSet(VectorStore.read(spark, okStore)))
     assert(rowSet(Ledger.read(spark, ledger)) == rowSet(Ledger.read(spark, okLedger)))
+  }
+
+  test("every entry point publishes the store before the ledger") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("ingest_order").toFile.getAbsolutePath
+    val (ledger, store) = (s"$dir/ledger", s"$dir/store")
+    /** Run `f` with the ledger's next publish failing: the store
+      * publishes one version, the ledger none. */
+    def ledgerFails(f: => Unit): Unit = {
+      val (s0, l0) = (TimeTravel.versions(spark, store), TimeTravel.versions(spark, ledger))
+      val squat = squatNextPublish(ledger)
+      intercept[Exception](f)
+      squat.delete()
+      assert(TimeTravel.versions(spark, store).size == s0.size + 1, "the store published")
+      assert(TimeTravel.versions(spark, ledger) == l0, "the ledger published")
+    }
+    ledgerFails(IngestJob.fullRefresh(spark, initial, ledger, store, "2023-01-01"))
+    IngestJob.fullRefresh(spark, initial, ledger, store, "2023-01-01")
+    val changed = initial.withColumn("last_modified",
+      when(col("name") === "c.txt", lit(t1)).otherwise(col("last_modified")))
+    ledgerFails(IngestJob.incremental(spark, changed, ledger, store, "2023-02-01"))
+    ledgerFails(IngestJob.deleteFiles(spark, Seq("c.txt").toDF("name"), ledger, store))
+    assert(VectorStore.read(spark, store).filter(col("name") === "c.txt").isEmpty)
+    assert(Ledger.read(spark, ledger).count() == 3)
+  }
+
+  test("a failed store commit publishes no ledger version; a later round reclaims its staged dir") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("ingest_store_fault").toFile.getAbsolutePath
+    val changed = initial.withColumn("last_modified",
+        when(col("name") === "c.txt", lit(t1)).otherwise(col("last_modified")))
+      .withColumn("content",
+        when(col("name") === "c.txt", lit("short now".getBytes("UTF-8"))).otherwise(col("content")))
+    /** One CDC round: `landed` refreshes the store, then `gone` leaves it. */
+    def round(ledger: String, store: String, landed: DataFrame, gone: String, at: String): Unit = {
+      IngestJob.incremental(spark, landed, ledger, store, at)
+      IngestJob.deleteFiles(spark, Seq(gone).toDF("name"), ledger, store)
+    }
+    // fault-free
+    val (okLedger, okStore) = (s"$dir/ok/ledger", s"$dir/ok/store")
+    IngestJob.fullRefresh(spark, initial, okLedger, okStore, "2023-01-01")
+    round(okLedger, okStore, changed, "b.html", "2023-02-01")
+
+    val (ledger, store) = (s"$dir/ledger", s"$dir/store")
+    IngestJob.fullRefresh(spark, initial, ledger, store, "2023-01-01")
+    val (ledgerVersions, ledgerDirs) = (TimeTravel.versions(spark, ledger), dirs(ledger, "data"))
+    val squat = squatNextPublish(store)
+    intercept[Exception](IngestJob.incremental(spark, changed, ledger, store, "2023-02-01"))
+    squat.delete()
+    assert(TimeTravel.versions(spark, ledger) == ledgerVersions, "the ledger published")
+    val staged = dirs(ledger, "data") -- ledgerDirs
+    assert(staged.size == 1, s"the ledger staged ${staged.size} dirs")
+    assert(!Ledger.read(spark, ledger).inputFiles.exists(f => staged.exists(f.contains)),
+      "the staged dir is listed")
+
+    round(ledger, store, changed, "b.html", "2023-02-01")
+    assert(rowSet(VectorStore.read(spark, store)) == rowSet(VectorStore.read(spark, okStore)))
+    assert(rowSet(Ledger.read(spark, ledger)) == rowSet(Ledger.read(spark, okLedger)))
+    // the retry published the staged dir's version; the next round's
+    // first ledger write moves that version out of the kept window
+    round(ledger, store, changed.filter(col("name") =!= "b.html"), "a.txt", "2023-03-01")
+    assert((dirs(ledger, "data") intersect staged).isEmpty, "the staged dir is still on disk")
   }
 
   test("soak: over 20 CDC rounds the live dirs stay bounded and a round's jobs do not grow") {

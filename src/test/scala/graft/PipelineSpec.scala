@@ -1493,6 +1493,89 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("snapshot reads take inference's schema from a footer, with no Spark job, for every commit kind") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.DataFrame
+    val root = Files.createTempDirectory("tt_footer").toFile.getAbsolutePath
+    def rows(lo: Long, hi: Long): DataFrame = spark.range(lo, hi, 1, 2)
+      .select(col("id"), (col("id") % 3).cast("int").as("g"), lit("x").as("s"))
+    def manifest(path: String, v: Long) =
+      Json.mapper.readTree(new java.io.File(f"$path/_versions/v$v%05d.json"))
+    /** The data dirs version `v` of `path` lists, relative to `path`. */
+    def dirsOf(path: String, v: Long): Seq[String] =
+      manifest(path, v).path("dirs").elements().asScala.map(_.asText).toSeq
+    def latest(path: String) = TimeTravel.versions(spark, path).last
+    /** Version `v`'s snapshot read: its schema is the one Spark infers
+      * from the listed dirs (per dir, for a column-mapped version), and
+      * resolving it runs no Spark job. */
+    def check(kind: String, path: String, v: Long): Unit = {
+      val dirs = dirsOf(path, v).map(d => s"$path/$d")
+      assert(jobsOf { TimeTravel.read(spark, path, Some(v)).schema; () } == 0, s"$kind v$v")
+      if (manifest(path, v).path("cols").size > 0) dirs.foreach(d => assert(
+        spark.read.schema(TimeTravel.footerSchema(spark, Seq(d))).parquet(d).schema ==
+          spark.read.parquet(d).schema, s"$kind v$v $d"))
+      else assert(TimeTravel.read(spark, path, Some(v)).schema ==
+        spark.read.parquet(dirs: _*).schema, s"$kind v$v")
+    }
+
+    val plain = s"$root/plain"
+    TimeTravel.commitOverwrite(rows(0, 10), plain)
+    check("overwrite", plain, latest(plain))
+    TimeTravel.commitAppend(rows(10, 20), plain)
+    check("append", plain, latest(plain))
+    TimeTravel.commitKeyed(spark, plain, Seq(spark.range(0, 5).toDF("id")), Some(rows(0, 5)))
+    check("keyed", plain, latest(plain))
+    TimeTravel.deleteMoR(spark, plain, col("id") === 7)
+    check("DV-only", plain, latest(plain))
+    TimeTravel.fold(spark, plain, dirsOf(plain, latest(plain)).take(1), 1, Nil)
+    check("fold", plain, latest(plain))
+    TimeTravel.optimize(spark, plain)
+    check("optimize", plain, latest(plain))
+    TimeTravel.rollback(spark, plain, 2)
+    check("rollback", plain, latest(plain))
+    assert(jobsOf { TimeTravel.readAppendsSince(spark, plain, 1, Some(2)).schema; () } == 0)
+    assert(jobsOf { spark.read.format("graft-table").load(plain).schema; () } == 0,
+      "a graft-table load infers its schema with a job")
+
+    val widened = s"$root/widened"
+    TimeTravel.commitOverwrite(rows(0, 10), widened)
+    TimeTravel.commitAppend(rows(10, 20).withColumn("extra", lit(1.5)), widened)
+    check("widened append", widened, latest(widened))
+    assert(TimeTravel.read(spark, widened, mergeSchema = true).schema ==
+      spark.read.option("mergeSchema", "true")
+        .parquet(dirsOf(widened, latest(widened)).map(d => s"$widened/$d"): _*).schema)
+
+    val series = s"$root/series"
+    TimeTravel.commitSeries(Seq(rows(0, 5), rows(5, 10), rows(10, 15)), series)
+    TimeTravel.versions(spark, series).foreach(check("commitSeries", series, _))
+
+    val mapped = s"$root/mapped"
+    TimeTravel.commitOverwrite(rows(0, 10), mapped)
+    TimeTravel.renameColumn(spark, mapped, "g", "grp")
+    check("rename", mapped, latest(mapped))
+    TimeTravel.widenColumn(spark, mapped, "grp", "bigint")
+    TimeTravel.commitAppend(rows(10, 20).withColumnRenamed("g", "grp"), mapped)
+    check("widen", mapped, latest(mapped))
+    assert(TimeTravel.read(spark, mapped).schema("grp").dataType.catalogString == "bigint")
+
+    val empty = s"$root/empty"
+    TimeTravel.commitOverwrite(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rows(0, 1).schema), empty)
+    check("empty", empty, latest(empty))
+    TimeTravel.commitAppend(rows(0, 10), empty)
+    check("append to empty", empty, latest(empty))
+
+    // a table overwritten, or deleted and rebuilt, at the same path with
+    // a new schema reads the new one
+    TimeTravel.commitOverwrite(rows(0, 3).withColumn("extra", lit(1.5)), plain)
+    assert(TimeTravel.read(spark, plain).columns.toSeq == Seq("id", "g", "s", "extra"))
+    val at = new org.apache.hadoop.fs.Path(plain)
+    at.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(at, true)
+    TimeTravel.commitOverwrite(rows(0, 3).select(col("id").cast("string").as("k")), plain)
+    assert(TimeTravel.read(spark, plain).schema.map(f => f.name -> f.dataType.catalogString) ==
+      Seq("k" -> "string"))
+  }
+
   test("http backend: token bucket paces consecutive calls") {
     var clock = 0L
     val sleeps = scala.collection.mutable.ArrayBuffer.empty[Long]

@@ -17,8 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * callers document); every scratch dir comes from
   * `graft.queries.Fixtures`; every foreign row-level writer commits
   * through `ForeignCommit`, the one determinism guard and foreign OCC
-  * loop; and the ingest pipeline's state, the vector store and the CDC
-  * ledger, is written only through TimeTravel. */
+  * loop; the ingest pipeline's state, the vector store and the CDC
+  * ledger, is written only through TimeTravel; and TimeTravel reads a
+  * snapshot under the schema its footer records: only a merged-schema
+  * read and an unversioned one infer a schema with a Spark job. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(String, String)] = {
@@ -83,6 +85,23 @@ class SourceGuardSpec extends AnyFunSuite {
     def checkpoints(text: String) = """\.localCheckpoint\(""".r.findAllIn(text).size
     assert(checkpoints(pinned) == 1 && checkpoints(ingest) == 1,
       "IngestJob may checkpoint only inside pinned")
+  }
+
+  test("TimeTravel infers a schema only for unversioned and mergeSchema reads") {
+    val tt = mainSources.collectFirst { case ("graft/sources/TimeTravel.scala", t) => t }
+      .getOrElse(fail("graft/sources/TimeTravel.scala missing"))
+    // every parquet read chain, with the def it sits in
+    val reads = """(?s)\.read\b.{0,200}?\.parquet\(""".r.findAllMatchIn(tt).map { m =>
+      val defs = """def (\w+)""".r.findAllMatchIn(tt.substring(0, m.start)).toSeq
+      (defs.lastOption.map(_.group(1)).getOrElse("?"), m.matched)
+    }.toSeq
+    assert(reads.size >= 5, reads)
+    val inferring = reads.filterNot { case (in, chain) =>
+      chain.contains(".schema(") || in == "unversioned" ||
+        chain.contains("""option("mergeSchema", "true")""")
+    }
+    assert(inferring.isEmpty,
+      inferring.mkString("parquet reads that infer their schema with a Spark job:\n", "\n", ""))
   }
 
   test("foreign writers share one determinism guard and one OCC loop, in ForeignCommit") {
