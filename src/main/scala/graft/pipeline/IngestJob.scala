@@ -181,18 +181,19 @@ object IngestJob {
   private def countOf(obs: Observation): Long = obs.get("n").asInstanceOf[Long]
 
   /** Commit `ledger` as the ledger's next version beside `store`, an
-    * entry point's store work: the ledger's data write and `store` run
-    * as concurrent jobs, and the ledger publishes only once `store` has
-    * returned, so the store always publishes first. If `store` fails,
-    * the staged ledger version is not published, and its dir is left
+    * entry point's store work: the ledger's data write runs on its own
+    * thread while `store` runs on the caller's, with no deadline on
+    * either, and the ledger publishes only once `store` has returned,
+    * so the store always publishes first. If `store` fails, the staged
+    * ledger version is awaited and not published, and its dir is left
     * for a later ledger write to reclaim. Returns the ledger's row
     * count, observed during its write. */
   private def withLedger[A](ledger: DataFrame, ledgerPath: String)(store: => A): (A, Long) = {
     val n = new Observation()
-    val done = ParallelJobs.awaitAll(Seq[() => Either[TimeTravel.Staged, A]](
-      () => Left(Ledger.stage(counted(ledger, n), ledgerPath)), () => Right(store)))
-    done.collect { case Left(staged) => staged.publish() }
-    (done.collectFirst { case Right(a) => a }.get, countOf(n))
+    val staged = ParallelJobs.beside(Ledger.stage(counted(ledger, n), ledgerPath))
+    val a = try store catch { case e: Throwable => scala.util.Try(staged()); throw e }
+    staged().publish()
+    (a, countOf(n))
   }
 
   /** STREAMING face of [[incremental]]: the reference's scheduled

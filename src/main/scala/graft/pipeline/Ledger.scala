@@ -21,9 +21,10 @@ import org.apache.spark.sql.functions._
   * ledger, and a run may read the version it replaces. A ledger in the
   * earlier plain-parquet layout reads as it is, and its first write
   * adopts it. Change detection is one left-outer join — O(n) with a
-  * broadcast when the state is small, a shuffled hash join otherwise;
-  * at 100 TB of listings both sides partition by `name` and nothing
-  * touches the driver.
+  * broadcast when the state is small, a shuffled hash join otherwise,
+  * where both sides partition by `name` and nothing touches the
+  * driver. The write's task count follows the listing's estimated size
+  * ([[stage]]).
   */
 object Ledger {
 
@@ -53,14 +54,29 @@ object Ledger {
     * version that never publishes leaves one unpublished dir, which a
     * later write reclaims once its version leaves the kept window.
     *
-    * A version is one file, written by one task: the listing is one
-    * short row per landed file, small beside the store's chunks and
-    * vectors, so its write runs beside the store commit without taking
-    * the store's cores, and every later diff reads one file (a large
-    * file still splits into one read task per row group). */
+    * A version is written in one task per `spark.sql.files.maxPartitionBytes`
+    * of the planner's size estimate of `listing` ([[writeTasks]]), so
+    * a small listing is one file, written by one task: its write then
+    * runs beside the store commit without taking the store's cores, and
+    * every later diff reads one file. `coalesce` does not shuffle, so
+    * those tasks also compute the listing's upstream (the landing scan,
+    * or the previous ledger's read); a large listing keeps as many
+    * tasks as its estimated bytes call for. */
   private[graft] def stage(listing: DataFrame, path: String): TimeTravel.Staged =
-    TimeTravel.stageAdopting(listing.coalesce(1), path)
+    TimeTravel.stageAdopting(listing.coalesce(writeTasks(listing)), path)
       .andThen(TimeTravel.vacuumShared(listing.sparkSession, path, KeepVersions): Unit)
+
+  /** One task per `spark.sql.files.maxPartitionBytes` of `listing`'s
+    * estimated size, at least one. The estimate is the optimizer's, made
+    * on the driver with no job; over a `binaryFile` landing scan it
+    * scales with the landed bytes, so it overstates a listing and never
+    * leaves a large one with too few tasks. More tasks than `listing`'s
+    * partitions leave it as it is. */
+  private def writeTasks(listing: DataFrame): Int = {
+    val bytes = listing.queryExecution.optimizedPlan.stats.sizeInBytes
+    val per = BigInt(listing.sparkSession.sessionState.conf.filesMaxPartitionBytes)
+    ((bytes + per - 1) / per).max(1).min(Int.MaxValue).toInt
+  }
 
   /** The versions a ledger write keeps: its own and the one before, so
     * a run whose diff resolved the previous version before this write

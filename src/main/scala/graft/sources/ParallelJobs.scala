@@ -7,7 +7,8 @@ import scala.concurrent.duration.{Duration, FiniteDuration}
   * of earlier ones instead of paying a serial job floor. Used by
   * [[TimeTravel.commitSeries]], the index maintenance paths
   * ([[InvertedIndex]]), and the bounded probe loops in the fixture
-  * queries.
+  * queries; [[beside]] runs one unbounded job next to the caller's
+  * (the CDC ledger's write beside an ingest run's store commit).
   *
   * Failure contract: ALL thunks are awaited — success or failure —
   * before anything is rethrown, so no job outlives the call. A caller
@@ -45,6 +46,22 @@ private[graft] object ParallelJobs {
     * actual core count instead of the former flat 8. */
   private[graft] def maxConcurrency: Int =
     math.max(2, Runtime.getRuntime.availableProcessors() / 4)
+
+  /** Start `job` on its own daemon thread, beside the caller's work;
+    * the returned function awaits it and returns its result or
+    * rethrows its failure. Unlike [[awaitAll]] the wait has no
+    * deadline: this is for work as long as the caller's own (an ingest
+    * run's), not a maintenance window's. Nothing cancels the job, so a
+    * caller awaits it on every path and no job outlives the call. */
+  def beside[A](job: => A): () => A = {
+    val task = new java.util.concurrent.FutureTask[A](() => job)
+    val t = new Thread(task, s"graft-beside-${java.util.UUID.randomUUID()}")
+    t.setDaemon(true)
+    t.start()
+    () => try task.get() catch {
+      case e: java.util.concurrent.ExecutionException => throw e.getCause
+    }
+  }
 
   /** Run the thunks concurrently (bounded pool), await all, return
     * their results in order; rethrows the first failure AFTER every

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.functions.Similarity
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, ByteType, IntegerType, LongType, ShortType, StructField, StructType}
@@ -109,16 +109,20 @@ object VectorIndex {
     val cents = trainCentroids(emb, idCol, vecCol, cells, iters)
     emb.withColumn(CellCol, assignCell(spark, cents)(col(vecCol)))
       .write.mode(SaveMode.Overwrite).partitionBy(CellCol).parquet(path)
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "c_units")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(path + "/_centroids")
+    writeCentroids(spark, cents, path)
   }
 
+  /** The `_centroids` sidecar: one file of (cid, centroid) rows under
+    * [[CentroidSchema]], the schema [[loadCentroids]] reads it with. */
+  private def writeCentroids(spark: SparkSession, cents: Array[Array[Long]], path: String): Unit =
+    spark.createDataFrame(java.util.Arrays.asList(
+        cents.zipWithIndex.map { case (c, i) => Row(i, c.toSeq) }: _*), CentroidSchema)
+      .coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(path + "/_centroids")
+
   /** The K centroids in `cid` order: K rows, collected and sorted on
-    * the driver. The table is read with the schema [[build]] writes it
-    * under, so no schema-inference job runs. */
+    * the driver. The table is read with the schema [[writeCentroids]]
+    * writes it under, so no schema-inference job runs. */
   def loadCentroids(spark: SparkSession, path: String): Array[Array[Long]] =
     spark.read.schema(CentroidSchema).parquet(path + "/_centroids")
       .select(col("cid"), col("c_units")).collect()
@@ -316,10 +320,7 @@ object VectorIndex {
         s => s.getField("cid")).as("pq_codes"))
     withCell.join(codes, idCol)
       .write.mode(SaveMode.Overwrite).partitionBy(CellCol).parquet(path)
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "c_units").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(path + "/_centroids")
+    writeCentroids(spark, cents, path)
     cent.select(col("cid"), col("pos"), col("c")).coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(path + "/_pq_codebooks")
   }

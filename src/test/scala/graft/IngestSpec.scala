@@ -281,6 +281,20 @@ class IngestSpec extends SparkSpec {
     assert(!new java.io.File(legacy).list().exists(_.startsWith("part-")), "old part files must go")
   }
 
+  test("a ledger version's write tasks follow the listing's estimated size") {
+    val dir = Files.createTempDirectory("ingest_ledger_tasks").toFile.getAbsolutePath
+    val listing = spark.range(0, 300, 1, 3)
+      .select(col("id").cast("string").as("name"), lit(t0).as("last_modified"))
+    def filesOf(path: String) = { Ledger.write(listing, path); Ledger.read(spark, path).inputFiles.length }
+    assert(filesOf(s"$dir/small") == 1, "a small listing is one file")
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try assert(filesOf(s"$dir/large") == 3, "a listing past the per-task bytes keeps its partitions")
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(rowSet(Ledger.read(spark, s"$dir/large")) == rowSet(listing))
+  }
+
   test("a CDC round replayed after its store commit embeds nothing and publishes no store version") {
     val dir = Files.createTempDirectory("ingest_replay").toFile.getAbsolutePath
     val changed = initial.withColumn("last_modified",
